@@ -83,14 +83,26 @@ def occupancy_label(col: Column | str, default: str = "Unknown") -> Column:
 
 
 def format_fixed(col: Column | str, digits: int = 1, suffix: str = "") -> Column:
-    """D5 — JS ``number.toFixed(d)`` equivalent.
+    """D5 — JS ``number.toFixed(d)`` equivalent (reference task.ts:280).
 
-    ``format_string('%.1f')`` not ``format_number`` — the latter adds
-    thousands separators that ``toFixed`` does not (reference
-    task.ts:280).
+    toFixed rounds the EXACT binary value of x, so 15.45 (binary
+    15.4499…) prints "15.4". Java's ``%.1f`` rounds the shortest
+    decimal string instead and prints "15.5". ``format_number``
+    (java.text.DecimalFormat) rounds the exact binary value, but it
+    rounds ties to even, adds thousands separators, prints -0.0 with
+    its sign and infinity as "∞". So an exact tie (|x|·10ᵈ = n + ½,
+    i.e. x·2ᵈ⁺¹ an odd integer) first moves to n + 1 away from zero,
+    as toFixed rounds it; adding 0.0 turns -0.0 into 0.0; then
+    ``format_number`` prints and the rest is mapped back. Past 17
+    significant digits DecimalFormat pads with zeros where toFixed
+    prints the exact binary digits.
     """
     c = F.col(col) if isinstance(col, str) else col
-    out = F.format_string(f"%.{digits}f", c)
+    scale = 10.0**digits
+    tie = F.abs((c * 2.0 ** (digits + 1)) % 2.0) == 1.0
+    away = (c * scale + F.signum(c) * 0.5) / scale
+    out = F.format_number(F.when(tie, away).otherwise(c) + 0.0, digits)
+    out = F.replace(F.translate(out, ",", ""), F.lit("∞"), F.lit("Infinity"))
     if suffix:
         out = F.concat(out, F.lit(suffix))
     return out

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from etl_wlg_metlink_spark.tables import load
+from etl_wlg_metlink_spark.tables import load, load_spread
 
 
 def x1_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -21,11 +21,8 @@ def x1_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB `quantile_cont`). The approximate sketch variant
     (percentile_approx / t-digest) is the 100 TB path but is
     engine-specific, so the checked query is exact."""
-    li = load(spark, sf_dir, "lineitem")
-    # single-row-group test file → 1-task scan; spread the partial
-    # percentile buffering (the expensive part) across cores
-    li = li.select("l_returnflag", "l_extendedprice").repartition(
-        spark.sparkContext.defaultParallelism
+    li = load_spread(spark, sf_dir, "lineitem").select(
+        "l_returnflag", "l_extendedprice"
     )
     return li.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_extendedprice", F.lit(0.5)), 4).alias("p50"),
@@ -368,10 +365,6 @@ def x17_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies. This is the right home for shared business formulas at
     scale: one definition, zero serialization cost, full optimizer
     visibility."""
-    from etl_wlg_metlink_spark.tables import load_spread
-
-    # conditional respread: the decimal partial agg is the heavy map
-    # stage and a single-split scan would serialize it on one core
     load_spread(spark, sf_dir, "lineitem").createOrReplaceTempView(
         "lineitem_x17"
     )

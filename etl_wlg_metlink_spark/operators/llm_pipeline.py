@@ -23,6 +23,7 @@ import json
 import math
 import os
 import shutil
+import sys
 import tempfile
 import uuid
 
@@ -32,7 +33,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_wlg_metlink_spark.tables import SPREAD_BYTES_PER_CORE, load, load_spread
+from etl_wlg_metlink_spark.tables import load, load_spread, spread
 
 #: Marker stopwords per language for the LID heuristic (l3). The
 #: synthetic corpus shares one vocabulary across langs, so accuracy is
@@ -375,11 +376,7 @@ def _build_hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The word-3-shingle MinHash source relation (doc_id, hs): one md5
     per shingle, reduced mod the Mersenne prime — the relation every
     MinHash lane's signature/band/verify lineage derives from."""
-    docs = load(spark, sf_dir, "documents")
-    # The raw table is a handful of parquet row-groups; the shingle+md5
-    # stage is compute-dense, so spread it across all cores explicitly
-    # (a tiny-input/heavy-map stage otherwise runs on one task).
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = load_spread(spark, sf_dir, "documents")
     # ws is projected as a real column FIRST so the shingle lambda
     # references a cheap attribute — an inline split re-evaluates per
     # element inside the HOF (see _shingles_ws; 9× at sf0.1)
@@ -413,13 +410,9 @@ def _hashed_shingles_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5), so the read is byte-identical to recomputing. l6 — the lane
     whose MEASURED operator includes this construction — always runs
     the real pipeline and neither reads nor writes it (the l56/l67
-    discipline). Read is respread for the compute-dense signature/
-    verify stages downstream only when the stored artifact is too
-    small to split naturally (same bytes-on-disk condition as
-    tables.load_spread, VERDICT r16 item 2: at 100 TB the artifact
-    parquet yields >= cores of scan splits and an unconditional
-    repartition would be an extra full shuffle of the dedup stack's
-    biggest relation — guide §8's anti-pattern). NOTE: the guarded
+    discipline). The read goes through tables.spread, so the
+    compute-dense signature/verify stages downstream get a respread
+    only while the store is too small to split naturally. NOTE: the guarded
     read is lazy — a concurrent clear of the artifact store between
     DataFrame creation and the consuming action fails the query
     rather than degrading to re-mine; concurrent store clears
@@ -430,48 +423,17 @@ def _hashed_shingles_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     if path and _artifact_exists(path):
         # guarded read (ADVICE r13): corrupt/vanished store → re-mine
         try:
-            return _respread_small_artifact(_read_artifact(spark, path), path)
-        except Exception:
-            pass
+            return spread(_read_artifact(spark, path), path)
+        except Exception as exc:
+            _artifact_read_failed("minhash_hashed", path, exc)
     hashed = _build_hashed_shingles(spark, sf_dir)
     if path:
         _write_artifact(hashed, path)
         try:
-            return _respread_small_artifact(_read_artifact(spark, path), path)
-        except Exception:
-            pass
+            return spread(_read_artifact(spark, path), path)
+        except Exception as exc:
+            _artifact_read_failed("minhash_hashed", path, exc)
     return hashed
-
-
-def _respread_small_artifact(df: DataFrame, path: str) -> DataFrame:
-    """Scale-conditional respread of an artifact read (the load_spread
-    rule applied to the store): tiny stores scan as one/few tasks and
-    the compute-dense downstream (signature permutations, verify
-    joins) serializes on them, so respread; a store big enough to
-    split into >= cores of scan tasks is left alone — repartitioning
-    it there would be an extra full shuffle of the payload."""
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if _artifact_bytes(path) < cores * SPREAD_BYTES_PER_CORE:
-        df = df.repartition(cores)
-    return df
-
-
-def _artifact_bytes(path: str) -> int:
-    """Recursive bytes-on-disk of an artifact dir (os.walk, so nested
-    layouts measure correctly — ADVICE r16 on the scandir variant).
-    Errors → 0 → respread, which is always correct, just possibly
-    unnecessary."""
-    total = 0
-    try:
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    except OSError:
-        return 0
-    return total
 
 
 def _minhash_verified_pairs(
@@ -586,8 +548,7 @@ def l7_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets untouched — they are ≪ cap wide); the oracle mirrors the
     banding AND the cap expression so both engines see the identical
     candidate set."""
-    docs = load(spark, sf_dir, "documents")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = load_spread(spark, sf_dir, "documents")
     # Overlapping char 4-grams in ONE JVM regex pass: a lookahead
     # group matches at every position, so regexp_extract_all returns
     # all n-3 overlapping grams without a per-position interpreted
@@ -879,11 +840,7 @@ def l12_lsh_ann_recall(
     counts. The self-measured recall@5 is therefore differentially
     pinned end-to-end — sketch, multi-probe candidates, truth ranking,
     and the recall arithmetic itself."""
-    emb = load(spark, sf_dir, "embeddings")
-    # Testdata is one small file → one input split; re-spread for task
-    # parallelism. At real scale the parquet scan already yields
-    # per-split tasks and this repartition would be dropped.
-    emb = emb.repartition(spark.sparkContext.defaultParallelism)
+    emb = load_spread(spark, sf_dir, "embeddings")
 
     planes = _lsh_planes()
 
@@ -1018,8 +975,7 @@ def l14_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join form."""
     from pyspark.sql.functions import pandas_udf
 
-    emb = load(spark, sf_dir, "embeddings")
-    emb = emb.repartition(spark.sparkContext.defaultParallelism)
+    emb = load_spread(spark, sf_dir, "embeddings")
 
     planes = _cos_planes_int()
     weights = 1 << np.arange(N_PLANES_COS)
@@ -1076,8 +1032,7 @@ def l15_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation recomputed that lineage twice (once to collect df,
     once for the scored join) — 2× the explode work for the same
     shuffle count (tf agg, by-word window, by-doc window)."""
-    docs = load(spark, sf_dir, "documents")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = load_spread(spark, sf_dir, "documents")
     terms = docs.select(
         "doc_id", F.explode(_words(F.col("text"))).alias("word")
     ).where(F.col("word") != "")
@@ -1158,8 +1113,7 @@ def l16_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         ONE double division + ROUND(…, 4) on both engines."""
     from pyspark.sql.functions import pandas_udf
 
-    emb = load(spark, sf_dir, "embeddings")
-    emb = emb.repartition(spark.sparkContext.defaultParallelism)
+    emb = load_spread(spark, sf_dir, "embeddings")
 
     centroids = np.stack(
         [
@@ -1494,8 +1448,9 @@ def _ivf_index(emb: DataFrame, cache_key: str | None = None):
             out = (sid, cent, cnorm)
             _IVF_INDEX_CACHE[key] = out
             return out
-        except Exception:
-            pass  # fall through to the training path below
+        except Exception as exc:
+            # fall through to the training path below
+            _artifact_read_failed("ivf_index", path, exc)
     corpus = _ivf_corpus(emb)
     mod = _ivf_mod(n)
     rows = (
@@ -2284,6 +2239,24 @@ def _read_artifact(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
+def _artifact_read_failed(kind: str, path: str, exc: Exception) -> None:
+    """Report a guarded artifact read that failed (corrupt sidecar,
+    gutted or vanished store) as ONE structured stderr line before the
+    caller re-mines: the fallback degrades, never silently. stdout
+    stays data-only."""
+    print(
+        json.dumps(
+            {
+                "event": "artifact_read_failed",
+                "kind": kind,
+                "path": path,
+                "error": type(exc).__name__,
+            }
+        ),
+        file=sys.stderr,
+    )
+
+
 #: per-(applicationId, fingerprint) memo of the REBUILT checkpointed
 #: pairs DataFrame (ADVICE r12): the warm path eagerly checkpoints
 #: its rebuild, and without this memo every consumer call in a
@@ -2311,8 +2284,8 @@ def _verified_pairs_artifact(
     operator is this computation — always runs the real pipeline and
     neither reads nor writes the artifact.
 
-    The read is repartitioned and eagerly checkpointed, NOT served as
-    the raw parquet scan: the consumers iterate joins over these
+    The read is spread (tables.spread) and eagerly checkpointed, NOT
+    served as the raw parquet scan: the consumers iterate joins over these
     edges (PageRank rounds, triangle enumeration) and the tiny file
     would scan as one partition, serializing every round (measured at
     sf0.1 when this was a LocalRelation rebuild: l45 3.72 s vs 1.90 s
@@ -2329,13 +2302,13 @@ def _verified_pairs_artifact(
     if path and _artifact_exists(path):
         # guarded read (ADVICE r13): corrupt/vanished store → re-mine
         try:
-            df = _respread_small_artifact(
-                _read_artifact(spark, path), path
-            ).localCheckpoint(eager=True)
+            df = spread(_read_artifact(spark, path), path).localCheckpoint(
+                eager=True
+            )
             _VERIFIED_PAIRS_DF_CACHE[df_key] = df
             return df
-        except Exception:
-            pass
+        except Exception as exc:
+            _artifact_read_failed("verified_pairs", path, exc)
     # artifact miners compose: candidate mining rides the persisted
     # fingerprint index (l6 itself never takes this path)
     pairs = _minhash_verified_pairs(
@@ -2372,8 +2345,8 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # listing resolve eagerly here; failure → re-propagate below
         try:
             return _read_artifact(spark, path)
-        except Exception:
-            pass
+        except Exception as exc:
+            _artifact_read_failed("cc_labels", path, exc)
     # the pair set arrives eagerly checkpointed with the upstream
     # diamond cache released. Near-dup graphs are tiny
     # relative to the corpus (pairs only where jaccard >= 0.8); the
@@ -3255,11 +3228,8 @@ def l39_edit_distance_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _verified_pairs_artifact(spark, sf_dir, threshold=0.0)
     docs = load(spark, sf_dir, "documents")
     ti = docs.select(F.col("doc_id").alias("doc_i"), F.col("text").alias("t_i"))
-    # the O(len²) DP runs in the stage that carries tj's partitioning;
-    # the single-row-group test file would otherwise pin every DP to
-    # one core (same tiny-input/compute-dense pathology as the shingle
-    # stage in _minhash_verified_pairs — measured 3.7s -> ~1.5s here)
-    tj = docs.repartition(spark.sparkContext.defaultParallelism).select(
+    # the O(len²) DP runs in the stage that carries tj's partitioning
+    tj = load_spread(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("doc_j"), F.col("text").alias("t_j")
     )
     ed = F.levenshtein("t_i", "t_j")
@@ -3596,10 +3566,7 @@ def l43_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     where one fingerprint dominates); the per-doc rollup is one more
     shuffle on doc_id. No suffix array, no global sort, nothing
     driver-side."""
-    docs = load(spark, sf_dir, "documents")
-    # window construction + one md5 per position is compute-dense on a
-    # tiny single-row-group input: spread it (see _minhash_verified_pairs)
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = load_spread(spark, sf_dir, "documents")
     return _substring_dup_share(docs, salted=False)
 
 
@@ -3611,8 +3578,7 @@ def l51_substring_dedup_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE's after-the-fact skew split. Same answer as l43 by
     construction (salt-invariant — the dim side is exploded over every
     salt value), same oracle."""
-    docs = load(spark, sf_dir, "documents")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = load_spread(spark, sf_dir, "documents")
     return _substring_dup_share(docs, salted=True)
 
 
@@ -3958,8 +3924,8 @@ def _bm25_ranked_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
         # guarded read (ADVICE r13): corrupt/vanished store → re-rank
         try:
             return _read_artifact(spark, path)
-        except Exception:
-            pass
+        except Exception as exc:
+            _artifact_read_failed("bm25_ranked", path, exc)
     ranked = l56_bm25_retrieval(spark, sf_dir)
     if path:
         _write_artifact(ranked, path)
@@ -4308,8 +4274,7 @@ def l47_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE reuses the exchange), never a broadcast: at 100 TB the common
     set grows with the corpus and a fixed broadcast would OOM. Final
     rollup back to doc_id is the second and last shuffle."""
-    docs = load(spark, sf_dir, "documents")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = load_spread(spark, sf_dir, "documents")
     ex = docs.select("doc_id", _words(F.col("text")).alias("ws")).select(
         "doc_id", F.explode(_shingles_ws(F.col("ws"))).alias("g")
     )
@@ -6444,8 +6409,7 @@ def l62_ngram_memorization(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — the test side is ~5% of the corpus by construction, so the
     join's probe side is small and the build side is a key set, never
     full text. Per-doc rollup is one shuffle on the test doc ids."""
-    docs = load(spark, sf_dir, "documents")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = load_spread(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
         _hash_split_col(F.col("doc_id")).alias("split"),
@@ -6982,8 +6946,7 @@ def l65_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles are the chunk-fp -> distinct-doc-count agg and the doc
     rollup, the same two the l43 window audit pays. Nothing
     driver-side, no global sort."""
-    docs = load(spark, sf_dir, "documents")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = load_spread(spark, sf_dir, "documents")
     chunked = _cdc_chunked(docs)
     rel = chunked.select(
         "doc_id",
@@ -8175,10 +8138,10 @@ def _l73_signatures(spark: SparkSession, sf_dir: str):
     import pyarrow as pa
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    # metadata-cheap count BEFORE the repartition (parquet row-group
-    # stats), for the corpus-relative bucket cap
+    # metadata-cheap count BEFORE the spread (parquet row-group stats),
+    # for the corpus-relative bucket cap
     n_docs = docs.count()
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = spread(docs, f"{sf_dir}/documents.parquet")
 
     def decode(batches):
         for batch in batches:
@@ -8410,8 +8373,7 @@ def _dup_span_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_tokens, s, e) maximal duplicated-span intervals over
     the documents table — l74's islands-and-gaps merge, shared with
     l76's surgical span-cut rebuild."""
-    docs = load(spark, sf_dir, "documents")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = load_spread(spark, sf_dir, "documents")
     base = docs.select("doc_id", _words(F.col("text")).alias("ws"))
     ws = F.col("ws")
     idx = F.sequence(F.lit(1), F.size(ws) - (L43_W - 1))
@@ -8629,8 +8591,7 @@ def l76_span_cut_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python in the loop. Docs with no duplicated span (including docs
     shorter than one window) pass through uncut with kept == before,
     so the output is a total manifest over the corpus."""
-    docs = load(spark, sf_dir, "documents")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = load_spread(spark, sf_dir, "documents")
     span_arrays = (
         _dup_span_rows(spark, sf_dir)
         .groupBy("doc_id")

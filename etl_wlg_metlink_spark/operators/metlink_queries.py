@@ -94,13 +94,9 @@ def _synthetic_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     absent speed/occupancy, the 0-speed/0-bearing NaN quirks, and
     heavy vehicle-id duplication (user_id % 50 → deep last-wins
     dedup chains ordered by event_id)."""
-    from etl_wlg_metlink_spark.tables import load
+    from etl_wlg_metlink_spark.tables import load_spread
 
-    # sf0.1 events is a single parquet file → one input split; without
-    # this the whole pre-shuffle feature-build stage runs on ONE core.
-    events = load(spark, sf_dir, "events").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    events = load_spread(spark, sf_dir, "events")
     eid = F.col("event_id")
     et = F.col("event_type")
     trip_id = (
@@ -115,7 +111,7 @@ def _synthetic_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     lon = F.when(zero_island, 0.0).otherwise(174.8)
     bearing = (eid % 360).cast("double")
     # speed pre-rounded to ONE decimal: exact-tenth doubles format
-    # identically under Java HALF_UP and C half-even (see d5)
+    # identically under toFixed HALF_UP and C half-even (see d5)
     speed = (
         F.when(eid % 11 == 0, F.lit(None).cast("double"))
         .when(eid % 7 == 0, F.lit(0.0))

@@ -190,10 +190,10 @@ def d4_enum_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def d5_format_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D5 number formatting (task.ts:280 `toFixed(1) + ' m/s'`):
-    format_string('%.1f'), NOT format_number (thousands separators).
+    format_fixed, NOT format_number (thousands separators).
 
-    The value is pre-rounded: Java's %.1f rounds HALF_UP on the exact
-    decimal expansion while C printf rounds half-even, so formatting a
+    The value is pre-rounded: format_fixed rounds an exact tie HALF_UP
+    (toFixed) while C printf rounds it half-even, so formatting a
     quarter-exact double (x.25) directly would diverge between engines;
     round(x, 1) agrees (both half-away-from-zero), and formatting an
     exact-tenth double is unambiguous."""

@@ -708,9 +708,8 @@ def r25_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter and 7-column pruning pushed to parquet. All money sums
     accumulate in DECIMAL (exact, order-independent); the averages are
     one IEEE double division each at the very end, identical in both
-    engines. Scan respread when single-split (conditional — at scale
-    the scan parallelizes itself and the respread must not run) so
-    the decimal partial aggregation uses every core."""
+    engines. The scan goes through load_spread so the decimal partial
+    aggregation uses every core."""
     li = load_spread(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") <= F.lit("2001-06-01").cast("timestamp")
     )

@@ -82,9 +82,10 @@ def js_tofixed(x: float, digits: int = 1) -> str:
     """JS Number.toFixed semantics (ES §Number.prototype.toFixed): pick
     the closest n/10^digits to the EXACT binary value of x; on a tie
     pick the larger n. That is decimal HALF_UP over the full binary
-    expansion — which is also what Java's %.1f does, and NOT what
-    Python's format() does (round-half-even): 27.25 → '27.3', not
-    '27.2'."""
+    expansion. Python's format() rounds exact ties half-even (27.25 →
+    '27.2', not '27.3'), and Java's %.1f rounds the shortest decimal
+    string instead of the binary value (15.45, binary 15.4499…, →
+    '15.5', not '15.4'); neither matches."""
     from decimal import ROUND_HALF_UP, Decimal
 
     q = Decimal(1).scaleb(-digits)

@@ -10,11 +10,14 @@ recovered automatically), with exactly one shuffle: the dedup window.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_wlg_metlink_spark.config import MetlinkConfig
 from etl_wlg_metlink_spark.functions.scalar import (
+    cot_key,
     format_fixed,
     js_falsy_to_nan,
     occupancy_label,
@@ -28,6 +31,22 @@ SHIP_ICON_PATH = "34ae1613-9645-4222-a9d2-e5f243dea2865/Transportation/Ship.png"
 STALE_MS = 180000
 
 TRAIN_PREFIXES = ("HVL", "JVL", "KPL", "MEL", "WRL", "MUL")
+
+
+def _classify(e: Column) -> tuple[Column, Column, Column, Column, Column]:
+    """The entity column ``e``'s route_id (D1, task.ts:213), Ship /
+    Train flags, vehicle_type with precedence Ship > Train > Bus (D2,
+    task.ts:225-242) and cot_id key (D3, task.ts:251) — derived here
+    once for both the feature build and the pipeline counters."""
+    trip_id = e["vehicle"]["trip"]["trip_id"]
+    route_id = split_head(trip_id, "__")
+    is_ship = trip_id.startswith("QDF") | (route_id == "MIF")
+    is_train = reduce(
+        lambda a, b: a | b, (trip_id.startswith(p) for p in TRAIN_PREFIXES)
+    )
+    vehicle_type = F.when(is_ship, "Ship").when(is_train, "Train").otherwise("Bus")
+    cot_id = cot_key(vehicle_type, e["vehicle"]["vehicle"]["id"])
+    return route_id, is_ship, is_train, vehicle_type, cot_id
 
 
 def build_features(entities: DataFrame, config: MetlinkConfig) -> DataFrame:
@@ -54,17 +73,7 @@ def build_features(entities: DataFrame, config: MetlinkConfig) -> DataFrame:
     # P4 (task.ts:209-212) — JS-falsy trip_id: NULL or ''.
     df = df.where(trip["trip_id"].isNotNull() & (trip["trip_id"] != ""))
 
-    route_id = split_head(trip["trip_id"], "__")  # D1 (task.ts:213)
-
-    # D2 (task.ts:225-242) — precedence: Ship, Train, else Bus.
-    is_ship = trip["trip_id"].startswith("QDF") | (route_id == "MIF")
-    is_train = None
-    for p in TRAIN_PREFIXES:
-        cond = trip["trip_id"].startswith(p)
-        is_train = cond if is_train is None else (is_train | cond)
-    vehicle_type = (
-        F.when(is_ship, "Ship").when(is_train, "Train").otherwise("Bus")
-    )
+    route_id, is_ship, is_train, vehicle_type, cot_id = _classify(e)
     icon = (
         F.when(is_ship, SHIP_ICON_PATH)
         .when(is_train, TRAIN_ICON_PATH)
@@ -84,6 +93,7 @@ def build_features(entities: DataFrame, config: MetlinkConfig) -> DataFrame:
         e.alias("entity"),
         route_id.alias("route_id"),
         vehicle_type.alias("vehicle_type"),
+        cot_id.alias("cot_id"),
         icon.alias("icon"),
         cot_type.alias("cot_type"),
         marker_color.alias("marker_color"),
@@ -98,10 +108,7 @@ def build_features(entities: DataFrame, config: MetlinkConfig) -> DataFrame:
     veh_id = e["vehicle"]["vehicle"]["id"]
     occ = e["vehicle"]["occupancy_status"]
 
-    # D3 (task.ts:251)
-    cot_id = F.concat(
-        F.lit("WLG-Metlink"), F.col("vehicle_type"), F.lit("-"), veh_id
-    )
+    cot_id = F.col("cot_id")
 
     # D6 (task.ts:254-286) — remarks. Required lines always render (JS
     # stringifies undefined as 'undefined'); Occupancy/Speed lines only
@@ -170,7 +177,7 @@ def build_features(entities: DataFrame, config: MetlinkConfig) -> DataFrame:
         ).alias("geometry"),
     )
 
-    staged = df.select("idx", cot_id.alias("cot_id"), feature.alias("feature"))
+    staged = df.select("idx", cot_id, feature.alias("feature"))
 
     # A1 (task.ts:191, 312) — last-wins dedup, ordered window (NOT
     # dropDuplicates: nondeterministic under parallelism). One shuffle.
@@ -212,16 +219,7 @@ def pipeline_metric_exprs(exact_submitted: bool = True) -> list:
     p4_drop = has_structs & ~zero_island & falsy_trip
     survives = has_structs & ~zero_island & ~falsy_trip
 
-    route_id = split_head(trip["trip_id"], "__")
-    is_ship = trip["trip_id"].startswith("QDF") | (route_id == "MIF")
-    is_train = None
-    for p in TRAIN_PREFIXES:
-        cond = trip["trip_id"].startswith(p)
-        is_train = cond if is_train is None else (is_train | cond)
-    vtype = F.when(is_ship, "Ship").when(is_train, "Train").otherwise("Bus")
-    cot_id = F.concat(
-        F.lit("WLG-Metlink"), vtype, F.lit("-"), e["vehicle"]["vehicle"]["id"]
-    )
+    *_, cot_id = _classify(e)
     survivor_key = F.when(survives, cot_id)
     submitted = (
         F.count_distinct(survivor_key)

@@ -6,6 +6,8 @@ pushdown for free (Parquet scans are lazily planned by Catalyst).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -59,7 +61,7 @@ def _normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-#: Respread threshold per core: when a table's bytes-on-disk are below
+#: Respread threshold per core: when an input's bytes-on-disk are below
 #: cores × this, the parquet scan cannot produce enough splits to keep
 #: the machine busy (testdata is ONE file with ONE row group → one
 #: task), so pre-shuffle map work serializes on a single core. 32 MB
@@ -69,48 +71,45 @@ def _normalize_event_ts(df: DataFrame) -> DataFrame:
 SPREAD_BYTES_PER_CORE = 32 << 20
 
 
-def _table_bytes(sf_dir: str, name: str) -> int:
-    """Bytes on disk of a table (file or directory of part files) —
-    the same signal the scan planner sizes splits from; cheap
-    (metadata only) and safe (missing path → 0 → respread, which is
-    always correct, just possibly unnecessary)."""
-    import os
-
-    path = f"{sf_dir}/{name}.parquet"
+def dir_bytes(path: str) -> int:
+    """Bytes on disk under ``path`` — a single file, or every file of a
+    directory tree (recursive, so Hive-style ``key=value`` layouts do
+    not measure ~0). The same signal the scan planner sizes splits
+    from; metadata only. Unreadable entries count 0, which errs toward
+    a respread — always correct, just possibly unnecessary."""
     if os.path.isfile(path):
         return os.path.getsize(path)
     total = 0
-    try:
-        # Recursive walk (ADVICE r16): a Hive-partitioned layout nests
-        # key=value subdirectories; summing only top-level files would
-        # measure ~0 bytes and inject the respread shuffle at exactly
-        # the scale where it is an anti-pattern.
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    except OSError:
-        return 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            try:
+                total += os.path.getsize(os.path.join(root, f))
+            except OSError:
+                pass
     return total
 
 
-def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """``load()`` plus a SCALE-CONDITIONAL respread for lanes whose
-    first heavy work is pre-shuffle map compute (explode, shingle
-    hashing, per-row feature building). Small inputs scan as one task
-    (single file, single row group), serializing that work on one
-    core; at real scale the scan already yields ≥ cores of splits and
-    an unconditional round-robin repartition would be an EXTRA full
-    shuffle of the payload (guide §8's anti-pattern). Condition on
-    bytes-on-disk so the respread exists exactly when the scan cannot
-    parallelize by itself."""
-    df = load(spark, sf_dir, name)
-    cores = spark.sparkContext.defaultParallelism
-    if _table_bytes(sf_dir, name) < cores * SPREAD_BYTES_PER_CORE:
+def spread(df: DataFrame, path: str) -> DataFrame:
+    """Round-robin ``df`` over every core only when its source at
+    ``path`` is too small to split into enough scan tasks by itself
+    (see ``load_spread``); otherwise return ``df`` unchanged."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if dir_bytes(path) < cores * SPREAD_BYTES_PER_CORE:
         df = df.repartition(cores)
     return df
+
+
+def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``load()`` plus a SCALE-CONDITIONAL respread — the one rule for
+    every lane whose first heavy work is pre-shuffle map compute
+    (explode, shingle hashing, per-row feature building, vector math).
+    Small inputs scan as one task (single file, single row group),
+    serializing that work on one core; at real scale the scan already
+    yields ≥ cores of splits and an unconditional round-robin
+    repartition would be an EXTRA full shuffle of the payload (guide
+    §8's anti-pattern). So the respread exists exactly when the
+    input's bytes-on-disk are below cores × SPREAD_BYTES_PER_CORE."""
+    return spread(load(spark, sf_dir, name), f"{sf_dir}/{name}.parquet")
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -7,6 +7,8 @@ import duckdb
 import pytest
 
 from __spark_entry__ import entry, oracle_sql, queries
+from etl_wlg_metlink_spark.operators import llm_pipeline as lp
+from etl_wlg_metlink_spark.operators import metlink_queries as mq
 from etl_wlg_metlink_spark.tables import TABLE_NAMES
 
 
@@ -2226,36 +2228,25 @@ def test_minhash_hashed_artifact_matches_recompute(
     assert len(raw_rows) > 0
 
 
-def test_artifact_respread_is_scale_conditional(spark, tmp_path, monkeypatch):
-    """r17 (VERDICT r16 item 2): the minhash_hashed artifact read must
-    respread ONLY when the store is too small to split naturally — at
-    scale an unconditional repartition is an extra full shuffle of the
-    dedup stack's biggest relation. Also pins the recursive
-    bytes-on-disk summers (ADVICE r16: nested dirs must not measure
-    ~0 and force the respread at exactly the wrong scale)."""
+@pytest.mark.parametrize(
+    "build",
+    [lp._build_hashed_shingles, mq._synthetic_entities],
+    ids=lambda f: f.__name__,
+)
+def test_large_input_is_not_respread(spark, sf_dir, monkeypatch, build):
+    """Past the gate, the former unconditional-respread sites leave the
+    scan's own splits alone: no Repartition in the logical plan (plan
+    only — no Spark action runs)."""
     from etl_wlg_metlink_spark import tables
-    from etl_wlg_metlink_spark.operators import llm_pipeline as lp
 
-    # recursive sums see nested files (Hive-style layouts)
-    nested = tmp_path / "t.parquet" / "k=1"
-    nested.mkdir(parents=True)
-    (nested / "part-0.parquet").write_bytes(b"x" * 1000)
-    assert tables._table_bytes(str(tmp_path), "t") == 1000
-    assert lp._artifact_bytes(str(tmp_path / "t.parquet")) == 1000
-
-    df = spark.range(4)
-    small = lp._respread_small_artifact(df, str(tmp_path / "t.parquet"))
-    assert "Repartition" in small._jdf.queryExecution().logical().toString()
-
-    # a store past the split threshold is NOT respread
     monkeypatch.setattr(
-        lp,
-        "_artifact_bytes",
+        tables,
+        "dir_bytes",
         lambda p: spark.sparkContext.defaultParallelism
-        * lp.SPREAD_BYTES_PER_CORE,
+        * tables.SPREAD_BYTES_PER_CORE,
     )
-    big = lp._respread_small_artifact(df, str(tmp_path / "t.parquet"))
-    assert big is df
+    df = build(spark, sf_dir)
+    assert "Repartition" not in df._jdf.queryExecution().logical().toString()
 
 
 def test_verified_pairs_warm_rebuild_is_memoized(spark, sf_dir, tmp_path, monkeypatch):
@@ -2391,14 +2382,16 @@ def test_artifact_debris_race_never_destroys_complete_copy(
 
 
 def test_artifact_read_failure_falls_through_to_compute(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, tmp_path, monkeypatch, capfd
 ):
     """ADVICE r13 (low): every warm consumer read is guarded — a
     corrupt sidecar or a gutted store (part files deleted, _SUCCESS
     kept: Spark would scan that as a silently EMPTY DataFrame) must
     degrade to recomputing the artifact, matching the write path's
     'storage unavailable → serve uncached' contract, never fail the
-    query or serve empty rows."""
+    query or serve empty rows — and never silently: each fallback
+    writes one structured stderr line."""
+    import json
     import os
 
     from etl_wlg_metlink_spark.operators import llm_pipeline as lp
@@ -2413,8 +2406,19 @@ def test_artifact_read_failure_falls_through_to_compute(
     with open(os.path.join(bpath, "_schema.json"), "w") as f:
         f.write("{not json")
     assert lp._artifact_exists(bpath)  # exists check still passes
+    capfd.readouterr()
     got = sorted(map(tuple, lp._bm25_ranked_artifact(spark, sf_dir).collect()))
     assert got == fresh and len(got) > 0
+    # the fallback is logged, one stderr line; stdout stays data-only
+    out, err = capfd.readouterr()
+    assert "artifact_read_failed" not in out
+    [line] = [x for x in err.splitlines() if "artifact_read_failed" in x]
+    assert json.loads(line) == {
+        "event": "artifact_read_failed",
+        "kind": "bm25_ranked",
+        "path": bpath,
+        "error": "JSONDecodeError",
+    }
 
     # verified-pairs consumer vs gutted store (zero part files)
     mined = sorted(

@@ -91,14 +91,23 @@ def test_occupancy_label_range_and_fallback(spark):
 
 
 def test_format_fixed_no_thousands_separator(spark):
-    # task.ts:280 — toFixed(1) never inserts ','
+    # task.ts:280 — toFixed(1) never inserts ',', and rounds the exact
+    # binary value half-up: 15.45 is binary 15.4499… → "15.4" (Java
+    # %.1f says "15.5"); 27.25 and 0.25 are exact ties → up
     vals = _col(
         spark,
         format_fixed("v", 1, " m/s"),
-        [(1234.56,), (0.0,)],
+        [(1234.56,), (0.0,), (15.45,), (27.25,), (0.25,), (-15.45,)],
         "v double",
     )
-    assert vals == ["1234.6 m/s", "0.0 m/s"]
+    assert vals == [
+        "1234.6 m/s",
+        "0.0 m/s",
+        "15.4 m/s",
+        "27.3 m/s",
+        "0.3 m/s",
+        "-15.4 m/s",
+    ]
 
 
 def test_kv_remarks_order_and_null_omission(spark):

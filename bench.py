@@ -35,7 +35,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from __spark_entry__ import queries  # noqa: E402
-from etl_wlg_metlink_spark.session import build_session  # noqa: E402
+from etl_wlg_metlink_spark import artifacts  # noqa: E402
+from etl_wlg_metlink_spark.session import build_session, scratch_root  # noqa: E402
 
 
 def _time_query(spark, fn, sf_dir: str) -> float:
@@ -96,16 +97,13 @@ def main() -> None:
         # read it — never leftovers from a previous process. --only
         # probes deliberately keep the store: they measure the
         # production serving path of whatever state exists.
-        from etl_wlg_metlink_spark.operators.llm_pipeline import (
-            clear_artifact_caches,
-        )
-
-        clear_artifact_caches(remove_persisted=True)
+        artifacts.clear(remove_persisted=True)
 
     spark = build_session(app_name="bench")
     timings: dict[str, float] = {}
     for name, fn in all_queries.items():
         timings[name] = round(_time_query(spark, fn, sf_dir), 3)
+    store_counts = dict(sorted(artifacts.COUNTS.items()))
 
     # per-sf detail file: the standing fresh-session regression gate
     # compares sf0.1 rounds against each other; a scale-proof run at
@@ -136,11 +134,7 @@ def main() -> None:
         # so without this the "fresh" number for a consumer lane times
         # a warm artifact read, order-dependently (ADVICE r12).
         spark.stop()
-        from etl_wlg_metlink_spark.operators.llm_pipeline import (
-            clear_artifact_caches,
-        )
-
-        clear_artifact_caches(remove_persisted=True)
+        artifacts.clear(remove_persisted=True)
         spark = build_session(app_name="bench_fresh")
         for name in worst:
             fresh[name] = round(_time_query(spark, queries()[name], sf_dir), 3)
@@ -185,7 +179,15 @@ def main() -> None:
         )
     )
     # Also bank the detail on disk so it survives regardless of capture.
-    detail = {"total_sec": total, "sf": sf, "queries": timings}
+    detail = {
+        "total_sec": total,
+        "sf": sf,
+        "queries": timings,
+        # the suite's store hits/misses/read failures per kind, and the
+        # scratch backend it ran on (None: the system temp dir)
+        "artifact_store": store_counts,
+        "scratch_root": scratch_root(),
+    }
     if fresh:
         detail["fresh_session"] = fresh
         # fresh numbers are COLD: session rebuilt AND artifact caches
@@ -207,6 +209,9 @@ def main() -> None:
     # per-lane sample. Additions only: the full dict above and the
     # compact summary below are unchanged, and the summary stays the
     # LAST line so existing tail parsing keeps working.
+    # an --only total covers a subset: mark it so a tail parser never
+    # mistakes it for the full-suite total
+    partial = {"partial": True} if args.only else {}
     chunk_order = sorted(timings.items(), key=lambda kv: (kv[1], kv[0]))
     chunk_size = 15
     n_chunks = (len(chunk_order) + chunk_size - 1) // chunk_size
@@ -222,6 +227,7 @@ def main() -> None:
                     "chunk": ci + 1,
                     "n_chunks": n_chunks,
                     "queries": part,
+                    **partial,
                 },
                 separators=(",", ":"),
             )
@@ -238,6 +244,7 @@ def main() -> None:
                 "sf": sf,
                 "n_queries": len(timings),
                 "slowest": {k: v for k, v in slowest},
+                **partial,
             },
             separators=(",", ":"),
         )

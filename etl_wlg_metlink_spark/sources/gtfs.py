@@ -20,6 +20,7 @@ network.
 from __future__ import annotations
 
 import json
+import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,7 +50,7 @@ def entities_from_json(spark: SparkSession, raw_json: str, debug: bool = False) 
     filters to drop.
     """
     if debug:  # S9 — bounded debug sample (task.ts:169-171)
-        print(f"Raw API response: {raw_json[:1000]}...")
+        print(f"Raw API response: {raw_json[:1000]}...", file=sys.stderr)
     try:
         body = json.loads(raw_json)
     except json.JSONDecodeError as e:
@@ -104,7 +105,7 @@ def fetch_entities(
         raw = fetch_json(METLINK_VEHICLE_POSITIONS_URL, headers)
         return entities_from_json(spark, raw, debug=debug)
     except Exception as e:  # noqa: BLE001 — any fetch/parse error → empty FC
-        print(f"Error fetching Metlink data: {e}")
+        print(f"Error fetching Metlink data: {e}", file=sys.stderr)
         return empty_entities(spark)
 
 

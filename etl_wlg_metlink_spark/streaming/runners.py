@@ -17,7 +17,9 @@ forever.
 from __future__ import annotations
 
 import atexit
+import json
 import shutil
+import sys
 import tempfile
 import uuid
 from collections.abc import Callable
@@ -94,11 +96,17 @@ def _unload_state_providers(spark: SparkSession) -> None:
     its providers would be unloaded too and reload from checkpoint
     on its next batch (correct, just slower); every runner in this
     module is synchronous, so the situation does not arise here.
-    Best-effort: a missing/renamed internal never fails the query."""
+    Best-effort: a missing/renamed internal never fails the query, and
+    writes one JSON line to stderr instead."""
     try:
         spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:
-        pass
+    except Exception as exc:
+        print(
+            json.dumps(
+                {"event": "state_store_unload_failed", "error": type(exc).__name__}
+            ),
+            file=sys.stderr,
+        )
 
 
 #: one symlink dir per source file per process — repeated calls

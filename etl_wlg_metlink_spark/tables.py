@@ -89,12 +89,13 @@ def dir_bytes(path: str) -> int:
     return total
 
 
-def spread(df: DataFrame, path: str) -> DataFrame:
+def spread(df: DataFrame, path: str | None) -> DataFrame:
     """Round-robin ``df`` over every core only when its source at
     ``path`` is too small to split into enough scan tasks by itself
-    (see ``load_spread``); otherwise return ``df`` unchanged."""
+    (see ``load_spread``); otherwise, or when ``df`` has no source on
+    disk (``path`` None), return ``df`` unchanged."""
     cores = df.sparkSession.sparkContext.defaultParallelism
-    if dir_bytes(path) < cores * SPREAD_BYTES_PER_CORE:
+    if path is not None and dir_bytes(path) < cores * SPREAD_BYTES_PER_CORE:
         df = df.repartition(cores)
     return df
 

@@ -90,6 +90,20 @@ def test_fetch_error_falls_back_to_empty(spark):
     assert captured == [fc_empty]
 
 
+def test_source_diagnostics_stay_off_stdout(spark, capfd):
+    """The debug sample and the fetch-error line go to stderr: the CLI's
+    stdout carries only the FeatureCollection JSON."""
+
+    def failing_fetch(url, headers):
+        raise OSError("network down")
+
+    gtfs.entities_from_json(spark, RAW_JSON, debug=True)
+    gtfs.fetch_entities(spark, "key", fetch_json=failing_fetch)
+    out, err = capfd.readouterr()
+    assert out == ""
+    assert "Raw API response" in err and "network down" in err
+
+
 def test_write_jsonl(spark, tmp_path):
     entities = gtfs.entities_from_json(spark, RAW_JSON)
     features = metlink.run(entities, MetlinkConfig())

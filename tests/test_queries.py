@@ -7,6 +7,7 @@ import duckdb
 import pytest
 
 from __spark_entry__ import entry, oracle_sql, queries
+from etl_wlg_metlink_spark import artifacts
 from etl_wlg_metlink_spark.operators import llm_pipeline as lp
 from etl_wlg_metlink_spark.operators import metlink_queries as mq
 from etl_wlg_metlink_spark.tables import TABLE_NAMES
@@ -226,11 +227,12 @@ def test_l22_converges_within_oracle_rounds(spark, sf_dir):
     capped-at-oracle-rounds labels == converged labels."""
     from etl_wlg_metlink_spark.operators.llm_pipeline import (
         L22_ORACLE_ROUNDS,
+        _build_hashed_shingles,
         _minhash_verified_pairs,
         _min_label_propagation,
     )
 
-    pairs = _minhash_verified_pairs(spark, sf_dir)
+    pairs = _minhash_verified_pairs(_build_hashed_shingles(spark, sf_dir))
     capped = {
         r["node"]: r["lbl"]
         for r in _min_label_propagation(pairs, max_iters=L22_ORACLE_ROUNDS).collect()
@@ -2092,15 +2094,15 @@ def test_ivf_cache_key_fails_closed(spark, tmp_path, monkeypatch):
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
     # healthy keys for the same untouched path are equal (cacheable)
-    assert lp._ivf_cache_key(path, 40) == lp._ivf_cache_key(path, 40)
+    assert artifacts.fingerprint(path, 40) == artifacts.fingerprint(path, 40)
 
     def broken_walk(*a, **k):
         raise OSError("simulated stat failure mid-walk")
         yield  # pragma: no cover — keeps it a generator
 
     monkeypatch.setattr(_os, "walk", broken_walk)
-    k1 = lp._ivf_cache_key(path, 40)
-    k2 = lp._ivf_cache_key(path, 40)
+    k1 = artifacts.fingerprint(path, 40)
+    k2 = artifacts.fingerprint(path, 40)
     assert k1 != k2  # unique per call → can never alias states
 
     # end-to-end: a trained index cached under a healthy key is NOT
@@ -2126,8 +2128,8 @@ def test_ivf_index_served_from_storage(spark, tmp_path, monkeypatch):
 
     from etl_wlg_metlink_spark.operators import llm_pipeline as lp
 
-    monkeypatch.setattr(lp, "_ARTIFACT_ROOT", str(tmp_path / "store"))
-    lp.clear_artifact_caches()
+    monkeypatch.setattr(artifacts, "ROOT", str(tmp_path / "store"))
+    artifacts.clear()
     path = str(tmp_path / "emb")
     rows = [
         (i, [float(((i * 37 + d * 11) % 97) - 48) for d in range(64)])
@@ -2139,10 +2141,10 @@ def test_ivf_index_served_from_storage(spark, tmp_path, monkeypatch):
     sid1, cent1, cn1 = lp._ivf_index(
         spark.read.parquet(path), cache_key=path
     )
-    art = lp._artifact_path("ivf_index", lp._ivf_cache_key(path, 40))
-    assert lp._artifact_exists(art)
+    art = artifacts._path("ivf_index", artifacts.fingerprint(path, 40))
+    assert artifacts._exists(art)
 
-    lp.clear_artifact_caches()  # fresh-process simulation: dicts empty
+    artifacts.clear()  # fresh-process simulation: memo empty
 
     def boom(*a, **k):
         raise AssertionError("retrained: storage artifact was not used")
@@ -2156,8 +2158,8 @@ def test_ivf_index_served_from_storage(spark, tmp_path, monkeypatch):
     assert cent1.tobytes() == cent2.tobytes()  # bit-exact round-trip
     assert cn1.tobytes() == cn2.tobytes()
     sid3, cent3, _ = lp._ivf_index(spark.read.parquet(path), cache_key=path)
-    assert cent3 is cent2  # second call in-process: dict hit
-    lp.clear_artifact_caches()
+    assert cent3 is cent2  # second call in-process: memo hit
+    artifacts.clear()
 
 
 def test_bm25_ranked_artifact_matches_recompute(spark, sf_dir, tmp_path, monkeypatch):
@@ -2170,13 +2172,13 @@ def test_bm25_ranked_artifact_matches_recompute(spark, sf_dir, tmp_path, monkeyp
 
     from etl_wlg_metlink_spark.operators import llm_pipeline as lp
 
-    monkeypatch.setattr(lp, "_ARTIFACT_ROOT", str(tmp_path / "store"))
+    monkeypatch.setattr(artifacts, "ROOT", str(tmp_path / "store"))
     fresh = lp.l56_bm25_retrieval(spark, sf_dir)
-    assert not os.path.exists(lp._ARTIFACT_ROOT)  # mining lane: no write
+    assert not os.path.exists(artifacts.ROOT)  # mining lane: no write
 
     cold = lp._bm25_ranked_artifact(spark, sf_dir)  # pays + persists
-    path = lp._artifact_path("bm25_ranked", lp._ivf_cache_key(sf_dir, 0))
-    assert lp._artifact_exists(path)
+    path = artifacts._path("bm25_ranked", artifacts.fingerprint(sf_dir))
+    assert artifacts._exists(path)
     warm = lp._bm25_ranked_artifact(spark, sf_dir)  # reads the store
 
     # sidecar keeps NAMES and TYPES exact; nullability widens to
@@ -2204,14 +2206,14 @@ def test_minhash_hashed_artifact_matches_recompute(
 
     from etl_wlg_metlink_spark.operators import llm_pipeline as lp
 
-    monkeypatch.setattr(lp, "_ARTIFACT_ROOT", str(tmp_path / "store"))
+    monkeypatch.setattr(artifacts, "ROOT", str(tmp_path / "store"))
     raw = lp._build_hashed_shingles(spark, sf_dir)
     lp.l6_minhash_near_dup(spark, sf_dir)
-    assert not os.path.exists(lp._ARTIFACT_ROOT)  # mining lane: no write
+    assert not os.path.exists(artifacts.ROOT)  # mining lane: no write
 
     cold = lp._hashed_shingles_artifact(spark, sf_dir)  # mines + persists
-    path = lp._artifact_path("minhash_hashed", lp._ivf_cache_key(sf_dir, 0))
-    assert lp._artifact_exists(path)
+    path = artifacts._path("minhash_hashed", artifacts.fingerprint(sf_dir))
+    assert artifacts._exists(path)
     warm = lp._hashed_shingles_artifact(spark, sf_dir)  # reads the store
 
     assert [(f.name, f.dataType) for f in warm.schema.fields] == [
@@ -2253,132 +2255,28 @@ def test_verified_pairs_warm_rebuild_is_memoized(spark, sf_dir, tmp_path, monkey
     """ADVICE r12: the warm path eagerly checkpoints its rebuild, so
     repeated consumer calls in one session must reuse ONE checkpointed
     DataFrame (same object) instead of accumulating a fresh set of
-    checkpointed blocks per call; clear_artifact_caches must drop the
+    checkpointed blocks per call; artifacts.clear must drop the
     memo, and with remove_persisted=True the on-disk store too."""
     import os
 
     from etl_wlg_metlink_spark.operators import llm_pipeline as lp
 
-    monkeypatch.setattr(lp, "_ARTIFACT_ROOT", str(tmp_path / "store"))
-    lp.clear_artifact_caches()
+    monkeypatch.setattr(artifacts, "ROOT", str(tmp_path / "store"))
+    artifacts.clear()
     cold = lp._verified_pairs_artifact(spark, sf_dir)  # mines + persists
-    assert not lp._VERIFIED_PAIRS_DF_CACHE  # cold serves the live df
     warm1 = lp._verified_pairs_artifact(spark, sf_dir)
     warm2 = lp._verified_pairs_artifact(spark, sf_dir)
+    assert cold is warm1  # cold serves the store read it memoized
     assert warm1 is warm2  # one read, one checkpoint, memoized
-    assert len(lp._VERIFIED_PAIRS_DF_CACHE) == 1
+    assert sum(k[1] == "verified_pairs" for k in artifacts._MEMO) == 1
     assert sorted(map(tuple, warm1.collect())) == sorted(
         map(tuple, cold.collect())
     )
-    lp.clear_artifact_caches()
-    assert not lp._VERIFIED_PAIRS_DF_CACHE and not lp._IVF_INDEX_CACHE
-    assert os.path.exists(lp._ARTIFACT_ROOT)  # store survives soft clear
-    lp.clear_artifact_caches(remove_persisted=True)
-    assert not os.path.exists(lp._ARTIFACT_ROOT)
-
-
-def test_artifact_write_is_atomic_publish(spark, tmp_path, monkeypatch):
-    """_write_artifact publishes via write-temp-then-rename: a
-    completed artifact at the final path is NEVER clobbered by a
-    racing second writer (loser discards — deterministic pipelines
-    make the bytes interchangeable), crashed-writer debris at the
-    final path (dir without _SUCCESS) is cleared and replaced, and no
-    temp dirs survive any outcome."""
-    import os
-
-    from etl_wlg_metlink_spark.operators import llm_pipeline as lp
-
-    monkeypatch.setattr(lp, "_ARTIFACT_ROOT", str(tmp_path / "store"))
-    path = lp._artifact_path("race_demo", "k1")
-
-    first = spark.createDataFrame([(1, "winner")], "id long, tag string")
-    lp._write_artifact(first, path)
-    assert lp._artifact_exists(path)
-
-    # racing second writer loses: the completed artifact stands
-    second = spark.createDataFrame([(2, "loser")], "id long, tag string")
-    lp._write_artifact(second, path)
-    assert [tuple(r) for r in lp._read_artifact(spark, path).collect()] == [
-        (1, "winner")
-    ]
-
-    # crashed-writer debris (dir present, no _SUCCESS) is replaced
-    debris = lp._artifact_path("race_demo", "k2")
-    os.makedirs(debris)
-    with open(os.path.join(debris, "part-junk.parquet"), "w") as f:
-        f.write("not parquet")
-    assert not lp._artifact_exists(debris)
-    lp._write_artifact(second, debris)
-    assert lp._artifact_exists(debris)
-    assert [tuple(r) for r in lp._read_artifact(spark, debris).collect()] == [
-        (2, "loser")
-    ]
-
-    # no temp or debris dirs survive in the store
-    kind_dir = os.path.dirname(path)
-    assert not [
-        d for d in os.listdir(kind_dir) if ".tmp-" in d or ".debris-" in d
-    ]
-
-
-def test_artifact_debris_race_never_destroys_complete_copy(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r13 (medium): the crashed-debris fallback must move the
-    final path ASIDE, never rmtree it — if a racing writer publishes a
-    COMPLETE artifact between the exists check and the cleanup, and
-    the cleaning writer then crashes before its own rename, the
-    complete copy must still exist somewhere recoverable. Simulated by
-    a stale exists check (returns False though a complete artifact
-    stands) plus renames to the final path that always fail (the crash
-    window); with the old rmtree fallback the complete artifact's
-    bytes would be gone entirely."""
-    import os
-
-    from etl_wlg_metlink_spark.operators import llm_pipeline as lp
-
-    monkeypatch.setattr(lp, "_ARTIFACT_ROOT", str(tmp_path / "store"))
-    path = lp._artifact_path("race_demo", "k3")
-    complete = spark.createDataFrame([(7, "keep")], "id long, tag string")
-    lp._write_artifact(complete, path)
-    assert lp._artifact_exists(path)
-
-    real_exists = lp._artifact_exists
-    state = {"stale": True}
-
-    def stale_exists(p):
-        if state["stale"] and p == path:
-            state["stale"] = False  # one stale read, then truth
-            return False
-        return real_exists(p)
-
-    real_rename = os.rename
-
-    def crashing_rename(src, dst):
-        if dst == path:
-            raise OSError("simulated crash window")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(lp, "_artifact_exists", stale_exists)
-    monkeypatch.setattr(lp.os, "rename", crashing_rename)
-    second = spark.createDataFrame([(7, "keep")], "id long, tag string")
-    lp._write_artifact(second, path)  # must not raise, must not destroy
-    monkeypatch.undo()
-    monkeypatch.setattr(lp, "_ARTIFACT_ROOT", str(tmp_path / "store"))
-
-    # the complete artifact's bytes survive — at the final path or at
-    # a moved-aside debris sibling (recoverable), never deleted
-    kind_dir = os.path.dirname(path)
-    survivors = [
-        os.path.join(kind_dir, d)
-        for d in os.listdir(kind_dir)
-        if lp._artifact_exists(os.path.join(kind_dir, d))
-    ]
-    assert survivors, "complete artifact was destroyed by the fallback"
-    rows = [
-        tuple(r) for r in lp._read_artifact(spark, survivors[0]).collect()
-    ]
-    assert rows == [(7, "keep")]
+    artifacts.clear()
+    assert not artifacts._MEMO
+    assert os.path.exists(artifacts.ROOT)  # store survives soft clear
+    artifacts.clear(remove_persisted=True)
+    assert not os.path.exists(artifacts.ROOT)
 
 
 def test_artifact_read_failure_falls_through_to_compute(
@@ -2396,16 +2294,18 @@ def test_artifact_read_failure_falls_through_to_compute(
 
     from etl_wlg_metlink_spark.operators import llm_pipeline as lp
 
-    monkeypatch.setattr(lp, "_ARTIFACT_ROOT", str(tmp_path / "store"))
-    lp.clear_artifact_caches()
+    monkeypatch.setattr(artifacts, "ROOT", str(tmp_path / "store"))
+    artifacts.clear()
 
     # bm25 consumer vs corrupt sidecar
     fresh = sorted(map(tuple, lp.l56_bm25_retrieval(spark, sf_dir).collect()))
     lp._bm25_ranked_artifact(spark, sf_dir)  # cold: persists
-    bpath = lp._artifact_path("bm25_ranked", lp._ivf_cache_key(sf_dir, 0))
+    artifacts.clear()  # drop the memo, keep the store
+    bpath = artifacts._path("bm25_ranked", artifacts.fingerprint(sf_dir))
     with open(os.path.join(bpath, "_schema.json"), "w") as f:
         f.write("{not json")
-    assert lp._artifact_exists(bpath)  # exists check still passes
+    assert artifacts._exists(bpath)  # exists check still passes
+    failed = artifacts.COUNTS["bm25_ranked.read_failed"]
     capfd.readouterr()
     got = sorted(map(tuple, lp._bm25_ranked_artifact(spark, sf_dir).collect()))
     assert got == fresh and len(got) > 0
@@ -2419,57 +2319,25 @@ def test_artifact_read_failure_falls_through_to_compute(
         "path": bpath,
         "error": "JSONDecodeError",
     }
+    assert artifacts.COUNTS["bm25_ranked.read_failed"] == failed + 1
 
     # verified-pairs consumer vs gutted store (zero part files)
     mined = sorted(
         map(tuple, lp._verified_pairs_artifact(spark, sf_dir).collect())
     )
-    lp.clear_artifact_caches()  # drop the DataFrame memo, keep the store
-    vpath = lp._artifact_path(
-        "verified_pairs", (lp._ivf_cache_key(sf_dir, 0), 0.8)
+    artifacts.clear()  # drop the DataFrame memo, keep the store
+    vpath = artifacts._path(
+        "verified_pairs", (artifacts.fingerprint(sf_dir), 0.8)
     )
     for name in os.listdir(vpath):
         if name.endswith(".parquet") and not name.startswith((".", "_")):
             os.unlink(os.path.join(vpath, name))
-    assert lp._artifact_exists(vpath)
+    assert artifacts._exists(vpath)
     got = sorted(
         map(tuple, lp._verified_pairs_artifact(spark, sf_dir).collect())
     )
     assert got == mined and len(got) > 0
-    lp.clear_artifact_caches()
-
-
-def test_artifact_key_includes_format_version(spark, tmp_path, monkeypatch):
-    """ADVICE r13 (low): the storage digest folds in a per-kind format
-    version, so a build that changes an artifact's schema/semantics
-    (version bump) can never be served an old-build artifact under the
-    same data fingerprint — the old path simply stops resolving and
-    the consumer re-mines."""
-    import os
-
-    from etl_wlg_metlink_spark.operators import llm_pipeline as lp
-
-    monkeypatch.setattr(lp, "_ARTIFACT_ROOT", str(tmp_path / "store"))
-    p_v1 = lp._artifact_path("ivf_index", ("fp", 40))
-    monkeypatch.setitem(lp._ARTIFACT_FORMAT_VERSIONS, "ivf_index", 2)
-    p_v2 = lp._artifact_path("ivf_index", ("fp", 40))
-    assert p_v1 != p_v2  # version is part of the identity
-    assert os.path.dirname(p_v1) == os.path.dirname(p_v2)  # same kind dir
-
-    # kinds are part of the digest too: same key, different kind,
-    # never the same leaf digest (defense against cross-kind aliasing)
-    q = lp._artifact_path("cc_labels", ("fp", 40))
-    assert os.path.basename(q) != os.path.basename(lp._artifact_path("ivf_index", ("fp", 40)))
-
-    # end-to-end: an artifact published under v1 is invisible after a
-    # bump — the old copy stays as unreachable garbage, nothing serves
-    monkeypatch.setitem(lp._ARTIFACT_FORMAT_VERSIONS, "ivf_index", 1)
-    art = spark.createDataFrame([(0, 1, [0.0], 1.0)],
-                                "pos int, seed_id long, cent array<double>, cnorm double")
-    lp._write_artifact(art, lp._artifact_path("ivf_index", ("fp", 40)))
-    assert lp._artifact_exists(lp._artifact_path("ivf_index", ("fp", 40)))
-    monkeypatch.setitem(lp._ARTIFACT_FORMAT_VERSIONS, "ivf_index", 2)
-    assert not lp._artifact_exists(lp._artifact_path("ivf_index", ("fp", 40)))
+    artifacts.clear()
 
 
 def test_artifacts_serve_fresh_process_from_storage(spark, sf_dir, tmp_path, monkeypatch):
@@ -2481,8 +2349,8 @@ def test_artifacts_serve_fresh_process_from_storage(spark, sf_dir, tmp_path, mon
     memoize DataFrame handles."""
     from etl_wlg_metlink_spark.operators import llm_pipeline as lp
 
-    monkeypatch.setattr(lp, "_ARTIFACT_ROOT", str(tmp_path / "store"))
-    lp.clear_artifact_caches()
+    monkeypatch.setattr(artifacts, "ROOT", str(tmp_path / "store"))
+    artifacts.clear()
     mined_pairs = sorted(
         map(tuple, lp._verified_pairs_artifact(spark, sf_dir).collect())
     )
@@ -2491,7 +2359,7 @@ def test_artifacts_serve_fresh_process_from_storage(spark, sf_dir, tmp_path, mon
         map(tuple, lp._bm25_ranked_artifact(spark, sf_dir).collect())
     )
 
-    lp.clear_artifact_caches()  # fresh-process simulation: dicts empty
+    artifacts.clear()  # fresh-process simulation: memo empty
 
     def boom(*a, **k):
         raise AssertionError("re-mined: artifact store was not used")
@@ -2512,7 +2380,7 @@ def test_artifacts_serve_fresh_process_from_storage(spark, sf_dir, tmp_path, mon
         sorted(map(tuple, lp._bm25_ranked_artifact(spark, sf_dir).collect()))
         == mined_ranked
     )
-    lp.clear_artifact_caches()
+    artifacts.clear()
 
 
 def test_l74_merges_windows_into_maximal_spans(spark, tmp_path):
@@ -2718,61 +2586,6 @@ def test_l77_global_rank_matches_total_order_any_bucket_count(
     assert [t[0] for t in by_rank] == [t[0] for t in expected]
     phases = [t[3] for t in by_rank]
     assert phases == ["early"] * 20 + ["mid"] * 20 + ["late"] * 20
-
-
-def test_artifact_store_concurrent_writer_reader_storm(
-    spark, tmp_path, monkeypatch
-):
-    """Probabilistic companion to the deterministic race pins above:
-    several writers republish the same key while readers hammer the
-    exists->read path. The atomic-publish contract is that a reader
-    either gets the complete artifact's exact rows or an exception it
-    falls through on — NEVER silently wrong/partial bytes — and a
-    complete artifact stands at the end."""
-    import threading
-
-    from etl_wlg_metlink_spark.operators import llm_pipeline as lp
-
-    monkeypatch.setattr(lp, "_ARTIFACT_ROOT", str(tmp_path / "store"))
-    path = lp._artifact_path("storm", "k1")
-    rows_in = [(i, f"t{i}") for i in range(20)]
-    df = spark.createDataFrame(rows_in, "id long, tag string")
-    expected = sorted(rows_in)
-    wrong: list = []
-    done = threading.Event()
-
-    def writer():
-        for _ in range(4):
-            lp._write_artifact(df, path)
-
-    def reader():
-        while not done.is_set():
-            if not lp._artifact_exists(path):
-                continue
-            try:
-                got = sorted(
-                    tuple(r) for r in lp._read_artifact(spark, path).collect()
-                )
-            except Exception:
-                continue  # guarded consumers fall through to recompute
-            if got != expected:
-                wrong.append(got)
-                return
-
-    writers = [threading.Thread(target=writer) for _ in range(3)]
-    readers = [threading.Thread(target=reader) for _ in range(3)]
-    for t in readers + writers:
-        t.start()
-    for t in writers:
-        t.join()
-    done.set()
-    for t in readers:
-        t.join()
-
-    assert not wrong, f"reader observed wrong bytes: {wrong[:1]}"
-    assert lp._artifact_exists(path)
-    final = sorted(tuple(r) for r in lp._read_artifact(spark, path).collect())
-    assert final == expected
 
 
 def test_l78_epoch_shards_balanced_distinct_deterministic(spark, tmp_path):

@@ -32,6 +32,39 @@ def test_tumbling_stream_matches_batch(spark, sf_dir):
     assert _rows(result, cols) == _rows(batch, cols)
 
 
+def test_one_shot_runner_unloads_state_stores(spark, sf_dir, tmp_path):
+    """A stateful one-shot runner releases its state-store providers
+    before it returns. The direct query first shows the probe sees
+    loaded providers, so a renamed Spark internal fails here instead
+    of silently leaving their state pinned."""
+    store = spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore
+    q = (
+        runners.tumbling_counts_stream(runners.events_stream(spark, sf_dir))
+        .writeStream.format("noop")
+        .outputMode("complete")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert store.isMaintenanceRunning()
+    runners.run_available_now(
+        runners.tumbling_counts_stream(runners.events_stream(spark, sf_dir)),
+        output_mode="complete",
+    )
+    assert not store.isMaintenanceRunning()
+
+
+def test_state_store_unload_failure_is_logged(capfd):
+    runners._unload_state_providers(None)  # no JVM to call into
+    out, err = capfd.readouterr()
+    assert out == ""
+    assert json.loads(err) == {
+        "event": "state_store_unload_failed",
+        "error": "AttributeError",
+    }
+
+
 def test_dedup_within_watermark_stream(spark, sf_dir):
     stream = runners.events_stream(spark, sf_dir)
     result = runners.run_available_now(

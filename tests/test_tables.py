@@ -25,6 +25,8 @@ def test_artifact_respread_is_scale_conditional(spark, tmp_path, monkeypatch):
     df = spark.range(4)
     small = tables.spread(df, str(tmp_path / "t.parquet"))
     assert "Repartition" in small._jdf.queryExecution().logical().toString()
+    # a relation with no source on disk is left as it is
+    assert tables.spread(df, None) is df
 
     # an input past the split threshold is NOT respread
     monkeypatch.setattr(

@@ -34,20 +34,17 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import subprocess
 import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-from etl_wlg_metlink_spark.operators.llm_pipeline import (  # noqa: E402
-    _ARTIFACT_ROOT as STORE,
-)
+from etl_wlg_metlink_spark import artifacts  # noqa: E402
 
 
 def _run_leg(tree: str, lanes: list[str], sf_dir: str | None) -> dict:
-    shutil.rmtree(STORE, ignore_errors=True)  # same cold protocol per leg
+    artifacts.clear(remove_persisted=True)  # same cold protocol per leg
     env = dict(os.environ)
     if sf_dir:
         env["SPARK_GRAFT_SF_DIR"] = sf_dir
@@ -104,7 +101,7 @@ def main() -> int:
             cwd=REPO,
             capture_output=True,
         )
-        shutil.rmtree(STORE, ignore_errors=True)
+        artifacts.clear(remove_persisted=True)
 
     print(f"{'lane':36s} {'base':>7s} {'head':>7s} {'ratio':>6s}")
     for k in sorted(lanes):

@@ -66,11 +66,9 @@ def main() -> None:
     # mining pipeline when it doesn't, so a leftover store from a
     # previous process would make PLANS.md depend on run history.
     # Cold start + fixed registry order = deterministic output.
-    from etl_wlg_metlink_spark.operators.llm_pipeline import (
-        clear_artifact_caches,
-    )
+    from etl_wlg_metlink_spark import artifacts
 
-    clear_artifact_caches(remove_persisted=True)
+    artifacts.clear(remove_persisted=True)
     spark = build_session(
         app_name="plan_audit",
         extra_conf={"spark.ui.showConsoleProgress": "false"},

@@ -81,14 +81,18 @@ def fingerprint(path: str, n: int = 0) -> tuple:
     """Source-data key ``(realpath, files, n)``: ``files`` is the
     sorted (relpath, size, mtime_ns) of every data file under
     ``path``, so a rewrite in place or another spelling of the same
-    path cannot alias two data states. On any OSError the middle
-    element is a fresh ``object()``: the key equals no other key and
-    is never stored."""
+    path cannot alias two data states. On any OSError, including an
+    unlistable subdirectory, the middle element is a fresh
+    ``object()``: the key equals no other key and is never stored."""
+
+    def fail(err: OSError):
+        raise err
+
     rp = os.path.realpath(path)
     stats = []
     try:
         if os.path.isdir(rp):
-            for root, dirs, files in os.walk(rp):
+            for root, dirs, files in os.walk(rp, onerror=fail):
                 dirs[:] = sorted(d for d in dirs if not d.startswith("."))
                 for f in sorted(files):
                     if f.startswith((".", "_")):

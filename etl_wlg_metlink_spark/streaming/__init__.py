@@ -109,7 +109,7 @@ def s4_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = _run_with_state_partitions(
         spark,
         8,
-        lambda: runners.run_available_now(
+        lambda: runners.drain(
             runners.user_track_state_stream(stream), output_mode="update"
         ),
     )
@@ -144,7 +144,7 @@ def s5_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_with_state_partitions(
         spark,
         8,
-        lambda: runners.run_available_now(
+        lambda: runners.drain(
             runners.dedup_within_watermark_stream(stream)
         ),
     )
@@ -164,7 +164,7 @@ def s6_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_with_state_partitions(
         spark,
         8,
-        lambda: runners.run_available_now(
+        lambda: runners.drain(
             runners.stream_static_enrich_stream(stream, customer),
             output_mode="complete",
         ),
@@ -183,7 +183,7 @@ def s7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_with_state_partitions(
         spark,
         8,
-        lambda: runners.run_available_now(
+        lambda: runners.drain(
             runners.stream_stream_interval_join(stream)
         ),
     )
@@ -220,7 +220,7 @@ def s9_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_with_state_partitions(
         spark,
         8,
-        lambda: runners.run_available_now(
+        lambda: runners.drain(
             runners.stream_stream_left_outer_join(stream)
         ),
     )
@@ -250,7 +250,7 @@ def s10_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = _run_with_state_partitions(
         spark,
         8,
-        lambda: runners.run_available_now(
+        lambda: runners.drain(
             runners.capped_sessions_stream(stream), output_mode="update"
         ),
     )
@@ -297,13 +297,7 @@ def s11_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from etl_wlg_metlink_spark.streaming import runners
 
-    stage = runners.staged_documents_dir(spark, sf_dir, 4)
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    _, stream = runners.staged_replay(spark, sf_dir, "documents", "doc_id", 4)
     base = stream.select("lang", _words(F.col("text")).alias("ws"))
     bits = l46_rule_bits(F.col("ws"))
     any_failed = reduce(lambda a, b: a | b, bits.values())
@@ -316,7 +310,7 @@ def s11_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_with_state_partitions(
         spark,
         8,
-        lambda: runners.run_available_now(agg, output_mode="complete"),
+        lambda: runners.drain(agg, output_mode="complete"),
     )
 
 
@@ -526,7 +520,7 @@ def s12_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-phase streaming top-k every live dashboard runs). The
     oracle is the equivalent batch rank over the full table — exact
     because the ts-range staging admits zero late drops (see
-    staged_events_dir)."""
+    runners.staged_replay)."""
     from etl_wlg_metlink_spark.streaming import runners
 
     return _run_with_state_partitions(

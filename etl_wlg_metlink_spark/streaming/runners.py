@@ -1,11 +1,16 @@
 """M5 — actual Structured Streaming pipelines.
 
 The reference is a scheduled one-shot batch (task.ts:122): each Lambda
-invocation processes one snapshot. The streaming analogue is
-`trigger(availableNow=True)` — process everything available, then
-stop — which is how every runner here executes in tests; swapping the
-trigger for `processingTime` turns the same graph into a resident
-poller with NO code changes (Spark's unified batch/stream contract).
+invocation processes one snapshot. The streaming analogue is the
+availableNow trigger — process everything available, then stop.
+`drain` is the one place that runs a query that way: every one-shot
+runner and lane hands it a stream (and a foreachBatch function, or
+none for a memory sink), and it owns the checkpoint, the trigger, the
+wait and the cleanup. `staged_replay` is the one landing directory
+the multi-batch runners replay. Swapping the trigger for
+`processingTime` turns the same graph into a resident poller with NO
+code changes (Spark's unified batch/stream contract) —
+`metlink_resident_stream`.
 
 Watermarks bound state: the tumbling aggregation keeps only windows
 younger than the watermark; dedup-within-watermark keeps only recent
@@ -18,9 +23,11 @@ from __future__ import annotations
 
 import atexit
 import json
+import os
 import shutil
 import sys
 import tempfile
+import time
 import uuid
 from collections.abc import Callable
 
@@ -55,8 +62,8 @@ def _tracked_mkdtemp(prefix: str) -> str:
     """mkdtemp that the process cleans up after itself: every staging /
     ledger / checkpoint dir is registered here and removed at exit, so
     repeated bench/test runs in one interpreter don't accumulate temp
-    directories on disk (ADVICE r06). Dirs cached for intra-process
-    reuse (_WATCH_DIRS etc.) stay alive until exit by design.
+    directories on disk. Dirs cached for intra-process reuse
+    (_WATCH_DIRS, _STAGED) stay alive until exit by design.
 
     Rooted at session.scratch_root() (tmpfs locally, NVMe in a
     deployment): checkpoint WALs, state-store deltas and staged
@@ -80,24 +87,23 @@ def _unload_state_providers(spark: SparkSession) -> None:
     """Release the just-terminated query's state-store providers NOW
     instead of at the next maintenance tick (default 60 s away).
 
-    Every runner here executes one-shot (availableNow / drain-then-
-    stop) against a FRESH temp checkpoint, so a terminated query's
-    loaded providers can never be reused — yet each keeps its last
-    committed version's full state map pinned in executor memory
-    until the maintenance task notices the query is gone. Per key
-    that is O(state) memory held for up to a minute after the answer
-    was returned; a bench/driver session runs ~50 such queries
-    back-to-back, and at production state sizes the pinned maps are
-    GBs (same leak class as the r16 memory-sink temp views, one
-    layer down). StateStore.stop() unloads every provider and halts
-    the maintenance thread; the next stateful query restarts both on
-    demand (verified: isMaintenanceRunning flips back true). Callers
-    must not hold another streaming query RUNNING concurrently —
-    its providers would be unloaded too and reload from checkpoint
-    on its next batch (correct, just slower); every runner in this
-    module is synchronous, so the situation does not arise here.
-    Best-effort: a missing/renamed internal never fails the query, and
-    writes one JSON line to stderr instead."""
+    `drain` runs every query one-shot against a FRESH temp checkpoint,
+    so a terminated query's loaded providers can never be reused — yet
+    each keeps its last committed version's full state map pinned in
+    executor memory until the maintenance task notices the query is
+    gone. Per key that is O(state) memory held for up to a minute
+    after the answer was returned; a bench/driver session runs ~50
+    such queries back-to-back, and at production state sizes the
+    pinned maps are GBs (the same leak class as a memory sink's temp
+    view left in the catalog, one layer down). StateStore.stop()
+    unloads every provider and halts the maintenance thread; the next
+    stateful query restarts both on demand (isMaintenanceRunning flips
+    back true). Callers must not hold another streaming query RUNNING
+    concurrently — its providers would be unloaded too and reload from
+    checkpoint on its next batch (correct, just slower); `drain` is
+    synchronous, so the situation does not arise here. Best-effort: a
+    missing/renamed internal never fails the query, and writes one
+    JSON line to stderr instead."""
     try:
         spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     except Exception as exc:
@@ -118,13 +124,143 @@ def _watch_dir_for(path: str) -> str:
     """The file-stream source wants a directory to watch; testdata is a
     single read-only file, so expose it through a cached temp dir of
     symlinks (what a real deployment's landing directory is anyway)."""
-    import os
-
     if path not in _WATCH_DIRS:
         watch_dir = _tracked_mkdtemp(prefix="events_stream_")
         os.symlink(path, os.path.join(watch_dir, os.path.basename(path)))
         _WATCH_DIRS[path] = watch_dir
     return _WATCH_DIRS[path]
+
+
+#: an idle drain stops after this many consecutive DISTINCT zero-input
+#: progress reports, and raises TimeoutError if they take longer than
+#: IDLE_TIMEOUT_S seconds to arrive
+IDLE_REPORTS = 3
+IDLE_TIMEOUT_S = 120.0
+
+
+def drain(
+    stream: DataFrame,
+    batch_fn: Callable[[DataFrame, int], None] | None = None,
+    *,
+    output_mode: str = "append",
+    idle: bool = False,
+) -> DataFrame | None:
+    """Run ``stream`` one-shot — ≈ one scheduled invocation of the
+    reference task — against a fresh temp checkpoint. Each micro-batch
+    goes to ``batch_fn`` (foreachBatch; returns None) or, when it is
+    None, to a memory sink whose materialized result is returned.
+
+    ``idle=True`` is for Python DataSources (e.g. metlink_poll), which
+    don't support Trigger.AvailableNow (the engine falls back to ONE
+    batch, losing every poll after the first). It runs a
+    processingTime=0 trigger and stops after IDLE_REPORTS consecutive
+    DISTINCT zero-input progress reports — the "caught up" signal a
+    resident poller would otherwise never emit. Spark only publishes a
+    no-data report every `noDataProgressEventInterval` (default 10 s —
+    a dead stall here), so that interval is lowered around the query;
+    and `lastProgress` is the SAME object until the next report lands,
+    so idleness is counted per distinct report timestamp, not per
+    0.25 s sample of one report.
+
+    Whether the query succeeds or raises, it is stopped, its
+    state-store providers unloaded, its checkpoint removed, and the
+    memory sink's temp view dropped: the returned DataFrame holds the
+    resolved plan (and keeps the sink rows alive while referenced),
+    but the catalog entry would otherwise pin every run's sink in
+    executor memory for the session's lifetime."""
+    from etl_wlg_metlink_spark.session import conf_override
+
+    spark = stream.sparkSession
+    checkpoint = _tracked_mkdtemp(prefix="drain_ckpt_")
+    name = f"drain_{uuid.uuid4().hex[:8]}"
+    writer = stream.writeStream.outputMode(output_mode).option(
+        "checkpointLocation", checkpoint
+    )
+    if batch_fn is None:
+        writer = writer.format("memory").queryName(name)
+    else:
+        writer = writer.foreachBatch(batch_fn)
+    q = None
+    try:
+        if idle:
+            with conf_override(
+                spark, {"spark.sql.streaming.noDataProgressEventInterval": "250ms"}
+            ):
+                q = writer.trigger(processingTime="0 seconds").start()
+                deadline = time.monotonic() + IDLE_TIMEOUT_S
+                quiet, last_seen = 0, None
+                while quiet < IDLE_REPORTS and q.isActive:
+                    if time.monotonic() >= deadline:
+                        raise TimeoutError(
+                            f"stream not idle after {IDLE_TIMEOUT_S} s"
+                        )
+                    time.sleep(0.25)
+                    p = q.lastProgress
+                    if p is None or p["timestamp"] == last_seen:
+                        continue
+                    last_seen = p["timestamp"]
+                    quiet = quiet + 1 if p["numInputRows"] == 0 else 0
+                q.stop()
+        else:
+            q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+        return spark.table(name) if batch_fn is None else None
+    finally:
+        if q is not None:
+            q.stop()
+        _unload_state_providers(spark)
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(checkpoint, ignore_errors=True)
+
+
+#: staged replays, one per (sf_dir, table, order_col, n_batches) —
+#: repeated calls (driver gate, bench warm+timed, tests) must not
+#: re-stage or leak temp dirs
+_STAGED: dict[tuple[str, str, str, int], str] = {}
+
+
+def staged_replay(
+    spark: SparkSession, sf_dir: str, table: str, order_col: str, n_batches: int
+) -> tuple[str, DataFrame]:
+    """Stage ``table`` as n_batches CONTIGUOUS ``order_col``-range
+    files with strictly ascending mtimes, and return the staging dir
+    and a file stream over it that reads one file per micro-batch. The
+    file source orders by modification time, so the batches replay in
+    ``order_col`` order — batch 1 holds the smallest values. Real
+    ingest is exactly this: a landing directory filling over time.
+
+    The ordering is load-bearing. Staged by ``ts``, the watermark at
+    the start of batch k is max(ts of batches 1..k-1) - horizon, and
+    because range k's minimum ts >= range k-1's maximum, no arriving
+    row ever falls behind the watermark — zero late drops, so the
+    final streaming aggregates equal the batch ones exactly. Staged by
+    an id, the first arrival of each key carries its global minimum
+    id, so a first-arrival-wins ingest equals the batch min-id rule."""
+    from etl_wlg_metlink_spark.session import ensure_engine_conf
+    from etl_wlg_metlink_spark.tables import load
+
+    ensure_engine_conf(spark)
+    key = (sf_dir, table, order_col, n_batches)
+    if key not in _STAGED:
+        stage = _tracked_mkdtemp(prefix=f"{table}_replay_")
+        (
+            load(spark, sf_dir, table)
+            .repartitionByRange(n_batches, order_col)
+            .write.mode("overwrite")
+            .parquet(stage)
+        )
+        parts = sorted(f for f in os.listdir(stage) if f.startswith("part-"))
+        base = 1_700_000_000  # any fixed epoch; only the ordering matters
+        for i, f in enumerate(parts):
+            os.utime(os.path.join(stage, f), (base + i, base + i))
+        _STAGED[key] = stage
+    stage = _STAGED[key]
+    stream = (
+        spark.readStream.schema(spark.read.parquet(stage).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+    )
+    return stage, stream
 
 
 def tumbling_counts_stream(events: DataFrame) -> DataFrame:
@@ -267,41 +403,6 @@ def stream_stream_left_outer_join(events: DataFrame) -> DataFrame:
     )
 
 
-#: staged multi-file replays of documents.parquet, cached per
-#: (sf_dir, n_batches) — repeated calls (driver gate, bench warm+timed,
-#: tests) must not re-stage or leak temp dirs.
-_INGEST_STAGE_DIRS: dict[tuple[str, int], str] = {}
-
-
-def staged_documents_dir(spark: SparkSession, sf_dir: str, n_batches: int) -> str:
-    """Stage documents.parquet as n_batches doc_id-range files with
-    strictly ascending mtimes, so the file-stream source (which orders
-    by modification time) replays them as deterministic micro-batches
-    in doc_id order — batch 1 holds the smallest doc_ids. Real ingest
-    is exactly this: a landing directory filling over time."""
-    import os
-
-    key = (sf_dir, n_batches)
-    if key not in _INGEST_STAGE_DIRS:
-        from etl_wlg_metlink_spark.tables import load
-
-        stage = _tracked_mkdtemp(prefix="docs_ingest_")
-        (
-            load(spark, sf_dir, "documents")
-            .repartitionByRange(n_batches, "doc_id")
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        parts = sorted(
-            f for f in os.listdir(stage) if f.startswith("part-")
-        )
-        base = 1_700_000_000  # any fixed epoch; only the ordering matters
-        for i, f in enumerate(parts):
-            os.utime(os.path.join(stage, f), (base + i, base + i))
-        _INGEST_STAGE_DIRS[key] = stage
-    return _INGEST_STAGE_DIRS[key]
-
-
 def corpus_ingest_dedup_run(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> str:
@@ -322,20 +423,8 @@ def corpus_ingest_dedup_run(
     Because the staged replay ascends in doc_id, first-arrival
     equals global min-doc_id per fingerprint, which is what makes the
     result batch-oracle-checkable (l5's window rule)."""
-
-    from etl_wlg_metlink_spark.session import ensure_engine_conf
-
-    ensure_engine_conf(spark)
-    stage = staged_documents_dir(spark, sf_dir, n_batches)
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    out = _tracked_mkdtemp(prefix="docs_dedup_")
-    survivors_dir = f"{out}/survivors"
-    checkpoint_dir = f"{out}/checkpoint"
+    _, stream = staged_replay(spark, sf_dir, "documents", "doc_id", n_batches)
+    survivors_dir = _tracked_mkdtemp(prefix="docs_survivors_")
 
     fp = F.md5(
         F.array_join(
@@ -363,97 +452,8 @@ def corpus_ingest_dedup_run(
             survivors_dir
         )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _unload_state_providers(spark)
+    drain(stream, ingest_batch)
     return survivors_dir
-
-
-def run_available_now(
-    stream_df: DataFrame, query_name: str | None = None, output_mode: str = "append"
-) -> DataFrame:
-    """Execute a streaming DataFrame one-shot (availableNow) into a
-    memory sink and return the materialized result. ≈ one scheduled
-    invocation of the reference task."""
-    name = query_name or f"q_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    spark = stream_df.sparkSession
-    _unload_state_providers(spark)
-    result = spark.table(name)  # resolves the sink-backed plan NOW
-    # Drop the temp view immediately: the returned DataFrame holds the
-    # resolved plan (and keeps the sink rows alive while referenced),
-    # but the catalog entry would otherwise pin every run's sink in
-    # executor memory for the session's lifetime — ~3 runs × every
-    # streaming lane per bench = an unbounded heap leak that surfaces
-    # as GC pressure in whatever queries run late in the suite.
-    spark.catalog.dropTempView(name)
-    return result
-
-
-def run_until_idle(
-    stream_df: DataFrame,
-    query_name: str | None = None,
-    output_mode: str = "append",
-    idle_reports: int = 3,
-    timeout_s: float = 120.0,
-) -> DataFrame:
-    """Drain a pull-based source (e.g. the metlink_poll DataSource)
-    through as many micro-batches as it has data, then stop.
-
-    Python DataSources don't support Trigger.AvailableNow (the engine
-    falls back to ONE batch, losing every poll after the first), so
-    this runs a processingTime=0 trigger and stops after several
-    consecutive DISTINCT zero-input progress reports — the "caught up"
-    signal a resident poller would otherwise never emit. Two details
-    matter: Spark only publishes a no-data progress report every
-    `noDataProgressEventInterval` (default 10 s — a dead stall here),
-    so that interval is lowered around the query; and `lastProgress`
-    is the SAME object until the next report lands, so idleness is
-    counted per distinct report timestamp, not per 0.25 s sample of
-    one report."""
-    import time
-
-    from etl_wlg_metlink_spark.session import conf_override
-
-    spark = stream_df.sparkSession
-    name = query_name or f"q_{uuid.uuid4().hex[:8]}"
-    with conf_override(
-        spark, {"spark.sql.streaming.noDataProgressEventInterval": "250ms"}
-    ):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        deadline = time.time() + timeout_s
-        idle, last_seen = 0, None
-        while time.time() < deadline and idle < idle_reports:
-            time.sleep(0.25)
-            p = q.lastProgress
-            if p is None or p["timestamp"] == last_seen:
-                continue
-            last_seen = p["timestamp"]
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-        q.stop()
-        q.awaitTermination()
-    _unload_state_providers(spark)
-    result = spark.table(name)
-    spark.catalog.dropTempView(name)  # same leak guard as run_available_now
-    return result
 
 
 def user_track_state_stream(events: DataFrame) -> DataFrame:
@@ -830,40 +830,6 @@ def metlink_resident_stream(
     )
 
 
-_EVENT_STAGE_DIRS: dict[tuple[str, int], str] = {}
-
-
-def staged_events_dir(spark: SparkSession, sf_dir: str, n_batches: int) -> str:
-    """Stage events.parquet as n_batches CONTIGUOUS ts-range files with
-    ascending mtimes — the file stream replays them in event-time
-    order, which is what a real landing directory filling from a
-    time-ordered feed looks like. The ordering is load-bearing for
-    update-mode aggregation parity: the watermark at the start of
-    batch k is max(ts of batches 1..k-1) - horizon, and because range
-    k's minimum ts >= range k-1's maximum, no arriving row ever falls
-    behind the watermark — zero late drops, so the final streaming
-    counts equal the batch aggregation exactly."""
-    import os
-
-    key = (sf_dir, n_batches)
-    if key not in _EVENT_STAGE_DIRS:
-        from etl_wlg_metlink_spark.tables import load
-
-        stage = _tracked_mkdtemp(prefix="events_ingest_")
-        (
-            load(spark, sf_dir, "events")
-            .repartitionByRange(n_batches, "ts")
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        parts = sorted(f for f in os.listdir(stage) if f.startswith("part-"))
-        base = 1_700_000_000
-        for i, f in enumerate(parts):
-            os.utime(os.path.join(stage, f), (base + i, base + i))
-        _EVENT_STAGE_DIRS[key] = stage
-    return _EVENT_STAGE_DIRS[key]
-
-
 def trending_topk_run(
     spark: SparkSession, sf_dir: str, k: int = 3, n_batches: int = 4
 ) -> DataFrame:
@@ -884,39 +850,12 @@ def trending_topk_run(
     variant of this lane); the ledger grows by changed-windows per
     batch, and compaction is one keyed window over the
     (windows x types x batches)-bounded ledger, never the event
-    stream. Exactness across batch splits is the staged_events_dir
+    stream. Exactness across batch splits is the staged_replay
     invariant (ts-range staging -> zero late drops)."""
-
     from pyspark.sql import Window
-    from etl_wlg_metlink_spark.session import ensure_engine_conf
-    from etl_wlg_metlink_spark.tables import _normalize_event_ts
 
-    ensure_engine_conf(spark)
-    stage = staged_events_dir(spark, sf_dir, n_batches)
-    schema = spark.read.parquet(stage).schema
-    stream = _normalize_event_ts(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    counts = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
+    _, stream = staged_replay(spark, sf_dir, "events", "ts", n_batches)
     ledger_dir = _tracked_mkdtemp(prefix="trending_ledger_")
-    checkpoint_dir = _tracked_mkdtemp(prefix="trending_ckpt_")
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
         # idempotent keyed upsert, ledger form: append the batch's
@@ -929,15 +868,7 @@ def trending_topk_run(
             .parquet(ledger_dir)
         )
 
-    q = (
-        counts.writeStream.foreachBatch(upsert_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _unload_state_providers(spark)
+    drain(tumbling_counts_stream(stream), upsert_batch, output_mode="update")
     ledger = spark.read.parquet(ledger_dir)
     w_last = Window.partitionBy("window_start", "event_type").orderBy(
         F.col("batch_id").desc()
@@ -949,11 +880,10 @@ def trending_topk_run(
     )
     # the compaction is (windows × types)-bounded, so materialize it
     # eagerly (lineage cut from the ledger files) and reclaim the
-    # ledger + checkpoint dirs NOW instead of at process exit — one
-    # invocation leaves zero disk residue behind
+    # ledger dir NOW instead of at process exit — one invocation
+    # leaves zero disk residue behind
     final = final.localCheckpoint(eager=True)
-    for d in (ledger_dir, checkpoint_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(ledger_dir, ignore_errors=True)
     w_rank = Window.partitionBy("window_start").orderBy(
         F.col("n").desc(), "event_type"
     )
@@ -962,35 +892,6 @@ def trending_topk_run(
         .where(F.col("rnk") <= k)
         .select("window_start", "rnk", "event_type", "n", "sum_value")
     )
-
-
-_EMB_STAGE_DIRS: dict[tuple[str, int], str] = {}
-
-
-def staged_embeddings_dir(spark: SparkSession, sf_dir: str, n_batches: int) -> str:
-    """embeddings.parquet staged as n_batches vec_id-range files with
-    ascending mtimes — the vector twin of staged_documents_dir, so the
-    file-stream source replays deterministic micro-batches of arriving
-    vectors in vec_id order."""
-    import os
-
-    key = (sf_dir, n_batches)
-    if key not in _EMB_STAGE_DIRS:
-        from etl_wlg_metlink_spark.tables import load
-
-        stage = _tracked_mkdtemp(prefix="emb_ingest_")
-        (
-            load(spark, sf_dir, "embeddings")
-            .repartitionByRange(n_batches, "vec_id")
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        parts = sorted(f for f in os.listdir(stage) if f.startswith("part-"))
-        base = 1_700_000_000
-        for i, f in enumerate(parts):
-            os.utime(os.path.join(stage, f), (base + i, base + i))
-        _EMB_STAGE_DIRS[key] = stage
-    return _EMB_STAGE_DIRS[key]
 
 
 def ivf_ingest_run(
@@ -1019,28 +920,17 @@ def ivf_ingest_run(
         _ivf_assign,
         _ivf_index,
     )
-    from etl_wlg_metlink_spark.session import ensure_engine_conf
     from etl_wlg_metlink_spark.tables import load
 
-    ensure_engine_conf(spark)
-    stage = staged_embeddings_dir(spark, sf_dir, n_batches)
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    _, stream = staged_replay(spark, sf_dir, "embeddings", "vec_id", n_batches)
     # the fixed coarse quantizer, TRAINED ONCE ahead of ingest on the
     # full static table (FAISS-style: train, then serve while adding);
     # the driver-side centroid arrays live in the foreachBatch closure,
-    # so no micro-batch ever re-scans or re-collects the seed set
-    # (ADVICE r10: the old per-batch seeds.collect() re-executed the
-    # seed scan inside every foreachBatch invocation).
+    # so no micro-batch re-scans or re-collects the seed set
     sid, cent, cnorm = _ivf_index(
         load(spark, sf_dir, "embeddings"), cache_key=sf_dir
     )
     ledger_dir = _tracked_mkdtemp(prefix="ivf_ledger_")
-    checkpoint_dir = _tracked_mkdtemp(prefix="ivf_ckpt_")
 
     def assign_batch(batch_df: DataFrame, batch_id: int) -> None:
         corpus = batch_df.select(
@@ -1072,14 +962,7 @@ def ivf_ingest_run(
             .parquet(ledger_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(assign_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _unload_state_providers(spark)
+    drain(stream, assign_batch)
     from pyspark.sql import Window
 
     ledger = spark.read.parquet(ledger_dir)
@@ -1090,8 +973,7 @@ def ivf_ingest_run(
         .select("vec_id", "cell")
         .localCheckpoint(eager=True)  # bounded: one row per vector
     )
-    for d in (ledger_dir, checkpoint_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(ledger_dir, ignore_errors=True)
     return serving
 
 
@@ -1125,9 +1007,7 @@ def drift_monitor_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ends mid-corpus-time, so the tail windows never finalize).
     # Per-key counts are monotone across emissions, so last-wins
     # compaction is max(n) — the s4 discipline.
-    raw = run_available_now(
-        tumbling_counts_stream(stream), output_mode="update"
-    )
+    raw = drain(tumbling_counts_stream(stream), output_mode="update")
     counts = raw.groupBy("window_start", "event_type").agg(
         F.max("n").alias("n")
     )
@@ -1211,19 +1091,10 @@ def countmin_ingest_run(
         L92_TOP_K,
         _md5_int60,
     )
-    from etl_wlg_metlink_spark.session import ensure_engine_conf
 
-    ensure_engine_conf(spark)
-    stage = staged_events_dir(spark, sf_dir, n_batches)
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    _, stream = staged_replay(spark, sf_dir, "events", "ts", n_batches)
     sketch_dir = _tracked_mkdtemp(prefix="cms_sketch_ledger_")
     counts_dir = _tracked_mkdtemp(prefix="cms_counts_ledger_")
-    checkpoint_dir = _tracked_mkdtemp(prefix="cms_ckpt_")
 
     rows = F.explode(F.sequence(F.lit(0), F.lit(CMS_D - 1)))
 
@@ -1245,10 +1116,9 @@ def countmin_ingest_run(
         # partial grid derives FROM those counts: cell(r, bkt) =
         # Σ_{k hashing there} c(k) — identical values to counting raw
         # events per bucket, but the d md5 probes run once per
-        # DISTINCT key instead of once per event row (VERDICT r14
-        # item 5: ~0.4 s/lane at sf0.1 — see the BENCH_NOTES floor
-        # decomposition — and at 100 TB the difference between hashing
-        # the corpus ×d and hashing the key dictionary ×d).
+        # DISTINCT key instead of once per event row (~0.4 s/lane at
+        # sf0.1, and at 100 TB the difference between hashing the
+        # corpus ×d and hashing the key dictionary ×d).
         # localCheckpoint pins the bounded per-batch key partials so
         # both ledger writes reuse the single aggregation.
         kc = (
@@ -1272,14 +1142,7 @@ def countmin_ingest_run(
             .parquet(counts_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _unload_state_providers(spark)
+    drain(stream, upsert_batch)
 
     # exactly-once restore (max over identical replayed rows per
     # batch_id), THEN the associative merge across batches
@@ -1341,18 +1204,9 @@ def hll_ingest_run(
         _hll_finalize,
         _hll_ranks,
     )
-    from etl_wlg_metlink_spark.session import ensure_engine_conf
 
-    ensure_engine_conf(spark)
-    stage = staged_events_dir(spark, sf_dir, n_batches)
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    stage, stream = staged_replay(spark, sf_dir, "events", "ts", n_batches)
     ledger_dir = _tracked_mkdtemp(prefix="hll_reg_ledger_")
-    checkpoint_dir = _tracked_mkdtemp(prefix="hll_ckpt_")
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -1364,14 +1218,7 @@ def hll_ingest_run(
             .parquet(ledger_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _unload_state_providers(spark)
+    drain(stream, upsert_batch)
 
     regs = (
         spark.read.parquet(ledger_dir)
@@ -1412,18 +1259,9 @@ def kmv_ingest_run(
         _kmv_report,
         _kmv_sketch,
     )
-    from etl_wlg_metlink_spark.session import ensure_engine_conf
 
-    ensure_engine_conf(spark)
-    stage = staged_events_dir(spark, sf_dir, n_batches)
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    stage, stream = staged_replay(spark, sf_dir, "events", "ts", n_batches)
     ledger_dir = _tracked_mkdtemp(prefix="kmv_ledger_")
-    checkpoint_dir = _tracked_mkdtemp(prefix="kmv_ckpt_")
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
         partial = _kmv_sketch(
@@ -1436,14 +1274,7 @@ def kmv_ingest_run(
             .parquet(ledger_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _unload_state_providers(spark)
+    drain(stream, upsert_batch)
 
     merged = _kmv_sketch(
         spark.read.parquet(ledger_dir).select("event_type", "h").distinct()

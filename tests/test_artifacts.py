@@ -190,3 +190,27 @@ def test_artifact_store_concurrent_writer_reader_storm(
     assert artifacts._exists(path)
     final = sorted(tuple(r) for r in artifacts._read(spark, path).collect())
     assert final == expected
+
+
+def test_fingerprint_fails_closed_on_unlistable_subdir(tmp_path, monkeypatch):
+    """A subdirectory that cannot be listed must not silently drop out
+    of the key: a truncated key would be cacheable and could alias two
+    data states."""
+    import os
+
+    table = tmp_path / "t"
+    for k in (1, 2):
+        (table / f"k={k}").mkdir(parents=True)
+        (table / f"k={k}" / "part-0.parquet").write_bytes(b"x")
+    assert artifacts._path("ivf_index", artifacts.fingerprint(str(table)))
+
+    unlistable = os.path.realpath(table / "k=2")
+    real_scandir = os.scandir
+
+    def scandir(path="."):
+        if os.fspath(path) == unlistable:
+            raise PermissionError(13, "Permission denied", path)
+        return real_scandir(path)
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    assert artifacts._path("ivf_index", artifacts.fingerprint(str(table))) is None

@@ -22,9 +22,8 @@ def _rows(df, cols):
 
 def test_tumbling_stream_matches_batch(spark, sf_dir):
     stream = runners.events_stream(spark, sf_dir)
-    result = runners.run_available_now(
+    result = runners.drain(
         runners.tumbling_counts_stream(stream),
-        query_name="tumbling_parity",
         output_mode="complete",
     )
     batch = s1_tumbling_window(spark, sf_dir)
@@ -48,28 +47,17 @@ def test_one_shot_runner_unloads_state_stores(spark, sf_dir, tmp_path):
     )
     q.awaitTermination()
     assert store.isMaintenanceRunning()
-    runners.run_available_now(
+    runners.drain(
         runners.tumbling_counts_stream(runners.events_stream(spark, sf_dir)),
         output_mode="complete",
     )
     assert not store.isMaintenanceRunning()
 
 
-def test_state_store_unload_failure_is_logged(capfd):
-    runners._unload_state_providers(None)  # no JVM to call into
-    out, err = capfd.readouterr()
-    assert out == ""
-    assert json.loads(err) == {
-        "event": "state_store_unload_failed",
-        "error": "AttributeError",
-    }
-
-
 def test_dedup_within_watermark_stream(spark, sf_dir):
     stream = runners.events_stream(spark, sf_dir)
-    result = runners.run_available_now(
+    result = runners.drain(
         runners.dedup_within_watermark_stream(stream),
-        query_name="dedup_parity",
     )
     got = sorted((r["user_id"], r["event_type"]) for r in result.collect())
     expected = sorted(
@@ -95,7 +83,7 @@ def test_streaming_ingest_dedup_parity_and_batching(spark, sf_dir):
     from etl_wlg_metlink_spark.tables import load
     from pyspark.sql import functions as F
 
-    stage = runners.staged_documents_dir(spark, sf_dir, 4)
+    stage, _ = runners.staged_replay(spark, sf_dir, "documents", "doc_id", 4)
     parts = sorted(f for f in os.listdir(stage) if f.startswith("part-"))
     assert len(parts) == 4
     mtimes = [os.path.getmtime(os.path.join(stage, f)) for f in parts]
@@ -144,7 +132,7 @@ def test_rocksdb_state_store_parity(spark, sf_dir):
     default_rows = set(
         map(
             tuple,
-            runners.run_available_now(
+            runners.drain(
                 runners.dedup_within_watermark_stream(stream)
             ).collect(),
         )
@@ -160,7 +148,7 @@ def test_rocksdb_state_store_parity(spark, sf_dir):
         rocks_rows = set(
             map(
                 tuple,
-                runners.run_available_now(
+                runners.drain(
                     runners.dedup_within_watermark_stream(
                         runners.events_stream(spark, sf_dir)
                     )
@@ -177,9 +165,8 @@ def test_stream_stream_interval_join_parity(spark, sf_dir):
     from pyspark.sql import functions as F
 
     stream = runners.events_stream(spark, sf_dir)
-    result = runners.run_available_now(
+    result = runners.drain(
         runners.stream_stream_interval_join(stream),
-        query_name="ss_join_parity",
     )
     events = load(spark, sf_dir, "events")
     clicks = events.where(F.col("event_type") == "click").select(
@@ -230,9 +217,8 @@ def test_stateful_track_state_parity(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
-    result = runners.run_available_now(
+    result = runners.drain(
         runners.user_track_state_stream(stream),
-        query_name="track_state",
         output_mode="update",
     )
     # last emission per user = final state
@@ -347,7 +333,7 @@ def test_metlink_poll_datasource_two_snapshots(spark, tmp_path):
     (tmp_path / "s1.json").write_text(json.dumps(snap2))
 
     stream = poll_source.metlink_poll_stream(spark, str(tmp_path))
-    result = runners.run_until_idle(stream, query_name="poll_parity")
+    result = runners.drain(stream, idle=True)
     got = result.collect()
 
     def _ent_json(row):
@@ -481,11 +467,10 @@ def test_ttl_state_evicts_quiet_tracks(spark, tmp_path):
     engine-side): exactly the quiet track is evicted once the
     watermark passes its last event + TTL."""
     _write_ttl_fixture(tmp_path)
-    result = runners.run_available_now(
+    result = runners.drain(
         runners.track_ttl_state_stream(
             _ttl_stream(spark, tmp_path), ttl_seconds=3600
         ),
-        query_name="ttl_evict",
         output_mode="append",
     )
     assert _closed_tracks(result) == _TTL_EXPECTED
@@ -513,11 +498,10 @@ def test_ttl_transform_with_state_parity(spark, tmp_path):
                 "RocksDBStateStoreProvider",
         },
     ):
-        result = runners.run_available_now(
+        result = runners.drain(
             runners.track_ttl_transform_with_state(
                 _ttl_stream(spark, tmp_path), ttl_seconds=3600
             ),
-            query_name="ttl_evict_tws",
             output_mode="append",
         )
         closed = _closed_tracks(result)
@@ -534,7 +518,7 @@ def test_metlink_poll_datasource_bad_envelope_keeps_running(spark, tmp_path):
     (tmp_path / "b.json").write_text(RAW_JSON)
 
     stream = poll_source.metlink_poll_stream(spark, str(tmp_path))
-    result = runners.run_until_idle(stream, query_name="poll_bad_env")
+    result = runners.drain(stream, idle=True)
     got = result.collect()
     bad = [r for r in got if r["poll_id"] == 0]
     good = [r for r in got if r["poll_id"] == 1]
@@ -766,7 +750,7 @@ def test_s9_left_outer_emits_expired_nulls_withholds_recent(spark, tmp_path):
     ).toPandas()
     pdf.to_parquet(str(tmp_path / "events.parquet"))
 
-    out = runners.run_available_now(
+    out = runners.drain(
         runners.stream_stream_left_outer_join(
             runners.events_stream(spark, str(tmp_path))
         )
@@ -822,9 +806,8 @@ def test_capped_sessions_cross_batch_and_cap_split(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
-    result = runners.run_available_now(
+    result = runners.drain(
         runners.capped_sessions_stream(stream),
-        query_name="capped_sessions",
         output_mode="update",
     )
     # last emission per (user, seq) = final verdict for that session

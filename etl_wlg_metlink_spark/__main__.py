@@ -65,7 +65,7 @@ def build_parser() -> argparse.ArgumentParser:
         help="with --schedule: stay resident instead of exiting — poll "
         "the landing directory on a processingTime trigger (the "
         "reference's rate(1 minute) schedule, task.ts:122, with the "
-        "engine's trigger clock as the scheduler), one snapshot file "
+        "engine's trigger clock as the scheduler), one landed envelope file "
         "per tick, until interrupted",
     )
     ap.add_argument(
@@ -115,12 +115,14 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.schedule:
         # S5 scheduled invocation as a packaged one-command unit: the
-        # streaming envelope pipeline with trigger(availableNow) —
-        # process every landed file, submit one FeatureCollection per
-        # micro-batch, stop. With a stable --checkpoint this is
-        # exactly-once across re-invocations (a cron/Lambda schedule
-        # re-running the same command skips already-processed files),
-        # mirroring the reference's handler+Dockerfile deploy unit.
+        # streaming envelope pipeline over the landing dir, one
+        # FeatureCollection per landed file. availableNow processes
+        # every landed file and stops; --resident keeps polling on a
+        # processingTime trigger until interrupted. With a stable
+        # --checkpoint this is exactly-once across re-invocations (a
+        # cron/Lambda schedule re-running the same command skips
+        # already-processed files), mirroring the reference's
+        # handler+Dockerfile deploy unit; both modes share it.
         import tempfile
 
         from etl_wlg_metlink_spark.streaming import runners
@@ -147,35 +149,21 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps(fc))
 
         if args.resident:
-            # Resident S5: the trigger clock IS the scheduler. Runs
-            # until interrupted; each tick consumes the next landed
-            # snapshot through the metlink_poll DataSource and submits
-            # one FeatureCollection.
             q = runners.metlink_resident_stream(
-                spark,
-                args.schedule,
-                poster,
-                checkpoint,
-                cfg=cfg,
+                spark, args.schedule, poster, checkpoint, cfg=cfg,
                 interval=args.poll_interval,
             )
-            try:
-                q.awaitTermination()
-            except KeyboardInterrupt:
-                q.stop()
-            print(
-                f"resident run stopped: {counters['batches']} batches, "
-                f"{counters['submitted']} features submitted",
-                file=sys.stderr,
+        else:
+            q = runners.metlink_envelope_stream(
+                spark, args.schedule, poster, checkpoint, cfg=cfg
             )
-            return 0
-        q = runners.metlink_envelope_stream(
-            spark, args.schedule, poster, checkpoint, cfg=cfg
-        )
-        q.awaitTermination()
+        try:
+            q.awaitTermination()
+        except KeyboardInterrupt:
+            q.stop()
         print(
-            f"scheduled run complete: {counters['batches']} batches, "
-            f"{counters['submitted']} features submitted",
+            f"{'resident run stopped' if args.resident else 'scheduled run complete'}: "
+            f"{counters['batches']} batches, {counters['submitted']} features submitted",
             file=sys.stderr,
         )
         return 0

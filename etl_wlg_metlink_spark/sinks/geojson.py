@@ -70,10 +70,7 @@ def submit(
     return fc
 
 
-def write_jsonl(features: DataFrame, path: str, partitions: int | None = None) -> None:
+def write_jsonl(features: DataFrame, path: str) -> None:
     """Partitioned JSON-lines write — the unbounded-scale sink. Each
     line is one Feature; no envelope, no collect."""
-    df = _feature_json(features)
-    if partitions:
-        df = df.repartition(partitions)
-    df.write.mode("overwrite").text(path)
+    _feature_json(features).write.mode("overwrite").text(path)

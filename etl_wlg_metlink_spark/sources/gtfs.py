@@ -11,10 +11,15 @@ reference's two-level error policy:
 - error→empty fallback (S3, task.ts:180-188) is `empty_entities()`,
   which callers use in their try/except around fetch+parse.
 
+`parse_envelopes` is the one envelope parse: the batch parse here, the
+landing-directory backfill (`snapshot_entities`), the landing-directory
+stream (streaming/runners.py) and the live poll stream
+(sources/poll_source.py) all call it.
+
 The HTTP fetch itself (task.ts:155-160) is driver-side by design: one
 poll returns O(10²-10³) records — a snapshot micro-batch, not bulk
-data. `fetch_json` is injectable so tests/offline runs never touch the
-network.
+data. Every fetch goes through `fetch_raw`; `fetch_json` is injectable
+so tests/offline runs never touch the network.
 """
 
 from __future__ import annotations
@@ -59,17 +64,46 @@ def entities_from_json(spark: SparkSession, raw_json: str, debug: bool = False) 
         raise InvalidEnvelopeError(
             "Invalid API response format: missing entity data"
         )
-    # one-row DataFrame of the raw string → from_json with the declared
-    # schema → posexplode (the array position is the authoritative
-    # ingest order, which last-wins dedup keys on); Catalyst prunes
-    # unread entity fields.
     raw_df = spark.createDataFrame([(raw_json,)], "raw string")
-    parsed = raw_df.select(
-        F.from_json(F.col("raw"), VEHICLE_POSITIONS_RESPONSE).alias("body")
+    return parse_envelopes(raw_df, "raw")
+
+
+def parse_envelopes(
+    raw: DataFrame, column: str, *keep: str, outer: bool = False
+) -> DataFrame:
+    """Envelope strings in ``column`` → one (idx, entity) row per
+    entity, next to the ``keep`` columns: the one parse every envelope
+    path uses. ``from_json`` with the declared schema, then
+    ``posexplode``: the array position is the authoritative ingest
+    order, which last-wins dedup keys on; Catalyst prunes unread
+    entity fields.
+
+    An unparseable envelope parses to a NULL body. The inner explode
+    drops it (no rows); ``outer=True`` keeps it as one
+    ``entity IS NULL`` row for the caller to count or drop."""
+    parsed = raw.select(
+        *keep, F.from_json(F.col(column), VEHICLE_POSITIONS_RESPONSE).alias("body")
     )
+    explode = F.posexplode_outer if outer else F.posexplode
     return parsed.select(
-        F.posexplode("body.entity").alias("idx", "entity")
+        *keep, explode("body.entity").alias("idx", "entity")
     ).withColumn("idx", F.col("idx").cast("long"))
+
+
+def snapshot_entities(spark: SparkSession, snapshot_dir: str) -> DataFrame:
+    """Every landed ``*.json`` envelope in ``snapshot_dir`` as
+    (snapshot, idx, entity) — the backfill that reprocesses a landing
+    directory through the same pipeline the stream feeds. ``snapshot``
+    is the file name. A malformed envelope yields one
+    ``entity IS NULL`` row to count or drop, not a failed job (the
+    reference's error→empty fallback, task.ts:180-188)."""
+    raw = (
+        spark.read.option("wholetext", True)
+        .option("pathGlobFilter", "*.json")
+        .text(snapshot_dir)
+        .select(F.col("_metadata.file_name").alias("snapshot"), "value")
+    )
+    return parse_envelopes(raw, "value", "snapshot", outer=True)
 
 
 def empty_entities(spark: SparkSession) -> DataFrame:
@@ -98,15 +132,25 @@ def fetch_entities(
     `fetch_json(url, headers) -> str` is injectable; the default uses
     urllib (stdlib) and is only exercised against a live endpoint.
     """
-    headers = {"accept": "application/json", "x-api-key": api_key}
-    if fetch_json is None:
-        fetch_json = _urllib_fetch
     try:
-        raw = fetch_json(METLINK_VEHICLE_POSITIONS_URL, headers)
+        raw = fetch_raw(api_key, fetch_json=fetch_json)
         return entities_from_json(spark, raw, debug=debug)
     except Exception as e:  # noqa: BLE001 — any fetch/parse error → empty FC
         print(f"Error fetching Metlink data: {e}", file=sys.stderr)
         return empty_entities(spark)
+
+
+def fetch_raw(
+    api_key: str,
+    url: str = METLINK_VEHICLE_POSITIONS_URL,
+    fetch_json: Callable[[str, dict], str] | None = None,
+) -> str:
+    """One GET of the VehiclePositions endpoint with the Metlink
+    headers (task.ts:155-160) → the raw envelope string. Every fetch
+    goes through here; ``_urllib_fetch`` is looked up per call, so it
+    stays the one seam to replace in tests."""
+    headers = {"accept": "application/json", "x-api-key": api_key}
+    return (fetch_json or _urllib_fetch)(url, headers)
 
 
 def _urllib_fetch(url: str, headers: dict) -> str:

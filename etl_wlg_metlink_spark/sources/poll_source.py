@@ -1,65 +1,41 @@
-"""S1 streaming form — a Spark 4 Python DataSource that POLLS the
+"""S1 streaming form — a Spark 4 Python DataSource that POLLS the live
 Metlink endpoint as a resident Structured Streaming source.
 
 The reference runs as a scheduled one-shot (task.ts:122 `schedule:
-rate(1 minute)` → one fetch per invocation, task.ts:150-167). The
-batch modules (sources/gtfs.py) reproduce that per-invocation shape;
-this module is the resident-lifecycle version SURVEY.md §4.3 deferred
-to v2: one `read()` per micro-batch = one poll, driven by the engine's
-trigger clock instead of an external scheduler — the same cadence
-contract with no scheduler dependency.
+rate(1 minute)` → one fetch per invocation, task.ts:150-167). This
+source is the resident form: one `read()` per micro-batch = one HTTP
+GET through `gtfs.fetch_raw`, driven by the engine's trigger clock
+instead of an external scheduler.
 
-Design notes for scale/correctness:
+A landing directory of envelope files is NOT read here: Spark's text
+file source reads it (`streaming.runners.metlink_envelope_stream`,
+`gtfs.snapshot_entities`).
+
+Design notes:
 
 - `SimpleDataSourceStreamReader` runs on the DRIVER, which is the
   right placement here: one poll returns O(10²-10³) vehicle rows (a
   snapshot, not bulk data), and the heavy lifting — parse, explode,
   dedup, window — happens in the distributed plan downstream.
 - The source emits RAW envelope strings (`poll_id, fetched_at, raw`);
-  parsing stays in Catalyst (`from_json` + `posexplode`) so schema
-  validation and column pruning are engine-side, identical to the
-  batch path.
-- Offsets are `{"index": n, "last": name}`: poll count plus the
-  basename of the LAST CONSUMED snapshot file. Anchoring progress to
-  the filename (consume the lexicographically next name, never a
-  positional index into a re-sorted listing) keeps the offset→data
-  mapping stable while files keep landing: a late file that sorts
-  before `last` can shift positions but not what an offset denotes.
-  Landing names must be monotone (timestamped/sequenced filenames —
-  the standard landing-directory contract); a late out-of-order name
-  is skipped, never double-ingested. Snapshot replay
-  (`readBetweenOffsets`) re-reads the immutable files in the
-  (start.last, end.last] name range, giving exactly-once over the
-  directory; in live-HTTP mode a replayed range is served from the
-  in-process cache (best effort — an HTTP poll is not replayable
-  after a driver restart, the same at-least-once caveat every network
-  tail source carries).
+  parsing is `gtfs.parse_envelopes`, in Catalyst, like every other
+  envelope path.
+- Offsets are `{"index": n}`, the poll count. A replayed range
+  (`readBetweenOffsets`) is served from the in-process cache, which
+  `commit` trims to the polls still in flight. An HTTP poll is not
+  replayable after a driver restart (the at-least-once caveat every
+  network tail source carries): a range that is no longer cached is
+  polled again.
 
-Two modes, selected by options:
-
-- ``snapshot_dir``: a directory of ``*.json`` envelope files consumed
-  one per micro-batch in sorted order — the offline/test mode, and
-  also the production landing-directory pattern. REQUIREMENT: landing
-  names must sort in arrival order — zero-padded sequence numbers
-  (``snap_000009.json``, never ``snap_9.json`` followed by
-  ``snap_10.json``, which sorts EARLIER) or fixed-width UTC
-  timestamps. A file landing with a name that sorts at or before the
-  consumed anchor is never served (offset stability depends on it);
-  ``read()`` warns when it detects one so the misconfiguration is
-  observable instead of silent data loss.
-- ``url`` (+ ``api_key``): live mode, one HTTP GET per micro-batch via
-  stdlib urllib (no external network in CI — the reader-level tests
-  monkeypatch the module-level fetch function in sources/gtfs.py; the
-  end-to-end stream test polls a localhost HTTP server through the
-  real fetch stack, since the DataSource reader runs in a separate
-  Python worker process where a monkeypatch can't reach).
+The reader-level tests monkeypatch `gtfs._urllib_fetch`; the
+end-to-end stream test polls a localhost HTTP server through the real
+fetch stack, since the DataSource reader runs in a separate Python
+worker process where a monkeypatch can't reach.
 """
 
 from __future__ import annotations
 
-import os
 import time
-import warnings
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
@@ -68,6 +44,8 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
+
+from etl_wlg_metlink_spark.sources import gtfs
 
 __all__ = ["MetlinkPollDataSource", "register", "metlink_poll_stream"]
 
@@ -88,166 +66,37 @@ class MetlinkPollDataSource(DataSource):
 
 class _PollReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict) -> None:
-        self._snapshot_dir = options.get("snapshot_dir")
         self._url = options.get("url")
         self._api_key = options.get("api_key", "")
-        if not (self._snapshot_dir or self._url):
-            raise ValueError(
-                "metlink_poll requires option 'snapshot_dir' or 'url'"
-            )
+        if not self._url:
+            raise ValueError("metlink_poll requires option 'url'")
         #: poll_id -> (fetched_at, raw); backs readBetweenOffsets replay
-        #: in live mode
         self._cache: dict[int, tuple[float, str]] = {}
-        #: poll_id -> snapshot basename served for that poll; snapshot
-        #: replay re-reads the immutable file by NAME, so a late file
-        #: landing inside an already-read range can't change a replay
-        self._names: dict[int, str] = {}
-        #: basenames observed in a previous read()'s listing, or None
-        #: before the first listing. Baseline for detecting NEW files
-        #: that sort at/before the consumed anchor (a producer
-        #: violating the monotone-name contract, e.g. non-zero-padded
-        #: sequence numbers) — those are permanently skipped, so warn.
-        self._seen: set[str] | None = None
 
-    # -- offset bookkeeping ------------------------------------------------
     def initialOffset(self) -> dict:
-        return {"index": 0, "last": ""}
+        return {"index": 0}
 
-    def _names_after(self, last: str) -> list[str]:
-        """Snapshot basenames strictly after `last`, sorted — the
-        stable anchor: a file landing later with an earlier-sorting
-        name shifts positions but never what (index, last) denotes."""
-        return sorted(
-            f
-            for f in os.listdir(self._snapshot_dir)
-            if f.endswith(".json") and f > last
-        )
-
-    def _read_snapshot(self, name: str) -> tuple[float, str]:
-        with open(
-            os.path.join(self._snapshot_dir, name), encoding="utf-8"
-        ) as f:
-            return (time.time(), f.read())
-
-    def _poll_http(self, poll_id: int) -> tuple[float, str]:
-        if poll_id in self._cache:
-            return self._cache[poll_id]
-        from etl_wlg_metlink_spark.sources import gtfs
-
-        headers = {"accept": "application/json", "x-api-key": self._api_key}
-        result = (time.time(), gtfs._urllib_fetch(self._url, headers))
-        self._cache[poll_id] = result
-        return result
-
-    @staticmethod
-    def _last_of(offset: dict) -> str:
-        """The 'last consumed name' anchor of an offset. An offset with
-        polls consumed but no anchor comes from a checkpoint written by
-        the positional-offset format this source no longer speaks —
-        fail loud instead of silently re-ingesting from the first file."""
-        if offset["index"] > 0 and "last" not in offset:
-            raise ValueError(
-                f"offset {offset} has no 'last' anchor — checkpoint from an "
-                "incompatible (positional-offset) version of metlink_poll; "
-                "restart the stream with a fresh checkpoint directory"
-            )
-        return offset.get("last", "")
-
-    # -- the streaming contract -------------------------------------------
-    def _warn_on_unservable(self, last: str) -> None:
-        """Warn when a file APPEARED (vs the previous listing) with a
-        name sorting at/before the consumed anchor: it can never be
-        served — the producer broke the monotone-name contract (see
-        module docstring's snapshot_dir option docs). Files at/before
-        the anchor in the FIRST listing of this process are presumed
-        already consumed by the run that wrote the checkpoint."""
-        listing = {
-            f for f in os.listdir(self._snapshot_dir) if f.endswith(".json")
-        }
-        if self._seen is not None:
-            lost = sorted(f for f in listing - self._seen if f <= last)
-            if lost:
-                warnings.warn(
-                    f"metlink_poll: new snapshot file(s) {lost} sort at/"
-                    f"before the consumed anchor {last!r} and will NEVER be "
-                    "served — the producer violated the monotone landing-"
-                    "name contract (use zero-padded sequence numbers or "
-                    "fixed-width timestamps)",
-                    stacklevel=2,
-                )
-        self._seen = listing
+    def _poll(self, poll_id: int) -> tuple[float, str]:
+        if poll_id not in self._cache:
+            raw = gtfs.fetch_raw(self._api_key, self._url)
+            self._cache[poll_id] = (time.time(), raw)
+        return self._cache[poll_id]
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         i = start["index"]
-        if self._snapshot_dir:
-            last = self._last_of(start)
-            self._warn_on_unservable(last)
-            pending = self._names_after(last)
-            if not pending:  # nothing new: empty batch, offset unchanged
-                return iter(()), dict(start)
-            name = pending[0]
-            self._names[i] = name
-            fetched_at, raw = self._read_snapshot(name)
-            return iter([(i, fetched_at, raw)]), {"index": i + 1, "last": name}
-        # HTTP mode deliberately tolerates the legacy anchor-less offset
-        # shape (start.get, not _last_of): 'last' is only the snapshot
-        # replay anchor, and HTTP replay is cache/positional regardless,
-        # so an old checkpoint loses nothing here — unlike snapshot mode,
-        # where a missing anchor would silently re-ingest from file one.
-        fetched_at, raw = self._poll_http(i)
-        return (
-            iter([(i, fetched_at, raw)]),
-            {"index": i + 1, "last": start.get("last", "")},
-        )
+        return iter([(i, *self._poll(i))]), {"index": i + 1}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        if self._snapshot_dir:
-            ids = range(start["index"], end["index"])
-            if all(i in self._names for i in ids):
-                # same-process replay: exactly the files served then,
-                # immune to files that landed inside the range since
-                names = [self._names[i] for i in ids]
-            else:
-                # Post-restart fallback: re-enumerate the name range.
-                # Exact iff the monotone-landing contract held (then
-                # the range IS the served sequence). A count mismatch
-                # means the contract was violated (an out-of-order file
-                # landed inside the range) or a served file was deleted
-                # — either way the original batch is unreconstructible,
-                # so fail loud instead of silently replaying different
-                # rows than were first emitted.
-                names = [
-                    n
-                    for n in self._names_after(self._last_of(start))
-                    if n <= self._last_of(end)
-                ]
-                if len(names) != len(ids):
-                    raise RuntimeError(
-                        f"metlink_poll replay of polls {ids.start}..{ids.stop - 1} "
-                        f"found {len(names)} snapshot files in "
-                        f"({self._last_of(start)!r}, {self._last_of(end)!r}] — "
-                        "the snapshot directory changed out-of-order since the "
-                        "checkpoint (late out-of-order landing or deleted file); "
-                        "cannot reconstruct the original batch"
-                    )
-            rows = []
-            for poll_id, name in zip(ids, names):
-                fetched_at, raw = self._read_snapshot(name)
-                rows.append((poll_id, fetched_at, raw))
-            return iter(rows)
         return iter(
-            (i, *self._poll_http(i))
-            for i in range(start["index"], end["index"])
+            (i, *self._poll(i)) for i in range(start["index"], end["index"])
         )
 
     def commit(self, end: dict) -> None:
         # Polls at index < end are finished; drop them from the replay
-        # caches so a long-lived poller holds O(in-flight) state, not
+        # cache so a long-lived poller holds O(in-flight) state, not
         # O(stream lifetime).
         for i in [k for k in self._cache if k < end["index"]]:
             del self._cache[i]
-        for i in [k for k in self._names if k < end["index"]]:
-            del self._names[i]
 
 
 def register(spark) -> None:
@@ -256,44 +105,27 @@ def register(spark) -> None:
     spark.dataSource.register(MetlinkPollDataSource)
 
 
-def metlink_poll_stream(
-    spark,
-    snapshot_dir: str | None = None,
-    *,
-    url: str | None = None,
-    api_key: str = "",
-):
+def metlink_poll_stream(spark, *, url: str, api_key: str = ""):
     """The reference's control loop as a resident stream: poll →
     envelope validation → explode to entities (task.ts:150-196). Each
-    micro-batch is one poll; downstream consumers compose the same
-    pipeline stages as the batch path (pipelines/metlink.run via
-    foreachBatch, or any streaming operator). Pass ``snapshot_dir``
-    (landing-directory mode) or ``url`` (+ ``api_key``, live mode —
-    one HTTP GET per micro-batch, task.ts:150-167).
+    micro-batch is one HTTP GET of ``url`` (task.ts:150-167);
+    downstream consumers compose the same pipeline stages as the batch
+    path (pipelines/metlink.run via foreachBatch, or any streaming
+    operator).
 
     Envelope validation here is the STREAMING analogue of S2: an
     unparseable/malformed envelope yields `entity IS NULL` rows that
     the caller counts/drops (a resident poller must skip a bad poll
     and keep running — raising would kill the query; task.ts:180-188's
     error→empty fallback has the same semantics per invocation)."""
-    from pyspark.sql import functions as F
-
-    from etl_wlg_metlink_spark.schemas import VEHICLE_POSITIONS_RESPONSE
-
     register(spark)
-    reader = spark.readStream.format("metlink_poll")
-    if snapshot_dir:
-        reader = reader.option("snapshot_dir", snapshot_dir)
-    if url:
-        reader = reader.option("url", url).option("api_key", api_key)
-    raw = reader.load()
-    parsed = raw.select(
-        "poll_id",
-        F.from_json(F.col("raw"), VEHICLE_POSITIONS_RESPONSE).alias("body"),
+    raw = (
+        spark.readStream.format("metlink_poll")
+        .option("url", url)
+        .option("api_key", api_key)
+        .load()
     )
-    return parsed.select(
-        "poll_id", F.posexplode_outer("body.entity").alias("idx", "entity")
-    ).withColumn("idx", F.col("idx").cast("long"))
+    return gtfs.parse_envelopes(raw, "raw", "poll_id", outer=True)
 
 
 # Cited for parity (not executed): DataSourceStreamReader/InputPartition

@@ -7,10 +7,15 @@ availableNow trigger — process everything available, then stop.
 runner and lane hands it a stream (and a foreachBatch function, or
 none for a memory sink), and it owns the checkpoint, the trigger, the
 wait and the cleanup. `staged_replay` is the one landing directory
-the multi-batch runners replay. Swapping the trigger for
-`processingTime` turns the same graph into a resident poller with NO
-code changes (Spark's unified batch/stream contract) —
-`metlink_resident_stream`.
+the multi-batch runners replay.
+
+The Metlink scheduled job and its resident poller are one query over a
+landing directory of envelope files (`_envelope_query`): Spark's text
+file source reads each `*.json` file in modification-time order, one
+file per micro-batch, and a late file is ingested, not skipped.
+`metlink_envelope_stream` runs it availableNow and
+`metlink_resident_stream` on a processingTime trigger; nothing else
+differs, so the two can share a checkpoint.
 
 Watermarks bound state: the tumbling aggregation keeps only windows
 younger than the watermark; dedup-within-watermark keeps only recent
@@ -27,14 +32,11 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from etl_wlg_metlink_spark.schemas import VEHICLE_POSITIONS_RESPONSE
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,36 +133,17 @@ def _watch_dir_for(path: str) -> str:
     return _WATCH_DIRS[path]
 
 
-#: an idle drain stops after this many consecutive DISTINCT zero-input
-#: progress reports, and raises TimeoutError if they take longer than
-#: IDLE_TIMEOUT_S seconds to arrive
-IDLE_REPORTS = 3
-IDLE_TIMEOUT_S = 120.0
-
-
 def drain(
     stream: DataFrame,
     batch_fn: Callable[[DataFrame, int], None] | None = None,
     *,
     output_mode: str = "append",
-    idle: bool = False,
 ) -> DataFrame | None:
-    """Run ``stream`` one-shot — ≈ one scheduled invocation of the
-    reference task — against a fresh temp checkpoint. Each micro-batch
-    goes to ``batch_fn`` (foreachBatch; returns None) or, when it is
-    None, to a memory sink whose materialized result is returned.
-
-    ``idle=True`` is for Python DataSources (e.g. metlink_poll), which
-    don't support Trigger.AvailableNow (the engine falls back to ONE
-    batch, losing every poll after the first). It runs a
-    processingTime=0 trigger and stops after IDLE_REPORTS consecutive
-    DISTINCT zero-input progress reports — the "caught up" signal a
-    resident poller would otherwise never emit. Spark only publishes a
-    no-data report every `noDataProgressEventInterval` (default 10 s —
-    a dead stall here), so that interval is lowered around the query;
-    and `lastProgress` is the SAME object until the next report lands,
-    so idleness is counted per distinct report timestamp, not per
-    0.25 s sample of one report.
+    """Run ``stream`` one-shot with trigger(availableNow) — ≈ one
+    scheduled invocation of the reference task — against a fresh temp
+    checkpoint. Each micro-batch goes to ``batch_fn`` (foreachBatch;
+    returns None) or, when it is None, to a memory sink whose
+    materialized result is returned.
 
     Whether the query succeeds or raises, it is stopped, its
     state-store providers unloaded, its checkpoint removed, and the
@@ -168,8 +151,6 @@ def drain(
     resolved plan (and keeps the sink rows alive while referenced),
     but the catalog entry would otherwise pin every run's sink in
     executor memory for the session's lifetime."""
-    from etl_wlg_metlink_spark.session import conf_override
-
     spark = stream.sparkSession
     checkpoint = _tracked_mkdtemp(prefix="drain_ckpt_")
     name = f"drain_{uuid.uuid4().hex[:8]}"
@@ -182,27 +163,7 @@ def drain(
         writer = writer.foreachBatch(batch_fn)
     q = None
     try:
-        if idle:
-            with conf_override(
-                spark, {"spark.sql.streaming.noDataProgressEventInterval": "250ms"}
-            ):
-                q = writer.trigger(processingTime="0 seconds").start()
-                deadline = time.monotonic() + IDLE_TIMEOUT_S
-                quiet, last_seen = 0, None
-                while quiet < IDLE_REPORTS and q.isActive:
-                    if time.monotonic() >= deadline:
-                        raise TimeoutError(
-                            f"stream not idle after {IDLE_TIMEOUT_S} s"
-                        )
-                    time.sleep(0.25)
-                    p = q.lastProgress
-                    if p is None or p["timestamp"] == last_seen:
-                        continue
-                    last_seen = p["timestamp"]
-                    quiet = quiet + 1 if p["numInputRows"] == 0 else 0
-                q.stop()
-        else:
-            q = writer.trigger(availableNow=True).start()
+        q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
         return spark.table(name) if batch_fn is None else None
     finally:
@@ -732,100 +693,69 @@ def metlink_envelope_stream(
     checkpoint_dir: str,
     cfg=None,
 ):
-    """S4/S5 streaming sink: watch a directory of raw envelope JSON
-    files; each micro-batch runs the composed Metlink pipeline and
-    submits one FeatureCollection per batch via foreachBatch — the
-    resident-poller version of the reference's per-invocation
-    submit (task.ts:341)."""
-    from etl_wlg_metlink_spark.config import MetlinkConfig
-    from etl_wlg_metlink_spark.pipelines import metlink
-    from etl_wlg_metlink_spark.sinks import geojson
-
-    if cfg is None:
-        cfg = MetlinkConfig()
-
-    raw = (
-        spark.readStream.schema("value string")
-        .option("wholetext", True)
-        .option("maxFilesPerTrigger", 1)
-        .text(input_dir)
-    )
-    parsed = raw.select(
-        F.from_json(F.col("value"), VEHICLE_POSITIONS_RESPONSE).alias("body")
-    ).select(F.posexplode("body.entity").alias("idx", "entity")).withColumn(
-        "idx", F.col("idx").cast("long")
-    )
-    # task.ts:176, 210-211, 332: per-batch pipeline counters ride the
-    # stream as observed metrics (surface in each QueryProgress event).
-    parsed = parsed.observe(
-        "metlink_pipeline", *metlink.pipeline_metric_exprs(exact_submitted=False)
-    )
-
-    def submit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        features = metlink.run(batch_df, cfg)
-        geojson.submit(features, poster)
-
-    return (
-        parsed.writeStream.foreachBatch(submit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """S4/S5 scheduled job: one availableNow run over the landing
+    directory ``input_dir`` — every envelope not yet in the checkpoint
+    runs the composed Metlink pipeline and is submitted as one
+    FeatureCollection (task.ts:341), then the query stops. Returns the
+    started query; see ``_envelope_query`` for the landing contract."""
+    return _envelope_query(
+        spark, input_dir, poster, checkpoint_dir, cfg, availableNow=True
     )
 
 
 def metlink_resident_stream(
     spark: SparkSession,
-    snapshot_dir: str,
+    input_dir: str,
     poster: Callable[[dict], None],
     checkpoint_dir: str,
     cfg=None,
     *,
     interval: str = "60 seconds",
-    url: str | None = None,
-    api_key: str = "",
 ):
     """S5's RESIDENT form: the reference's `schedule: rate(1 minute)`
-    (task.ts:122) with the engine's trigger clock as the scheduler —
-    `metlink_poll` DataSource (one poll per micro-batch) → composed
-    pipeline → one FeatureCollection submission per poll, running
-    until the caller stops the query. The availableNow runner above is
-    the one-shot scheduled-job twin; this completes the S5 story for
-    deployments that prefer a long-lived driver over a cron loop.
+    (task.ts:122) with the engine's trigger clock as the scheduler.
+    The same query as ``metlink_envelope_stream`` on a
+    ``processingTime=interval`` trigger: each tick submits the next
+    landed envelope, until the caller stops the query. The two share a
+    checkpoint format, so either can resume the other's run."""
+    return _envelope_query(
+        spark, input_dir, poster, checkpoint_dir, cfg, processingTime=interval
+    )
 
-    A malformed poll body parses to `entity IS NULL` rows (the
-    streaming analogue of task.ts:180-188's error→empty fallback);
-    they are dropped here so a bad poll submits an EMPTY
-    FeatureCollection and the query keeps running — a resident poller
-    must never die on one bad response.
 
-    Pass ``interval`` as a Structured Streaming processingTime string;
-    the default matches the reference's 1-minute rate. ``url`` +
-    ``api_key`` switch the source to live-HTTP mode (one GET per
-    tick); the default ``snapshot_dir`` mode consumes a landing
-    directory, one file per tick, exactly-once over the checkpoint."""
-    from etl_wlg_metlink_spark.config import MetlinkConfig
+def _envelope_query(spark, input_dir, poster, checkpoint_dir, cfg, **trigger):
+    """The landing contract: Spark's text file source reads each
+    ``*.json`` file in ``input_dir`` whole, one file per micro-batch,
+    in modification-time order; the checkpoint records which files are
+    done, so a file that lands late is ingested whatever its name.
+    Each micro-batch submits one FeatureCollection. A malformed
+    envelope explodes to no entities and submits an EMPTY collection
+    (task.ts:180-188's error→empty fallback), so a resident query
+    never dies on one bad file. The pipeline counters (task.ts:176,
+    210-211, 332) ride the stream as observed metrics, reported in
+    each QueryProgress event."""
     from etl_wlg_metlink_spark.pipelines import metlink
     from etl_wlg_metlink_spark.sinks import geojson
-    from etl_wlg_metlink_spark.sources import poll_source
+    from etl_wlg_metlink_spark.sources.gtfs import parse_envelopes
 
-    if cfg is None:
-        cfg = MetlinkConfig()
-
-    entities = poll_source.metlink_poll_stream(
-        spark, snapshot_dir, url=url, api_key=api_key
-    ).where(F.col("entity").isNotNull())
-    entities = entities.observe(
-        "metlink_pipeline", *metlink.pipeline_metric_exprs(exact_submitted=False)
+    raw = (
+        spark.readStream.schema("value string")
+        .option("wholetext", True)
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", "*.json")
+        .text(input_dir)
+    )
+    entities = metlink.observe_entities(
+        parse_envelopes(raw, "value"), "metlink_pipeline"
     )
 
     def submit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        features = metlink.run(batch_df, cfg)
-        geojson.submit(features, poster)
+        geojson.submit(metlink.run(batch_df, cfg), poster)
 
     return (
         entities.writeStream.foreachBatch(submit_batch)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=interval)
+        .trigger(**trigger)
         .start()
     )
 

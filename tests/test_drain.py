@@ -59,19 +59,6 @@ def test_failed_drain_leaves_nothing_behind(spark, tmp_path, made_dirs, sink):
     assert made_dirs and not any(os.path.exists(d) for d in made_dirs)
 
 
-def test_idle_drain_times_out_loudly(spark, tmp_path, made_dirs, monkeypatch):
-    """A catch-up that does not go idle in time raises instead of
-    returning a partial result, and still cleans up."""
-    monkeypatch.setattr(runners, "IDLE_TIMEOUT_S", 0)
-    views = _temp_views(spark)
-    active = {q.id for q in spark.streams.active}
-    with pytest.raises(TimeoutError):
-        runners.drain(_landing(spark, tmp_path), idle=True)
-    assert {q.id for q in spark.streams.active} == active
-    assert _temp_views(spark) == views
-    assert made_dirs and not any(os.path.exists(d) for d in made_dirs)
-
-
 def test_state_store_unload_failure_is_logged(capfd):
     runners._unload_state_providers(None)  # no JVM to call into
     out, err = capfd.readouterr()

@@ -108,7 +108,7 @@ def test_write_jsonl(spark, tmp_path):
     entities = gtfs.entities_from_json(spark, RAW_JSON)
     features = metlink.run(entities, MetlinkConfig())
     out = str(tmp_path / "features")
-    geojson.write_jsonl(features, out, partitions=2)
+    geojson.write_jsonl(features, out)
     lines = []
     for p in (tmp_path / "features").glob("part-*"):
         lines += [json.loads(x) for x in p.read_text().splitlines()]

@@ -8,10 +8,7 @@ from __future__ import annotations
 
 import json
 
-from etl_wlg_metlink_spark.pipelines.gtfs_fixture import (
-    RAW_JSON,
-    oracle_features,
-)
+from etl_wlg_metlink_spark.pipelines.gtfs_fixture import RAW_JSON
 from etl_wlg_metlink_spark.streaming import runners, s1_tumbling_window
 from etl_wlg_metlink_spark.tables import load
 
@@ -290,115 +287,6 @@ def test_metlink_observe_parity(spark, sf_dir):
     assert abs(got["submitted"] - exact["submitted"]) <= 0.1 * exact["submitted"]
 
 
-def test_metlink_envelope_stream(spark, tmp_path):
-    inbox = tmp_path / "inbox"
-    inbox.mkdir()
-    (inbox / "poll1.json").write_text(RAW_JSON)
-    captured = []
-    q = runners.metlink_envelope_stream(
-        spark, str(inbox), captured.append, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination()
-    assert len(captured) == 1
-    got_ids = [f["id"] for f in captured[0]["features"]]
-    assert got_ids == [f["id"] for f in oracle_features()]
-
-    # a second poll arriving later is its own micro-batch/submission
-    second = json.loads(RAW_JSON)
-    second["entity"] = second["entity"][:3]
-    (inbox / "poll2.json").write_text(json.dumps(second))
-    q2 = runners.metlink_envelope_stream(
-        spark, str(inbox), captured.append, str(tmp_path / "ckpt")
-    )
-    q2.awaitTermination()
-    assert len(captured) == 2
-    assert [f["id"] for f in captured[1]["features"]] == [
-        f["id"] for f in oracle_features(second["entity"])
-    ]
-
-
-def test_metlink_poll_datasource_two_snapshots(spark, tmp_path):
-    """Resident-poller lifecycle (task.ts:122, 150-167) through the
-    Spark 4 Python DataSource: two snapshot files → two polls → the
-    union of both envelopes' entities, each row tagged with its poll;
-    per-snapshot entity sets must match the batch parser exactly."""
-    from etl_wlg_metlink_spark.sources import poll_source
-    from etl_wlg_metlink_spark.sources.gtfs import entities_from_json
-
-    snap1 = json.loads(RAW_JSON)
-    snap2 = json.loads(RAW_JSON)
-    # second poll: first entity disappears, ids shift — a fresh snapshot
-    snap2["entity"] = snap2["entity"][1:]
-    (tmp_path / "s0.json").write_text(json.dumps(snap1))
-    (tmp_path / "s1.json").write_text(json.dumps(snap2))
-
-    stream = poll_source.metlink_poll_stream(spark, str(tmp_path))
-    result = runners.drain(stream, idle=True)
-    got = result.collect()
-
-    def _ent_json(row):
-        ent = row["entity"]
-        return json.dumps(
-            ent.asDict(recursive=True) if ent is not None else None,
-            sort_keys=True,
-            default=str,
-        )
-
-    for poll_id, snap in [(0, snap1), (1, snap2)]:
-        stream_ents = sorted(
-            _ent_json(r) for r in got if r["poll_id"] == poll_id
-        )
-        batch_ents = sorted(
-            _ent_json(r)
-            for r in entities_from_json(spark, json.dumps(snap)).collect()
-        )
-        assert stream_ents == batch_ents and len(stream_ents) > 0
-
-
-def test_metlink_resident_stream_two_polls(spark, tmp_path):
-    """S5 resident mode end-to-end (VERDICT r15 item 8): two landed
-    snapshots + one malformed poll driven through
-    metlink_resident_stream on a processingTime trigger — one
-    FeatureCollection submission per poll, the malformed poll submits
-    an EMPTY collection (task.ts:180-188's error→empty fallback) and
-    the query stays alive."""
-    import time
-
-    inbox = tmp_path / "inbox"
-    inbox.mkdir()
-    snap2 = json.loads(RAW_JSON)
-    snap2["entity"] = snap2["entity"][:3]
-    (inbox / "s0.json").write_text(RAW_JSON)
-    (inbox / "s1.json").write_text(json.dumps(snap2))
-    (inbox / "s2.json").write_text("{not json")
-
-    captured = []
-    q = runners.metlink_resident_stream(
-        spark,
-        str(inbox),
-        captured.append,
-        str(tmp_path / "ckpt"),
-        interval="0 seconds",
-    )
-    try:
-        deadline = time.time() + 120
-        while len(captured) < 3 and time.time() < deadline:
-            time.sleep(0.2)
-        assert q.isActive  # a bad poll must not kill a resident query
-    finally:
-        q.stop()
-        q.awaitTermination()
-
-    assert len(captured) == 3
-    assert [f["id"] for f in captured[0]["features"]] == [
-        f["id"] for f in oracle_features()
-    ]
-    assert [f["id"] for f in captured[1]["features"]] == [
-        f["id"] for f in oracle_features(snap2["entity"])
-    ]
-    assert captured[2] == {"type": "FeatureCollection", "features": []}
-
-
 def test_cli_resident_flags():
     """--resident/--poll-interval ride the tested CLI surface (the
     deploy-unit test proves the image invokes exactly this parser)."""
@@ -508,100 +396,13 @@ def test_ttl_transform_with_state_parity(spark, tmp_path):
     assert closed == _TTL_EXPECTED
 
 
-def test_metlink_poll_datasource_bad_envelope_keeps_running(spark, tmp_path):
-    """A malformed poll must not kill the resident query: it surfaces
-    as a NULL-entity row (the caller's drop/observe path), and later
-    good polls still arrive."""
-    from etl_wlg_metlink_spark.sources import poll_source
-
-    (tmp_path / "a.json").write_text("{not valid json")
-    (tmp_path / "b.json").write_text(RAW_JSON)
-
-    stream = poll_source.metlink_poll_stream(spark, str(tmp_path))
-    result = runners.drain(stream, idle=True)
-    got = result.collect()
-    bad = [r for r in got if r["poll_id"] == 0]
-    good = [r for r in got if r["poll_id"] == 1]
-    assert len(bad) == 1 and bad[0]["entity"] is None
-    assert len(good) > 0 and all(r["entity"] is not None for r in good)
-
-
-def test_poll_reader_offsets_stable_under_late_files(tmp_path):
-    """Review regression: offsets anchor to the last consumed NAME,
-    so a file landing later with an earlier-sorting name can never
-    remap already-committed offsets (no double-ingest, no silent
-    replay drift)."""
-    from etl_wlg_metlink_spark.sources.poll_source import _PollReader
-
-    (tmp_path / "b.json").write_text('{"b": 1}')
-    reader = _PollReader({"snapshot_dir": str(tmp_path)})
-
-    start = reader.initialOffset()
-    rows, off1 = reader.read(start)
-    assert [r[2] for r in rows] == ['{"b": 1}'] and off1["last"] == "b.json"
-
-    # a.json lands AFTER b.json was consumed, sorting before it
-    (tmp_path / "a.json").write_text('{"a": 1}')
-
-    # the next poll must not re-serve b.json (monotone-name contract:
-    # the out-of-order name is skipped, never double-ingested) — but
-    # the permanently-lost file must be observable, not silent
-    import pytest
-
-    with pytest.warns(UserWarning, match="NEVER be served"):
-        rows2, off2 = reader.read(off1)
-    assert list(rows2) == [] and off2 == off1
-
-    # replay of the committed range still returns exactly b.json
-    replay = list(reader.readBetweenOffsets(start, off1))
-    assert [r[2] for r in replay] == ['{"b": 1}']
-
-    # a genuinely new (later-sorting) file is consumed next
-    (tmp_path / "c.json").write_text('{"c": 1}')
-    rows3, off3 = reader.read(off1)
-    assert [r[2] for r in rows3] == ['{"c": 1}'] and off3["last"] == "c.json"
-
-
-def test_poll_reader_rejects_incompatible_and_violated_offsets(tmp_path):
-    """Checkpoint-recovery paths fail loud, never silently re-ingest:
-    an old positional-format offset (no 'last' anchor) is rejected, and
-    a replay whose name range no longer matches the consumed sequence
-    (out-of-order landing / deleted file) raises instead of replaying
-    different rows than were originally emitted."""
-    import pytest
-
-    from etl_wlg_metlink_spark.sources.poll_source import _PollReader
-
-    (tmp_path / "b.json").write_text('{"b": 1}')
-    reader = _PollReader({"snapshot_dir": str(tmp_path)})
-
-    with pytest.raises(ValueError, match="incompatible"):
-        reader.read({"index": 1})
-    with pytest.raises(ValueError, match="incompatible"):
-        list(reader.readBetweenOffsets({"index": 0, "last": ""}, {"index": 1}))
-
-    # consume b.json, then simulate a restart (per-poll name map gone)
-    start = reader.initialOffset()
-    _, off1 = reader.read(start)
-    restarted = _PollReader({"snapshot_dir": str(tmp_path)})
-    # a.json landed out-of-order inside the committed range
-    (tmp_path / "a.json").write_text('{"a": 1}')
-    with pytest.raises(RuntimeError, match="cannot reconstruct"):
-        list(restarted.readBetweenOffsets(start, off1))
-    # with the directory matching the contract again, replay is exact
-    (tmp_path / "a.json").unlink()
-    replay = list(restarted.readBetweenOffsets(start, off1))
-    assert [r[2] for r in replay] == ['{"b": 1}']
-
-
 def test_poll_reader_http_mode_cache_replay_and_eviction(monkeypatch):
     """Live-HTTP mode driven through a monkeypatched fetch: each
     read() is one GET; readBetweenOffsets of uncommitted polls is
     served from the in-process cache (zero extra GETs — replaying a
     network poll must not re-poll); commit() evicts finished polls so
-    a resident poller holds O(in-flight) state; and the legacy
-    anchor-less offset shape stays accepted here (HTTP replay is
-    cache/positional — only snapshot mode fails loud on it)."""
+    a resident poller holds O(in-flight) state; and any offset that
+    carries the poll index is accepted (replay is cache/positional)."""
     from etl_wlg_metlink_spark.sources import gtfs
     from etl_wlg_metlink_spark.sources.poll_source import _PollReader
 
@@ -831,76 +632,6 @@ def test_capped_sessions_cross_batch_and_cap_split(spark, tmp_path):
         (1, 2, 7.0, True),   # e3+e4 across the batch boundary; closed at e5
         (2, 1, 5.0, False),  # e5: trailing session stays open
     ]
-
-
-def test_poll_source_warns_on_unservable_snapshot(tmp_path):
-    """A producer violating the monotone landing-name contract (e.g.
-    non-zero-padded sequence numbers: snap_10 sorts BEFORE snap_9) gets
-    a loud warning instead of a silent permanent skip (ADVICE r5 /
-    VERDICT r6 item 3): a file appearing at/before the consumed anchor
-    can never be served by the name-anchored offset scheme."""
-    import pytest
-
-    from etl_wlg_metlink_spark.sources.poll_source import _PollReader
-
-    (tmp_path / "snap_9.json").write_text("{}")
-    reader = _PollReader({"snapshot_dir": str(tmp_path)})
-    rows, off = reader.read(reader.initialOffset())
-    assert list(rows)
-    assert off == {"index": 1, "last": "snap_9.json"}
-    # snap_10 lands late and sorts before the anchor -> unservable
-    (tmp_path / "snap_10.json").write_text("{}")
-    with pytest.warns(UserWarning, match=r"snap_10\.json.*NEVER"):
-        rows2, off2 = reader.read(off)
-    assert list(rows2) == []
-    assert off2 == off  # offset unchanged; the file is permanently lost
-    # steady state: no repeat warning once the file is in the baseline
-    import warnings as _w
-
-    with _w.catch_warnings(record=True) as rec:
-        _w.simplefilter("always")
-        reader.read(off)
-    assert not rec
-
-
-def test_snapshot_batch_datasource_parity(spark, tmp_path):
-    """The batch DataSource (backfill path) must produce exactly the
-    union of per-snapshot entity sets the streaming poll source serves
-    one-by-one, with one input partition per file (the parallelism
-    contract), and tolerate a malformed snapshot as entity-null rows."""
-    import json as _json
-
-    from etl_wlg_metlink_spark.pipelines.gtfs_fixture import RAW_JSON
-    from etl_wlg_metlink_spark.sources import snapshot_source
-
-    snap1 = _json.loads(RAW_JSON)
-    snap2 = {"header": snap1["header"], "entity": snap1["entity"][2:]}
-    (tmp_path / "s1.json").write_text(_json.dumps(snap1))
-    (tmp_path / "s2.json").write_text(_json.dumps(snap2))
-    (tmp_path / "s3.json").write_text("{broken")
-
-    rows = snapshot_source.snapshot_entities(spark, str(tmp_path)).collect()
-    by_snap = {}
-    for r in rows:
-        by_snap.setdefault(r["snapshot"], []).append(r)
-    assert set(by_snap) == {"s1.json", "s2.json", "s3.json"}
-    assert len(by_snap["s1.json"]) == len(snap1["entity"])
-    assert len(by_snap["s2.json"]) == len(snap2["entity"])
-    # malformed file: one entity-null row, job still succeeds
-    assert [r["entity"] for r in by_snap["s3.json"]] == [None]
-    # entity ids round-trip
-    got_ids = sorted(
-        r["entity"]["id"] for r in by_snap["s1.json"] if r["entity"]
-    )
-    assert got_ids == sorted(e["id"] for e in snap1["entity"])
-
-    # one input partition per file
-    raw = (
-        spark.read.format("metlink_snapshots")
-        .option("path", str(tmp_path))
-        .load()
-    )
-    assert raw.rdd.getNumPartitions() == 3
 
 
 def test_stateful_state_survives_restart(spark, sf_dir, tmp_path):

@@ -30,6 +30,7 @@ import argparse
 import json
 import os
 import sys
+from pathlib import Path
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -184,20 +185,15 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 0
 
+    # A --fixture file stands in for the HTTP response, so a bad body
+    # takes the same S3 error→empty fallback (task.ts:180-188) as a bad
+    # live response: an empty FeatureCollection and exit 0.
+    fetch_json = None
     if args.fixture:
-        # S3 error→empty fallback (task.ts:180-188): a bad body still
-        # submits an empty FeatureCollection and exits 0, exactly like
-        # the scheduled run does on a bad live response.
-        try:
-            with open(args.fixture, encoding="utf-8") as f:
-                entities = gtfs.entities_from_json(spark, f.read(), debug=cfg.debug)
-        except Exception as e:  # noqa: BLE001
-            print(f"Error reading fixture: {e}", file=sys.stderr)
-            entities = gtfs.empty_entities(spark)
-    else:
-        entities = gtfs.fetch_entities(
-            spark, cfg.metlink_api_key, debug=cfg.debug
-        )
+        fetch_json = lambda url, headers: Path(args.fixture).read_text("utf-8")
+    entities = gtfs.fetch_entities(
+        spark, cfg.metlink_api_key, fetch_json=fetch_json, debug=cfg.debug
+    )
 
     features = metlink.run(entities, cfg)
     if args.out:
@@ -205,11 +201,8 @@ def main(argv: list[str] | None = None) -> int:
         n = spark.read.text(args.out).count()
         print(f"wrote {n} features to {args.out}", file=sys.stderr)
     else:
-        counters: dict = {}
-        geojson.submit(
-            features, poster=lambda fc: print(json.dumps(fc)), counters=counters
-        )
-        print(f"submitted {counters.get('submitted', 0)} features", file=sys.stderr)
+        fc = geojson.submit(features, poster=lambda fc: print(json.dumps(fc)))
+        print(f"submitted {len(fc['features'])} features", file=sys.stderr)
     return 0
 
 

@@ -6,8 +6,7 @@ pyspark.sql.functions — JVM-side, whole-stage-codegen'd, no Python UDFs
 — so the expressions inline into any plan at any scale.
 
 The JS quirks are replicated deliberately (see reference file:line in
-each docstring); where a "fixed" (non-quirky) behavior is more useful
-for a general engine, the function takes a ``semantics`` flag.
+each docstring).
 """
 
 from __future__ import annotations
@@ -45,18 +44,12 @@ def split_head(col: Column | str, sep: str = "__") -> Column:
     ).getItem(0)
 
 
-def js_falsy_to_nan(col: Column | str, semantics: str = "js") -> Column:
+def js_falsy_to_nan(col: Column | str) -> Column:
     """D9 — JS ``value || NaN``: null, undefined, 0 and NaN all map to
     NaN (reference task.ts:294-295 ``speed || Number.NaN``,
-    ``bearing || UNKNOWN_COURSE``).
-
-    ``semantics='fixed'`` keeps 0 as a real value (plain null->NaN
-    coalesce) for engines that don't want the JS falsy quirk.
-    """
+    ``bearing || UNKNOWN_COURSE``)."""
     c = F.col(col) if isinstance(col, str) else col
     nan = F.lit(float("nan"))
-    if semantics == "fixed":
-        return F.coalesce(c, nan)
     return F.when(c.isNull() | (c == 0) | F.isnan(c), nan).otherwise(c)
 
 
@@ -114,13 +107,6 @@ def cot_key(vehicle_type: Column | str, vehicle_id: Column | str) -> Column:
     vt = F.col(vehicle_type) if isinstance(vehicle_type, str) else vehicle_type
     vid = F.col(vehicle_id) if isinstance(vehicle_id, str) else vehicle_id
     return F.concat(F.lit("WLG-Metlink"), vt, F.lit("-"), vid)
-
-
-def epoch_seconds_to_ts(col: Column | str) -> Column:
-    """D8 — epoch seconds -> timestamp (reference task.ts:292-293
-    ``new Date(ts * 1000)``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.timestamp_seconds(c)
 
 
 def kv_remarks(*pairs: tuple[str, Column | None]) -> Column:

@@ -24,6 +24,7 @@ from etl_wlg_metlink_spark.functions.scalar import (
     occupancy_label,
     split_head,
 )
+from etl_wlg_metlink_spark.pipelines.metlink import STALE_MS, vehicle_style
 from etl_wlg_metlink_spark.tables import load
 
 
@@ -130,10 +131,10 @@ def d1_split_head(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def d2_case_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D2 multi-branch prefix classification (task.ts:225-242): classify
-    parts by p_type prefix into Ship/Train/Bus-like classes, deriving
-    the same 4-column struct shape (type, icon, cot, color).  Chained
-    `when` = the reference's if/else-if precedence; Catalyst folds it
-    into one codegen'd CASE."""
+    parts by p_type prefix into Ship/Train/Bus-like classes, each with
+    its CoT type and marker color from the pipeline's `vehicle_style`.
+    Chained `when` = the reference's if/else-if precedence; Catalyst
+    folds it into one codegen'd CASE."""
     part = load(spark, sf_dir, "part")
     head = split_head("p_type", " ")
     cls = (
@@ -146,17 +147,12 @@ def d2_case_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise("Bus")
     )
+    cot_type, marker_color, _ = vehicle_style(cls)
     enriched = part.select(
         "p_partkey",
         cls.alias("vehicle_type"),
-        F.when(cls == "Ship", "a-f-S-E-V")
-        .when(cls == "Train", "a-u-G-E-V")
-        .otherwise("a-f-G-E-V-C")
-        .alias("cot_type"),
-        F.when(cls == "Ship", "#00FFFF")
-        .when(cls == "Train", "#7F007F")
-        .otherwise("#007F00")
-        .alias("marker_color"),
+        cot_type.alias("cot_type"),
+        marker_color.alias("marker_color"),
     )
     return enriched.groupBy("vehicle_type", "cot_type", "marker_color").agg(
         F.count("*").alias("n")
@@ -292,28 +288,20 @@ def d10_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d11_constant_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D11 constant enrichment (task.ts:17-24 icon paths, task.ts:297
     stale=180000): attach the static per-classification constants
-    (icon path, marker color, stale ms) as literal/CASE columns.
-    Catalyst constant-folds the literals — zero per-row cost at scale."""
-    from etl_wlg_metlink_spark.pipelines.metlink import (
-        BUS_ICON_PATH,
-        SHIP_ICON_PATH,
-        STALE_MS,
-        TRAIN_ICON_PATH,
-    )
-
+    (icon path, marker color, stale ms) as literal/CASE columns, with
+    event_type standing in for the vehicle class (purchase → Ship,
+    view → Train, else Bus). Catalyst constant-folds the literals —
+    zero per-row cost at scale."""
     events = load(spark, sf_dir, "events")
-    is_ship = F.col("event_type") == "purchase"
-    is_train = F.col("event_type") == "view"
+    et = F.col("event_type")
+    vehicle_type = (
+        F.when(et == "purchase", "Ship").when(et == "view", "Train").otherwise("Bus")
+    )
+    _, marker_color, icon = vehicle_style(vehicle_type)
     return events.select(
         "event_id",
-        F.when(is_ship, SHIP_ICON_PATH)
-        .when(is_train, TRAIN_ICON_PATH)
-        .otherwise(BUS_ICON_PATH)
-        .alias("icon"),
-        F.when(is_ship, "#00FFFF")
-        .when(is_train, "#7F007F")
-        .otherwise("#007F00")
-        .alias("marker_color"),
+        icon.alias("icon"),
+        marker_color.alias("marker_color"),
         F.lit(STALE_MS).cast("long").alias("stale"),
     )
 

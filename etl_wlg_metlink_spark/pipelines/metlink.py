@@ -1,7 +1,13 @@
 """M4 — the composed Metlink pipeline: the reference's `control()` loop
-(/root/reference/task.ts:147-342) as ONE lazy DataFrame expression
-tree: explode → P2-P4 filters → D1-D13 derivations (exact JS
-semantics) → P5 config filter → A1 last-wins dedup → Feature structs.
+(task.ts:147-342) as ONE lazy DataFrame expression tree: explode →
+P2-P4 filters → D1-D13 derivations (exact JS semantics) → P5 config
+filter → A1 last-wins dedup → Feature structs.
+
+Each rule is written once and every consumer calls it: `_drop_reason`
+is the P2-P4 filter of both the feature build and the counters,
+`_classify` the D1-D3 route, class and key, `vehicle_style` the
+per-class CoT type, colour and icon (also the d2/d11 lanes'), and the
+remaining D rules are the `functions/scalar.py` helpers.
 
 Catalyst fuses the whole thing into a single whole-stage-codegen'd
 pass over the input (the reference's hand-ordered early-exit loop,
@@ -20,6 +26,8 @@ from etl_wlg_metlink_spark.functions.scalar import (
     cot_key,
     format_fixed,
     js_falsy_to_nan,
+    kv_remarks,
+    nullish_default_str,
     occupancy_label,
     split_head,
 )
@@ -30,14 +38,56 @@ TRAIN_ICON_PATH = "34ae1613-9645-4222-a9d2-e5f243dea2865/Transportation/Train4.p
 SHIP_ICON_PATH = "34ae1613-9645-4222-a9d2-e5f243dea2865/Transportation/Ship.png"
 STALE_MS = 180000
 
+#: D2/D11 — (cot_type, marker_color, icon) per vehicle class
+#: (task.ts:17-24, 225-242), in CASE order: Ship, Train, then Bus.
+_STYLES = {
+    "Ship": ("a-f-S-E-V", "#00FFFF", SHIP_ICON_PATH),
+    "Train": ("a-u-G-E-V", "#7F007F", TRAIN_ICON_PATH),
+    "Bus": ("a-f-G-E-V-C", "#007F00", BUS_ICON_PATH),
+}
+
 TRAIN_PREFIXES = ("HVL", "JVL", "KPL", "MEL", "WRL", "MUL")
 
+#: The P2-P4 drop reasons `_drop_reason` returns, in check order; each
+#: is counted as ``dropped_<reason>``.
+DROP_REASONS = ("missing_struct", "zero_island", "falsy_trip")
 
-def _classify(e: Column) -> tuple[Column, Column, Column, Column, Column]:
-    """The entity column ``e``'s route_id (D1, task.ts:213), Ship /
-    Train flags, vehicle_type with precedence Ship > Train > Bus (D2,
-    task.ts:225-242) and cot_id key (D3, task.ts:251) — derived here
-    once for both the feature build and the pipeline counters."""
+
+def vehicle_style(vehicle_type: Column) -> tuple[Column, Column, Column]:
+    """``vehicle_type``'s (cot_type, marker_color, icon); a class other
+    than Ship or Train is styled as a Bus."""
+    return tuple(
+        F.when(vehicle_type == "Ship", ship)
+        .when(vehicle_type == "Train", train)
+        .otherwise(bus)
+        for ship, train, bus in zip(*_STYLES.values())
+    )
+
+
+def _drop_reason(e: Column) -> Column:
+    """The first P2-P4 filter (task.ts:195-212) the entity column ``e``
+    fails, as its `DROP_REASONS` name, or NULL if it passes: P2 a
+    missing vehicle or position struct, P3 the (0,0) island, P4 a
+    JS-falsy trip_id (NULL or ''). A present vehicle with no trip
+    (where the reference would crash on `trip.trip_id`) is dropped by
+    P4, the tolerant superset."""
+    pos = e["vehicle"]["position"]
+    trip_id = e["vehicle"]["trip"]["trip_id"]
+    # NULL lat/lon is NOT the island (JS `undefined === 0` is false).
+    island = F.coalesce(
+        (pos["latitude"] == 0) & (pos["longitude"] == 0), F.lit(False)
+    )
+    return (
+        F.when(e["vehicle"].isNull() | pos.isNull(), "missing_struct")
+        .when(island, "zero_island")
+        .when(trip_id.isNull() | (trip_id == ""), "falsy_trip")
+    )
+
+
+def _classify(e: Column) -> tuple[Column, Column, Column]:
+    """The entity column ``e``'s route_id (D1, task.ts:213),
+    vehicle_type with precedence Ship > Train > Bus (D2,
+    task.ts:225-242) and cot_id key (D3, task.ts:251)."""
     trip_id = e["vehicle"]["trip"]["trip_id"]
     route_id = split_head(trip_id, "__")
     is_ship = trip_id.startswith("QDF") | (route_id == "MIF")
@@ -45,8 +95,7 @@ def _classify(e: Column) -> tuple[Column, Column, Column, Column, Column]:
         lambda a, b: a | b, (trip_id.startswith(p) for p in TRAIN_PREFIXES)
     )
     vehicle_type = F.when(is_ship, "Ship").when(is_train, "Train").otherwise("Bus")
-    cot_id = cot_key(vehicle_type, e["vehicle"]["vehicle"]["id"])
-    return route_id, is_ship, is_train, vehicle_type, cot_id
+    return route_id, vehicle_type, cot_key(vehicle_type, e["vehicle"]["vehicle"]["id"])
 
 
 def build_features(entities: DataFrame, config: MetlinkConfig) -> DataFrame:
@@ -60,115 +109,69 @@ def build_features(entities: DataFrame, config: MetlinkConfig) -> DataFrame:
     e = F.col("entity")
     trip = e["vehicle"]["trip"]
     pos = e["vehicle"]["position"]
+    veh_id = e["vehicle"]["vehicle"]["id"]
+    occ = e["vehicle"]["occupancy_status"]
 
-    # P2 (task.ts:195) — tolerate-and-drop missing structs. The
-    # reference would actually crash on a present-vehicle/missing-trip
-    # record (`trip.trip_id` on undefined); we drop it, the tolerant
-    # superset.
-    df = entities.where(
-        e["vehicle"].isNotNull() & e["vehicle"]["position"].isNotNull()
-    )
-    # P3 (task.ts:204-206) — (0,0) island filter, both-zero only.
-    df = df.where(~((pos["latitude"] == 0) & (pos["longitude"] == 0)))
-    # P4 (task.ts:209-212) — JS-falsy trip_id: NULL or ''.
-    df = df.where(trip["trip_id"].isNotNull() & (trip["trip_id"] != ""))
-
-    route_id, is_ship, is_train, vehicle_type, cot_id = _classify(e)
-    icon = (
-        F.when(is_ship, SHIP_ICON_PATH)
-        .when(is_train, TRAIN_ICON_PATH)
-        .otherwise(BUS_ICON_PATH)
-    )
-    cot_type = (
-        F.when(is_ship, "a-f-S-E-V")
-        .when(is_train, "a-u-G-E-V")
-        .otherwise("a-f-G-E-V-C")
-    )
-    marker_color = (
-        F.when(is_ship, "#00FFFF").when(is_train, "#7F007F").otherwise("#007F00")
-    )
-
-    df = df.select(
+    route_id, vehicle_type, cot_id = _classify(e)
+    df = entities.where(_drop_reason(e).isNull()).select(
         "idx",
         e.alias("entity"),
         route_id.alias("route_id"),
         vehicle_type.alias("vehicle_type"),
         cot_id.alias("cot_id"),
-        icon.alias("icon"),
-        cot_type.alias("cot_type"),
-        marker_color.alias("marker_color"),
     )
 
     # P5 (task.ts:245-249) — config-driven show/hide.
     df = df.where(F.col("vehicle_type").isin(config.enabled_types()))
 
-    e = F.col("entity")
-    trip = e["vehicle"]["trip"]
-    pos = e["vehicle"]["position"]
-    veh_id = e["vehicle"]["vehicle"]["id"]
-    occ = e["vehicle"]["occupancy_status"]
-
-    cot_id = F.col("cot_id")
+    route_id, vehicle_type = F.col("route_id"), F.col("vehicle_type")
+    cot_type, marker_color, icon = vehicle_style(vehicle_type)
 
     # D6 (task.ts:254-286) — remarks. Required lines always render (JS
     # stringifies undefined as 'undefined'); Occupancy/Speed lines only
     # when the source field is present. Speed here is the RAW value
     # (0 → '0.0 m/s'); the `|| NaN` quirk applies only to the
     # properties.speed field below.
-    js_str = lambda c: F.coalesce(c.cast("string"), F.lit("undefined"))  # noqa: E731
-    remark_lines = [
-        F.concat(F.lit("Vehicle Type: "), F.col("vehicle_type")),
-        F.concat(F.lit("Vehicle ID: "), js_str(veh_id)),
-        F.concat(F.lit("Route ID: "), F.col("route_id")),
-        F.concat(F.lit("Trip ID: "), trip["trip_id"]),
-        F.concat(
-            F.lit("Direction: "),
-            F.coalesce(trip["direction_id"].cast("string"), F.lit("Unknown")),
-        ),
-        F.concat(F.lit("Start Time: "), js_str(trip["start_time"])),
-        F.when(
-            occ.isNotNull(),
-            F.concat(F.lit("Occupancy: "), occupancy_label(occ)),
-        ),
-        F.when(
-            pos["speed"].isNotNull(),
-            F.concat(F.lit("Speed: "), format_fixed(pos["speed"], 1, " m/s")),
-        ),
-    ]
-    remarks = F.concat_ws("\n", *remark_lines)
+    remarks = kv_remarks(
+        ("Vehicle Type", vehicle_type),
+        ("Vehicle ID", nullish_default_str(veh_id, "undefined")),
+        ("Route ID", route_id),
+        ("Trip ID", trip["trip_id"]),
+        ("Direction", nullish_default_str(trip["direction_id"])),
+        ("Start Time", nullish_default_str(trip["start_time"], "undefined")),
+        ("Occupancy", F.when(occ.isNotNull(), occupancy_label(occ))),
+        ("Speed", format_fixed(pos["speed"], 1, " m/s")),
+    )
 
     ts = F.timestamp_seconds(e["vehicle"]["timestamp"])  # D8 (task.ts:292-293)
 
     # D13 (task.ts:298-307) — metadata: the raw entity spread + derived.
     metadata = (
-        e.withField("vehicleType", F.col("vehicle_type"))
-        .withField("routeId", F.col("route_id"))
+        e.withField("vehicleType", vehicle_type)
+        .withField("routeId", route_id)
         .withField("directionId", trip["direction_id"])
         .withField("vehicleId", veh_id)
-        .withField(
-            "occupancy",
-            F.when(occ.isNotNull(), occupancy_label(occ)).otherwise("Unknown"),
-        )
+        .withField("occupancy", occupancy_label(occ))
     )
 
     # D12 (task.ts:289-320) — properties + Feature structs.
     properties = F.struct(
-        F.col("cot_type").alias("type"),
+        cot_type.alias("type"),
         F.format_string(
-            "Route %s - %s %s", F.col("route_id"), F.col("vehicle_type"), veh_id
+            "Route %s - %s %s", route_id, vehicle_type, veh_id
         ).alias("callsign"),  # D10 (task.ts:291)
         ts.alias("time"),
         ts.alias("start"),
         js_falsy_to_nan(pos["speed"]).alias("speed"),  # D9 (task.ts:294)
         js_falsy_to_nan(pos["bearing"]).alias("course"),  # D9 (task.ts:295)
-        F.col("marker_color").alias("marker-color"),
+        marker_color.alias("marker-color"),
         F.lit(STALE_MS).alias("stale"),  # D11 (task.ts:297)
         metadata.alias("metadata"),
         remarks.alias("remarks"),
-        F.col("icon").alias("icon"),
+        icon.alias("icon"),
     )
     feature = F.struct(
-        cot_id.alias("id"),
+        F.col("cot_id").alias("id"),
         F.lit("Feature").alias("type"),
         properties.alias("properties"),
         F.struct(
@@ -177,7 +180,7 @@ def build_features(entities: DataFrame, config: MetlinkConfig) -> DataFrame:
         ).alias("geometry"),
     )
 
-    staged = df.select("idx", cot_id, feature.alias("feature"))
+    staged = df.select("idx", "cot_id", feature.alias("feature"))
 
     # A1 (task.ts:191, 312) — last-wins dedup, ordered window (NOT
     # dropDuplicates: nondeterministic under parallelism). One shuffle.
@@ -195,7 +198,9 @@ def pipeline_metric_exprs(exact_submitted: bool = True) -> list:
     """Pipeline counter aggregates over the raw entity stage — the
     reference's console counters (task.ts:176 received entity count,
     210-211 P2-P4 skip warnings, 332/340 submitted feature count) as
-    ONE conditional-agg pass.
+    ONE conditional-agg pass, from the same `_drop_reason` the feature
+    build filters on. Every counter is 0, not NULL, when nothing
+    matches.
 
     Usable two ways: as a batch aggregation (m5_metlink_observe, the
     oracle-checked form) and as ``df.observe()`` metrics riding the
@@ -206,32 +211,13 @@ def pipeline_metric_exprs(exact_submitted: bool = True) -> list:
     the metrics channel).
     """
     e = F.col("entity")
-    trip = e["vehicle"]["trip"]
-    pos = e["vehicle"]["position"]
-    has_structs = e["vehicle"].isNotNull() & pos.isNotNull()
-    # NULL lat/lon is NOT the island (JS `undefined === 0` is false).
-    zero_island = F.coalesce(
-        (pos["latitude"] == 0) & (pos["longitude"] == 0), F.lit(False)
-    )
-    falsy_trip = trip["trip_id"].isNull() | (trip["trip_id"] == "")
-    p2_drop = ~has_structs
-    p3_drop = has_structs & zero_island
-    p4_drop = has_structs & ~zero_island & falsy_trip
-    survives = has_structs & ~zero_island & ~falsy_trip
-
-    *_, cot_id = _classify(e)
-    survivor_key = F.when(survives, cot_id)
-    submitted = (
-        F.count_distinct(survivor_key)
-        if exact_submitted
-        else F.approx_count_distinct(survivor_key)
-    )
+    reason = _drop_reason(e)
+    survivor_key = F.when(reason.isNull(), _classify(e)[2])
+    count_keys = F.count_distinct if exact_submitted else F.approx_count_distinct
     return [
         F.count(F.lit(1)).alias("received"),
-        F.sum(p2_drop.cast("long")).alias("dropped_missing_struct"),
-        F.sum(p3_drop.cast("long")).alias("dropped_zero_island"),
-        F.sum(p4_drop.cast("long")).alias("dropped_falsy_trip"),
-        submitted.alias("submitted"),
+        *(F.count_if(reason == r).alias(f"dropped_{r}") for r in DROP_REASONS),
+        count_keys(survivor_key).alias("submitted"),
     ]
 
 

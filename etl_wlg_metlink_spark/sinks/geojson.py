@@ -50,22 +50,15 @@ def _feature_json(features: DataFrame) -> DataFrame:
     return features.select(F.to_json(cleaned, _JSON_OPTS).alias("feature_json"))
 
 
-def submit(
-    features: DataFrame,
-    poster: Callable[[dict], None],
-    counters: dict | None = None,
-) -> dict:
+def submit(features: DataFrame, poster: Callable[[dict], None]) -> dict:
     """Collect the (bounded) feature set, assemble the
     FeatureCollection envelope, hand it to `poster`. Returns the
-    envelope. A3 counters (task.ts:176, 332, 340) land in `counters`
-    if given."""
+    envelope."""
     rows = _feature_json(features).collect()
     fc = {
         "type": "FeatureCollection",
         "features": [json.loads(r["feature_json"]) for r in rows],
     }
-    if counters is not None:
-        counters["submitted"] = len(fc["features"])
     poster(fc)
     return fc
 

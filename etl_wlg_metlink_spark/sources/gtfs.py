@@ -8,8 +8,9 @@ reference's two-level error policy:
 - record level (task.ts:195): a malformed/missing per-entity `vehicle`
   or `position` is tolerated here (NULL struct) and dropped by the
   pipeline's P2 filter — the PERMISSIVE analogue;
-- error→empty fallback (S3, task.ts:180-188) is `empty_entities()`,
-  which callers use in their try/except around fetch+parse.
+- error→empty fallback (S3, task.ts:180-188): `fetch_entities` turns
+  any fetch or parse error into the parse of an envelope with no
+  entities.
 
 `parse_envelopes` is the one envelope parse: the batch parse here, the
 landing-directory backfill (`snapshot_entities`), the landing-directory
@@ -31,10 +32,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_wlg_metlink_spark.schemas import (
-    VEHICLE_ENTITY,
-    VEHICLE_POSITIONS_RESPONSE,
-)
+from etl_wlg_metlink_spark.schemas import VEHICLE_POSITIONS_RESPONSE
 
 METLINK_VEHICLE_POSITIONS_URL = (
     "https://api.opendata.metlink.org.nz/v1/gtfs-rt/vehiclepositions"
@@ -106,28 +104,15 @@ def snapshot_entities(spark: SparkSession, snapshot_dir: str) -> DataFrame:
     return parse_envelopes(raw, "value", "snapshot", outer=True)
 
 
-def empty_entities(spark: SparkSession) -> DataFrame:
-    """S3 — the error→empty fallback input (an empty DataFrame with the
-    entity schema, which the pipeline turns into an empty
-    FeatureCollection, task.ts:183-186)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("idx", T.LongType()),
-            T.StructField("entity", VEHICLE_ENTITY),
-        ]
-    )
-    return spark.createDataFrame([], schema)
-
-
 def fetch_entities(
     spark: SparkSession,
     api_key: str,
     fetch_json: Callable[[str, dict], str] | None = None,
     debug: bool = False,
 ) -> DataFrame:
-    """S1 — the polled source: fetch + validate, with the S3 fallback.
+    """S1 — the polled source: fetch + validate, with the S3 fallback:
+    any error parses an envelope with no entities instead, which the
+    pipeline turns into an empty FeatureCollection (task.ts:183-186).
 
     `fetch_json(url, headers) -> str` is injectable; the default uses
     urllib (stdlib) and is only exercised against a live endpoint.
@@ -137,7 +122,7 @@ def fetch_entities(
         return entities_from_json(spark, raw, debug=debug)
     except Exception as e:  # noqa: BLE001 — any fetch/parse error → empty FC
         print(f"Error fetching Metlink data: {e}", file=sys.stderr)
-        return empty_entities(spark)
+        return entities_from_json(spark, '{"entity": []}')
 
 
 def fetch_raw(

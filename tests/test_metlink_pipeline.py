@@ -21,6 +21,7 @@ from etl_wlg_metlink_spark.pipelines import metlink
 from etl_wlg_metlink_spark.pipelines.gtfs_fixture import (
     FIXTURE_ENTITIES,
     RAW_JSON,
+    _entity,
     oracle_features,
 )
 from etl_wlg_metlink_spark.sinks import geojson
@@ -68,6 +69,45 @@ def test_config_filter_hides_types(spark):
     assert got == {
         f["id"]
         for f in oracle_features(FIXTURE_ENTITIES, enabled=("Train", "Ship"))
+    }
+
+
+def _counters(entities):
+    return entities.agg(*metlink.pipeline_metric_exprs()).first().asDict()
+
+
+def test_null_coordinates_are_not_the_island(spark):
+    """P3 drops only the (0,0) island. A NULL latitude or longitude is
+    not 0 in the reference (`undefined === 0` is false), so those
+    entities are submitted, and the counters agree with the features."""
+    ents = [
+        _entity(0, "220__B1", lat=None, lon=0.0),
+        _entity(1, "220__B2", lat=None, lon=None),
+        _entity(2, "HVL__T1", lat=0.0, lon=None),
+        _entity(3, "QDF__F1", lat=0.0, lon=0.0),
+    ]
+    entities = gtfs.entities_from_json(spark, json.dumps({"entity": ents}))
+    fc = geojson.submit(metlink.run(entities), lambda _: None)
+    assert len(fc["features"]) == 3
+    assert fc["features"] == oracle_features(ents)
+    c = _counters(entities)
+    assert c["dropped_zero_island"] == 1
+    dropped = sum(c[f"dropped_{r}"] for r in metlink.DROP_REASONS)
+    assert c["received"] - dropped == c["submitted"] == 3
+
+
+@pytest.mark.parametrize("n", [7, 0], ids=["no_drops", "no_entities"])
+def test_counters_with_nothing_dropped_are_zero(spark, n):
+    """A counter with nothing to count reads 0, not NULL: the first
+    seven fixture entities all pass, and the error→empty fallback's
+    envelope has no entities at all."""
+    raw = json.dumps({"entity": FIXTURE_ENTITIES[:n]})
+    assert _counters(gtfs.entities_from_json(spark, raw)) == {
+        "received": n,
+        "dropped_missing_struct": 0,
+        "dropped_zero_island": 0,
+        "dropped_falsy_trip": 0,
+        "submitted": n,
     }
 
 

@@ -113,8 +113,8 @@ trip_ids = st.one_of(
 entity_params = st.fixed_dictionaries(
     {
         "trip_id": trip_ids,
-        "lat": st.sampled_from([-41.3, 0.0, -41.29]),
-        "lon": st.sampled_from([174.8, 0.0]),
+        "lat": st.sampled_from([-41.3, 0.0, -41.29, None]),
+        "lon": st.sampled_from([174.8, 0.0, None]),
         "bearing": st.sampled_from([0.0, 90.0, 359.0]),
         "speed": st.sampled_from([None, 0.0, 3.5, 27.25]),
         "direction": st.sampled_from([0, 1, None]),

@@ -55,16 +55,6 @@ def test_js_falsy_to_nan_zero_and_null_become_nan(spark):
     assert vals[3] == 12.5
 
 
-def test_js_falsy_to_nan_fixed_mode_keeps_zero(spark):
-    vals = _col(
-        spark,
-        js_falsy_to_nan("v", semantics="fixed"),
-        [(0.0,), (None,)],
-        "v double",
-    )
-    assert vals[0] == 0.0 and math.isnan(vals[1])
-
-
 def test_nullish_default_zero_stays_zero(spark):
     # task.ts:260 — `??` not `||`: 0 renders as "0"
     vals = _col(

@@ -225,13 +225,6 @@ def _shingles_ws(ws, k: int = 3):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _shingles(text_col, k: int = 3):
-    """_shingles_ws over an inline split — ONLY for expression contexts
-    evaluated once per row (no HOF hot path). Hot lanes pre-project the
-    split and call _shingles_ws; see its docstring."""
-    return _shingles_ws(F.split(text_col, " "), k)
-
-
 def _shingle_fn(ws, k: int):
     def f(i):
         return F.concat_ws(" ", *[F.element_at(ws, i + off) for off in range(k)])

@@ -1,10 +1,10 @@
-"""Materialized dedup write path: manifest → deduplicated corpus on
-disk (VERDICT r4 stretch item 7).
+"""Materialized corpus write path: the l42 corpus build's kept
+documents → a deduplicated corpus on disk (VERDICT r4 stretch item 7).
 
-l29 produces the per-document keep/drop manifest; this sink composes
-the final step every production dedup ships — anti-join the drop set
-and persist the surviving corpus as a **bucketed** Parquet table keyed
-by the canonical content fingerprint.
+`write_corpus_build` composes the final step every production dedup
+ships — the near-dup drop set anti-joined, the quality gate and the
+mixture applied — and persists the surviving corpus as a **bucketed**
+Parquet table keyed by the canonical content fingerprint.
 
 Why bucket by fingerprint:
 
@@ -18,9 +18,9 @@ Why bucket by fingerprint:
 
 Scale shape of the write itself:
 
-- The drop relation is bounded by the number of CLUSTERED documents
-  (near-dups only — tiny vs the corpus), so the anti-join broadcasts
-  it; the corpus never shuffles for the join.
+- The near-dup labels are bounded by the number of CLUSTERED
+  documents (tiny vs the corpus), so their join broadcasts them; the
+  corpus never shuffles for the join.
 - The only corpus shuffle is the explicit ``repartition`` on the
   bucket key, which exists to make each task own whole buckets —
   otherwise every task writes a file per bucket and a 1000-executor
@@ -35,60 +35,12 @@ Reference lineage: the reference's sink is a one-envelope HTTP submit
 "persist the processed snapshot", composed with the dedup lane the
 north star adds.
 """
-
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_wlg_metlink_spark.tables import load
-
-
-def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The surviving corpus: full document rows minus l29's drop set,
-    with the canonical content fingerprint (l5's md5-over-sorted-
-    distinct-words) attached as the future join/bucket key."""
-    from etl_wlg_metlink_spark.operators.llm_pipeline import l29_dedup_manifest
-
-    docs = load(spark, sf_dir, "documents")
-    drops = (
-        l29_dedup_manifest(spark, sf_dir)
-        .where(F.col("verdict") == "drop")
-        .select("doc_id")
-    )
-    fp = F.md5(
-        F.array_join(F.array_sort(F.array_distinct(F.split(F.col("text"), " "))), " ")
-    )
-    return docs.join(F.broadcast(drops), "doc_id", "left_anti").withColumn("fp", fp)
-
-
-def write_dedup_corpus(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    path: str,
-    n_buckets: int = 8,
-) -> dict:
-    """Anti-join the manifest drop set and write the surviving corpus
-    as an external Parquet table bucketed (and sorted within buckets)
-    by fingerprint. Returns the A3-style counters the reference logs
-    per run (task.ts:176, 332, 340): received / dropped / written."""
-    survivors = dedup_survivors(spark, sf_dir).repartition(n_buckets, F.col("fp"))
-    (
-        survivors.write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(n_buckets, "fp")
-        .sortBy("fp")
-        .saveAsTable(table)
-    )
-    n_total = load(spark, sf_dir, "documents").count()
-    n_written = spark.table(table).count()
-    return {
-        "received": n_total,
-        "dropped": n_total - n_written,
-        "written": n_written,
-    }
 
 
 def write_corpus_build(

@@ -13,14 +13,13 @@ reference's two-level error policy:
   entities.
 
 `parse_envelopes` is the one envelope parse: the batch parse here, the
-landing-directory backfill (`snapshot_entities`), the landing-directory
-stream (streaming/runners.py) and the live poll stream
-(sources/poll_source.py) all call it.
+landing-directory backfill (`snapshot_entities`) and the
+landing-directory stream (streaming/runners.py) all call it.
 
 The HTTP fetch itself (task.ts:155-160) is driver-side by design: one
 poll returns O(10²-10³) records — a snapshot micro-batch, not bulk
-data. Every fetch goes through `fetch_raw`; `fetch_json` is injectable
-so tests/offline runs never touch the network.
+data. `fetch_entities` makes the one GET; its `fetch_json` is
+injectable so tests/offline runs never touch the network.
 """
 
 from __future__ import annotations
@@ -114,28 +113,18 @@ def fetch_entities(
     any error parses an envelope with no entities instead, which the
     pipeline turns into an empty FeatureCollection (task.ts:183-186).
 
-    `fetch_json(url, headers) -> str` is injectable; the default uses
-    urllib (stdlib) and is only exercised against a live endpoint.
+    One GET of the VehiclePositions endpoint with the Metlink headers
+    (task.ts:155-160). `fetch_json(url, headers) -> str` is
+    injectable; the default, `_urllib_fetch`, is looked up per call,
+    so it stays the one seam to replace in tests.
     """
+    headers = {"accept": "application/json", "x-api-key": api_key}
     try:
-        raw = fetch_raw(api_key, fetch_json=fetch_json)
+        raw = (fetch_json or _urllib_fetch)(METLINK_VEHICLE_POSITIONS_URL, headers)
         return entities_from_json(spark, raw, debug=debug)
     except Exception as e:  # noqa: BLE001 — any fetch/parse error → empty FC
         print(f"Error fetching Metlink data: {e}", file=sys.stderr)
         return entities_from_json(spark, '{"entity": []}')
-
-
-def fetch_raw(
-    api_key: str,
-    url: str = METLINK_VEHICLE_POSITIONS_URL,
-    fetch_json: Callable[[str, dict], str] | None = None,
-) -> str:
-    """One GET of the VehiclePositions endpoint with the Metlink
-    headers (task.ts:155-160) → the raw envelope string. Every fetch
-    goes through here; ``_urllib_fetch`` is looked up per call, so it
-    stays the one seam to replace in tests."""
-    headers = {"accept": "application/json", "x-api-key": api_key}
-    return (fetch_json or _urllib_fetch)(url, headers)
 
 
 def _urllib_fetch(url: str, headers: dict) -> str:

@@ -26,8 +26,11 @@ def _run_with_state_partitions(spark: SparkSession, n: int, thunk):
     state store per shuffle partition, each with per-batch commit
     overhead, so the session's CPU-count default is mostly fixed cost
     at ~10⁴-key test scale (a per-query knob in production). The conf
-    is read at stream START and every runner fully materializes before
-    returning, so overriding around the thunk is sound."""
+    is read at stream START, and `drain` runs the stream to its end
+    inside the thunk, as does `ledger` with its merge; so every
+    stateful operator runs with n partitions. What a runner returns
+    past that point is lazy (a memory-sink read, the projections over
+    a ledger's merge) and runs at the session's setting."""
     from etl_wlg_metlink_spark.session import conf_override
 
     with conf_override(spark, {"spark.sql.shuffle.partitions": str(n)}):
@@ -514,8 +517,8 @@ ORACLE = {
 
 def s12_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming trending top-k per hour — update-mode watermarked
-    window counts upserted into a keyed storage ledger by foreachBatch
-    across 4 ts-ordered micro-batches, compacted last-write-wins and
+    window counts upserted into a keyed `runners.ledger` across 4
+    ts-ordered micro-batches, compacted last-write-wins and
     ranked per window on the serving read (runners.trending_topk_run;
     the two-phase streaming top-k every live dashboard runs). The
     oracle is the equivalent batch rank over the full table — exact
@@ -549,7 +552,8 @@ def s13_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANN index maintenance: vectors arrive as 4 micro-
     batches, each assigned to its max-cosine IVF cell against the
     broadcast fixed quantizer inside foreachBatch, upserted into a
-    keyed ledger, compacted last-write-wins on the serving read
+    keyed `runners.ledger`, compacted last-write-wins on the serving
+    read
     (runners.ivf_ingest_run — the streaming twin of l17's batch
     build). Cell assignment is per-vector, so the serving table equals
     the batch assignment exactly — the oracle is l17's assign CTE."""
@@ -635,12 +639,13 @@ ORACLE["s14_drift_monitor"] = """
 
 def s15_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming count-min-sketch maintenance: per-micro-batch partial
-    d×w grids merged by elementwise sum through a batch_id-stamped
-    ledger (exactly-once restored before the sum — see
-    runners.countmin_ingest_run), serving est-vs-true for the heaviest
-    user keys. Stream equals batch because every stage is an
-    associative counter sum, so the oracle is l92's batch build keyed
-    by user_id over the full events table."""
+    d×w grids merged by elementwise sum through a `runners.ledger`
+    (a replayed batch overwrites its own partials, so the sum never
+    double-counts — see runners.countmin_ingest_run), serving
+    est-vs-true for the heaviest user keys. Stream equals batch
+    because every stage is an associative counter sum, so the oracle
+    is l92's batch build keyed by user_id over the full events
+    table."""
     from etl_wlg_metlink_spark.streaming import runners
 
     return _run_with_state_partitions(
@@ -694,13 +699,12 @@ ORACLE["s15_streaming_countmin"] = f"""
 
 def s16_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming HyperLogLog maintenance: per-micro-batch partial
-    register grids (≤ types×256 rows each) appended to a ledger and
-    MAX-merged on the serving read (runners.hll_ingest_run). MAX is
-    associative AND idempotent, so the merge needs no exactly-once
-    restore — the simplest member of the sketch-maintenance family
-    (contrast s15's SUM-merged count-min). Serving runs l95's shared
-    estimator, so the lane reuses l95's DuckDB oracle verbatim:
-    stream equals batch because max(max(A), max(B)) = max(A ∪ B)."""
+    register grids (≤ types×256 rows each) written to a
+    `runners.ledger` and MAX-merged on the serving read
+    (runners.hll_ingest_run) — the simplest member of the
+    sketch-maintenance family. Serving runs l95's shared estimator,
+    so the lane reuses l95's DuckDB oracle verbatim: stream equals
+    batch because max(max(A), max(B)) = max(A ∪ B)."""
     from etl_wlg_metlink_spark.streaming import runners
 
     return _run_with_state_partitions(
@@ -720,13 +724,13 @@ ORACLE["s16_streaming_hll"] = _LP_ORACLE["l95_hll_cardinality"]
 
 def s17_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming KMV (theta) maintenance: per-micro-batch k-minimum-
-    values partials appended to a ledger, dedup-merged and re-sketched
-    on the serving read (runners.kmv_ingest_run). k-smallest-of-
-    distinct-union is associative and idempotent — s16's MAX-merge
-    argument in order statistics — so no exactly-once restore stage.
-    Serving runs l97's shared report (_kmv_report), so the lane reuses
-    l97's DuckDB oracle verbatim: stream equals batch because the k
-    smallest of a union is the k smallest of the parts' k-smallests."""
+    values partials written to a `runners.ledger`, dedup-merged and
+    re-sketched on the serving read (runners.kmv_ingest_run).
+    k-smallest-of-distinct-union is associative — s16's MAX-merge
+    argument in order statistics. Serving runs l97's shared report
+    (_kmv_report), so the lane reuses l97's DuckDB oracle verbatim:
+    stream equals batch because the k smallest of a union is the k
+    smallest of the parts' k-smallests."""
     from etl_wlg_metlink_spark.streaming import runners
 
     return _run_with_state_partitions(

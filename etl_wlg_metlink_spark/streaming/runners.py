@@ -6,8 +6,12 @@ availableNow trigger — process everything available, then stop.
 `drain` is the one place that runs a query that way: every one-shot
 runner and lane hands it a stream (and a foreachBatch function, or
 none for a memory sink), and it owns the checkpoint, the trigger, the
-wait and the cleanup. `staged_replay` is the one landing directory
-the multi-batch runners replay.
+wait and the cleanup. `ledger` is the one storage ledger: the
+sketch and index maintenance runners (trending top-k, IVF, count-min,
+HLL, KMV) hand it a stream, a per-batch partial and a merge, and it
+owns the `batch_id` directories, the read-back and the cleanup.
+`staged_replay` is the one landing directory the multi-batch runners
+replay.
 
 The Metlink scheduled job and its resident poller are one query over a
 landing directory of envelope files (`_envelope_query`): Spark's text
@@ -35,7 +39,7 @@ import tempfile
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -172,6 +176,61 @@ def drain(
         _unload_state_providers(spark)
         spark.catalog.dropTempView(name)
         shutil.rmtree(checkpoint, ignore_errors=True)
+
+
+def ledger(
+    stream: DataFrame,
+    partial: Callable[[DataFrame], DataFrame | tuple[DataFrame, ...]],
+    merge: Callable[..., DataFrame],
+    *,
+    output_mode: str = "append",
+) -> DataFrame:
+    """Drain ``stream`` into a storage ledger and return its merge —
+    state in STORAGE, not the streaming state store, the stand-in for
+    a Delta/JDBC MERGE.
+
+    Each micro-batch's ``partial(batch)`` is written to
+    ``batch_id=<id>/`` with mode("overwrite"), so a batch replayed
+    after a failure replaces itself: every merge is replay-safe, sum
+    merges included (the foreachBatch ``batch_id`` contract). A
+    ``partial`` that returns a tuple gets one sub-ledger per element.
+    After the drain, ``merge(*ledgers)`` gets each sub-ledger read
+    back with its ``batch_id`` column; its result is materialized
+    (``localCheckpoint(eager=True)``, so it must be bounded) and the
+    ledger dir removed, whether the run succeeds or raises."""
+    spark = stream.sparkSession
+    root = _tracked_mkdtemp(prefix="ledger_")
+    n_parts = 0
+
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        nonlocal n_parts
+        parts = partial(batch)
+        if isinstance(parts, DataFrame):
+            parts = (parts,)
+        n_parts = len(parts)
+        for i, part in enumerate(parts):
+            part.write.mode("overwrite").parquet(f"{root}/{i}/batch_id={batch_id}")
+
+    try:
+        drain(stream, write_batch, output_mode=output_mode)
+        ledgers = [spark.read.parquet(f"{root}/{i}") for i in range(n_parts)]
+        return merge(*ledgers).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def last_wins(*keys: str) -> Callable[[DataFrame], DataFrame]:
+    """The keyed-upsert merge: each key's row from its latest batch."""
+
+    def merge(rows: DataFrame) -> DataFrame:
+        w = Window.partitionBy(*keys).orderBy(F.col("batch_id").desc())
+        return (
+            rows.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .drop("rn", "batch_id")
+        )
+
+    return merge
 
 
 #: staged replays, one per (sf_dir, table, order_col, n_batches) —
@@ -505,84 +564,6 @@ def track_ttl_state_stream(events: DataFrame, ttl_seconds: int = 3600) -> DataFr
     )
 
 
-def track_ttl_transform_with_state(
-    events: DataFrame, ttl_seconds: int = 3600
-) -> DataFrame:
-    """track_ttl_state_stream's semantics on Spark 4's CURRENT
-    arbitrary-state API (`transformWithStateInPandas`): per-key value
-    state plus an explicit event-time TIMER at last_event + TTL. On
-    each update the previous timer is deleted and re-armed at the new
-    deadline, so exactly one eviction fires per quiet track — emitted
-    as the same closed record, then state cleared. Parity with the
-    legacy applyInPandasWithState runner is pinned by test.
-
-    Requires the RocksDB state store provider (the API's backing
-    store), which is also the right provider at scale — state lives
-    off-heap and snapshots incrementally instead of rewriting full
-    HDFS-backed maps per batch. The API's Python worker additionally
-    needs `google.protobuf`; the parity test skips where that package
-    is absent (as in this build container) — the legacy-API runner
-    above is the always-runnable twin."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    ttl_ms = ttl_seconds * 1000
-
-    class TrackProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.track = handle.getValueState("track", "count long, last_ms long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            count, last_ms = (
-                self.track.get() if self.track.exists() else (0, 0)
-            )
-            prev_deadline = last_ms + ttl_ms if count else None
-            for pdf in rows:
-                count += len(pdf)
-                batch_ms = int(pdf["ts"].astype("int64").max() // 1_000_000)
-                last_ms = max(last_ms, batch_ms)
-            self.track.update((count, last_ms))
-            if prev_deadline is not None and prev_deadline != last_ms + ttl_ms:
-                self.handle.deleteTimer(prev_deadline)
-            self.handle.registerTimer(last_ms + ttl_ms)
-            return iter([])
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            if not self.track.exists():
-                return iter([])
-            count, last_ms = self.track.get()
-            if expired_timer_info.getExpiryTimeInMs() < last_ms + ttl_ms:
-                # stale timer from a deadline that was since re-armed
-                return iter([])
-            self.track.clear()
-            (user_id,) = key
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [count],
-                    "last_ts": [pd.Timestamp(last_ms, unit="ms")],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", "0 seconds")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            TrackProcessor(),
-            outputStructType="user_id long, n_events long, last_ts timestamp",
-            outputMode="append",
-            timeMode="EventTime",
-        )
-    )
-
-
 #: s10 capped-sessionization knobs: 30-min inactivity gap (same as the
 #: native session_window lane s3) and a 2-event hard cap — the corpus'
 #: gap-sessions run 1-3 events (p99 = 2), so cap 2 splits the real
@@ -767,9 +748,8 @@ def trending_topk_run(
     "top event types per hour, updating live": an UPDATE-mode
     watermarked window aggregation emits each window's row whenever
     its count changes, foreachBatch upserts those rows into a keyed
-    ledger in storage (batch_id-stamped appends; the stand-in for a
-    Delta/JDBC MERGE), and the serving read compacts last-write-wins
-    per (window, type) and ranks per window. Ranking lives OUTSIDE the
+    `ledger`, and the serving read compacts last-write-wins per
+    (window, type) and ranks per window. Ranking lives OUTSIDE the
     stream on purpose: windowed rank functions aren't expressible on a
     streaming aggregate, and the serving layer re-ranks the handful of
     hot windows on read — the standard two-phase streaming top-k.
@@ -782,38 +762,14 @@ def trending_topk_run(
     (windows x types x batches)-bounded ledger, never the event
     stream. Exactness across batch splits is the staged_replay
     invariant (ts-range staging -> zero late drops)."""
-    from pyspark.sql import Window
-
     _, stream = staged_replay(spark, sf_dir, "events", "ts", n_batches)
-    ledger_dir = _tracked_mkdtemp(prefix="trending_ledger_")
-
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # idempotent keyed upsert, ledger form: append the batch's
-        # changed rows stamped with batch_id; replayed batches after a
-        # failure overwrite themselves at compaction (last-wins on the
-        # same batch_id is a no-op because the rows are identical)
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(ledger_dir)
-        )
-
-    drain(tumbling_counts_stream(stream), upsert_batch, output_mode="update")
-    ledger = spark.read.parquet(ledger_dir)
-    w_last = Window.partitionBy("window_start", "event_type").orderBy(
-        F.col("batch_id").desc()
+    # the compaction is (windows × types)-bounded
+    final = ledger(
+        tumbling_counts_stream(stream),
+        lambda batch: batch,
+        last_wins("window_start", "event_type"),
+        output_mode="update",
     )
-    final = (
-        ledger.withColumn("rn", F.row_number().over(w_last))
-        .where(F.col("rn") == 1)
-        .drop("rn", "batch_id")
-    )
-    # the compaction is (windows × types)-bounded, so materialize it
-    # eagerly (lineage cut from the ledger files) and reclaim the
-    # ledger dir NOW instead of at process exit — one invocation
-    # leaves zero disk residue behind
-    final = final.localCheckpoint(eager=True)
-    shutil.rmtree(ledger_dir, ignore_errors=True)
     w_rank = Window.partitionBy("window_start").orderBy(
         F.col("n").desc(), "event_type"
     )
@@ -832,8 +788,8 @@ def ivf_ingest_run(
     batch is assigned to its max-cosine coarse cell against the
     BROADCAST seed set inside foreachBatch (stream-static, the trained
     quantizer is fixed ahead of ingest exactly as in production —
-    FAISS-style IVF serves while adding), appended to a keyed storage
-    ledger, and compacted last-write-wins per vec_id on the serving
+    FAISS-style IVF serves while adding), upserted into a keyed
+    `ledger`, and compacted last-write-wins per vec_id on the serving
     read — a re-ingested vector upserts its cell, same ledger shape as
     s12.
 
@@ -860,9 +816,8 @@ def ivf_ingest_run(
     sid, cent, cnorm = _ivf_index(
         load(spark, sf_dir, "embeddings"), cache_key=sf_dir
     )
-    ledger_dir = _tracked_mkdtemp(prefix="ivf_ledger_")
 
-    def assign_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def assign_batch(batch_df: DataFrame) -> DataFrame:
         corpus = batch_df.select(
             "vec_id",
             "embedding",
@@ -885,26 +840,10 @@ def ivf_ingest_run(
             # the index or, under ANSI, kill the stream)
             F.col("norm") > 0
         )
-        (
-            _ivf_assign(corpus, sid, cent, cnorm)
-            .select("vec_id", "cell", F.lit(batch_id).alias("batch_id"))
-            .write.mode("append")
-            .parquet(ledger_dir)
-        )
+        return _ivf_assign(corpus, sid, cent, cnorm).select("vec_id", "cell")
 
-    drain(stream, assign_batch)
-    from pyspark.sql import Window
-
-    ledger = spark.read.parquet(ledger_dir)
-    w_last = Window.partitionBy("vec_id").orderBy(F.col("batch_id").desc())
-    serving = (
-        ledger.withColumn("rn", F.row_number().over(w_last))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "cell")
-        .localCheckpoint(eager=True)  # bounded: one row per vector
-    )
-    shutil.rmtree(ledger_dir, ignore_errors=True)
-    return serving
+    # bounded: one row per vector
+    return ledger(stream, assign_batch, last_wins("vec_id"))
 
 
 def drift_monitor_run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -951,8 +890,6 @@ def drift_monitor_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         (F.col("n_ref").cast("double") / F.col("ref_total")).alias("p_ref"),
     )
-    from pyspark.sql import Window
-
     # window totals via a per-window frame — no self-join against the
     # memory-sink view (which trips conflicting-reference resolution),
     # and each window's partition is |types|-sized, never corpus-sized
@@ -1000,11 +937,9 @@ def countmin_ingest_run(
     partial grids merge by elementwise sum, associatively, in any
     order. Each micro-batch computes its own partial grid (and its
     exact per-key partial counts, the audit's ground truth) inside
-    foreachBatch and appends both to batch_id-stamped ledgers; the
-    serving read restores exactly-once (max per (batch_id, cell) —
-    an availableNow replay re-appends IDENTICAL rows, and unlike the
-    trending ledger's last-wins compaction a SUM-merge would double-
-    count them), merges the grids, and answers est-vs-true for the
+    foreachBatch, one `ledger` sub-ledger each (a replayed batch
+    overwrites its own rows, so the SUM-merge never double-counts);
+    the serving read sums the grids and answers est-vs-true for the
     top-{L92_TOP_K} keys. Keys are user_ids — enough cardinality at
     sf0.1 to make 4×64 collisions real, which is what the overcount
     column exists to show.
@@ -1023,9 +958,6 @@ def countmin_ingest_run(
     )
 
     _, stream = staged_replay(spark, sf_dir, "events", "ts", n_batches)
-    sketch_dir = _tracked_mkdtemp(prefix="cms_sketch_ledger_")
-    counts_dir = _tracked_mkdtemp(prefix="cms_counts_ledger_")
-
     rows = F.explode(F.sequence(F.lit(0), F.lit(CMS_D - 1)))
 
     def bucket():
@@ -1041,7 +973,7 @@ def countmin_ingest_run(
             % CMS_W
         )
 
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def partial(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
         # ONE pass over the batch (the per-key exact counts), then the
         # partial grid derives FROM those counts: cell(r, bkt) =
         # Σ_{k hashing there} c(k) — identical values to counting raw
@@ -1050,61 +982,41 @@ def countmin_ingest_run(
         # sf0.1, and at 100 TB the difference between hashing the
         # corpus ×d and hashing the key dictionary ×d).
         # localCheckpoint pins the bounded per-batch key partials so
-        # both ledger writes reuse the single aggregation.
+        # both sub-ledger writes reuse the single aggregation.
         kc = (
             batch_df.select(F.col("user_id").cast("string").alias("k"))
             .groupBy("k")
             .agg(F.count("*").alias("c"))
             .localCheckpoint(eager=True)
         )
-        (
+        grid = (
             kc.select("k", "c", rows.alias("r"))
             .select("r", bucket().alias("bkt"), "c")
             .groupBy("r", "bkt")
             .agg(F.sum("c").alias("cell"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(sketch_dir)
         )
-        (
-            kc.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(counts_dir)
+        return grid, kc
+
+    def merge(grids: DataFrame, key_counts: DataFrame) -> DataFrame:
+        sketch = grids.groupBy("r", "bkt").agg(F.sum("cell").alias("cell"))
+        counts = key_counts.groupBy("k").agg(F.sum("c").alias("c"))
+        top = counts.orderBy(F.col("c").desc(), "k").limit(L92_TOP_K)
+        probes = top.select("k", "c", rows.alias("r")).select(
+            "k", "c", "r", bucket().alias("bkt")
+        )
+        return (
+            probes.join(F.broadcast(sketch), ["r", "bkt"])
+            .groupBy("k", "c")
+            .agg(F.min("cell").alias("est"))
+            .select(
+                F.col("k").alias("user_key"),
+                F.col("c").alias("true_count"),
+                F.col("est").alias("est_count"),
+                (F.col("est") - F.col("c")).alias("overcount"),
+            )
         )
 
-    drain(stream, upsert_batch)
-
-    # exactly-once restore (max over identical replayed rows per
-    # batch_id), THEN the associative merge across batches
-    sketch = (
-        spark.read.parquet(sketch_dir)
-        .groupBy("batch_id", "r", "bkt")
-        .agg(F.max("cell").alias("cell"))
-        .groupBy("r", "bkt")
-        .agg(F.sum("cell").alias("cell"))
-    )
-    counts = (
-        spark.read.parquet(counts_dir)
-        .groupBy("batch_id", "k")
-        .agg(F.max("c").alias("c"))
-        .groupBy("k")
-        .agg(F.sum("c").alias("c"))
-    )
-    top = counts.orderBy(F.col("c").desc(), "k").limit(L92_TOP_K)
-    probes = top.select("k", "c", rows.alias("r")).select(
-        "k", "c", "r", bucket().alias("bkt")
-    )
-    return (
-        probes.join(F.broadcast(sketch), ["r", "bkt"])
-        .groupBy("k", "c")
-        .agg(F.min("cell").alias("est"))
-        .select(
-            F.col("k").alias("user_key"),
-            F.col("c").alias("true_count"),
-            F.col("est").alias("est_count"),
-            (F.col("est") - F.col("c")).alias("overcount"),
-        )
-    )
+    return ledger(stream, partial, merge)
 
 
 def hll_ingest_run(
@@ -1112,18 +1024,14 @@ def hll_ingest_run(
 ) -> DataFrame:
     """Streaming HyperLogLog maintenance — the streaming twin of l95
     and the cleanest member of the sketch-maintenance family: the HLL
-    register grid merges by per-register MAX, which is associative
-    AND idempotent, so unlike s15's SUM-merged count-min the ledger
-    needs NO exactly-once restore stage — an availableNow replay that
-    re-appends a batch's identical register rows cannot move a MAX.
+    register grid merges by per-register MAX, which is associative.
     Each micro-batch reduces to its own ≤ types×256 partial register
     rows inside foreachBatch (map+combine, the stream itself never
-    shuffles whole) and appends them batch_id-stamped (the stamp is
-    audit metadata only); the serving read MAX-merges the ledger and
-    runs l95's shared estimator (_hll_finalize — one estimator, so
-    stream and batch cannot drift and s16 shares l95's DuckDB oracle
-    verbatim). Stream equals batch because max(max(A), max(B)) =
-    max(A ∪ B).
+    shuffles whole) and writes them to a `ledger`; the serving read
+    MAX-merges the ledger and runs l95's shared estimator
+    (_hll_finalize — one estimator, so stream and batch cannot drift
+    and s16 shares l95's DuckDB oracle verbatim). Stream equals batch
+    because max(max(A), max(B)) = max(A ∪ B).
 
     Scale shape: ledger grows by ≤ types×256 rows per batch; serving
     is a (types×256)-key hash-agg; per-batch state is the constant
@@ -1136,24 +1044,14 @@ def hll_ingest_run(
     )
 
     stage, stream = staged_replay(spark, sf_dir, "events", "ts", n_batches)
-    ledger_dir = _tracked_mkdtemp(prefix="hll_reg_ledger_")
-
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            _hll_ranks(batch_df)
-            .groupBy("event_type", "j")
-            .agg(F.max("rank").alias("m_j"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(ledger_dir)
-        )
-
-    drain(stream, upsert_batch)
-
-    regs = (
-        spark.read.parquet(ledger_dir)
-        .groupBy("event_type", "j")
-        .agg(F.max("m_j").alias("m_j"))
+    regs = ledger(
+        stream,
+        lambda batch: (
+            _hll_ranks(batch).groupBy("event_type", "j").agg(F.max("rank").alias("m_j"))
+        ),
+        lambda partials: partials.groupBy("event_type", "j").agg(
+            F.max("m_j").alias("m_j")
+        ),
     )
     exact = (
         spark.read.parquet(stage)
@@ -1167,17 +1065,16 @@ def kmv_ingest_run(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
     """Streaming KMV maintenance (s17) — the streaming twin of l97 and
-    the second idempotent member of the sketch-maintenance family:
-    each micro-batch reduces to its own per-type k-minimum-values
-    partial inside foreachBatch (batch-local distinct + rank-limit —
-    the stream itself never shuffles whole) and appends it to a
-    ledger; the serving read explodes the partials, DEDUPS (the same
-    user hash re-appearing across batches or across a replayed append
-    collapses — k-smallest-of-distinct-union is associative and
-    idempotent, the MAX-merge argument of s16 in order statistics),
-    re-sketches, and runs l97's shared report (_kmv_report — one
-    estimator and one pair stage, so stream and batch cannot drift
-    and s17 reuses l97's DuckDB oracle verbatim).
+    the third member of the sketch-maintenance family: each
+    micro-batch reduces to its own per-type k-minimum-values partial
+    inside foreachBatch (batch-local distinct + rank-limit — the
+    stream itself never shuffles whole) and writes it to a `ledger`;
+    the serving read DEDUPS the partials (the same user hash
+    re-appearing across batches collapses — k-smallest-of-distinct-
+    union is associative, the MAX-merge argument of s16 in order
+    statistics), re-sketches, and runs l97's shared report
+    (_kmv_report — one estimator and one pair stage, so stream and
+    batch cannot drift and s17 reuses l97's DuckDB oracle verbatim).
 
     Scale shape: ledger grows by ≤ types×k rows per batch; serving
     work is (ledger rows) → distinct → rank-limit — sketch-sized.
@@ -1191,23 +1088,14 @@ def kmv_ingest_run(
     )
 
     stage, stream = staged_replay(spark, sf_dir, "events", "ts", n_batches)
-    ledger_dir = _tracked_mkdtemp(prefix="kmv_ledger_")
-
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partial = _kmv_sketch(
-            _kmv_hashes(batch_df).select("event_type", "h")
-        )
-        (
-            partial.select("event_type", F.explode("sk").alias("h"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(ledger_dir)
-        )
-
-    drain(stream, upsert_batch)
-
-    merged = _kmv_sketch(
-        spark.read.parquet(ledger_dir).select("event_type", "h").distinct()
+    merged = ledger(
+        stream,
+        lambda batch: _kmv_sketch(
+            _kmv_hashes(batch).select("event_type", "h")
+        ).select("event_type", F.explode("sk").alias("h")),
+        lambda partials: _kmv_sketch(
+            partials.select("event_type", "h").distinct()
+        ),
     )
     hs = _kmv_hashes(spark.read.parquet(stage))
     return _kmv_report(merged, hs)

@@ -111,13 +111,3 @@ def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     §8's anti-pattern). So the respread exists exactly when the
     input's bytes-on-disk are below cores × SPREAD_BYTES_PER_CORE."""
     return spread(load(spark, sf_dir, name), f"{sf_dir}/{name}.parquet")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL API surface)."""
-    for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,26 +1,29 @@
-"""Round-trip test for the materialized dedup write path
-(sinks/corpus.py): manifest → anti-join → bucketed Parquet table →
-read back and match l29's keep set, plus the scale property the
+"""Round-trip test for the materialized corpus write path
+(sinks/corpus.py): the l42 corpus build → bucketed Parquet table →
+read back and match the build's kept set, plus the scale property the
 bucketing buys (no corpus-side shuffle for a fingerprint join)."""
 
 from __future__ import annotations
 
-from __spark_entry__ import queries
-from etl_wlg_metlink_spark.sinks.corpus import write_dedup_corpus
+from etl_wlg_metlink_spark.operators.llm_pipeline import _corpus_build_kept
+from etl_wlg_metlink_spark.sinks.corpus import write_corpus_build
+from etl_wlg_metlink_spark.tables import load
 
 
 def test_dedup_corpus_roundtrip(spark, sf_dir, tmp_path):
     table = "dedup_corpus_roundtrip"
     try:
-        counters = write_dedup_corpus(
-            spark, sf_dir, table, str(tmp_path / "corpus"), n_buckets=4
+        counters, _ = write_corpus_build(
+            spark, sf_dir, str(tmp_path / "corpus"), table, n_buckets=4
         )
-        manifest = queries()["l29_dedup_manifest"](spark, sf_dir).collect()
-        keep = {r["doc_id"] for r in manifest if r["verdict"] == "keep"}
-        drop = {r["doc_id"] for r in manifest if r["verdict"] == "drop"}
-        assert counters["received"] == len(keep) + len(drop)
+        keep = {
+            r["doc_id"]
+            for r in _corpus_build_kept(spark, sf_dir).select("doc_id").collect()
+        }
+        n_docs = load(spark, sf_dir, "documents").count()
+        assert counters["received"] == n_docs
         assert counters["written"] == len(keep)
-        assert counters["dropped"] == len(drop) > 0
+        assert counters["dropped"] == n_docs - len(keep) > 0
 
         back = spark.table(table)
         got = {r["doc_id"] for r in back.select("doc_id").collect()}
@@ -54,25 +57,3 @@ def test_dedup_corpus_roundtrip(spark, sf_dir, tmp_path):
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_dedup_survivors_never_lose_content(spark, sf_dir):
-    """Every dropped doc has a surviving near-dup twin: for each drop,
-    its cluster's keeper exists in the written set (content coverage —
-    dedup must not orphan a cluster)."""
-    from etl_wlg_metlink_spark.sinks.corpus import dedup_survivors
-
-    manifest = {
-        r["doc_id"]: (r["cluster_id"], r["verdict"])
-        for r in queries()["l29_dedup_manifest"](spark, sf_dir).collect()
-    }
-    kept = {
-        r["doc_id"]
-        for r in dedup_survivors(spark, sf_dir).select("doc_id").collect()
-    }
-    for doc_id, (cluster_id, verdict) in manifest.items():
-        if verdict == "drop":
-            assert doc_id not in kept
-            assert cluster_id in kept, f"cluster {cluster_id} lost its keeper"
-        else:
-            assert doc_id in kept

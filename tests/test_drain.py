@@ -1,7 +1,9 @@
 """runners.drain: the one one-shot streaming lifecycle. Whether the
 query succeeds or fails, it leaves no temp view, no loaded state-store
-providers and no checkpoint behind. Self-contained: each test lands its
-own parquet files, so no table data is needed."""
+providers and no checkpoint behind. runners.ledger, built on it: a
+replayed batch replaces itself, and no ledger dir outlives the run.
+Self-contained: each test lands its own parquet files, so no table
+data is needed."""
 
 from __future__ import annotations
 
@@ -15,28 +17,16 @@ from pyspark.sql import functions as F
 from etl_wlg_metlink_spark.streaming import runners
 
 
-def _landing(spark, tmp_path):
+def _landing(spark, tmp_path, **options):
+    """20 rows keyed k = id % 3, landed as 4 parquet files."""
     land = str(tmp_path / "landing")
-    spark.range(20).select((F.col("id") % 3).alias("k")).write.parquet(land)
-    return spark.readStream.schema("k long").parquet(land)
+    rows = spark.range(0, 20, 1, 4).select((F.col("id") % 3).alias("k"))
+    rows.write.parquet(land)
+    return spark.readStream.schema("k long").options(**options).parquet(land)
 
 
 def _temp_views(spark):
     return {t.name for t in spark.catalog.listTables() if t.isTemporary}
-
-
-@pytest.fixture
-def made_dirs(monkeypatch):
-    """Every temp dir runners creates during the test."""
-    made = []
-    real = runners._tracked_mkdtemp
-
-    def tracked(prefix):
-        made.append(real(prefix))
-        return made[-1]
-
-    monkeypatch.setattr(runners, "_tracked_mkdtemp", tracked)
-    return made
 
 
 @pytest.mark.parametrize("sink", ["memory", "foreachBatch"])
@@ -67,3 +57,52 @@ def test_state_store_unload_failure_is_logged(capfd):
         "event": "state_store_unload_failed",
         "error": "AttributeError",
     }
+
+
+def _counts_by_key(spark, tmp_path, partial=lambda b: b.groupBy("k").count()):
+    """A SUM-merged ledger over the 4-file landing, one file per batch:
+    replay-safe only if a replayed batch replaces its own rows."""
+    return sorted(
+        map(
+            tuple,
+            runners.ledger(
+                _landing(spark, tmp_path, maxFilesPerTrigger=1),
+                partial,
+                lambda rows: rows.groupBy("k").agg(
+                    F.sum("count").alias("n"),
+                    F.countDistinct("batch_id").alias("batches"),
+                ),
+            ).collect(),
+        )
+    )
+
+
+def test_ledger_replayed_batch_replaces_itself(spark, tmp_path, monkeypatch):
+    once = _counts_by_key(spark, tmp_path / "once")
+    assert once == [(0, 7, 4), (1, 7, 4), (2, 6, 4)]
+
+    real_drain = runners.drain
+
+    def drain_twice(stream, batch_fn, **kw):
+        def replay(batch, batch_id):
+            batch_fn(batch, batch_id)
+            batch_fn(batch, batch_id)
+
+        return real_drain(stream, replay, **kw)
+
+    monkeypatch.setattr(runners, "drain", drain_twice)
+    assert _counts_by_key(spark, tmp_path / "twice") == once
+
+
+def test_ledger_leaves_no_dir_behind(spark, tmp_path, made_dirs):
+    _counts_by_key(spark, tmp_path / "ok")
+    assert len(made_dirs) == 2  # the ledger and drain's checkpoint
+    assert not any(os.path.exists(d) for d in made_dirs)
+
+    def failing(batch):
+        raise RuntimeError("partial failed")
+
+    with pytest.raises(StreamingQueryException):
+        _counts_by_key(spark, tmp_path / "failed", failing)
+    assert len(made_dirs) == 4
+    assert not any(os.path.exists(d) for d in made_dirs)

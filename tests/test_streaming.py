@@ -6,9 +6,8 @@ invocation of the reference task (task.ts:122).
 
 from __future__ import annotations
 
-import json
+import os
 
-from etl_wlg_metlink_spark.pipelines.gtfs_fixture import RAW_JSON
 from etl_wlg_metlink_spark.streaming import runners, s1_tumbling_window
 from etl_wlg_metlink_spark.tables import load
 
@@ -301,7 +300,7 @@ def test_cli_resident_flags():
 
 
 def _write_ttl_fixture(tmp_path):
-    """Two-file replay for the TTL tests: user 1 goes quiet after
+    """Two-file replay for the TTL test: user 1 goes quiet after
     batch 1; batch 2 advances the watermark past user 1's deadline
     (last event + 1 h TTL) but not user 2's. Nothing sits at epoch 0 —
     the initial watermark is 0 and rows at/below it are dropped as
@@ -331,189 +330,26 @@ def _write_ttl_fixture(tmp_path):
     _write("f2.parquet", [(4 * h, 2, 4.0)], now - 30)
 
 
-def _ttl_stream(spark, tmp_path):
-    return (
+def test_ttl_state_evicts_quiet_tracks(spark, tmp_path):
+    """Event-time TTL lifecycle (the reference's 180 s staleness done
+    engine-side): exactly the quiet track — user 1, 2 events, last at
+    hour 1.5 — is evicted once the watermark passes its last event +
+    TTL."""
+    _write_ttl_fixture(tmp_path)
+    stream = (
         spark.readStream.schema("ts timestamp, user_id long, value double")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(tmp_path))
     )
-
-
-#: the only track the TTL replay must close: user 1, 2 events, hour 1.5
-_TTL_EXPECTED = [(1, 2, "1970-01-01T01:30:00")]
-
-
-def _closed_tracks(result):
-    return sorted(
+    result = runners.drain(
+        runners.track_ttl_state_stream(stream, ttl_seconds=3600),
+        output_mode="append",
+    )
+    closed = sorted(
         (r["user_id"], r["n_events"], r["last_ts"].isoformat())
         for r in result.collect()
     )
-
-
-def test_ttl_state_evicts_quiet_tracks(spark, tmp_path):
-    """Event-time TTL lifecycle (the reference's 180 s staleness done
-    engine-side): exactly the quiet track is evicted once the
-    watermark passes its last event + TTL."""
-    _write_ttl_fixture(tmp_path)
-    result = runners.drain(
-        runners.track_ttl_state_stream(
-            _ttl_stream(spark, tmp_path), ttl_seconds=3600
-        ),
-        output_mode="append",
-    )
-    assert _closed_tracks(result) == _TTL_EXPECTED
-
-
-def test_ttl_transform_with_state_parity(spark, tmp_path):
-    """Same TTL semantics on the current API
-    (transformWithStateInPandas + event-time timers, RocksDB-backed).
-    Its Python worker needs google.protobuf, which this container
-    doesn't ship — skips there, runs wherever protobuf exists."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas worker requires protobuf",
-    )
-    from etl_wlg_metlink_spark.session import conf_override
-
-    _write_ttl_fixture(tmp_path)
-    with conf_override(
-        spark,
-        {
-            "spark.sql.streaming.stateStore.providerClass":
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-        },
-    ):
-        result = runners.drain(
-            runners.track_ttl_transform_with_state(
-                _ttl_stream(spark, tmp_path), ttl_seconds=3600
-            ),
-            output_mode="append",
-        )
-        closed = _closed_tracks(result)
-    assert closed == _TTL_EXPECTED
-
-
-def test_poll_reader_http_mode_cache_replay_and_eviction(monkeypatch):
-    """Live-HTTP mode driven through a monkeypatched fetch: each
-    read() is one GET; readBetweenOffsets of uncommitted polls is
-    served from the in-process cache (zero extra GETs — replaying a
-    network poll must not re-poll); commit() evicts finished polls so
-    a resident poller holds O(in-flight) state; and any offset that
-    carries the poll index is accepted (replay is cache/positional)."""
-    from etl_wlg_metlink_spark.sources import gtfs
-    from etl_wlg_metlink_spark.sources.poll_source import _PollReader
-
-    calls: list[tuple[str, str]] = []
-
-    def fake_fetch(url: str, headers: dict) -> str:
-        calls.append((url, headers["x-api-key"]))
-        return json.dumps({"poll": len(calls)})
-
-    monkeypatch.setattr(gtfs, "_urllib_fetch", fake_fetch)
-    reader = _PollReader({"url": "http://unit.test/api", "api_key": "k1"})
-
-    start = reader.initialOffset()
-    rows1, off1 = reader.read(start)
-    rows2, off2 = reader.read(off1)
-    assert [r[2] for r in rows1] == ['{"poll": 1}']
-    assert [r[2] for r in rows2] == ['{"poll": 2}']
-    assert calls == [("http://unit.test/api", "k1")] * 2
-
-    # replay before commit: exact same rows, straight from cache
-    replay = list(reader.readBetweenOffsets(start, off2))
-    assert [r[2] for r in replay] == ['{"poll": 1}', '{"poll": 2}']
-    assert len(calls) == 2, "replay of cached polls must not re-fetch"
-
-    # legacy positional offset (index>0, no 'last') is fine in HTTP mode
-    _, off_legacy = reader.read({"index": 2})
-    assert off_legacy["index"] == 3 and len(calls) == 3
-
-    # commit evicts everything below the committed index
-    reader.commit(off2)
-    assert set(reader._cache) == {2}, "committed polls must leave the cache"
-
-
-def test_metlink_poll_live_http_stream(spark):
-    """The live-HTTP poll mode end-to-end through the DataSource
-    against a real (localhost) HTTP endpoint: N micro-batches = N
-    GETs through the genuine urllib fetch path, each envelope
-    exploded into its entities with the right poll_id — the resident
-    form of task.ts:150-167. A localhost server rather than a
-    monkeypatch because the DataSource reader runs in a separate
-    Python worker process, out of monkeypatch's reach — which makes
-    this the one test that exercises the real fetch stack."""
-    import http.server
-    import threading
-    import time as _time
-
-    from etl_wlg_metlink_spark.sources import poll_source
-
-    snap1 = json.loads(RAW_JSON)
-    snap2 = json.loads(RAW_JSON)
-    snap2["entity"] = snap2["entity"][1:]
-    envelopes = [json.dumps(snap1), json.dumps(snap2)]
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        n_calls = 0
-        api_keys: list = []
-
-        def do_GET(self):  # noqa: N802 — BaseHTTPRequestHandler contract
-            Handler.api_keys.append(self.headers.get("x-api-key"))
-            body = envelopes[
-                min(Handler.n_calls, len(envelopes) - 1)
-            ].encode("utf-8")
-            Handler.n_calls += 1
-            self.send_response(200)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def log_message(self, *args):  # silence per-request stderr noise
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    port = srv.server_address[1]
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    q = None
-    try:
-        stream = poll_source.metlink_poll_stream(
-            spark, url=f"http://127.0.0.1:{port}/api", api_key="k1"
-        )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("poll_live_http")
-            .outputMode("append")
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        deadline = _time.time() + 60
-        while _time.time() < deadline:
-            polls = {
-                r["poll_id"]
-                for r in spark.table("poll_live_http").select("poll_id").collect()
-            }
-            if {0, 1} <= polls:
-                break
-            _time.sleep(0.25)
-    finally:
-        if q is not None:
-            q.stop()
-            q.awaitTermination()
-        srv.shutdown()
-        srv.server_close()
-    got = spark.table("poll_live_http").collect()
-    by_poll = {}
-    for r in got:
-        by_poll.setdefault(r["poll_id"], []).append(r)
-    assert {0, 1} <= set(by_poll), f"expected >=2 polls, saw {sorted(by_poll)}"
-    assert len(by_poll[0]) == len(snap1["entity"])
-    assert len(by_poll[1]) == len(snap2["entity"])
-    assert Handler.n_calls >= 2, "each micro-batch must be one real GET"
-    assert set(Handler.api_keys) == {"k1"}, "x-api-key header must be sent"
+    assert closed == [(1, 2, "1970-01-01T01:30:00")]
 
 
 def test_s9_left_outer_emits_expired_nulls_withholds_recent(spark, tmp_path):
@@ -804,11 +640,21 @@ def test_s14_drift_psi_matches_batch_and_is_sound(spark, sf_dir):
         assert r["drift_level"] == want_level
 
 
-def test_s15_streaming_cms_matches_pure_python_and_batch(spark, sf_dir):
+def _left_behind(made_dirs):
+    """The dirs runners made that still exist, beyond the staged
+    replays it keeps for reuse."""
+    staged = set(runners._STAGED.values())
+    return [d for d in made_dirs if os.path.exists(d) and d not in staged]
+
+
+def test_s15_streaming_cms_matches_pure_python_and_batch(
+    spark, sf_dir, made_dirs
+):
     """The streamed-and-merged CMS must equal a from-scratch Python
     sketch built from the full events table (mergeability: per-batch
     partial grids summed == one global build), the one-sided guarantee
-    must hold, and the report must cover exactly the true top-K keys."""
+    must hold, the report must cover exactly the true top-K keys, and
+    the run must leave no ledger dir behind."""
     import hashlib
     from collections import Counter
 
@@ -825,6 +671,7 @@ def test_s15_streaming_cms_matches_pure_python_and_batch(spark, sf_dir):
         r["user_key"]: (r["true_count"], r["est_count"], r["overcount"])
         for r in runners.countmin_ingest_run(spark, sf_dir).collect()
     }
+    assert made_dirs and _left_behind(made_dirs) == []
 
     true = Counter()
     for r in (
@@ -855,10 +702,11 @@ def test_s15_streaming_cms_matches_pure_python_and_batch(spark, sf_dir):
         assert e >= c
 
 
-def test_s16_hll_stream_equals_batch_for_any_split(spark, sf_dir):
-    """The HLL register merge is associative + idempotent, so the
-    streamed sketch must equal l95's batch sketch EXACTLY regardless
-    of how the replay is split into micro-batches."""
+def test_s16_hll_stream_equals_batch_for_any_split(spark, sf_dir, made_dirs):
+    """The HLL register merge is associative, so the streamed sketch
+    must equal l95's batch sketch EXACTLY regardless of how the replay
+    is split into micro-batches, and no run may leave its ledger dir
+    behind."""
     from etl_wlg_metlink_spark.operators import llm_pipeline as lp
     from etl_wlg_metlink_spark.streaming import runners
 
@@ -873,3 +721,4 @@ def test_s16_hll_stream_equals_batch_for_any_split(spark, sf_dir):
             )
         )
         assert got == batch, f"n_batches={nb} diverged from batch"
+    assert made_dirs and _left_behind(made_dirs) == []

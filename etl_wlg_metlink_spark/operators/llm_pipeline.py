@@ -22,12 +22,11 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_wlg_metlink_spark.artifacts import fingerprint, get_or_mine
-from etl_wlg_metlink_spark.tables import load, load_spread, spread
+from etl_wlg_metlink_spark.tables import load, load_spread, pinned, spread
 
 #: Marker stopwords per language for the LID heuristic (l3). The
 #: synthetic corpus shares one vocabulary across langs, so accuracy is
@@ -403,26 +402,16 @@ def _minhash_verified_pairs(hashed: DataFrame, threshold: float = 0.8) -> DataFr
     doc_i < doc_j. See l6_minhash_near_dup for the full design
     discussion.
 
-    Cache discipline (VERDICT r5 item 2, revised after the r6
-    fresh-session measurement): the hash-array diamond is PERSISTED
-    (columnar InMemoryRelation — column-pruned and compressed, ~5×
-    cheaper to produce and re-read than a row-serialized
-    localCheckpoint of the same relation), the SMALL verified pair set
-    is eagerly localCheckpoint'd (lineage truncated — required by the
-    CC iteration, whose per-round plans would otherwise embed this
-    whole pipeline ~2^rounds times; also bounded by true near-dups, so
-    checkpointing it costs ~nothing), and the persist is RELEASED
-    before returning. No cache outlives the call."""
-    # The banded DAG is a diamond: `hashed` feeds the signature/band
-    # lineage AND both sides of the verify join. Persist (columnar,
-    # MEMORY_AND_DISK) so the md5-per-shingle stage runs once, not
-    # three times; the checkpoint of the small pair result below makes
-    # the unpersist safe before returning.
-    hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
-    pairs = _banded_lsh_pairs(hashed, UH_PARAMS, N_BANDS, threshold=threshold)
-    pairs = pairs.localCheckpoint(eager=True)
-    hashed.unpersist()
-    return pairs
+    `hashed` is pinned (tables.pinned): it feeds the signature/band
+    lineage AND both sides of the verify join, so the md5-per-shingle
+    stage runs once, not three times. The verified pair set is bounded
+    by true near-dups, and its checkpoint is also what the CC
+    iteration needs: its per-round plans would otherwise embed this
+    whole pipeline ~2^rounds times."""
+    return pinned(
+        hashed,
+        lambda h: _banded_lsh_pairs(h, UH_PARAMS, N_BANDS, threshold=threshold),
+    )
 
 
 def l6_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -515,23 +504,18 @@ def l7_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.transform(F.col("cg"), lambda x: _md5_int60(x) % MERSENNE_P).alias("hs"),
     )
-    # Same diamond-and-release shape as _minhash_verified_pairs: the
-    # 64-perm gram-hash relation persists (columnar cache) only for
-    # the duration of this call — the verified pair set is eagerly
-    # checkpointed (small: true near-dups only) and the cache released
-    # before returning (VERDICT r5 item 2; the r6 fresh-session bench
-    # showed checkpointing the INTERMEDIATE instead costs 2-10×).
-    hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
-    # corpus-relative cap: the count also warms the persisted diamond
-    # that the banding + both verify sides re-read (net-free action)
-    cap = max(
-        L7_BUCKET_CAP_MIN, math.ceil(L7_BUCKET_CAP_FRAC * hashed.count())
-    )
-    pairs = _banded_lsh_pairs(
-        hashed, UH_PARAMS_L7, N_BANDS_L7, threshold=0.5, max_bucket=cap
-    ).localCheckpoint(eager=True)
-    hashed.unpersist()
-    return pairs
+
+    # pinned like _minhash_verified_pairs' input: the banding and both
+    # verify sides re-read the 64-perm gram-hash relation; the pair
+    # set is bounded by true near-dups
+    def pairs(h: DataFrame) -> DataFrame:
+        # corpus-relative cap: the count also warms the pinned relation
+        cap = max(L7_BUCKET_CAP_MIN, math.ceil(L7_BUCKET_CAP_FRAC * h.count()))
+        return _banded_lsh_pairs(
+            h, UH_PARAMS_L7, N_BANDS_L7, threshold=0.5, max_bucket=cap
+        )
+
+    return pinned(hashed, pairs)
 
 
 SIMHASH_BITS = 32
@@ -2035,38 +2019,32 @@ def l23_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.select(
         "doc_id", "lang", _words(F.col("text")).alias("ws")
     ).select("doc_id", "lang", F.explode(_shingles_ws(F.col("ws"))).alias("g"))
-    # the gram explode feeds both the benchmark-set build and the train
-    # probe — persist (columnar) so the shingle pass runs once, not
-    # twice; released below after the tiny rollup is checkpointed
-    grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
     is_bench = F.col("doc_id") % L23_BENCH_MOD == 0
-    bench_grams = grams.where(is_bench).select("g").distinct()
-    contaminated = (
-        grams.where(~is_bench)
-        .join(F.broadcast(bench_grams), "g", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
     train = docs.where(~is_bench).select("doc_id", "lang")
-    result = (
-        train.join(contaminated, "doc_id", "left")
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_train"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_contaminated"),
-            F.round(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                / F.count("*"),
-                4,
-            ).alias("contamination_rate"),
+
+    # pinned: the gram explode feeds both the benchmark-set build and
+    # the train probe; the rollup is #langs rows
+    def rollup(grams: DataFrame) -> DataFrame:
+        bench_grams = grams.where(is_bench).select("g").distinct()
+        contaminated = (
+            grams.where(~is_bench)
+            .join(F.broadcast(bench_grams), "g", "left_semi")
+            .select("doc_id")
+            .distinct()
+            .withColumn("hit", F.lit(1))
         )
-    )
-    # rollup is #langs rows — checkpoint it eagerly so the gram cache
-    # can be released before returning (no pinned cache survives)
-    result = result.localCheckpoint(eager=True)
-    grams.unpersist()
-    return result
+        hit = F.coalesce(F.col("hit"), F.lit(0))
+        return (
+            train.join(contaminated, "doc_id", "left")
+            .groupBy("lang")
+            .agg(
+                F.count("*").alias("n_train"),
+                F.sum(hit).alias("n_contaminated"),
+                F.round(F.sum(hit) / F.count("*"), 4).alias("contamination_rate"),
+            )
+        )
+
+    return pinned(grams, rollup)
 
 
 def l24_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3419,6 +3397,20 @@ def l55_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 L56_K1, L56_B, L56_QMOD, L56_TOPK = 1.2, 0.75, 101, 5
 
 
+def _bm25_term(n_total: str):
+    """One posting's BM25 contribution, ROUND(4)ed: the BM25+ idf
+    ln(1 + (N - df + .5)/(df + .5)), N read from column ``n_total``,
+    times the (L56_K1, L56_B)-saturated tf over columns tf, df, dl and
+    avgdl. l56, l59 and l70 all score with it."""
+    idf = F.log(
+        F.lit(1.0) + (F.col(n_total) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    )
+    tf_part = (F.col("tf") * (L56_K1 + 1)) / (
+        F.col("tf") + L56_K1 * (1 - L56_B + L56_B * F.col("dl") / F.col("avgdl"))
+    )
+    return F.round(idf * tf_part, 4)
+
+
 def l56_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 retrieval scoring — the lexical half of every RAG /
     retrieval-augmented pipeline (embeddings recall candidates, BM25
@@ -3437,9 +3429,8 @@ def l56_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE corpus explode builds the (doc, word, tf)
     postings; document length, document frequency, the query-term
     relation AND the corpus scalars all DERIVE from it (dl = Σtf per
-    doc — no second explode), so the postings relation is a persisted
-    diamond (columnar cache, released after the bounded top-K result
-    is eagerly checkpointed — the l6/l7 cache discipline). The bounded
+    doc — no second explode), so the postings relation is pinned
+    (tables.pinned) under the bounded top-K result. The bounded
     query-term relation broadcasts into the postings join (corpus
     postings never shuffle for it); scalars ride a 1-row broadcast
     cross join; top-K per query windows only the CANDIDATE set (docs
@@ -3450,52 +3441,43 @@ def l56_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(_words(F.col("text"))).alias("w"))
     tf = toks.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
-    tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    dfreq = tf.groupBy("w").agg(F.count("*").alias("df"))
-    scalars = dl.agg(
-        F.count("*").alias("n_docs_total"), F.avg("dl").alias("avgdl")
-    )
-    # (doc_id, w) pairs in tf are distinct by construction
-    qterms = tf.where(F.col("doc_id") % L56_QMOD == 7).select(
-        F.col("doc_id").alias("query_id"), "w"
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs_total") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf_part = (F.col("tf") * (L56_K1 + 1)) / (
-        F.col("tf")
-        + L56_K1
-        * (1 - L56_B + L56_B * F.col("dl") / F.col("avgdl"))
-    )
-    contrib = (
-        F.broadcast(qterms)
-        .join(tf, "w")
-        .where(F.col("doc_id") != F.col("query_id"))
-        .join(dfreq, "w")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(scalars))
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(idf * tf_part, 4).alias("term_score"),
+
+    def top_k(tf: DataFrame) -> DataFrame:
+        dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+        dfreq = tf.groupBy("w").agg(F.count("*").alias("df"))
+        scalars = dl.agg(
+            F.count("*").alias("n_docs_total"), F.avg("dl").alias("avgdl")
         )
-    )
-    scored = contrib.groupBy("query_id", "doc_id").agg(
-        F.round(F.sum("term_score"), 4).alias("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id")
-    )
-    result = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= L56_TOPK)
-        .select("query_id", "rnk", "doc_id", "score")
-        .localCheckpoint(eager=True)  # bounded: queries × K rows
-    )
-    tf.unpersist()
-    return result
+        # (doc_id, w) pairs in tf are distinct by construction
+        qterms = tf.where(F.col("doc_id") % L56_QMOD == 7).select(
+            F.col("doc_id").alias("query_id"), "w"
+        )
+        contrib = (
+            F.broadcast(qterms)
+            .join(tf, "w")
+            .where(F.col("doc_id") != F.col("query_id"))
+            .join(dfreq, "w")
+            .join(dl, "doc_id")
+            .crossJoin(F.broadcast(scalars))
+            .select(
+                "query_id",
+                "doc_id",
+                _bm25_term("n_docs_total").alias("term_score"),
+            )
+        )
+        scored = contrib.groupBy("query_id", "doc_id").agg(
+            F.round(F.sum("term_score"), 4).alias("score")
+        )
+        w = Window.partitionBy("query_id").orderBy(
+            F.col("score").desc(), F.col("doc_id")
+        )
+        return (
+            scored.withColumn("rnk", F.row_number().over(w))
+            .where(F.col("rnk") <= L56_TOPK)
+            .select("query_id", "rnk", "doc_id", "score")
+        )
+
+    return pinned(tf, top_k)  # bounded: queries × K rows
 
 
 def _bm25_ranked_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5685,13 +5667,13 @@ def l59_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     order on the ROUNDED score with doc_id tie-break, and the fused
     key is a pure function of the two integer ranks.
 
-    Scale shape: everything derives from one corpus explode — tf is
-    the persisted diamond feeding dl/df/norms/scalars/query terms (the
-    l56 lineage plus one norm aggregation); the bounded query-term
-    relation broadcasts into the postings join; both rank windows
-    partition by query over the CANDIDATE set only; the fused top-K is
-    queries x K rows, eagerly checkpointed so the diamond cache is
-    released before return. No corpus respread: the r17 paired probe
+    Scale shape: everything derives from one corpus explode — the
+    weighted postings are pinned (tables.pinned) under everything that
+    feeds dl/norms/query terms (the l56 lineage plus one norm
+    aggregation); the bounded query-term relation broadcasts into the
+    postings join; both rank windows partition by query over the
+    CANDIDATE set only; the fused top-K is queries x K rows. No corpus
+    respread: the r17 paired probe
     measured it 1.29x slower (same diamond-reuse break as l56)."""
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(_words(F.col("text"))).alias("w"))
@@ -5700,14 +5682,14 @@ def l59_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalars = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).agg(
         F.count("*").alias("n_docs_total"), F.avg("dl").alias("avgdl")
     )
-    # ONE persisted diamond carrying every per-posting quantity both
+    # ONE pinned relation carrying every per-posting quantity both
     # scorers need (tf, df, the tf-idf weight) — norms, query terms,
     # dl and the contribution join all derive from it, so the corpus
     # explode and the (doc,w) + (w) aggregations run exactly once
     # (persisting bare tf instead re-runs the dfreq agg and its join
     # for every consumer — measured 5.4 s vs 4.0 s at sf0.1).
-    # tf-idf weight per posting (ln(N/df) idf; BM25 uses its own +0.5
-    # smoothed idf below).
+    # tf-idf weight per posting (ln(N/df) idf; _bm25_term has its own
+    # +0.5-smoothed idf).
     idf2 = F.log(F.col("n_docs_total") / F.col("df"))
     wgt = F.round(F.col("tf") * idf2, 4)
     weighted = (
@@ -5723,90 +5705,82 @@ def l59_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
             wgt.alias("wgt"),
         )
     )
-    weighted = weighted.persist(StorageLevel.MEMORY_AND_DISK)
-    dl = weighted.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    norms = weighted.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.round(F.col("wgt") * F.col("wgt"), 4))).alias("norm")
-    )
-    qterms = weighted.where(F.col("doc_id") % L56_QMOD == 7).select(
-        F.col("doc_id").alias("query_id"),
-        "w",
-        F.col("wgt").alias("q_wgt"),
-    )
-    idf_bm25 = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs_total") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf_part = (F.col("tf") * (L56_K1 + 1)) / (
-        F.col("tf")
-        + L56_K1 * (1 - L56_B + L56_B * F.col("dl") / F.col("avgdl"))
-    )
-    contrib = (
-        F.broadcast(qterms)
-        .join(weighted, "w")
-        .where(F.col("doc_id") != F.col("query_id"))
-        .join(dl, "doc_id")
-        .select(
+
+    def top_k(weighted: DataFrame) -> DataFrame:
+        dl = weighted.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+        norms = weighted.groupBy("doc_id").agg(
+            F.sqrt(F.sum(F.round(F.col("wgt") * F.col("wgt"), 4))).alias("norm")
+        )
+        qterms = weighted.where(F.col("doc_id") % L56_QMOD == 7).select(
+            F.col("doc_id").alias("query_id"),
+            "w",
+            F.col("wgt").alias("q_wgt"),
+        )
+        contrib = (
+            F.broadcast(qterms)
+            .join(weighted, "w")
+            .where(F.col("doc_id") != F.col("query_id"))
+            .join(dl, "doc_id")
+            .select(
+                "query_id",
+                "doc_id",
+                _bm25_term("n_docs_total").alias("bm25_term"),
+                F.round(F.col("q_wgt") * F.col("wgt"), 4).alias("dot_term"),
+            )
+        )
+        scored = contrib.groupBy("query_id", "doc_id").agg(
+            F.round(F.sum("bm25_term"), 4).alias("bm25"),
+            F.round(F.sum("dot_term"), 4).alias("dot"),
+        )
+        q_norms = F.broadcast(
+            norms.withColumnRenamed("doc_id", "query_id").withColumnRenamed(
+                "norm", "q_norm"
+            ).join(qterms.select("query_id").distinct(), "query_id")
+        )
+        both = (
+            scored.join(norms, "doc_id")
+            .join(q_norms, "query_id")
+            .select(
+                "query_id",
+                "doc_id",
+                "bm25",
+                F.round(F.col("dot") / (F.col("norm") * F.col("q_norm")), 6).alias(
+                    "cos"
+                ),
+            )
+        )
+        w_b = Window.partitionBy("query_id").orderBy(
+            F.col("bm25").desc(), F.col("doc_id")
+        )
+        w_c = Window.partitionBy("query_id").orderBy(
+            F.col("cos").desc(), F.col("doc_id")
+        )
+        fused = both.select(
             "query_id",
             "doc_id",
-            F.round(idf_bm25 * tf_part, 4).alias("bm25_term"),
-            F.round(F.col("q_wgt") * F.col("wgt"), 4).alias("dot_term"),
-        )
-    )
-    scored = contrib.groupBy("query_id", "doc_id").agg(
-        F.round(F.sum("bm25_term"), 4).alias("bm25"),
-        F.round(F.sum("dot_term"), 4).alias("dot"),
-    )
-    q_norms = F.broadcast(
-        norms.withColumnRenamed("doc_id", "query_id").withColumnRenamed(
-            "norm", "q_norm"
-        ).join(qterms.select("query_id").distinct(), "query_id")
-    )
-    both = (
-        scored.join(norms, "doc_id")
-        .join(q_norms, "query_id")
-        .select(
+            F.row_number().over(w_b).alias("rank_bm25"),
+            F.row_number().over(w_c).alias("rank_cos"),
+        ).select(
             "query_id",
             "doc_id",
-            "bm25",
-            F.round(F.col("dot") / (F.col("norm") * F.col("q_norm")), 6).alias(
-                "cos"
-            ),
+            "rank_bm25",
+            "rank_cos",
+            F.round(
+                1.0 / (L59_RRF_K + F.col("rank_bm25"))
+                + 1.0 / (L59_RRF_K + F.col("rank_cos")),
+                6,
+            ).alias("rrf"),
         )
-    )
-    w_b = Window.partitionBy("query_id").orderBy(
-        F.col("bm25").desc(), F.col("doc_id")
-    )
-    w_c = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("doc_id")
-    )
-    fused = both.select(
-        "query_id",
-        "doc_id",
-        F.row_number().over(w_b).alias("rank_bm25"),
-        F.row_number().over(w_c).alias("rank_cos"),
-    ).select(
-        "query_id",
-        "doc_id",
-        "rank_bm25",
-        "rank_cos",
-        F.round(
-            1.0 / (L59_RRF_K + F.col("rank_bm25"))
-            + 1.0 / (L59_RRF_K + F.col("rank_cos")),
-            6,
-        ).alias("rrf"),
-    )
-    w_f = Window.partitionBy("query_id").orderBy(
-        F.col("rrf").desc(), F.col("doc_id")
-    )
-    result = (
-        fused.withColumn("rnk", F.row_number().over(w_f))
-        .where(F.col("rnk") <= L59_TOPK)
-        .select("query_id", "rnk", "doc_id", "rank_bm25", "rank_cos", "rrf")
-        .localCheckpoint(eager=True)  # bounded: queries x K rows
-    )
-    weighted.unpersist()
-    return result
+        w_f = Window.partitionBy("query_id").orderBy(
+            F.col("rrf").desc(), F.col("doc_id")
+        )
+        return (
+            fused.withColumn("rnk", F.row_number().over(w_f))
+            .where(F.col("rnk") <= L59_TOPK)
+            .select("query_id", "rnk", "doc_id", "rank_bm25", "rank_cos", "rrf")
+        )
+
+    return pinned(weighted, top_k)  # bounded: queries x K rows
 
 
 #: l60 sample size; weights are n_chars (longer docs proportionally
@@ -5900,76 +5874,79 @@ def l61_domain_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    hashed = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    sig = hashed.groupBy("source").agg(
-        *[
-            F.min(
-                _md5_int60(F.concat(F.lit(f"{s}|"), F.col("s")))
-                % MERSENNE_P
-            ).alias(f"mh{s}")
-            for s in range(N_MINHASH)
-        ],
-        F.count("*").alias("n_shingles"),
-    )
-    a, b = sig.alias("a"), sig.alias("b")
-    est = F.round(
-        sum(
-            F.when(
-                F.col(f"a.mh{s}") == F.col(f"b.mh{s}"), 1
-            ).otherwise(0)
-            for s in range(N_MINHASH)
+
+    # pinned: the signature agg and both sides of the exact
+    # intersection self-join read the distinct (source, shingle)
+    # relation; the matrix is n_sources choose 2 rows
+    def matrix(hashed: DataFrame) -> DataFrame:
+        sig = hashed.groupBy("source").agg(
+            *[
+                F.min(
+                    _md5_int60(F.concat(F.lit(f"{s}|"), F.col("s")))
+                    % MERSENNE_P
+                ).alias(f"mh{s}")
+                for s in range(N_MINHASH)
+            ],
+            F.count("*").alias("n_shingles"),
         )
-        / float(N_MINHASH),
-        4,
-    )
-    pairs = (
-        a.join(b, F.col("a.source") < F.col("b.source"))
-        .select(
-            F.col("a.source").alias("src_a"),
-            F.col("b.source").alias("src_b"),
-            est.alias("est_jaccard"),
-            F.col("a.n_shingles").alias("n_a"),
-            F.col("b.n_shingles").alias("n_b"),
+        a, b = sig.alias("a"), sig.alias("b")
+        est = F.round(
+            sum(
+                F.when(
+                    F.col(f"a.mh{s}") == F.col(f"b.mh{s}"), 1
+                ).otherwise(0)
+                for s in range(N_MINHASH)
+            )
+            / float(N_MINHASH),
+            4,
         )
-    )
-    inter = (
-        hashed.select("source", "s")
-        .alias("x")
-        .join(
-            hashed.select("source", "s").alias("y"),
-            (F.col("x.s") == F.col("y.s"))
-            & (F.col("x.source") < F.col("y.source")),
+        pairs = (
+            a.join(b, F.col("a.source") < F.col("b.source"))
+            .select(
+                F.col("a.source").alias("src_a"),
+                F.col("b.source").alias("src_b"),
+                est.alias("est_jaccard"),
+                F.col("a.n_shingles").alias("n_a"),
+                F.col("b.n_shingles").alias("n_b"),
+            )
         )
-        .groupBy(
-            F.col("x.source").alias("src_a"), F.col("y.source").alias("src_b")
+        inter = (
+            hashed.select("source", "s")
+            .alias("x")
+            .join(
+                hashed.select("source", "s").alias("y"),
+                (F.col("x.s") == F.col("y.s"))
+                & (F.col("x.source") < F.col("y.source")),
+            )
+            .groupBy(
+                F.col("x.source").alias("src_a"), F.col("y.source").alias("src_b")
+            )
+            .agg(F.count("*").alias("n_inter"))
         )
-        .agg(F.count("*").alias("n_inter"))
-    )
-    result = (
-        pairs.join(inter, ["src_a", "src_b"], "left")
-        .select(
-            "src_a",
-            "src_b",
-            "est_jaccard",
-            F.coalesce("n_inter", F.lit(0)).alias("n_inter"),
-            (F.col("n_a") + F.col("n_b") - F.coalesce("n_inter", F.lit(0))).alias(
-                "n_union"
-            ),
+        return (
+            pairs.join(inter, ["src_a", "src_b"], "left")
+            .select(
+                "src_a",
+                "src_b",
+                "est_jaccard",
+                F.coalesce("n_inter", F.lit(0)).alias("n_inter"),
+                (F.col("n_a") + F.col("n_b") - F.coalesce("n_inter", F.lit(0))).alias(
+                    "n_union"
+                ),
+            )
+            .select(
+                "src_a",
+                "src_b",
+                "est_jaccard",
+                F.round(F.col("n_inter") / F.col("n_union"), 6).alias(
+                    "exact_jaccard"
+                ),
+                "n_inter",
+                "n_union",
+            )
         )
-        .select(
-            "src_a",
-            "src_b",
-            "est_jaccard",
-            F.round(F.col("n_inter") / F.col("n_union"), 6).alias(
-                "exact_jaccard"
-            ),
-            "n_inter",
-            "n_union",
-        )
-        .localCheckpoint(eager=True)  # bounded: n_sources choose 2 rows
-    )
-    hashed.unpersist()
-    return result
+
+    return pinned(sh, matrix)
 
 
 def l62_ngram_memorization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6322,11 +6299,10 @@ def l64_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     table stays 1024 rows no matter the corpus — that boundedness is
     the whole point of hashed features (vs an unbounded vocabulary
     LM, the l20 head/tail problem DSIR sidesteps by construction).
-    The hashed feature stream is a DIAMOND — the distribution agg and
-    the importance join both consume it — so it persists for the
-    call (l7's diamond-and-release: one md5 per gram instead of two;
-    r11, measured ~40% of the lane at sf1), the small top-N result is
-    eagerly checkpointed, and the cache is released before return."""
+    The hashed feature stream is pinned (tables.pinned): the
+    distribution agg and the importance join both consume it, so each
+    gram is md5'd once instead of twice (measured ~40% of the lane at
+    sf1); the top-N result is L64_TOPN rows."""
     docs = load_spread(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id", "lang", "source", _words(F.col("text")).alias("ws")
@@ -6354,55 +6330,55 @@ def l64_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id", "lang", (_md5_int60(F.col("g")) % L64_BUCKETS).alias("b")
     )
-    grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
-    # BOTH distributions in one conditional-sum pass over the feature
-    # stream (separate tgt/raw aggregations would each re-explode the
-    # corpus — 3 corpus passes total instead of 2; plan-audited)
-    counts = grams.groupBy("b").agg(
-        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("ct"),
-        F.sum(F.when(F.col("lang") != "en", 1).otherwise(0)).alias("cr"),
-    )
-    tots = counts.agg(
-        F.sum("ct").alias("t_total"), F.sum("cr").alias("r_total")
-    )
-    # dense bucket spine so absent buckets still carry their smoothed
-    # mass — 1024 rows, broadcast everywhere
-    spine = spark.range(L64_BUCKETS).select(F.col("id").alias("b"))
-    llr = (
-        spine.join(counts, "b", "left")
-        .crossJoin(F.broadcast(tots))
-        .select(
-            "b",
-            (
-                F.log(
-                    (F.coalesce("ct", F.lit(0)) + 1)
-                    / (F.col("t_total") + L64_BUCKETS)
-                )
-                - F.log(
-                    (F.coalesce("cr", F.lit(0)) + 1)
-                    / (F.col("r_total") + L64_BUCKETS)
-                )
-            ).alias("llr"),
+
+    def top_n(grams: DataFrame) -> DataFrame:
+        # BOTH distributions in one conditional-sum pass over the feature
+        # stream (separate tgt/raw aggregations would each re-explode the
+        # corpus — 3 corpus passes total instead of 2; plan-audited)
+        counts = grams.groupBy("b").agg(
+            F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("ct"),
+            F.sum(F.when(F.col("lang") != "en", 1).otherwise(0)).alias("cr"),
         )
-    )
-    scored = (
-        grams.where(F.col("lang") != "en")
-        .join(F.broadcast(llr), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_features"),
-            F.round(F.avg("llr"), 4).alias("importance"),
+        tots = counts.agg(
+            F.sum("ct").alias("t_total"), F.sum("cr").alias("r_total")
         )
-    )
-    out = (
-        scored.join(docs.select("doc_id", "lang", "source"), "doc_id")
-        .select("doc_id", "lang", "source", "n_features", "importance")
-        .orderBy(F.col("importance").desc(), "doc_id")
-        .limit(L64_TOPN)
-        .localCheckpoint(eager=True)  # bounded: L64_TOPN rows
-    )
-    grams.unpersist()
-    return out
+        # dense bucket spine so absent buckets still carry their smoothed
+        # mass — 1024 rows, broadcast everywhere
+        spine = spark.range(L64_BUCKETS).select(F.col("id").alias("b"))
+        llr = (
+            spine.join(counts, "b", "left")
+            .crossJoin(F.broadcast(tots))
+            .select(
+                "b",
+                (
+                    F.log(
+                        (F.coalesce("ct", F.lit(0)) + 1)
+                        / (F.col("t_total") + L64_BUCKETS)
+                    )
+                    - F.log(
+                        (F.coalesce("cr", F.lit(0)) + 1)
+                        / (F.col("r_total") + L64_BUCKETS)
+                    )
+                ).alias("llr"),
+            )
+        )
+        scored = (
+            grams.where(F.col("lang") != "en")
+            .join(F.broadcast(llr), "b")
+            .groupBy("doc_id")
+            .agg(
+                F.count("*").alias("n_features"),
+                F.round(F.avg("llr"), 4).alias("importance"),
+            )
+        )
+        return (
+            scored.join(docs.select("doc_id", "lang", "source"), "doc_id")
+            .select("doc_id", "lang", "source", "n_features", "importance")
+            .orderBy(F.col("importance").desc(), "doc_id")
+            .limit(L64_TOPN)
+        )
+
+    return pinned(grams, top_n)
 
 
 QUERIES["l64_dsir_importance"] = l64_dsir_importance
@@ -7006,8 +6982,8 @@ def l70_rag_chunk_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     query-term relation broadcasts into the postings join so the
     chunk index never shuffles for scoring; per-query top-K windows
     only the candidate set. One corpus explode end-to-end — the
-    chunk relation is the persisted diamond (released after the
-    bounded result checkpoint). Corpus scan respread for the chunk
+    chunk postings relation is pinned (tables.pinned) under the
+    bounded result. Corpus scan respread for the chunk
     explode map stage exactly as l56."""
     docs = load_spread(spark, sf_dir, "documents")
     base = docs.select("doc_id", _words(F.col("text")).alias("ws"))
@@ -7041,58 +7017,50 @@ def l70_rag_chunk_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "chunk_idx", "chunk_start", "w")
         .agg(F.count("*").alias("tf"))
     )
-    ctf = ctf.persist(StorageLevel.MEMORY_AND_DISK)
-    cdl = ctf.groupBy("doc_id", "chunk_idx").agg(F.sum("tf").alias("dl"))
-    cdf = ctf.groupBy("w").agg(
-        F.count("*").alias("df")
-    )  # (doc,chunk,w) distinct by construction
-    scalars = cdl.agg(
-        F.count("*").alias("n_chunks_total"), F.avg("dl").alias("avgdl")
-    )
-    qterms = (
-        ctf.where(F.col("doc_id") % L56_QMOD == 7)
-        .select(F.col("doc_id").alias("query_id"), "w")
-        .distinct()
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_chunks_total") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf_part = (F.col("tf") * (L56_K1 + 1)) / (
-        F.col("tf")
-        + L56_K1 * (1 - L56_B + L56_B * F.col("dl") / F.col("avgdl"))
-    )
-    contrib = (
-        F.broadcast(qterms)
-        .join(ctf, "w")
-        .where(F.col("doc_id") != F.col("query_id"))
-        .join(cdf, "w")
-        .join(cdl, ["doc_id", "chunk_idx"])
-        .crossJoin(F.broadcast(scalars))
-        .select(
-            "query_id",
-            "doc_id",
-            "chunk_idx",
-            "chunk_start",
-            F.round(idf * tf_part, 4).alias("term_score"),
+
+    def top_k(ctf: DataFrame) -> DataFrame:
+        cdl = ctf.groupBy("doc_id", "chunk_idx").agg(F.sum("tf").alias("dl"))
+        cdf = ctf.groupBy("w").agg(
+            F.count("*").alias("df")
+        )  # (doc,chunk,w) distinct by construction
+        scalars = cdl.agg(
+            F.count("*").alias("n_chunks_total"), F.avg("dl").alias("avgdl")
         )
-    )
-    scored = contrib.groupBy(
-        "query_id", "doc_id", "chunk_idx", "chunk_start"
-    ).agg(F.round(F.sum("term_score"), 4).alias("score"))
-    w_r = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), "doc_id", "chunk_idx"
-    )
-    result = (
-        scored.withColumn("rnk", F.row_number().over(w_r))
-        .where(F.col("rnk") <= L70_TOPK)
-        .select(
-            "query_id", "rnk", "doc_id", "chunk_idx", "chunk_start", "score"
+        qterms = (
+            ctf.where(F.col("doc_id") % L56_QMOD == 7)
+            .select(F.col("doc_id").alias("query_id"), "w")
+            .distinct()
         )
-        .localCheckpoint(eager=True)  # bounded: queries x K rows
-    )
-    ctf.unpersist()
-    return result
+        contrib = (
+            F.broadcast(qterms)
+            .join(ctf, "w")
+            .where(F.col("doc_id") != F.col("query_id"))
+            .join(cdf, "w")
+            .join(cdl, ["doc_id", "chunk_idx"])
+            .crossJoin(F.broadcast(scalars))
+            .select(
+                "query_id",
+                "doc_id",
+                "chunk_idx",
+                "chunk_start",
+                _bm25_term("n_chunks_total").alias("term_score"),
+            )
+        )
+        scored = contrib.groupBy(
+            "query_id", "doc_id", "chunk_idx", "chunk_start"
+        ).agg(F.round(F.sum("term_score"), 4).alias("score"))
+        w_r = Window.partitionBy("query_id").orderBy(
+            F.col("score").desc(), "doc_id", "chunk_idx"
+        )
+        return (
+            scored.withColumn("rnk", F.row_number().over(w_r))
+            .where(F.col("rnk") <= L70_TOPK)
+            .select(
+                "query_id", "rnk", "doc_id", "chunk_idx", "chunk_start", "score"
+            )
+        )
+
+    return pinned(ctf, top_k)  # bounded: queries x K rows
 
 
 QUERIES["l70_rag_chunk_retrieval"] = l70_rag_chunk_retrieval
@@ -7347,108 +7315,110 @@ def l72_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop-shingle cap max(L72_MAX_DF, ⌈L72_DF_FRAC·N⌉) — no all-pairs,
     no skew, and a scale-stable stop fraction (see the L72_DF_FRAC
     note for the exact recall/cost statement). Verify is l6's hash-set intersect on the unioned,
-    distinct candidate set; the persisted hash diamond is released
-    after the bounded checkpoint."""
+    distinct candidate set. The hash relation is pinned
+    (tables.pinned): the banding, the probes, the postings and both
+    verify sides read it; the result is bounded by verified
+    near-dups."""
     # the shared fingerprint index (see _hashed_shingles_artifact) —
     # byte-identical to building it here, minus the per-consumer
     # shingle+md5 pass; the lane's MEASURED operators (containment
     # probes, postings cap, verify) all run for real below
     hashed = _hashed_shingles_artifact(spark, sf_dir)
-    hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
-    cand_sym = _banded_candidates(hashed, UH_PARAMS, N_BANDS)
 
-    # --- scheme 2: asymmetric containment probes ---------------------
-    hn = hashed.select(
-        "doc_id", F.array_distinct("hs").alias("hset")
-    ).where(F.size("hset") > 0)
-    # pre-project the per-permutation minima as plain attributes so the
-    # argmin filter's lambda doesn't re-evaluate array_min per element
-    # (the HOF-CSE trap documented on _shingles_ws)
-    minima = hn.select(
-        "doc_id",
-        "hset",
-        *[
-            F.array_min(
-                F.transform(F.col("hset"), _uh_perm(a, b))
-            ).alias(f"m{s}")
+    def verified(hashed: DataFrame) -> DataFrame:
+        cand_sym = _banded_candidates(hashed, UH_PARAMS, N_BANDS)
+
+        # --- scheme 2: asymmetric containment probes ---------------------
+        hn = hashed.select(
+            "doc_id", F.array_distinct("hs").alias("hset")
+        ).where(F.size("hset") > 0)
+        # pre-project the per-permutation minima as plain attributes so the
+        # argmin filter's lambda doesn't re-evaluate array_min per element
+        # (the HOF-CSE trap documented on _shingles_ws)
+        minima = hn.select(
+            "doc_id",
+            "hset",
+            *[
+                F.array_min(
+                    F.transform(F.col("hset"), _uh_perm(a, b))
+                ).alias(f"m{s}")
+                for s, (a, b) in enumerate(UH_PARAMS)
+            ],
+        )
+        def _argmin_fn(a, b, s):
+            # closure factory: Spark derives HOF arity from the lambda
+            # signature, so defaults can't be used to bind loop variables
+            def f(x):
+                return _uh_perm(a, b)(x) == F.col(f"m{s}")
+
+            return f
+
+        argmins = [
+            F.get(F.filter(F.col("hset"), _argmin_fn(a, b, s)), 0)
             for s, (a, b) in enumerate(UH_PARAMS)
-        ],
-    )
-    def _argmin_fn(a, b, s):
-        # closure factory: Spark derives HOF arity from the lambda
-        # signature, so defaults can't be used to bind loop variables
-        def f(x):
-            return _uh_perm(a, b)(x) == F.col(f"m{s}")
-
-        return f
-
-    argmins = [
-        F.get(F.filter(F.col("hset"), _argmin_fn(a, b, s)), 0)
-        for s, (a, b) in enumerate(UH_PARAMS)
-    ]
-    probe = minima.select(
-        F.col("doc_id").alias("p_doc"),
-        F.size("hset").alias("p_n"),
-        F.explode(F.array_distinct(F.array(*argmins))).alias("h"),
-    ).where(F.col("h").isNotNull())
-    post = hn.select(
-        F.col("doc_id").alias("c_doc"),
-        F.size("hset").alias("c_n"),
-        F.explode("hset").alias("h"),
-    )
-    # corpus-relative stop-shingle cap (see L72_DF_FRAC note); the
-    # count re-reads the persisted hash diamond — cheap, and both
-    # engines compute the identical cap from the identical N
-    df_cap = max(L72_MAX_DF, math.ceil(L72_DF_FRAC * hn.count()))
-    rare = (
-        post.groupBy("h")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= df_cap)
-        .select("h")
-    )
-    cand_asym = (
-        probe.join(post.join(rare, "h"), "h")
-        .where(
-            (F.col("p_doc") != F.col("c_doc"))
-            & (F.col("c_n") >= L72_ASYM_RATIO * F.col("p_n"))
+        ]
+        probe = minima.select(
+            F.col("doc_id").alias("p_doc"),
+            F.size("hset").alias("p_n"),
+            F.explode(F.array_distinct(F.array(*argmins))).alias("h"),
+        ).where(F.col("h").isNotNull())
+        post = hn.select(
+            F.col("doc_id").alias("c_doc"),
+            F.size("hset").alias("c_n"),
+            F.explode("hset").alias("h"),
         )
-        .select(
-            F.least("p_doc", "c_doc").alias("doc_i"),
-            F.greatest("p_doc", "c_doc").alias("doc_j"),
+        # corpus-relative stop-shingle cap (see L72_DF_FRAC note); the
+        # count re-reads the pinned hash relation — cheap, and both
+        # engines compute the identical cap from the identical N
+        df_cap = max(L72_MAX_DF, math.ceil(L72_DF_FRAC * hn.count()))
+        rare = (
+            post.groupBy("h")
+            .agg(F.count("*").alias("df"))
+            .where(F.col("df") <= df_cap)
+            .select("h")
         )
-    )
-    cand = cand_sym.unionByName(cand_asym).distinct()
+        cand_asym = (
+            probe.join(post.join(rare, "h"), "h")
+            .where(
+                (F.col("p_doc") != F.col("c_doc"))
+                & (F.col("c_n") >= L72_ASYM_RATIO * F.col("p_n"))
+            )
+            .select(
+                F.least("p_doc", "c_doc").alias("doc_i"),
+                F.greatest("p_doc", "c_doc").alias("doc_j"),
+            )
+        )
+        cand = cand_sym.unionByName(cand_asym).distinct()
 
-    # --- exact verify on the unioned candidates ----------------------
-    hset = F.array_distinct(F.col("hs"))
-    si = hashed.select(F.col("doc_id").alias("doc_i"), hset.alias("sh_i"))
-    sj = hashed.select(F.col("doc_id").alias("doc_j"), hset.alias("sh_j"))
-    n_inter = F.size(F.array_intersect("sh_i", "sh_j"))
-    n_i, n_j = F.size("sh_i"), F.size("sh_j")
-    jac = F.round(n_inter / (n_i + n_j - n_inter), 4)
-    cont = F.round(n_inter / F.least(n_i, n_j), 4)
-    relation = (
-        F.when(F.col("jaccard") >= 0.95, "exact-dup")
-        .when(F.col("containment") >= 0.9, "subset")
-        .when(F.col("jaccard") >= 0.8, "near-dup")
-        .otherwise("partial-overlap")
-    )
-    result = (
-        cand.join(si, "doc_i")
-        .join(sj, "doc_j")
-        .select(
-            "doc_i",
-            "doc_j",
-            jac.alias("jaccard"),
-            cont.alias("containment"),
+        # --- exact verify on the unioned candidates ----------------------
+        hset = F.array_distinct(F.col("hs"))
+        si = hashed.select(F.col("doc_id").alias("doc_i"), hset.alias("sh_i"))
+        sj = hashed.select(F.col("doc_id").alias("doc_j"), hset.alias("sh_j"))
+        n_inter = F.size(F.array_intersect("sh_i", "sh_j"))
+        n_i, n_j = F.size("sh_i"), F.size("sh_j")
+        jac = F.round(n_inter / (n_i + n_j - n_inter), 4)
+        cont = F.round(n_inter / F.least(n_i, n_j), 4)
+        relation = (
+            F.when(F.col("jaccard") >= 0.95, "exact-dup")
+            .when(F.col("containment") >= 0.9, "subset")
+            .when(F.col("jaccard") >= 0.8, "near-dup")
+            .otherwise("partial-overlap")
         )
-        .where((F.col("jaccard") >= 0.5) | (F.col("containment") >= 0.9))
-        .select("doc_i", "doc_j", "jaccard", "containment",
-                relation.alias("relation"))
-        .localCheckpoint(eager=True)  # bounded: verified near-dups
-    )
-    hashed.unpersist()
-    return result
+        return (
+            cand.join(si, "doc_i")
+            .join(sj, "doc_j")
+            .select(
+                "doc_i",
+                "doc_j",
+                jac.alias("jaccard"),
+                cont.alias("containment"),
+            )
+            .where((F.col("jaccard") >= 0.5) | (F.col("containment") >= 0.9))
+            .select("doc_i", "doc_j", "jaccard", "containment",
+                    relation.alias("relation"))
+        )
+
+    return pinned(hashed, verified)
 
 
 QUERIES["l72_containment_dedup"] = l72_containment_dedup
@@ -7669,41 +7639,38 @@ def _l73_pairs(sig: DataFrame, n_docs: int) -> DataFrame:
         .where(F.col("bw2") <= cap)
         .select("doc_id", "band_id", "band_key", "jk2")
     )
-    # the self-join is a diamond over `narrow` (explode + two windows):
-    # persist it (columnar, skinny ≤ 8N rows) so the banding pipeline
-    # runs once, not once per join side — the l6/l7 diamond pattern;
-    # the eager checkpoint of the bounded pair result below makes the
-    # unpersist safe before returning
-    narrow = narrow.persist(StorageLevel.MEMORY_AND_DISK)
-    cand = (
-        narrow.alias("a")
-        .join(narrow.alias("b"), ["band_id", "band_key", "jk2"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_i"), F.col("b.doc_id").alias("doc_j")
+
+    # pinned: both self-join sides read `narrow` (explode + two
+    # windows, skinny ≤ 8N rows); the result is verified pairs only
+    def verified(narrow: DataFrame) -> DataFrame:
+        cand = (
+            narrow.alias("a")
+            .join(narrow.alias("b"), ["band_id", "band_key", "jk2"])
+            .where(F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(
+                F.col("a.doc_id").alias("doc_i"), F.col("b.doc_id").alias("doc_j")
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    bi = sig.select(F.col("doc_id").alias("doc_i"), F.col("bands").alias("bands_i"))
-    bj = sig.select(F.col("doc_id").alias("doc_j"), F.col("bands").alias("bands_j"))
-    hamming = F.aggregate(
-        F.zip_with(
-            "bands_i",
-            "bands_j",
-            lambda x, y: F.bit_count(x.bitwiseXOR(y)),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    result = (
-        cand.join(bi, "doc_i")
-        .join(bj, "doc_j")
-        .select("doc_i", "doc_j", hamming.cast("int").alias("hamming"))
-        .where(F.col("hamming") <= L73_HAMMING_MAX)
-        .localCheckpoint(eager=True)  # bounded: verified pairs only
-    )
-    narrow.unpersist()
-    return result
+        bi = sig.select(F.col("doc_id").alias("doc_i"), F.col("bands").alias("bands_i"))
+        bj = sig.select(F.col("doc_id").alias("doc_j"), F.col("bands").alias("bands_j"))
+        hamming = F.aggregate(
+            F.zip_with(
+                "bands_i",
+                "bands_j",
+                lambda x, y: F.bit_count(x.bitwiseXOR(y)),
+            ),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        )
+        return (
+            cand.join(bi, "doc_i")
+            .join(bj, "doc_j")
+            .select("doc_i", "doc_j", hamming.cast("int").alias("hamming"))
+            .where(F.col("hamming") <= L73_HAMMING_MAX)
+        )
+
+    return pinned(narrow, verified)
 
 
 def _l73_signatures(spark: SparkSession, sf_dir: str):
@@ -9750,7 +9717,7 @@ def l91_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs are overrepresented) — which is precisely the population
     the verify stage sees, the decision this calibration informs.
 
-    Scale shape: identical to l6 (one persisted hash-array diamond,
+    Scale shape: identical to l6 (one pinned hash-array relation,
     band-bucket self-join, pair-bounded verify) plus one 8-slot
     zip_with per pair and a ≤9-group hash-agg — calibration adds ~no
     data movement to the pipeline it audits."""
@@ -9758,64 +9725,66 @@ def l91_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # byte-identical input; the calibration math below is the lane's
     # measured operator and runs for real
     hashed = _hashed_shingles_artifact(spark, sf_dir)
-    hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
-    cand = _banded_candidates(hashed, UH_PARAMS, N_BANDS)
-    sig = hashed.select(
-        "doc_id",
-        F.array(
-            *[
-                F.array_min(F.transform(F.col("hs"), _uh_perm(a, b)))
-                for a, b in UH_PARAMS
-            ]
-        ).alias("sig"),
-        F.array_distinct(F.col("hs")).alias("hset"),
-    )
-    si = sig.select(
-        F.col("doc_id").alias("doc_i"),
-        F.col("sig").alias("sig_i"),
-        F.col("hset").alias("hset_i"),
-    )
-    sj = sig.select(
-        F.col("doc_id").alias("doc_j"),
-        F.col("sig").alias("sig_j"),
-        F.col("hset").alias("hset_j"),
-    )
-    n_agree = F.size(
-        F.filter(
-            F.zip_with("sig_i", "sig_j", lambda a, b: a == b), lambda x: x
+
+    # pinned: the banding and both verify sides read `hashed`; the
+    # report is ≤ 9 rows
+    def report(hashed: DataFrame) -> DataFrame:
+        cand = _banded_candidates(hashed, UH_PARAMS, N_BANDS)
+        sig = hashed.select(
+            "doc_id",
+            F.array(
+                *[
+                    F.array_min(F.transform(F.col("hs"), _uh_perm(a, b)))
+                    for a, b in UH_PARAMS
+                ]
+            ).alias("sig"),
+            F.array_distinct(F.col("hs")).alias("hset"),
         )
-    )
-    true_j = F.size(F.array_intersect("hset_i", "hset_j")) / F.size(
-        F.array_union("hset_i", "hset_j")
-    )
-    est_j = n_agree / F.lit(N_MINHASH)
-    scored = (
-        cand.join(si, "doc_i")
-        .join(sj, "doc_j")
-        .select(
-            n_agree.alias("n_agree"),
-            est_j.alias("est"),
-            true_j.alias("tj"),
+        si = sig.select(
+            F.col("doc_id").alias("doc_i"),
+            F.col("sig").alias("sig_i"),
+            F.col("hset").alias("hset_i"),
         )
-    )
-    out = (
-        scored.groupBy("n_agree")
-        .agg(
-            F.count("*").alias("n_pairs"),
-            F.round(F.avg("tj"), 4).alias("mean_jaccard"),
-            F.round(F.avg(F.abs(F.col("est") - F.col("tj"))), 4).alias(
-                "mean_abs_err"
-            ),
-            F.round(F.min("tj"), 4).alias("min_jaccard"),
-            F.round(F.max("tj"), 4).alias("max_jaccard"),
+        sj = sig.select(
+            F.col("doc_id").alias("doc_j"),
+            F.col("sig").alias("sig_j"),
+            F.col("hset").alias("hset_j"),
         )
-        .withColumn(
-            "est_jaccard", F.col("n_agree") / F.lit(N_MINHASH)
+        n_agree = F.size(
+            F.filter(
+                F.zip_with("sig_i", "sig_j", lambda a, b: a == b), lambda x: x
+            )
         )
-    )
-    out = out.localCheckpoint(eager=True)
-    hashed.unpersist()
-    return out
+        true_j = F.size(F.array_intersect("hset_i", "hset_j")) / F.size(
+            F.array_union("hset_i", "hset_j")
+        )
+        est_j = n_agree / F.lit(N_MINHASH)
+        scored = (
+            cand.join(si, "doc_i")
+            .join(sj, "doc_j")
+            .select(
+                n_agree.alias("n_agree"),
+                est_j.alias("est"),
+                true_j.alias("tj"),
+            )
+        )
+        return (
+            scored.groupBy("n_agree")
+            .agg(
+                F.count("*").alias("n_pairs"),
+                F.round(F.avg("tj"), 4).alias("mean_jaccard"),
+                F.round(F.avg(F.abs(F.col("est") - F.col("tj"))), 4).alias(
+                    "mean_abs_err"
+                ),
+                F.round(F.min("tj"), 4).alias("min_jaccard"),
+                F.round(F.max("tj"), 4).alias("max_jaccard"),
+            )
+            .withColumn(
+                "est_jaccard", F.col("n_agree") / F.lit(N_MINHASH)
+            )
+        )
+
+    return pinned(hashed, report)
 
 
 QUERIES["l91_minhash_calibration"] = l91_minhash_calibration

@@ -20,23 +20,6 @@ from pyspark.sql import functions as F
 from etl_wlg_metlink_spark.tables import load
 
 
-def _run_with_state_partitions(spark: SparkSession, n: int, thunk):
-    """Run a streaming thunk with shuffle partitions (= state stores)
-    sized to the stream's key cardinality. Stateful operators keep one
-    state store per shuffle partition, each with per-batch commit
-    overhead, so the session's CPU-count default is mostly fixed cost
-    at ~10⁴-key test scale (a per-query knob in production). The conf
-    is read at stream START, and `drain` runs the stream to its end
-    inside the thunk, as does `ledger` with its merge; so every
-    stateful operator runs with n partitions. What a runner returns
-    past that point is lazy (a memory-sink read, the projections over
-    a ledger's merge) and runs at the session's setting."""
-    from etl_wlg_metlink_spark.session import conf_override
-
-    with conf_override(spark, {"spark.sql.shuffle.partitions": str(n)}):
-        return thunk()
-
-
 def s1_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows per event type (streaming:
     `withWatermark('ts', ...)` + identical window expression — see
@@ -109,12 +92,8 @@ def s4_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     stream = runners.events_stream(spark, sf_dir)
-    result = _run_with_state_partitions(
-        spark,
-        8,
-        lambda: runners.drain(
-            runners.user_track_state_stream(stream), output_mode="update"
-        ),
+    result = runners.drain(
+        runners.user_track_state_stream(stream), output_mode="update"
     )
     # the LAST emission per user is the final state; n_events is
     # monotone so it orders emissions. (max(total_value) would be
@@ -144,13 +123,7 @@ def s5_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_wlg_metlink_spark.streaming import runners
 
     stream = runners.events_stream(spark, sf_dir)
-    return _run_with_state_partitions(
-        spark,
-        8,
-        lambda: runners.drain(
-            runners.dedup_within_watermark_stream(stream)
-        ),
-    )
+    return runners.drain(runners.dedup_within_watermark_stream(stream))
 
 
 def s6_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,13 +137,9 @@ def s6_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = runners.events_stream(spark, sf_dir)
     customer = load(spark, sf_dir, "customer")
-    return _run_with_state_partitions(
-        spark,
-        8,
-        lambda: runners.drain(
-            runners.stream_static_enrich_stream(stream, customer),
-            output_mode="complete",
-        ),
+    return runners.drain(
+        runners.stream_static_enrich_stream(stream, customer),
+        output_mode="complete",
     )
 
 
@@ -183,12 +152,8 @@ def s7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_wlg_metlink_spark.streaming import runners
 
     stream = runners.events_stream(spark, sf_dir)
-    return _run_with_state_partitions(
-        spark,
-        8,
-        lambda: runners.drain(
-            runners.stream_stream_interval_join(stream)
-        ),
+    return runners.drain(
+        runners.stream_stream_interval_join(stream, "inner", "2 hours")
     )
 
 
@@ -205,13 +170,13 @@ def s8_streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor set equals l5's batch window rule — the oracle."""
     from etl_wlg_metlink_spark.streaming import runners
 
-    survivors_dir = runners.corpus_ingest_dedup_run(spark, sf_dir)
-    return spark.read.parquet(survivors_dir).select("doc_id", "source", "fp")
+    survivors = runners.corpus_ingest_dedup_run(spark, sf_dir)
+    return survivors.select("doc_id", "source", "fp")
 
 
 def s9_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER interval join through the driver gate
-    (runners.stream_stream_left_outer_join): matched click→purchase
+    (runners.stream_stream_interval_join, leftOuter): matched click→purchase
     pairs plus null-extended rows for non-converting clicks old enough
     that the watermark proves no match can arrive. The oracle encodes
     the emission horizon: an unmatched click appears iff
@@ -220,12 +185,8 @@ def s9_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_wlg_metlink_spark.streaming import runners
 
     stream = runners.events_stream(spark, sf_dir)
-    return _run_with_state_partitions(
-        spark,
-        8,
-        lambda: runners.drain(
-            runners.stream_stream_left_outer_join(stream)
-        ),
+    return runners.drain(
+        runners.stream_stream_interval_join(stream, "leftOuter", "0 seconds")
     )
 
 
@@ -250,12 +211,8 @@ def s10_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_wlg_metlink_spark.streaming import runners
 
     stream = runners.events_stream(spark, sf_dir)
-    result = _run_with_state_partitions(
-        spark,
-        8,
-        lambda: runners.drain(
-            runners.capped_sessions_stream(stream), output_mode="update"
-        ),
+    result = runners.drain(
+        runners.capped_sessions_stream(stream), output_mode="update"
     )
     w = Window.partitionBy("user_id", "session_seq").orderBy(
         F.col("n_events").desc(), F.col("closed").desc()
@@ -310,11 +267,7 @@ def s11_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang", "verdict")
         .agg(F.count("*").alias("n_docs"))
     )
-    return _run_with_state_partitions(
-        spark,
-        8,
-        lambda: runners.drain(agg, output_mode="complete"),
-    )
+    return runners.drain(agg, output_mode="complete")
 
 
 QUERIES = {
@@ -526,9 +479,7 @@ def s12_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     runners.staged_replay)."""
     from etl_wlg_metlink_spark.streaming import runners
 
-    return _run_with_state_partitions(
-        spark, 8, lambda: runners.trending_topk_run(spark, sf_dir)
-    )
+    return runners.trending_topk_run(spark, sf_dir)
 
 
 QUERIES["s12_trending_topk"] = s12_trending_topk
@@ -559,9 +510,7 @@ def s13_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch assignment exactly — the oracle is l17's assign CTE."""
     from etl_wlg_metlink_spark.streaming import runners
 
-    return _run_with_state_partitions(
-        spark, 8, lambda: runners.ivf_ingest_run(spark, sf_dir)
-    )
+    return runners.ivf_ingest_run(spark, sf_dir)
 
 
 QUERIES["s13_streaming_ann_ingest"] = s13_streaming_ann_ingest
@@ -596,9 +545,7 @@ def s14_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow replay admits zero late drops)."""
     from etl_wlg_metlink_spark.streaming import runners
 
-    return _run_with_state_partitions(
-        spark, 8, lambda: runners.drift_monitor_run(spark, sf_dir)
-    )
+    return runners.drift_monitor_run(spark, sf_dir)
 
 
 QUERIES["s14_drift_monitor"] = s14_drift_monitor
@@ -648,9 +595,7 @@ def s15_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     table."""
     from etl_wlg_metlink_spark.streaming import runners
 
-    return _run_with_state_partitions(
-        spark, 8, lambda: runners.countmin_ingest_run(spark, sf_dir)
-    )
+    return runners.countmin_ingest_run(spark, sf_dir)
 
 
 QUERIES["s15_streaming_countmin"] = s15_streaming_countmin
@@ -707,9 +652,7 @@ def s16_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch because max(max(A), max(B)) = max(A ∪ B)."""
     from etl_wlg_metlink_spark.streaming import runners
 
-    return _run_with_state_partitions(
-        spark, 8, lambda: runners.hll_ingest_run(spark, sf_dir)
-    )
+    return runners.hll_ingest_run(spark, sf_dir)
 
 
 QUERIES["s16_streaming_hll"] = s16_streaming_hll
@@ -733,9 +676,7 @@ def s17_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest of the parts' k-smallests."""
     from etl_wlg_metlink_spark.streaming import runners
 
-    return _run_with_state_partitions(
-        spark, 8, lambda: runners.kmv_ingest_run(spark, sf_dir)
-    )
+    return runners.kmv_ingest_run(spark, sf_dir)
 
 
 QUERIES["s17_streaming_kmv"] = s17_streaming_kmv

@@ -6,10 +6,11 @@ availableNow trigger — process everything available, then stop.
 `drain` is the one place that runs a query that way: every one-shot
 runner and lane hands it a stream (and a foreachBatch function, or
 none for a memory sink), and it owns the checkpoint, the trigger, the
-wait and the cleanup. `ledger` is the one storage ledger: the
-sketch and index maintenance runners (trending top-k, IVF, count-min,
-HLL, KMV) hand it a stream, a per-batch partial and a merge, and it
-owns the `batch_id` directories, the read-back and the cleanup.
+state-partition count, the wait and the cleanup. `ledger` is the one
+storage ledger: the sketch and index maintenance runners (trending
+top-k, IVF, count-min, HLL, KMV) hand it a stream, a per-batch partial
+and a merge, and it owns the `batch_id` directories, the read-back and
+the cleanup.
 `staged_replay` is the one landing directory the multi-batch runners
 replay.
 
@@ -137,6 +138,16 @@ def _watch_dir_for(path: str) -> str:
     return _WATCH_DIRS[path]
 
 
+#: Shuffle partitions, and so state stores, of every stream `drain`
+#: runs. A stateful operator keeps one state store per shuffle
+#: partition, each with its own per-batch commit, so at the ~10⁴ keys
+#: of a one-shot replay the session's one-per-core default is mostly
+#: fixed cost: at local[32], 32 → 8 cut a stateful query 2.3×. A
+#: long-running query over millions of keys would size this to its
+#: key cardinality instead.
+STATE_PARTITIONS = 8
+
+
 def drain(
     stream: DataFrame,
     batch_fn: Callable[[DataFrame, int], None] | None = None,
@@ -149,12 +160,23 @@ def drain(
     returns None) or, when it is None, to a memory sink whose
     materialized result is returned.
 
+    The stream runs at STATE_PARTITIONS shuffle partitions: the
+    session conf is set around ``start()`` only, because the query
+    clones its session there (and records the count in its offset
+    log), so every micro-batch and the session it hands ``batch_fn``
+    see STATE_PARTITIONS. Whatever runs after the stream ends — the
+    memory-sink result, a `ledger` merge, a lane's projections over
+    either — runs at the session's own setting, which ``start()``
+    leaves as it found it.
+
     Whether the query succeeds or raises, it is stopped, its
     state-store providers unloaded, its checkpoint removed, and the
     memory sink's temp view dropped: the returned DataFrame holds the
     resolved plan (and keeps the sink rows alive while referenced),
     but the catalog entry would otherwise pin every run's sink in
     executor memory for the session's lifetime."""
+    from etl_wlg_metlink_spark.session import conf_override
+
     spark = stream.sparkSession
     checkpoint = _tracked_mkdtemp(prefix="drain_ckpt_")
     name = f"drain_{uuid.uuid4().hex[:8]}"
@@ -165,9 +187,11 @@ def drain(
         writer = writer.format("memory").queryName(name)
     else:
         writer = writer.foreachBatch(batch_fn)
+    state = {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
     q = None
     try:
-        q = writer.trigger(availableNow=True).start()
+        with conf_override(spark, state):
+            q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
         return spark.table(name) if batch_fn is None else None
     finally:
@@ -336,67 +360,36 @@ def stream_static_enrich_stream(events: DataFrame, customer: DataFrame) -> DataF
     )
 
 
-def stream_stream_interval_join(events: DataFrame) -> DataFrame:
-    """Stream-stream inner interval join — the attribution shape
-    (click → purchase within 30 minutes, per user): two filtered views
-    of the event stream, each with its own event-time watermark, joined
-    on key + a bounded time range. The interval bound is what lets
-    Spark evict join state (a click older than the watermark minus the
-    interval can never match again), so state stays bounded at any
-    scale; an unconstrained stream-stream join would buffer forever.
+def stream_stream_interval_join(
+    events: DataFrame, how: str, delay: str
+) -> DataFrame:
+    """Stream-stream interval join — the attribution shape (click →
+    purchase within 30 minutes, per user): two filtered views of the
+    event stream, each with an event-time watermark of ``delay``,
+    joined on key + a bounded time range. The interval bound is what
+    lets Spark evict join state (a click older than the watermark
+    minus the interval can never match again), so state stays bounded
+    at any scale; an unconstrained stream-stream join would buffer
+    forever. Timestamps are emitted as formatted strings.
 
-    Timestamps are emitted as formatted strings and the join is inner,
-    so the availableNow replay's result equals the batch self-join —
-    the DuckDB oracle."""
-    clicks = (
-        events.where(F.col("event_type") == "click")
-        .select("user_id", F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        events.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "user_id = p_user AND purchase_ts >= click_ts "
-            "AND purchase_ts <= click_ts + INTERVAL 30 MINUTES"
-        ),
-    )
-    return joined.select(
-        "user_id",
-        F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
-        F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
-        F.round("value", 4).alias("purchase_value"),
-    )
+    ``how="inner"`` (s7, delay "2 hours"): the availableNow replay's
+    result equals the batch self-join — the DuckDB oracle.
 
-
-def stream_stream_left_outer_join(events: DataFrame) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join — attribution including
-    the non-converting clicks: like stream_stream_interval_join, but a
-    click with no purchase within 30 minutes must still come out, as a
-    null-extended row. The semantics under test: Spark can only emit
-    the null row once the watermark proves no future purchase can
-    match (click_ts + 30min < min of both sides' watermarks), so
-    unmatched clicks newer than that horizon are WITHHELD at
-    availableNow stop — the no-data final micro-batch evicts and
-    emits everything older. Watermark delay is 0 seconds so the
+    ``how="leftOuter"`` (s9, delay "0 seconds"): attribution including
+    the non-converting clicks, each as a null-extended row. Spark can
+    only emit the null row once the watermark proves no future
+    purchase can match (click_ts + 30min < min of both sides'
+    watermarks), so unmatched clicks newer than that horizon are
+    WITHHELD at availableNow stop — the no-data final micro-batch
+    evicts and emits everything older. At 0 seconds of delay the
     withheld tail is exactly the last 30 minutes of the stream; the
-    oracle reproduces the horizon rule in SQL.
-
-    Scale shape: identical to the inner variant (state bounded by the
-    interval + delay), plus the outer side's eviction is what turns
-    state-store entries into output instead of silent drops."""
+    oracle reproduces the horizon rule in SQL. The outer side's
+    eviction is what turns state-store entries into output instead of
+    silent drops."""
     clicks = (
         events.where(F.col("event_type") == "click")
         .select("user_id", F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "0 seconds")
+        .withWatermark("click_ts", delay)
     )
     purchases = (
         events.where(F.col("event_type") == "purchase")
@@ -405,7 +398,7 @@ def stream_stream_left_outer_join(events: DataFrame) -> DataFrame:
             F.col("ts").alias("purchase_ts"),
             F.col("value"),
         )
-        .withWatermark("purchase_ts", "0 seconds")
+        .withWatermark("purchase_ts", delay)
     )
     joined = clicks.join(
         purchases,
@@ -413,7 +406,7 @@ def stream_stream_left_outer_join(events: DataFrame) -> DataFrame:
             "user_id = p_user AND purchase_ts >= click_ts "
             "AND purchase_ts <= click_ts + INTERVAL 30 MINUTES"
         ),
-        "leftOuter",
+        how,
     )
     return joined.select(
         "user_id",
@@ -425,7 +418,7 @@ def stream_stream_left_outer_join(events: DataFrame) -> DataFrame:
 
 def corpus_ingest_dedup_run(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
-) -> str:
+) -> DataFrame:
     """Streaming corpus ingest with cross-batch exact dedup — the
     streaming form of the l25 batch-vs-corpus pattern and the l5
     survivor rule, run end-to-end: each micro-batch of arriving
@@ -438,7 +431,9 @@ def corpus_ingest_dedup_run(
     the fingerprint ledger cannot sit in executor state, and the
     anti-join against it is a (batch)-sized probe of a fp-keyed
     corpus — the same wrong-direction-join reasoning as l25 (the small
-    side drives). Returns the survivors directory path.
+    side drives). Returns the survivors (doc_id, source, fp), read back
+    and materialized (``localCheckpoint(eager=True)``); the survivor
+    store is removed whether the run succeeds or raises.
 
     Because the staged replay ascends in doc_id, first-arrival
     equals global min-doc_id per fingerprint, which is what makes the
@@ -472,8 +467,11 @@ def corpus_ingest_dedup_run(
             survivors_dir
         )
 
-    drain(stream, ingest_batch)
-    return survivors_dir
+    try:
+        drain(stream, ingest_batch)
+        return spark.read.parquet(survivors_dir).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(survivors_dir, ignore_errors=True)
 
 
 def user_track_state_stream(events: DataFrame) -> DataFrame:

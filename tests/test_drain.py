@@ -1,5 +1,6 @@
-"""runners.drain: the one one-shot streaming lifecycle. Whether the
-query succeeds or fails, it leaves no temp view, no loaded state-store
+"""runners.drain: the one one-shot streaming lifecycle. It runs the
+stream at STATE_PARTITIONS and leaves the session's own setting alone.
+Whether the query succeeds or fails, it leaves no temp view, no loaded state-store
 providers and no checkpoint behind. runners.ledger, built on it: a
 replayed batch replaces itself, and no ledger dir outlives the run.
 Self-contained: each test lands its own parquet files, so no table
@@ -14,6 +15,7 @@ import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
+from etl_wlg_metlink_spark.session import conf_override
 from etl_wlg_metlink_spark.streaming import runners
 
 
@@ -47,6 +49,23 @@ def test_failed_drain_leaves_nothing_behind(spark, tmp_path, made_dirs, sink):
     assert _temp_views(spark) == views
     assert not store.isMaintenanceRunning()
     assert made_dirs and not any(os.path.exists(d) for d in made_dirs)
+
+
+def test_drain_runs_the_stream_at_state_partitions(spark, tmp_path):
+    """The stream's state stores number STATE_PARTITIONS whatever the
+    session is set to, and the session keeps its own setting."""
+    key = "spark.sql.shuffle.partitions"
+    seen = []
+
+    def record(batch, _):
+        seen.append((batch.sparkSession.conf.get(key), batch.rdd.getNumPartitions()))
+        batch.collect()
+
+    counts = _landing(spark, tmp_path).groupBy("k").count()
+    with conf_override(spark, {key: "3"}):
+        runners.drain(counts, record, output_mode="complete")
+        assert spark.conf.get(key) == "3"
+    assert seen == [(str(runners.STATE_PARTITIONS), runners.STATE_PARTITIONS)]
 
 
 def test_state_store_unload_failure_is_logged(capfd):

@@ -68,11 +68,12 @@ def test_dedup_within_watermark_stream(spark, sf_dir):
     assert got == expected
 
 
-def test_streaming_ingest_dedup_parity_and_batching(spark, sf_dir):
+def test_streaming_ingest_dedup_parity_and_batching(spark, sf_dir, made_dirs):
     """s8: the 4-batch streaming ingest must (a) actually replay in
     multiple deterministic micro-batches, (b) drop cross-batch
     duplicates via the ledger anti-join, (c) land exactly on the batch
-    min-doc_id-per-fingerprint survivor set, run after run."""
+    min-doc_id-per-fingerprint survivor set, run after run, and (d)
+    leave no survivor store behind."""
     import os
 
     from etl_wlg_metlink_spark.streaming import s8_streaming_ingest_dedup
@@ -89,6 +90,7 @@ def test_streaming_ingest_dedup_parity_and_batching(spark, sf_dir):
         (r["doc_id"], r["source"], r["fp"])
         for r in s8_streaming_ingest_dedup(spark, sf_dir).collect()
     }
+    assert made_dirs and _left_behind(made_dirs) == []
     docs = load(spark, sf_dir, "documents")
     fp = F.md5(
         F.array_join(
@@ -162,7 +164,7 @@ def test_stream_stream_interval_join_parity(spark, sf_dir):
 
     stream = runners.events_stream(spark, sf_dir)
     result = runners.drain(
-        runners.stream_stream_interval_join(stream),
+        runners.stream_stream_interval_join(stream, "inner", "2 hours"),
     )
     events = load(spark, sf_dir, "events")
     clicks = events.where(F.col("event_type") == "click").select(
@@ -388,8 +390,8 @@ def test_s9_left_outer_emits_expired_nulls_withholds_recent(spark, tmp_path):
     pdf.to_parquet(str(tmp_path / "events.parquet"))
 
     out = runners.drain(
-        runners.stream_stream_left_outer_join(
-            runners.events_stream(spark, str(tmp_path))
+        runners.stream_stream_interval_join(
+            runners.events_stream(spark, str(tmp_path)), "leftOuter", "0 seconds"
         )
     ).collect()
     got = {(r["user_id"], r["purchase_ts"] is None) for r in out}

@@ -1,8 +1,12 @@
 """Unit tests for the table loaders' spread gate (tables.spread /
-tables.dir_bytes). They read no table data, so CI's smoke step runs
-this file."""
+tables.dir_bytes) and the persist owner (tables.pinned). They read no
+table data, so CI's smoke step runs this file."""
 
 from __future__ import annotations
+
+import pytest
+from pyspark import StorageLevel
+from pyspark.sql import functions as F
 
 from etl_wlg_metlink_spark import tables
 
@@ -37,3 +41,39 @@ def test_artifact_respread_is_scale_conditional(spark, tmp_path, monkeypatch):
     )
     big = tables.spread(df, str(tmp_path / "t.parquet"))
     assert big is df
+
+
+def test_pinned_releases_the_pin_whether_build_succeeds_or_raises(spark):
+    df = spark.range(10)
+    seen = []
+
+    def build(pin):
+        seen.append(pin.storageLevel)
+        return pin.groupBy((F.col("id") % 2).alias("k")).count()
+
+    out = tables.pinned(df, build)
+    assert seen == [StorageLevel.MEMORY_AND_DISK]
+    assert sorted(map(tuple, out.collect())) == [(0, 5), (1, 5)]
+    assert df.storageLevel == StorageLevel.NONE
+
+    def failing(pin):
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        tables.pinned(df, failing)
+    assert df.storageLevel == StorageLevel.NONE
+
+
+def test_failing_lane_leaves_its_input_uncached(spark):
+    """A lane whose build raises mid-job (here l6's verified-pair
+    build, over shingle hashes that raise when read) must not leave
+    its pinned input in the session's cache."""
+    from etl_wlg_metlink_spark.operators.llm_pipeline import _minhash_verified_pairs
+
+    hashed = spark.range(4).select(
+        F.col("id").alias("doc_id"),
+        F.raise_error(F.lit("bad shingle hash")).cast("array<bigint>").alias("hs"),
+    )
+    with pytest.raises(Exception, match="bad shingle hash"):
+        _minhash_verified_pairs(hashed)
+    assert hashed.storageLevel == StorageLevel.NONE

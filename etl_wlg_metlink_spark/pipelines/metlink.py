@@ -11,13 +11,20 @@ remaining D rules are the `functions/scalar.py` helpers.
 
 Catalyst fuses the whole thing into a single whole-stage-codegen'd
 pass over the input (the reference's hand-ordered early-exit loop,
-recovered automatically), with exactly one shuffle: the dedup window.
+recovered automatically). Partitioned input (m4's bulk entities) takes
+exactly one shuffle: the dedup window. One envelope (`run`) is one
+partition, where the dedup and the ordering run with no exchange.
+
+The Column tree is built once per config and JVM (`_projection`); each
+call only applies it.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from dataclasses import dataclass
+from functools import lru_cache, reduce
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -98,14 +105,26 @@ def _classify(e: Column) -> tuple[Column, Column, Column]:
     return route_id, vehicle_type, cot_key(vehicle_type, e["vehicle"]["vehicle"]["id"])
 
 
-def build_features(entities: DataFrame, config: MetlinkConfig) -> DataFrame:
-    """entity rows (`idx`, `entity`) → deduped Feature rows.
+@dataclass(frozen=True)
+class _Projection:
+    """The Columns `build_features` applies, in the order it applies
+    them."""
 
-    `idx` is the position in the source `entity[]` array; last-wins
-    dedup and output order both follow it, exactly like the
-    reference's `Map.set` (task.ts:191, 312: later array entries
-    replace earlier ones; iteration order = first-insertion order).
-    """
+    keep: Column  # P2-P4
+    classified: tuple[Column, ...]  # idx, entity and the D1-D3 columns
+    shown: Column  # P5
+    feature: Column  # D6-D13
+    latest: Column  # A1: row number, newest first, per cot_id
+    first_idx: Column  # A1: first-insertion position per cot_id
+    survives: Column  # A1: the newest row
+
+
+@lru_cache(maxsize=16)
+def _projection(config: MetlinkConfig, gateway) -> _Projection:
+    """``config``'s projection: the Column tree of `build_features`,
+    ~2,300 py4j calls to build, built once per config and JVM.
+    ``gateway`` (the live py4j gateway) is only part of the cache key:
+    Columns are JVM objects, so a restarted JVM builds the tree again."""
     e = F.col("entity")
     trip = e["vehicle"]["trip"]
     pos = e["vehicle"]["position"]
@@ -113,16 +132,13 @@ def build_features(entities: DataFrame, config: MetlinkConfig) -> DataFrame:
     occ = e["vehicle"]["occupancy_status"]
 
     route_id, vehicle_type, cot_id = _classify(e)
-    df = entities.where(_drop_reason(e).isNull()).select(
-        "idx",
+    classified = (
+        F.col("idx"),
         e.alias("entity"),
         route_id.alias("route_id"),
         vehicle_type.alias("vehicle_type"),
         cot_id.alias("cot_id"),
     )
-
-    # P5 (task.ts:245-249) — config-driven show/hide.
-    df = df.where(F.col("vehicle_type").isin(config.enabled_types()))
 
     route_id, vehicle_type = F.col("route_id"), F.col("vehicle_type")
     cot_type, marker_color, icon = vehicle_style(vehicle_type)
@@ -180,16 +196,43 @@ def build_features(entities: DataFrame, config: MetlinkConfig) -> DataFrame:
         ).alias("geometry"),
     )
 
-    staged = df.select("idx", "cot_id", feature.alias("feature"))
-
     # A1 (task.ts:191, 312) — last-wins dedup, ordered window (NOT
-    # dropDuplicates: nondeterministic under parallelism). One shuffle.
+    # dropDuplicates: nondeterministic under parallelism).
     w = Window.partitionBy("cot_id").orderBy(F.col("idx").desc())
     wf = Window.partitionBy("cot_id")
+    return _Projection(
+        keep=_drop_reason(e).isNull(),
+        classified=classified,
+        # P5 (task.ts:245-249) — config-driven show/hide.
+        shown=F.col("vehicle_type").isin(config.enabled_types()),
+        feature=feature.alias("feature"),
+        latest=F.row_number().over(w),
+        first_idx=F.min("idx").over(wf),
+        survives=F.col("rn") == 1,
+    )
+
+
+def build_features(entities: DataFrame, config: MetlinkConfig) -> DataFrame:
+    """entity rows (`idx`, `entity`) → deduped Feature rows.
+
+    `idx` is the position in the source `entity[]` array; last-wins
+    dedup and output order both follow it, exactly like the
+    reference's `Map.set` (task.ts:191, 312: later array entries
+    replace earlier ones; iteration order = first-insertion order).
+    The dedup window is the one shuffle, unless ``entities`` is
+    already in one partition (see `run`).
+    """
+    p = _projection(config, SparkContext._gateway)
+    staged = (
+        entities.where(p.keep)
+        .select(*p.classified)
+        .where(p.shown)
+        .select("idx", "cot_id", p.feature)
+    )
     return (
-        staged.withColumn("rn", F.row_number().over(w))
-        .withColumn("first_idx", F.min("idx").over(wf))
-        .where(F.col("rn") == 1)
+        staged.withColumn("rn", p.latest)
+        .withColumn("first_idx", p.first_idx)
+        .where(p.survives)
         .select("first_idx", "feature")
     )
 
@@ -232,7 +275,18 @@ def observe_entities(entities: DataFrame, observation) -> DataFrame:
 
 
 def run(entities: DataFrame, config: MetlinkConfig | None = None) -> DataFrame:
-    """Entity rows → Feature rows in Map-iteration order (task.ts
-    first-insertion order), ready for the sink."""
+    """One envelope's entity rows → its Feature rows in Map-iteration
+    order (task.ts first-insertion order), ready for the sink: the
+    poll, the CLI and each stream micro-batch.
+
+    One envelope is O(10²-10³) rows, so the input is coalesced to one
+    partition. One partition already satisfies the dedup window's
+    clustering and the sort's ordering, so both run inside it with no
+    exchange: the whole envelope is one job of one task. The bulk
+    callers of `build_features` keep its one shuffle."""
     cfg = config or MetlinkConfig()
-    return build_features(entities, cfg).orderBy("first_idx").select("feature")
+    return (
+        build_features(entities.coalesce(1), cfg)
+        .orderBy("first_idx")
+        .select("feature")
+    )

@@ -18,8 +18,10 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable
+from functools import lru_cache
 
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: matches JS Date.toISOString(): 2024-01-01T00:00:07.000Z
@@ -27,7 +29,14 @@ _JSON_OPTS = {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSXXX"}
 
 
 def _feature_json(features: DataFrame) -> DataFrame:
-    """One JSON string per feature; NaN speed/course nulled first
+    """One JSON string per feature."""
+    return features.select(_feature_json_column(SparkContext._gateway))
+
+
+@lru_cache(maxsize=4)
+def _feature_json_column(gateway) -> Column:
+    """The ``feature_json`` Column, built once per JVM (``gateway`` is
+    only the cache key); NaN speed/course nulled first
     (JSON.stringify(NaN) === 'null' — task.ts:294-295 NaNs must not
     leak as the string 'NaN')."""
     f = F.col("feature")
@@ -47,7 +56,7 @@ def _feature_json(features: DataFrame) -> DataFrame:
             ),
         ),
     )
-    return features.select(F.to_json(cleaned, _JSON_OPTS).alias("feature_json"))
+    return F.to_json(cleaned, _JSON_OPTS).alias("feature_json")
 
 
 def submit(features: DataFrame, poster: Callable[[dict], None]) -> dict:

@@ -61,7 +61,12 @@ def entities_from_json(spark: SparkSession, raw_json: str, debug: bool = False) 
         raise InvalidEnvelopeError(
             "Invalid API response format: missing entity data"
         )
-    raw_df = spark.createDataFrame([(raw_json,)], "raw string")
+    # A literal on a one-row, one-partition range, not createDataFrame:
+    # that plans as a Python-RDD scan (`Scan ExistingRDD`), which ships
+    # the envelope through a Python worker. Here the parse stays in the
+    # JVM, and one partition is what `metlink.run` needs to run the
+    # envelope with no exchange.
+    raw_df = spark.range(0, 1, 1, 1).select(F.lit(raw_json).alias("raw"))
     return parse_envelopes(raw_df, "raw")
 
 

@@ -17,6 +17,7 @@ import json
 import pytest
 
 from etl_wlg_metlink_spark.config import MetlinkConfig
+from etl_wlg_metlink_spark.operators import metlink_queries
 from etl_wlg_metlink_spark.pipelines import metlink
 from etl_wlg_metlink_spark.pipelines.gtfs_fixture import (
     FIXTURE_ENTITIES,
@@ -70,6 +71,51 @@ def test_config_filter_hides_types(spark):
         f["id"]
         for f in oracle_features(FIXTURE_ENTITIES, enabled=("Train", "Ship"))
     }
+
+
+def test_projection_cache_is_keyed_on_config(spark):
+    """`build_features` reuses one Column tree per config: a second
+    config in the same session gets its own, and the first is still
+    right after it."""
+    for cfg in (MetlinkConfig(), MetlinkConfig(show_buses=False), MetlinkConfig()):
+        features = metlink.run(gtfs.entities_from_json(spark, RAW_JSON), cfg)
+        got = geojson.submit(features, lambda fc: None)["features"]
+        enabled = tuple(cfg.enabled_types())
+        assert got == oracle_features(FIXTURE_ENTITIES, enabled=enabled)
+
+
+def _executed_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_poll_is_one_stage_without_python_rows(spark):
+    """One envelope string → FeatureCollection JSON runs in the JVM in
+    one partition: no Python-RDD scan and no exchange for the dedup
+    window or the ordering."""
+    df = geojson._feature_json(
+        metlink.run(gtfs.entities_from_json(spark, RAW_JSON))
+    )
+    plan = _executed_plan(df)
+    assert "Exchange" not in plan
+    assert "ExistingRDD" not in plan
+
+
+def test_stream_batch_has_no_exchange(spark, tmp_path):
+    """A stream micro-batch's shape — one whole-text envelope file
+    through `parse_envelopes` — also runs without an exchange."""
+    (tmp_path / "envelope.json").write_text(RAW_JSON)
+    raw = spark.read.option("wholetext", True).text(str(tmp_path))
+    df = geojson._feature_json(metlink.run(gtfs.parse_envelopes(raw, "value")))
+    assert "Exchange" not in _executed_plan(df)
+
+
+def test_bulk_build_keeps_its_shuffle(spark, sf_dir):
+    """The one-partition path belongs to `run` alone: m4's partitioned
+    `build_features` still hash-partitions for the dedup window."""
+    entities = metlink_queries._synthetic_entities(spark, sf_dir)
+    plan = _executed_plan(metlink.build_features(entities, MetlinkConfig()))
+    assert "Exchange hashpartitioning(cot_id" in plan
 
 
 def _counters(entities):

@@ -12,9 +12,12 @@ to count as clean.
 
 Method (the one banked in BENCH_NOTES.md round 14):
   * `git worktree` of the baseline ref beside the working tree;
-  * N interleaved legs (base, head, base, head, ...), each leg a
-    fresh `python bench.py --only <lanes>` process;
-  * the derived-artifact store is cleared before EVERY leg so both
+  * N interleaved legs (base, head, base, head, ...), each leg two
+    fresh `python bench.py --only` processes: the touched lanes, then
+    the sentinels, so nothing a touched lane leaves in its process
+    (JIT state, GC pressure, block-manager contents) can move the
+    sentinels and make the change look like a dirty window;
+  * the derived-artifact store is cleared before EVERY process so both
     code states pay the same cold-mining protocol bench.py's full
     runs use (first consumer mines, later lanes serve);
   * per-lane estimate = min over that side's legs (the paired-min
@@ -76,8 +79,10 @@ def main() -> int:
     args = ap.parse_args()
 
     touched = [s for s in args.lanes.split(",") if s]
-    sentinels = [s for s in args.sentinels.split(",") if s]
-    lanes = touched + [s for s in sentinels if s not in touched]
+    sentinels = [s for s in args.sentinels.split(",") if s and s not in touched]
+    if not sentinels:
+        ap.error("no sentinel lane left outside the touched lanes")
+    lanes = touched + sentinels
 
     tree = tempfile.mkdtemp(prefix="paired_base_")
     subprocess.run(
@@ -91,7 +96,8 @@ def main() -> int:
         head: dict[str, float] = {}
         for leg in range(args.legs):  # interleave: ambient cancels
             for side, t, acc in (("base", tree, base), ("head", REPO, head)):
-                q = _run_leg(t, lanes, args.sf_dir)
+                q = _run_leg(t, touched, args.sf_dir)
+                q.update(_run_leg(t, sentinels, args.sf_dir))
                 for k, v in q.items():
                     acc[k] = min(acc.get(k, v), v)
                 print(f"leg {leg + 1} {side}: {sum(q.values()):.2f}s", file=sys.stderr)

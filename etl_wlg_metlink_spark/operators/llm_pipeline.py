@@ -11,9 +11,14 @@ Scale rules:
 - near-dup detection is banded MinHash-LSH — candidate pairs only
   within a band bucket, NEVER an all-pairs cross join (l6, l7, l8);
 - ANN: brute-force cosine only for a bounded query set (broadcast);
-  the unbounded path is the LSH variant (l12);
-- everything except the explicitly-marked Pandas-UDF multimodal path
-  is built-in Catalyst expressions (whole-stage codegen).
+  the unbounded paths are LSH (l12) and IVF (l17). Every cosine is
+  taken over one cosine space, `_cosine_corpus`, which drops
+  zero-norm vectors;
+- exact dedup keys on one bag-of-words fingerprint, `_bag_fp`;
+- everything except the explicitly-marked Arrow/Pandas passes (the
+  multimodal decoders, the numpy blocks of l12/l14/l16 and the IVF
+  index, l94's NFC) is built-in Catalyst expressions (whole-stage
+  codegen).
 """
 
 from __future__ import annotations
@@ -45,6 +50,16 @@ STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and", "in", "to")
 
 def _words(col):
     return F.split(col, " ")
+
+
+def _bag_fp(words):
+    """The exact-dup bag-of-words fingerprint: md5 of the sorted
+    distinct words joined by single spaces, so word order and repeats
+    do not change it (l4, l5, l25, l28, l90, l96, the s8 ingest and
+    the bucket key of sinks/corpus.write_corpus_build). NULL text
+    gives a NULL fingerprint, which matches nothing in a join, as in
+    the oracles."""
+    return F.md5(F.array_join(F.array_sort(F.array_distinct(words)), " "))
 
 
 def _md5_int60(col):
@@ -164,14 +179,13 @@ def l4_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would re-split per fold step (see _shingles_ws)
     base = docs.select("doc_id", _words(F.col("text")).alias("ws"))
     ws = F.col("ws")
-    bag_fp = F.md5(F.array_join(F.array_sort(F.array_distinct(ws)), " "))
     rolling = F.aggregate(
         ws,
         F.lit(0).cast("long"),
         lambda acc, w: (acc * 31 + _md5_int60(w) % 1000) % 2147483647,
     )
     return base.select(
-        "doc_id", bag_fp.alias("bag_fp"), rolling.alias("rolling_fp")
+        "doc_id", _bag_fp(ws).alias("bag_fp"), rolling.alias("rolling_fp")
     )
 
 
@@ -185,8 +199,7 @@ def l5_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor, not dropDuplicates' partition-order roulette), count
     survivors and drops per source. ONE shuffle on the fingerprint."""
     docs = load(spark, sf_dir, "documents")
-    ws = _words(F.col("text"))
-    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(ws)), " "))
+    fp = _bag_fp(_words(F.col("text")))
     w = Window.partitionBy("fp").orderBy("doc_id")
     return (
         docs.select("doc_id", "source", fp.alias("fp"))
@@ -583,30 +596,59 @@ def _dot(a, b):
     )
 
 
-def _brute_topk(emb: DataFrame, n_queries: int, k: int, include_label: bool) -> DataFrame:
-    """Shared exact-cosine top-k scaffolding (l9 / l11): corpus with
-    precomputed norm, broadcast bounded query set, one non-equi
-    broadcast join, per-query window rank ≤ k. Exact double math
-    (sequential fold) so the DuckDB oracles match bit-for-bit."""
-    cols = ["vec_id", "embedding"] + (["label"] if include_label else [])
-    corpus = emb.select(
-        *cols, F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm")
-    ).where(F.col("norm") > 0)  # zero vectors have no direction (see _ivf_corpus)
-    qcols = [
+def _cosine(a: str, b: str, na: str, nb: str):
+    """Cosine of embedding columns `a` and `b` given their norm columns:
+    the sequential-fold dot product over the product of the norms."""
+    return _dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb))
+
+
+def _cosine_corpus(emb: DataFrame, *keep) -> DataFrame:
+    """The cosine space: `keep` columns, `embedding` and its norm, the
+    square root of the ascending-dimension sequential fold of f64
+    squares, so every downstream cosine is IEEE-identical to the SQL
+    oracle's (_DUCK_COSINE_CORPUS).
+
+    Zero-norm vectors are EXCLUDED from every cosine-space relation: a
+    zero embedding has no direction, cosine is 0/0, and under ANSI one
+    such row (a failed encoder call is routine at 100 TB) would
+    otherwise kill the whole job. The IVF √N seed stride stays sized
+    from the UNFILTERED manifest count on both engines (_ivf_mod(n) /
+    _DUCK_IVF_MOD), so sizing and membership can't drift.
+
+    Consumers: _brute_topk (l9, l11, l38's truth), l14, l17, l35, l38,
+    l79, _ivf_train and the streaming IVF ingest (s13)."""
+    return emb.select(
+        *keep,
+        "embedding",
+        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
+    ).where(F.col("norm") > 0)
+
+
+def _cosine_queries(corpus: DataFrame, n: int, *keep) -> DataFrame:
+    """The bounded query side of a cosine search over `corpus`: the
+    vectors with vec_id < n as (query_id, *keep, q_emb, q_norm)."""
+    return corpus.where(F.col("vec_id") < n).select(
         F.col("vec_id").alias("query_id"),
+        *keep,
         F.col("embedding").alias("q_emb"),
         F.col("norm").alias("q_norm"),
-    ]
-    if include_label:
-        qcols.insert(1, F.col("label").alias("own_label"))
-    q = corpus.select(*qcols).where(F.col("query_id") < n_queries)
-    sim = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_norm") * F.col("norm")
+    )
+
+
+def _brute_topk(emb: DataFrame, n_queries: int, k: int, include_label: bool) -> DataFrame:
+    """Shared exact-cosine top-k scaffolding (l9, l11, l38's truth):
+    corpus with precomputed norm, broadcast bounded query set, one
+    non-equi broadcast join, per-query window rank ≤ k. Exact double
+    math (sequential fold) so the DuckDB oracles match bit-for-bit."""
+    label = ["label"] if include_label else []
+    corpus = _cosine_corpus(emb, "vec_id", *label)
+    q = _cosine_queries(
+        corpus, n_queries, *[F.col(c).alias(f"own_{c}") for c in label]
     )
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
     return (
         corpus.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .withColumn("sim", sim)
+        .withColumn("sim", _cosine("q_emb", "embedding", "q_norm", "norm"))
         .withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= k)
     )
@@ -645,28 +687,7 @@ def l11_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break (higher count, then smaller label), compared with the
     query's own label."""
     emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
-    ).where(F.col("norm") > 0)
-    q = corpus.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("own_label"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    ).where(F.col("query_id") < 50)
-    sim = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_norm") * F.col("norm")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    top5 = (
-        corpus.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .withColumn("sim", sim)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 5)
-    )
+    top5 = _brute_topk(emb, n_queries=50, k=5, include_label=True)
     votes = top5.groupBy("query_id", "own_label", "label").agg(
         F.count("*").alias("c")
     )
@@ -922,12 +943,9 @@ def l14_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         signs = (q @ planes.T) > 0
         return pd.Series((signs * weights).sum(axis=1))
 
-    corpus = emb.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
-        _bucket(F.col("embedding")).alias("bucket"),
-    ).where(F.col("norm") > 0)
+    corpus = _cosine_corpus(emb, "vec_id").withColumn(
+        "bucket", _bucket(F.col("embedding"))
+    )
     probe_keys = F.array(
         F.col("bucket"),
         *[
@@ -947,11 +965,10 @@ def l14_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm").alias("n_j"),
         F.col("bucket").alias("probe"),
     )
-    sim = _dot(F.col("e_i"), F.col("e_j")) / (F.col("n_i") * F.col("n_j"))
     return (
         a.join(b, "probe")
         .where(F.col("vec_i") < F.col("vec_j"))
-        .withColumn("cosine", F.round(sim, 4))
+        .withColumn("cosine", F.round(_cosine("e_i", "e_j", "n_i", "n_j"), 4))
         .select("vec_i", "vec_j", "cosine")
         .orderBy(F.col("cosine").desc(), "vec_i", "vec_j")
         .limit(25)
@@ -1213,47 +1230,24 @@ _DUCK_IVF_MOD = (
 )
 
 
-def _ivf_corpus(emb: DataFrame) -> DataFrame:
-    """Corpus projection for the IVF lanes: each vector with its norm
-    (same sequential-fold double math as l9, so every downstream sim
-    is IEEE-identical to the SQL oracle).
-
-    Zero-norm vectors are EXCLUDED from every cosine-space relation
-    (here and the l9/l11/l14 corpora; _DUCK_COSINE_CORPUS applies the
-    same `norm > 0`): a zero embedding has no direction, cosine is
-    0/0, and under ANSI one such row — a failed encoder call is
-    routine at 100 TB — would otherwise kill the whole job (found by
-    the r16 adversarial corpus). The √N seed stride stays sized from
-    the UNFILTERED manifest count on both engines (_ivf_mod(n) /
-    _DUCK_IVF_MOD), so sizing and membership can't drift."""
-    return emb.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
-    ).where(F.col("norm") > 0)
-
-
 def _argmax_cells(q, norm, cent, cnorm):
     """Vectorized max-cosine centroid index per row of `q`, chunked
     over the seed axis so scratch stays O(nb × IVF_SEED_CHUNK)
     regardless of nlist (see the IVF_SEED_CHUNK note). Semantics are
     EXACTLY np.argmax over the full nb×nlist sim matrix: sims are the
-    ascending-dimension sequential fold of f64 products (`_dot`'s
-    order) divided by norm·cnorm; the running update takes a later
-    chunk only on a STRICT improvement under NaN-greatest ordering,
+    ascending-dimension sequential fold of f64 products
+    (_fold_dot_mat) divided by norm·cnorm; the running update takes a
+    later chunk only on a STRICT improvement under NaN-greatest ordering,
     so the FIRST maximum wins (= the oracle's ORDER BY sim DESC,
     seed_id with centroids sorted by seed_id) and a NaN sim (zero
     norm) beats every number, first NaN taken — matching Spark/DuckDB
     NaN-greatest tie rules."""
-    nb, n_dim = q.shape
+    nb = q.shape[0]
     best = np.full(nb, -np.inf, dtype=np.float64)
     besti = np.zeros(nb, dtype=np.int64)
     for lo in range(0, cent.shape[0], IVF_SEED_CHUNK):
-        s = cent[lo : lo + IVF_SEED_CHUNK]
-        acc = np.zeros((nb, s.shape[0]), dtype=np.float64)
-        for d in range(n_dim):  # ascending dims = _dot's fold order
-            acc += q[:, d, None] * s[None, :, d]
-        sim = acc / (norm[:, None] * cnorm[None, lo : lo + IVF_SEED_CHUNK])
+        hi = lo + IVF_SEED_CHUNK
+        sim = _fold_dot_mat(q, cent[lo:hi]) / (norm[:, None] * cnorm[None, lo:hi])
         li = np.argmax(sim, axis=1)  # first max; NaN is greatest
         lv = sim[np.arange(nb), li]
         upd = (np.isnan(lv) & ~np.isnan(best)) | (lv > best)
@@ -1312,7 +1306,7 @@ def _ivf_train(emb: DataFrame, n: int) -> DataFrame:
     an ACTION at plan-construction time (an index build, like FAISS
     train() before add()); every downstream assignment plan over the
     served arrays is lazy."""
-    corpus = _ivf_corpus(emb)
+    corpus = _cosine_corpus(emb, "vec_id")
     mod = _ivf_mod(n)
     rows = (
         corpus.where(F.col("vec_id") % mod == 0).orderBy("vec_id").collect()
@@ -1389,10 +1383,7 @@ def _ivf_train(emb: DataFrame, n: int) -> DataFrame:
         cent = agg_s[keep].astype(np.float64) / (
             agg_n[keep].astype(np.float64)[:, None] * float(IVF_FP_SCALE)
         )
-        cnorm = np.zeros(len(keep), dtype=np.float64)
-        for d in range(n_dim):  # sequential fold, same as the oracle's
-            cnorm += cent[:, d] * cent[:, d]  # list_sum over x*x
-        cnorm = np.sqrt(cnorm)
+        cnorm = _fold_norms(cent)
     rows = [(i, int(sid[i]), [float(v) for v in cent[i]], float(cnorm[i]))
             for i in range(len(sid))]
     return emb.sparkSession.createDataFrame(
@@ -1401,9 +1392,9 @@ def _ivf_train(emb: DataFrame, n: int) -> DataFrame:
 
 def _ivf_seeds_df(spark: SparkSession, sid, cent, cnorm) -> DataFrame:
     """The trained centroids as a bounded DataFrame (nlist rows) for
-    JVM-side probe ranking (qprobe broadcast joins in l17/l38).
-    Python floats ARE IEEE doubles, so the round-trip is exact and
-    `_dot(q_emb, s_emb)` reproduces the oracle's qe[i]·se[i] fold."""
+    JVM-side probe ranking (_ivf_probe). Python floats ARE IEEE
+    doubles, so the round-trip is exact and the probe's
+    `_cosine(q_emb, s_emb, …)` reproduces the oracle's qe[i]·se[i] fold."""
     rows = [
         (int(s), [float(v) for v in c], float(n))
         for s, c, n in zip(sid, cent, cnorm)
@@ -1457,6 +1448,23 @@ def _ivf_assign(corpus: DataFrame, sid, cent, cnorm) -> DataFrame:
     )
 
 
+def _ivf_probe(queries: DataFrame, seeds: DataFrame, nprobe: int) -> DataFrame:
+    """Each query's `nprobe` nearest trained cells (l17, l38): the
+    queries (_cosine_queries) against the broadcast seeds, ranked per
+    query by cosine, ties to the smaller seed id. Columns: query_id,
+    q_emb, q_norm, cell and its probe rank pr."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("q_sim").desc(), F.col("seed_id")
+    )
+    return (
+        queries.join(F.broadcast(seeds))
+        .withColumn("q_sim", _cosine("q_emb", "s_emb", "q_norm", "s_norm"))
+        .withColumn("pr", F.row_number().over(w))
+        .where(F.col("pr") <= nprobe)
+        .select("query_id", "q_emb", "q_norm", F.col("seed_id").alias("cell"), "pr")
+    )
+
+
 def l17_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat approximate nearest neighbor — the second ANN scale
     path next to l12's LSH (the brief asks for "IVF or LSH"; the
@@ -1482,34 +1490,13 @@ def l17_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     this ANN path has a full DuckDB oracle rather than a rows-only
     check."""
     emb = load(spark, sf_dir, "embeddings")
-    corpus = _ivf_corpus(emb)
+    corpus = _cosine_corpus(emb, "vec_id")
     sid, cent, cnorm = _ivf_index(emb, cache_key=sf_dir)
     seeds = _ivf_seeds_df(spark, sid, cent, cnorm)
     assign = _ivf_assign(corpus, sid, cent, cnorm)
-    qprobe_w = Window.partitionBy("query_id").orderBy(
-        F.col("q_sim").desc(), F.col("seed_id")
-    )
-    qprobe = (
-        corpus.where(F.col("vec_id") < 20)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("norm").alias("q_norm"),
-        )
-        .join(F.broadcast(seeds))
-        .withColumn(
-            "q_sim",
-            _dot(F.col("q_emb"), F.col("s_emb")) / (F.col("q_norm") * F.col("s_norm")),
-        )
-        .withColumn("pr", F.row_number().over(qprobe_w))
-        .where(F.col("pr") <= IVF_NPROBE)
-        .select("query_id", "q_emb", "q_norm", F.col("seed_id").alias("cell"))
-    )
+    qprobe = _ivf_probe(_cosine_queries(corpus, 20), seeds, IVF_NPROBE)
     # Each vector lives in exactly one cell, so the cell join yields each
     # (query, candidate) pair at most once — no distinct needed.
-    sim = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_norm") * F.col("norm")
-    )
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
     return (
         assign.join(
@@ -1517,7 +1504,7 @@ def l17_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             (assign["cell"] == qprobe["cell"])
             & (F.col("vec_id") != F.col("query_id")),
         )
-        .withColumn("sim", sim)
+        .withColumn("sim", _cosine("q_emb", "embedding", "q_norm", "norm"))
         .withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= 5)
         .select(
@@ -2129,9 +2116,7 @@ def l25_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the fingerprint — deterministic min-doc_id survivor, same as
     l5."""
     docs = load(spark, sf_dir, "documents")
-    fp = F.md5(
-        F.array_join(F.array_sort(F.array_distinct(_words(F.col("text")))), " ")
-    )
+    fp = _bag_fp(_words(F.col("text")))
     is_batch = F.col("doc_id") % L25_BATCH_MOD == 7
     with_fp = docs.select("doc_id", "lang", fp.alias("fp"), is_batch.alias("nb"))
     batch = with_fp.where(F.col("nb"))
@@ -2347,14 +2332,7 @@ def l28_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     source catalog, not the corpus), and a final rollup to the
     #sources² matrix. Never an all-pairs document join."""
     docs = load(spark, sf_dir, "documents")
-    fp = docs.select(
-        F.md5(
-            F.concat_ws(
-                " ", F.array_sort(F.array_distinct(F.split(F.col("text"), " ")))
-            )
-        ).alias("h"),
-        "source",
-    ).distinct()
+    fp = docs.select(_bag_fp(_words(F.col("text"))).alias("h"), "source").distinct()
     # The fingerprint relation feeds a diamond (sizes + BOTH sides of
     # the self-join). Eager localCheckpoint instead of persist: same
     # compute-once effect, but the blocks are released by the context
@@ -2643,7 +2621,7 @@ def l35_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairing. Exact cosine on candidates only, same sequential-fold
     double math as l9/l17 → full DuckDB oracle."""
     emb = load(spark, sf_dir, "embeddings")
-    corpus = _ivf_corpus(emb)
+    corpus = _cosine_corpus(emb, "vec_id")
     sid, cent, cnorm = _ivf_index(emb, cache_key=sf_dir)
     # Eager localCheckpoint: the assignment feeds BOTH sides of the
     # cell self-join AND the membership census — without it the plan
@@ -2669,10 +2647,7 @@ def l35_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "cell",
             "vid_b",
-            (
-                _dot(F.col("emb_a"), F.col("emb_b"))
-                / (F.col("norm_a") * F.col("norm_b"))
-            ).alias("cos"),
+            _cosine("emb_a", "emb_b", "norm_a", "norm_b").alias("cos"),
         )
     )
     members = assign.groupBy("cell").agg(F.count("*").alias("n_members"))
@@ -2715,42 +2690,19 @@ def l38_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep length. Same sequential-fold double cosine as l9/l17 →
     full DuckDB oracle."""
     emb = load(spark, sf_dir, "embeddings")
-    corpus = _ivf_corpus(emb)
+    corpus = _cosine_corpus(emb, "vec_id")
     sid, cent, cnorm = _ivf_index(emb, cache_key=sf_dir)
     seeds = _ivf_seeds_df(spark, sid, cent, cnorm)
     assign = _ivf_assign(corpus, sid, cent, cnorm).localCheckpoint(eager=True)
 
-    queries_df = corpus.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
+    queries_df = _cosine_queries(corpus, 20)
     # probe ranking over cells, once, up to the widest sweep point
-    qprobe_w = Window.partitionBy("query_id").orderBy(
-        F.col("q_sim").desc(), F.col("seed_id")
-    )
-    qprobe = (
-        queries_df.join(F.broadcast(seeds))
-        .withColumn(
-            "q_sim",
-            _dot(F.col("q_emb"), F.col("s_emb"))
-            / (F.col("q_norm") * F.col("s_norm")),
-        )
-        .withColumn("pr", F.row_number().over(qprobe_w))
-        .where(F.col("pr") <= max(L38_NPROBES))
-        .select("query_id", "q_emb", "q_norm", F.col("seed_id").alias("cell"), "pr")
-    )
-    sim = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_norm") * F.col("norm")
-    )
-    cand = (
-        assign.join(
-            F.broadcast(qprobe),
-            (assign["cell"] == qprobe["cell"])
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", "vec_id", "pr", sim.alias("sim"))
-    )
+    qprobe = _ivf_probe(queries_df, seeds, max(L38_NPROBES))
+    sim = _cosine("q_emb", "embedding", "q_norm", "norm").alias("sim")
+    cand = assign.join(
+        F.broadcast(qprobe),
+        (assign["cell"] == qprobe["cell"]) & (F.col("vec_id") != F.col("query_id")),
+    ).select("query_id", "vec_id", "pr", sim)
     truth = _brute_topk(emb, 20, 5, include_label=False).select(
         "query_id", "vec_id"
     )
@@ -8475,11 +8427,7 @@ def l79_corpus_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     components (sequential-fold norm, the l9 discipline) and round the
     final statistic, absorbing reduce-order float noise."""
     emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("label").cast("long").alias("label"),
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
-    ).where(F.col("norm") > 0)  # cosine-family rule, see _ivf_corpus
+    corpus = _cosine_corpus(emb, F.col("label").cast("long").alias("label"))
     comp = corpus.select(
         "label", "norm", F.posexplode("embedding").alias("dim", "x")
     ).select(
@@ -8825,8 +8773,8 @@ def l82_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical doubles, so the action partition is deterministic."""
     emb = load(spark, sf_dir, "embeddings")
     # the zero vector has no direction: it can neither be scored
-    # against a prototype nor contribute one (cosine-family rule —
-    # see _ivf_corpus); exact element test, no float subtlety
+    # against a prototype nor contribute one (the _cosine_corpus rule,
+    # as an exact element test: this lane computes no norm)
     emb = emb.where(F.exists("embedding", lambda x: x != F.lit(0.0)))
     comp = emb.select(
         "vec_id",
@@ -9655,8 +9603,7 @@ def l90_takedown_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle for group sizes. At a real 100 TB run the manifest is an
     external table on the same path."""
     docs = load(spark, sf_dir, "documents")
-    ws = _words(F.col("text"))
-    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(ws)), " "))
+    fp = _bag_fp(_words(F.col("text")))
     is_seed = (
         _md5_int60(
             F.concat(F.lit("takedown|"), F.col("doc_id").cast("string"))
@@ -10620,8 +10567,7 @@ def l96_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-guarded identically on both engines for an all-member
     source."""
     docs = load(spark, sf_dir, "documents")
-    ws = _words(F.col("text"))
-    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(ws)), " "))
+    fp = _bag_fp(_words(F.col("text")))
     base = docs.select(
         "doc_id",
         "source",

@@ -695,6 +695,18 @@ def _dec2(name: str):
     return F.col(name).cast("decimal(18,2)")
 
 
+def _disc_price():
+    """A lineitem's discounted price, extendedprice × (1 − discount),
+    in exact DECIMAL(18,4) (r25, r26, r31, r33, r35, r36, r37). The
+    product of two 2-decimal values is exact at 4 decimals, so the
+    rebase is lossless, and it keeps r25's 3-factor charge product
+    inside precision 38 (dec(18,2)³ would overflow and trigger Spark's
+    lossy precision-loss rescale, which DuckDB does differently)."""
+    return (_dec2("l_extendedprice") * (F.lit(1) - _dec2("l_discount"))).cast(
+        "decimal(18,4)"
+    )
+
+
 def r25_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary: one full lineitem scan, eight
     aggregates per (returnflag, linestatus) — THE canonical scan-agg
@@ -713,13 +725,7 @@ def r25_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_spread(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") <= F.lit("2001-06-01").cast("timestamp")
     )
-    # ext*(1-disc) is exact at 4 decimals (2+2), the dec(18,4) rebase
-    # is lossless and keeps the 3-factor charge product inside
-    # precision 38 (dec(18,2)³ would overflow and trigger Spark's
-    # lossy precision-loss rescale, which DuckDB does differently)
-    disc_price = (_dec2("l_extendedprice") * (F.lit(1) - _dec2("l_discount"))).cast(
-        "decimal(18,4)"
-    )
+    disc_price = _disc_price()
     charge = disc_price * (F.lit(1) + _dec2("l_tax"))
     n = F.count("*")
     return (
@@ -779,9 +785,6 @@ def r26_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load(spark, sf_dir, "lineitem")
     supp = load(spark, sf_dir, "supplier")
-    rev = (_dec2("l_extendedprice") * (F.lit(1) - _dec2("l_discount"))).cast(
-        "decimal(18,4)"
-    )
     return (
         cust.join(orders, F.col("c_custkey") == F.col("o_custkey"))
         .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
@@ -791,7 +794,7 @@ def r26_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
         .groupBy("n_name")
-        .agg(F.sum(rev).cast("decimal(18,4)").alias("revenue"))
+        .agg(F.sum(_disc_price()).cast("decimal(18,4)").alias("revenue"))
         .orderBy(F.col("revenue").desc(), "n_name")
     )
 
@@ -966,9 +969,7 @@ def r31_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
     part = load(spark, sf_dir, "part").select("p_partkey", "p_type")
-    disc = (_dec2("l_extendedprice") * (F.lit(1) - _dec2("l_discount"))).cast(
-        "decimal(18,4)"
-    )
+    disc = _disc_price()
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy(F.date_trunc("month", "l_shipdate").alias("month"))
@@ -1054,13 +1055,10 @@ def r33_disjunctive_predicate_revenue(spark: SparkSession, sf_dir: str) -> DataF
         | arm("Brand#21", 10, 20, 10)
         | arm("Brand#31", 20, 30, 15)
     )
-    disc = (_dec2("l_extendedprice") * (F.lit(1) - _dec2("l_discount"))).cast(
-        "decimal(18,4)"
-    )
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .where(cond)
-        .agg(F.sum(disc).alias("revenue"), F.count("*").alias("n_lines"))
+        .agg(F.sum(_disc_price()).alias("revenue"), F.count("*").alias("n_lines"))
     )
 
 
@@ -1143,9 +1141,6 @@ def r35_nation_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair_ok = (
         (F.col("supp_nation") == a) & (F.col("cust_nation") == b)
     ) | ((F.col("supp_nation") == b) & (F.col("cust_nation") == a))
-    disc = (_dec2("l_extendedprice") * (F.lit(1) - _dec2("l_discount"))).cast(
-        "decimal(18,4)"
-    )
     return (
         li.join(supp, li.l_suppkey == supp.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
@@ -1156,7 +1151,7 @@ def r35_nation_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.year("l_shipdate").alias("l_year"),
         )
-        .agg(F.sum(disc).alias("revenue"))
+        .agg(F.sum(_disc_price()).alias("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
@@ -1203,9 +1198,7 @@ def r36_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     li = load(spark, sf_dir, "lineitem")
-    disc = (_dec2("l_extendedprice") * (F.lit(1) - _dec2("l_discount"))).cast(
-        "decimal(18,4)"
-    )
+    disc = _disc_price()
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(supp_flag, li.l_suppkey == supp_flag.s_suppkey)
@@ -1250,15 +1243,12 @@ def r37_returned_item_reporting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cust = load(spark, sf_dir, "customer")
     nat = F.broadcast(load(spark, sf_dir, "nation"))
-    disc = (_dec2("l_extendedprice") * (F.lit(1) - _dec2("l_discount"))).cast(
-        "decimal(18,4)"
-    )
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .join(nat, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.sum(disc).alias("revenue"))
+        .agg(F.sum(_disc_price()).alias("revenue"))
         .select(
             "c_custkey",
             "c_name",

@@ -62,14 +62,14 @@ def write_corpus_build(
     TABLE, which makes the CLI's printed audit a read-back proof, not
     an in-plan claim. Returns (counters, audit_df)."""
     from etl_wlg_metlink_spark.operators.llm_pipeline import (
+        _bag_fp,
         _corpus_audit_rollup,
         _corpus_build_kept,
+        _words,
     )
 
     kept = _corpus_build_kept(spark, sf_dir)
-    fp = F.md5(
-        F.array_join(F.array_sort(F.array_distinct(F.split(F.col("text"), " "))), " ")
-    )
+    fp = _bag_fp(_words(F.col("text")))
     out = kept.withColumn("fp", fp).repartition(n_buckets, F.col("fp"))
     (
         out.write.mode("overwrite")

@@ -438,14 +438,12 @@ def corpus_ingest_dedup_run(
     Because the staged replay ascends in doc_id, first-arrival
     equals global min-doc_id per fingerprint, which is what makes the
     result batch-oracle-checkable (l5's window rule)."""
+    from etl_wlg_metlink_spark.operators.llm_pipeline import _bag_fp, _words
+
     _, stream = staged_replay(spark, sf_dir, "documents", "doc_id", n_batches)
     survivors_dir = _tracked_mkdtemp(prefix="docs_survivors_")
 
-    fp = F.md5(
-        F.array_join(
-            F.array_sort(F.array_distinct(F.split(F.col("text"), " "))), " "
-        )
-    )
+    fp = _bag_fp(_words(F.col("text")))
 
     def ingest_batch(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
@@ -801,6 +799,7 @@ def ivf_ingest_run(
     because cell assignment is per-vector — independent of arrival
     order and batch splits."""
     from etl_wlg_metlink_spark.operators.llm_pipeline import (
+        _cosine_corpus,
         _ivf_assign,
         _ivf_index,
     )
@@ -816,28 +815,7 @@ def ivf_ingest_run(
     )
 
     def assign_batch(batch_df: DataFrame) -> DataFrame:
-        corpus = batch_df.select(
-            "vec_id",
-            "embedding",
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        "embedding",
-                        "embedding",
-                        lambda x, y: x.cast("double") * y.cast("double"),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ).alias("norm"),
-        ).where(
-            # same corpus rule as the batch IVF build (_ivf_corpus): a
-            # zero-norm vector has no direction — drop it at ingest
-            # instead of assigning it a NaN-cosine cell (one failed
-            # encoder call is routine at 100 TB and must not poison
-            # the index or, under ANSI, kill the stream)
-            F.col("norm") > 0
-        )
+        corpus = _cosine_corpus(batch_df, "vec_id")
         return _ivf_assign(corpus, sid, cent, cnorm).select("vec_id", "cell")
 
     # bounded: one row per vector

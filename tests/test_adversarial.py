@@ -61,7 +61,7 @@ def test_ivf_corpus_excludes_zero_norm(spark):
         [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.0, 2.0])],
         "vec_id long, embedding array<float>",
     )
-    kept = sorted(r["vec_id"] for r in lp._ivf_corpus(emb).collect())
+    kept = sorted(r["vec_id"] for r in lp._cosine_corpus(emb, "vec_id").collect())
     assert kept == [1, 3]
 
 

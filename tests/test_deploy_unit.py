@@ -68,9 +68,16 @@ def test_workflows_reference_existing_paths():
             for token in rel.split():
                 if token.startswith("-"):
                     continue
+                # a test id names its file and a test defined in it
+                token, _, test = token.partition("::")
                 assert os.path.exists(os.path.join(REPO, token)), (
                     f"{wf} references missing path {token}"
                 )
+                if test:
+                    with open(os.path.join(REPO, token)) as f:
+                        assert f"def {test}(" in f.read(), (
+                            f"{wf} references missing test {token}::{test}"
+                        )
     # pyproject carries the ruff config the workflows run against
     with open(os.path.join(REPO, "pyproject.toml")) as f:
         assert "[tool.ruff" in f.read()

@@ -207,6 +207,36 @@ def test_no_pinned_persist_in_package():
     assert offenders == [], f"caching outside tables.pinned: {offenders}"
 
 
+def test_corpus_rules_have_one_definition():
+    """The cosine space (the sequential-fold norm and the zero-norm
+    filter) and the exact-dup bag-of-words md5 fingerprint are each
+    written once in the package, in llm_pipeline, and the streaming
+    runners fold no dot product of their own."""
+    import pathlib
+    import re
+
+    pkg = (
+        pathlib.Path(__file__).resolve().parent.parent
+        / "etl_wlg_metlink_spark"
+    )
+    rules = {
+        "norm": r"F\.sqrt\(_dot\(",
+        "zero-norm filter": r'F\.col\("norm"\)>0',
+        "bag fingerprint": (
+            r'F\.md5\(F\.\w+\((?:"",)?F\.array_sort\(F\.array_distinct\('
+        ),
+    }
+    found = {rule: [] for rule in rules}
+    for p in sorted(pkg.rglob("*.py")):
+        src = re.sub(r"\s+", "", p.read_text(encoding="utf-8"))
+        for rule, pat in rules.items():
+            found[rule] += [p.name] * len(re.findall(pat, src))
+        if p.name == "runners.py":
+            runner_folds = src.count("F.zip_with")
+    assert found == {rule: ["llm_pipeline.py"] for rule in rules}, found
+    assert runner_folds == 0, "runners.py folds its own dot product"
+
+
 def _banked_exponents():
     """(name, t_sf01, t_sf1, exponent) for every lane banked in BOTH
     BENCH_DETAIL.json (sf0.1) and BENCH_DETAIL_sf1.json (10× data)."""

@@ -45,6 +45,50 @@ def test_oracle_sql_parses_in_duckdb(sf_dir):
             pytest.fail(f"oracle for {name!r} failed in duckdb: {e}")
 
 
+#: Lanes built on the shared corpus and pricing rules (the cosine
+#: space, the bag-of-words fingerprint, the discounted price), checked
+#: against their DuckDB oracles with tools/check_correctness.compare.
+RULE_LANES = (
+    "l4_fingerprint", "l5_exact_dedup", "l9_cosine_topk",
+    "l11_knn_label_vote", "l14_cosine_near_dup", "l17_ivf_ann",
+    "l25_incremental_dedup", "l28_cross_source_overlap",
+    "l35_semantic_dedup", "l38_ivf_recall_sweep", "l79_corpus_diversity",
+    "l90_takedown_propagation", "l96_bloom_contamination",
+    "s8_streaming_ingest_dedup", "s13_streaming_ann_ingest",
+    "r25_pricing_summary", "r26_local_supplier_volume",
+    "r31_promo_revenue_share", "r33_disjunctive_predicate_revenue",
+    "r35_nation_volume_shipping", "r36_market_share",
+    "r37_returned_item_reporting",
+)
+
+
+@pytest.fixture(scope="session")
+def oracle(sf_dir):
+    """tools/check_correctness.py as a module, and one DuckDB
+    connection over the sf_dir tables."""
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parent.parent / "tools" / "check_correctness.py"
+    spec = importlib.util.spec_from_file_location("check_correctness", path)
+    cc = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cc)
+    con = cc.oracle_connection(sf_dir)
+    yield cc, con
+    con.close()
+
+
+@pytest.mark.parametrize("name", RULE_LANES)
+def test_lane_matches_oracle(spark, sf_dir, oracle, name):
+    cc, con = oracle
+    sdf = queries()[name](spark, sf_dir)
+    rel = con.sql(oracle_sql()[name])
+    problems = cc.compare(
+        sdf.schema, sdf.collect(), list(rel.columns), rel.types, rel.fetchall()
+    )
+    assert problems == [], f"{name}: {problems}"
+
+
 @pytest.mark.parametrize("name", sorted(queries()))
 def test_query_runs_at_sf0001(spark, sf_dir, name):
     df = queries()[name](spark, sf_dir)
@@ -2005,8 +2049,8 @@ def test_ivf_trained_index_deterministic_and_cached(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from etl_wlg_metlink_spark.operators.llm_pipeline import (
+        _cosine_corpus,
         _ivf_assign,
-        _ivf_corpus,
         _ivf_index,
     )
     from etl_wlg_metlink_spark.tables import load
@@ -2030,7 +2074,7 @@ def test_ivf_trained_index_deterministic_and_cached(spark, sf_dir):
 
     cells = {
         r["cell"]
-        for r in _ivf_assign(_ivf_corpus(emb), sid1, cent1, cnorm1)
+        for r in _ivf_assign(_cosine_corpus(emb, "vec_id"), sid1, cent1, cnorm1)
         .select("cell")
         .distinct()
         .collect()
@@ -2149,7 +2193,7 @@ def test_ivf_index_served_from_storage(spark, tmp_path, monkeypatch):
     def boom(*a, **k):
         raise AssertionError("retrained: storage artifact was not used")
 
-    monkeypatch.setattr(lp, "_ivf_corpus", boom)
+    monkeypatch.setattr(lp, "_cosine_corpus", boom)
     sid2, cent2, cn2 = lp._ivf_index(
         spark.read.parquet(path), cache_key=path
     )
@@ -3376,6 +3420,42 @@ def test_l94_normalize_nfc_controls_whitespace(spark, tmp_path):
         ).fetchall()
     }
     assert oracle == expected
+
+
+def test_l28_null_text_is_not_shared(spark, tmp_path):
+    """A NULL text has a NULL bag-of-words fingerprint, which matches
+    nothing: two sources that each hold one NULL-text doc and one
+    shared real doc overlap by exactly the real doc, on Spark and on
+    the DuckDB oracle over the same files."""
+    import duckdb as _duck
+
+    from __spark_entry__ import oracle_sql
+    from etl_wlg_metlink_spark.operators import llm_pipeline as lp
+
+    rows = [
+        (0, None, "en", "web", 0),
+        (1, "the same words", "en", "web", 14),
+        (2, None, "en", "wiki", 0),
+        (3, "words the same", "en", "wiki", 14),
+    ]
+    spark.createDataFrame(
+        rows, "doc_id bigint, text string, lang string, source string, n_chars int"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+
+    got = sorted(
+        tuple(r)
+        for r in lp.l28_cross_source_overlap(spark, str(tmp_path)).collect()
+    )
+    con = _duck.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
+    )
+    oracle = sorted(
+        con.execute(oracle_sql()["l28_cross_source_overlap"]).fetchall()
+    )
+    assert got == oracle
+    assert len(got) == 1 and got[0][:3] == ("web", "wiki", 1)
 
 
 def _hll_py(keys, p=8, q=52, s=54):

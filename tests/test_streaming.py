@@ -562,8 +562,8 @@ def test_s13_streaming_ivf_matches_batch_assignment(spark, sf_dir):
     assignment is per-vector — arrival order and batch splits must not
     matter), and a 1-batch replay must agree with the 4-batch one."""
     from etl_wlg_metlink_spark.operators.llm_pipeline import (
+        _cosine_corpus,
         _ivf_assign,
-        _ivf_corpus,
         _ivf_index,
     )
     from etl_wlg_metlink_spark.tables import load
@@ -575,7 +575,7 @@ def test_s13_streaming_ivf_matches_batch_assignment(spark, sf_dir):
     sid, cent, cnorm = _ivf_index(emb, cache_key=sf_dir)
     batch = {
         r["vec_id"]: r["cell"]
-        for r in _ivf_assign(_ivf_corpus(emb), sid, cent, cnorm)
+        for r in _ivf_assign(_cosine_corpus(emb, "vec_id"), sid, cent, cnorm)
         .select("vec_id", "cell")
         .collect()
     }

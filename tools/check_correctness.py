@@ -127,6 +127,47 @@ def _multiset(rows, colnames):
     return Counter(tuple(_norm(r[i]) for i in order) for r in rows)
 
 
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def compare(schema, srows, dcols, dtypes, drows) -> list[str]:
+    """What differs between a Spark lane result (its schema and
+    collected rows) and its DuckDB oracle (column names, DuckDB types,
+    fetched rows): row count, sorted column names, per-column type
+    class and the multiset of normalized row values. Empty when the
+    two agree."""
+    scols = schema.names
+    stypes = {f.name: _spark_type_label(f.dataType) for f in schema.fields}
+    problems = []
+    if len(srows) != len(drows):
+        problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
+    if sorted(scols) != sorted(dcols):
+        problems.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
+    else:
+        dlabels = [_duck_type_label(str(t)) for t in dtypes]
+        type_mismatch = [
+            f"{c}: spark={stypes[c]} duck={dt}"
+            for c, dt in zip(dcols, dlabels)
+            if stypes.get(c) != dt
+        ]
+        if type_mismatch:
+            problems.append("types " + "; ".join(type_mismatch))
+    if not problems:
+        sm, dm = _multiset(srows, scols), _multiset(drows, dcols)
+        if sm != dm:
+            diff_s = list((sm - dm).items())[:3]
+            diff_d = list((dm - sm).items())[:3]
+            problems.append(f"values spark-only={diff_s} duck-only={diff_d}")
+    return problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -146,11 +187,7 @@ def main() -> int:
         )
     else:
         spark = build_session(app_name="check_correctness")
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
 
     qs, os_ = queries(), oracle_sql()
     n_pass = n_fail = n_rowsonly = 0
@@ -160,7 +197,6 @@ def main() -> int:
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
-            scols = sdf.columns
             srows = sdf.collect()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark raised {type(e).__name__}: {e}")
@@ -172,33 +208,12 @@ def main() -> int:
             continue
         try:
             rel = con.sql(os_[name])
-            dcols = list(rel.columns)
-            dtypes = [_duck_type_label(str(t)) for t in rel.types]
-            drows = rel.fetchall()
+            dcols, dtypes, drows = list(rel.columns), rel.types, rel.fetchall()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: duckdb raised {type(e).__name__}: {e}")
             n_fail += 1
             continue
-        stypes = {f.name: _spark_type_label(f.dataType) for f in sdf.schema.fields}
-        problems = []
-        if len(srows) != len(drows):
-            problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
-        else:
-            type_mismatch = [
-                f"{c}: spark={stypes[c]} duck={dt}"
-                for c, dt in zip(dcols, dtypes)
-                if stypes.get(c) != dt
-            ]
-            if type_mismatch:
-                problems.append("types " + "; ".join(type_mismatch))
-        if not problems:
-            sm, dm = _multiset(srows, scols), _multiset(drows, dcols)
-            if sm != dm:
-                diff_s = list((sm - dm).items())[:3]
-                diff_d = list((dm - sm).items())[:3]
-                problems.append(f"values spark-only={diff_s} duck-only={diff_d}")
+        problems = compare(sdf.schema, srows, dcols, dtypes, drows)
         if problems:
             print(f"FAIL {name}: {'; '.join(problems)}")
             n_fail += 1

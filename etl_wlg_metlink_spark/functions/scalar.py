@@ -114,14 +114,11 @@ def kv_remarks(*pairs: tuple[str, Column | None]) -> Column:
     value Column is null is omitted (reference task.ts:254-286: optional
     Occupancy/Speed lines only when the source field is present).
 
-    ``concat_ws`` skips nulls, which is exactly the conditional-
-    inclusion semantics of the reference's remarks builder.
+    ``concat`` is NULL when its value is, and ``concat_ws`` skips
+    nulls, which is exactly the conditional-inclusion semantics of the
+    reference's remarks builder.
     """
-    lines = []
-    for key, value in pairs:
-        if value is None:
-            continue
-        lines.append(
-            F.when(value.isNotNull(), F.concat(F.lit(f"{key}: "), value))
-        )
-    return F.concat_ws("\n", *lines)
+    return F.concat_ws(
+        "\n",
+        *(F.concat(F.lit(f"{key}: "), value) for key, value in pairs if value is not None),
+    )

@@ -1,7 +1,7 @@
 """M4 — the composed Metlink pipeline: the reference's `control()` loop
 (task.ts:147-342) as ONE lazy DataFrame expression tree: explode →
-P2-P4 filters → D1-D13 derivations (exact JS semantics) → P5 config
-filter → A1 last-wins dedup → Feature structs.
+D1-D3 classification → P2-P5 filters → A1 last-wins dedup → D6-D13
+Feature structs (exact JS semantics).
 
 Each rule is written once and every consumer calls it: `_drop_reason`
 is the P2-P4 filter of both the feature build and the counters,
@@ -9,11 +9,13 @@ is the P2-P4 filter of both the feature build and the counters,
 per-class CoT type, colour and icon (also the d2/d11 lanes'), and the
 remaining D rules are the `functions/scalar.py` helpers.
 
-Catalyst fuses the whole thing into a single whole-stage-codegen'd
-pass over the input (the reference's hand-ordered early-exit loop,
-recovered automatically). Partitioned input (m4's bulk entities) takes
-exactly one shuffle: the dedup window. One envelope (`run`) is one
-partition, where the dedup and the ordering run with no exchange.
+`build_features` is three DataFrame steps before its Feature select:
+classify, filter, and a group-by per cot_id that keeps the first
+position and the newest row. Partitioned input (m4's bulk entities)
+takes exactly one shuffle, the group-by's. One envelope (`run`) is one
+partition, where the dedup and the ordering run with no exchange: with
+the source's leaf and parse and the sink's JSON select, a poll is nine
+DataFrame steps and one job.
 
 The Column tree is built once per config and JVM (`_projection`); each
 call only applies it.
@@ -22,10 +24,10 @@ call only applies it.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import lru_cache, reduce
+from functools import lru_cache
 
 from pyspark import SparkContext
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_wlg_metlink_spark.config import MetlinkConfig
@@ -98,9 +100,8 @@ def _classify(e: Column) -> tuple[Column, Column, Column]:
     trip_id = e["vehicle"]["trip"]["trip_id"]
     route_id = split_head(trip_id, "__")
     is_ship = trip_id.startswith("QDF") | (route_id == "MIF")
-    is_train = reduce(
-        lambda a, b: a | b, (trip_id.startswith(p) for p in TRAIN_PREFIXES)
-    )
+    # every train prefix is three characters: startsWith any of them
+    is_train = trip_id.substr(1, 3).isin(*TRAIN_PREFIXES)
     vehicle_type = F.when(is_ship, "Ship").when(is_train, "Train").otherwise("Bus")
     return route_id, vehicle_type, cot_key(vehicle_type, e["vehicle"]["vehicle"]["id"])
 
@@ -110,13 +111,10 @@ class _Projection:
     """The Columns `build_features` applies, in the order it applies
     them."""
 
-    keep: Column  # P2-P4
     classified: tuple[Column, ...]  # idx, entity and the D1-D3 columns
-    shown: Column  # P5
-    feature: Column  # D6-D13
-    latest: Column  # A1: row number, newest first, per cot_id
-    first_idx: Column  # A1: first-insertion position per cot_id
-    survives: Column  # A1: the newest row
+    keep: Column  # P2-P5
+    latest: tuple[Column, ...]  # A1: first position and newest row per cot_id
+    feature: Column  # D6-D13 of the newest row
 
 
 @lru_cache(maxsize=16)
@@ -126,21 +124,30 @@ def _projection(config: MetlinkConfig, gateway) -> _Projection:
     ``gateway`` (the live py4j gateway) is only part of the cache key:
     Columns are JVM objects, so a restarted JVM builds the tree again."""
     e = F.col("entity")
-    trip = e["vehicle"]["trip"]
-    pos = e["vehicle"]["position"]
-    veh_id = e["vehicle"]["vehicle"]["id"]
-    occ = e["vehicle"]["occupancy_status"]
-
     route_id, vehicle_type, cot_id = _classify(e)
     classified = (
         F.col("idx"),
-        e.alias("entity"),
+        e,
         route_id.alias("route_id"),
         vehicle_type.alias("vehicle_type"),
         cot_id.alias("cot_id"),
     )
 
+    # A1 (task.ts:191, 312) — last-wins dedup: per cot_id, the row of
+    # the highest idx (Map.set) at the position of the lowest (Map
+    # iteration order). Not dropDuplicates, which keeps an arbitrary
+    # row under parallelism.
+    latest = (
+        F.min("idx").alias("first_idx"),
+        *(F.max_by(c, "idx").alias(c) for c in ("entity", "route_id", "vehicle_type")),
+    )
+
+    # The Feature reads the newest row's columns, by the same names.
     route_id, vehicle_type = F.col("route_id"), F.col("vehicle_type")
+    trip = e["vehicle"]["trip"]
+    pos = e["vehicle"]["position"]
+    veh_id = e["vehicle"]["vehicle"]["id"]
+    occ = e["vehicle"]["occupancy_status"]
     cot_type, marker_color, icon = vehicle_style(vehicle_type)
 
     # D6 (task.ts:254-286) — remarks. Required lines always render (JS
@@ -196,19 +203,23 @@ def _projection(config: MetlinkConfig, gateway) -> _Projection:
         ).alias("geometry"),
     )
 
-    # A1 (task.ts:191, 312) — last-wins dedup, ordered window (NOT
-    # dropDuplicates: nondeterministic under parallelism).
-    w = Window.partitionBy("cot_id").orderBy(F.col("idx").desc())
-    wf = Window.partitionBy("cot_id")
     return _Projection(
-        keep=_drop_reason(e).isNull(),
         classified=classified,
         # P5 (task.ts:245-249) — config-driven show/hide.
-        shown=F.col("vehicle_type").isin(config.enabled_types()),
+        keep=_drop_reason(e).isNull() & vehicle_type.isin(config.enabled_types()),
+        latest=latest,
         feature=feature.alias("feature"),
-        latest=F.row_number().over(w),
-        first_idx=F.min("idx").over(wf),
-        survives=F.col("rn") == 1,
+    )
+
+
+def _newest(entities: DataFrame, p: _Projection) -> DataFrame:
+    """The rows that pass P2-P5, deduped: one (cot_id, first_idx,
+    entity, route_id, vehicle_type) row per cot_id, the newest."""
+    return (
+        entities.select(*p.classified)
+        .where(p.keep)
+        .groupBy("cot_id")
+        .agg(*p.latest)
     )
 
 
@@ -219,22 +230,12 @@ def build_features(entities: DataFrame, config: MetlinkConfig) -> DataFrame:
     dedup and output order both follow it, exactly like the
     reference's `Map.set` (task.ts:191, 312: later array entries
     replace earlier ones; iteration order = first-insertion order).
-    The dedup window is the one shuffle, unless ``entities`` is
-    already in one partition (see `run`).
+    The dedup's group-by is the one shuffle, unless ``entities`` is
+    already in one partition (see `run`). The Feature is built after
+    the dedup, once per surviving vehicle.
     """
     p = _projection(config, SparkContext._gateway)
-    staged = (
-        entities.where(p.keep)
-        .select(*p.classified)
-        .where(p.shown)
-        .select("idx", "cot_id", p.feature)
-    )
-    return (
-        staged.withColumn("rn", p.latest)
-        .withColumn("first_idx", p.first_idx)
-        .where(p.survives)
-        .select("first_idx", "feature")
-    )
+    return _newest(entities, p).select("first_idx", p.feature)
 
 
 def pipeline_metric_exprs(exact_submitted: bool = True) -> list:
@@ -280,13 +281,9 @@ def run(entities: DataFrame, config: MetlinkConfig | None = None) -> DataFrame:
     poll, the CLI and each stream micro-batch.
 
     One envelope is O(10²-10³) rows, so the input is coalesced to one
-    partition. One partition already satisfies the dedup window's
-    clustering and the sort's ordering, so both run inside it with no
-    exchange: the whole envelope is one job of one task. The bulk
-    callers of `build_features` keep its one shuffle."""
-    cfg = config or MetlinkConfig()
-    return (
-        build_features(entities.coalesce(1), cfg)
-        .orderBy("first_idx")
-        .select("feature")
-    )
+    partition. One partition already satisfies the dedup's clustering
+    and the sort's ordering, so both run inside it with no exchange:
+    the whole envelope is one job of one task. The bulk callers of
+    `build_features` keep its one shuffle."""
+    p = _projection(config or MetlinkConfig(), SparkContext._gateway)
+    return _newest(entities.coalesce(1), p).orderBy("first_idx").select(p.feature)

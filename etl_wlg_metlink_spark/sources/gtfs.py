@@ -27,8 +27,10 @@ from __future__ import annotations
 import json
 import sys
 from collections.abc import Callable
+from functools import lru_cache
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_wlg_metlink_spark.schemas import VEHICLE_POSITIONS_RESPONSE
@@ -61,13 +63,28 @@ def entities_from_json(spark: SparkSession, raw_json: str, debug: bool = False) 
         raise InvalidEnvelopeError(
             "Invalid API response format: missing entity data"
         )
-    # A literal on a one-row, one-partition range, not createDataFrame:
-    # that plans as a Python-RDD scan (`Scan ExistingRDD`), which ships
-    # the envelope through a Python worker. Here the parse stays in the
-    # JVM, and one partition is what `metlink.run` needs to run the
-    # envelope with no exchange.
-    raw_df = spark.range(0, 1, 1, 1).select(F.lit(raw_json).alias("raw"))
-    return parse_envelopes(raw_df, "raw")
+    # The envelope as a one-row LocalRelation built in the JVM. Its scan
+    # does not print its rows, so the plan text Spark renders for every
+    # execution stays small; a literal would put the whole ~220 KB
+    # envelope into it, twice. createDataFrame from Python would plan a
+    # Python-RDD scan (`Scan ExistingRDD`) and ship the envelope through
+    # a Python worker.
+    return parse_envelopes(_envelope_relation(spark, raw_json), "raw")
+
+
+def _envelope_relation(spark: SparkSession, raw_json: str) -> DataFrame:
+    """``raw_json`` as the one ``raw`` string of a JVM-built
+    LocalRelation (``SparkSession.createDataFrame(List[Row],
+    StructType)`` through py4j)."""
+    gateway = SparkContext._gateway
+    jvm = gateway.jvm
+    values = gateway.new_array(jvm.java.lang.Object, 1)
+    values[0] = raw_json
+    rows = jvm.java.util.Collections.singletonList(
+        jvm.org.apache.spark.sql.RowFactory.create(values)
+    )
+    schema = jvm.org.apache.spark.sql.types.StructType.fromDDL("raw string")
+    return DataFrame(spark._jsparkSession.createDataFrame(rows, schema), spark)
 
 
 def parse_envelopes(
@@ -75,21 +92,27 @@ def parse_envelopes(
 ) -> DataFrame:
     """Envelope strings in ``column`` → one (idx, entity) row per
     entity, next to the ``keep`` columns: the one parse every envelope
-    path uses. ``from_json`` with the declared schema, then
-    ``posexplode``: the array position is the authoritative ingest
-    order, which last-wins dedup keys on; Catalyst prunes unread
-    entity fields.
+    path uses, in one select. ``from_json`` with the declared schema,
+    then ``posexplode``: ``idx``, the int array position, is the
+    authoritative ingest order, which last-wins dedup keys on; Catalyst
+    prunes unread entity fields.
 
     An unparseable envelope parses to a NULL body. The inner explode
     drops it (no rows); ``outer=True`` keeps it as one
     ``entity IS NULL`` row for the caller to count or drop."""
-    parsed = raw.select(
-        *keep, F.from_json(F.col(column), VEHICLE_POSITIONS_RESPONSE).alias("body")
+    return raw.select(
+        *keep,
+        _entities_column(column, outer, SparkContext._gateway).alias("idx", "entity"),
     )
+
+
+@lru_cache(maxsize=16)
+def _entities_column(column: str, outer: bool, gateway) -> Column:
+    """``posexplode(from_json(column).entity)``, built once per column,
+    explode kind and JVM (``gateway`` is only the cache key): building
+    ``from_json`` sends the whole schema to the JVM."""
     explode = F.posexplode_outer if outer else F.posexplode
-    return parsed.select(
-        *keep, explode("body.entity").alias("idx", "entity")
-    ).withColumn("idx", F.col("idx").cast("long"))
+    return explode(F.from_json(F.col(column), VEHICLE_POSITIONS_RESPONSE)["entity"])
 
 
 def snapshot_entities(spark: SparkSession, snapshot_dir: str) -> DataFrame:

@@ -17,7 +17,6 @@ import json
 import pytest
 
 from etl_wlg_metlink_spark.config import MetlinkConfig
-from etl_wlg_metlink_spark.operators import metlink_queries
 from etl_wlg_metlink_spark.pipelines import metlink
 from etl_wlg_metlink_spark.pipelines.gtfs_fixture import (
     FIXTURE_ENTITIES,
@@ -110,10 +109,30 @@ def test_stream_batch_has_no_exchange(spark, tmp_path):
     assert "Exchange" not in _executed_plan(df)
 
 
-def test_bulk_build_keeps_its_shuffle(spark, sf_dir):
-    """The one-partition path belongs to `run` alone: m4's partitioned
-    `build_features` still hash-partitions for the dedup window."""
-    entities = metlink_queries._synthetic_entities(spark, sf_dir)
+def test_poll_plan_does_not_carry_the_envelope(spark):
+    """The poll's leaf is a LocalRelation, whose scan does not print
+    its rows: no vehicle or trip id of the envelope reaches the plan
+    text Spark renders for every execution, and the plan stays small."""
+    df = geojson._feature_json(
+        metlink.run(gtfs.entities_from_json(spark, RAW_JSON))
+    )
+    plan = _executed_plan(df)
+    assert "LocalTableScan" in plan
+    assert "Range" not in plan
+    for e in FIXTURE_ENTITIES:
+        vehicle = e.get("vehicle") or {}
+        ids = ((vehicle.get("vehicle") or {}).get("id"),
+               (vehicle.get("trip") or {}).get("trip_id"))
+        for value in filter(None, ids):
+            assert value not in plan, f"{value!r} is in the plan"
+    assert len(plan) < 20_000
+
+
+def test_bulk_build_keeps_its_shuffle(spark):
+    """The one-partition path belongs to `run` alone: partitioned
+    input to `build_features` (m4's shape) still hash-partitions for
+    the dedup."""
+    entities = gtfs.entities_from_json(spark, RAW_JSON).repartition(4)
     plan = _executed_plan(metlink.build_features(entities, MetlinkConfig()))
     assert "Exchange hashpartitioning(cot_id" in plan
 

@@ -54,11 +54,6 @@ class MetlinkConfig:
             out.append("Ship")
         return out
 
-    def describe(self) -> dict[str, object]:
-        """S7-adjacent introspection: config surface as a plain dict
-        (≈ the reference returning `Env` from schema(), task.ts:129)."""
-        return {f.name: getattr(self, f.name) for f in fields(self)}
-
     @classmethod
     def from_file_env(cls, path: str) -> "MetlinkConfig":
         """Scheduled-job config resolution (the reference's deploy

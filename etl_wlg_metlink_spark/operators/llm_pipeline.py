@@ -15,6 +15,11 @@ Scale rules:
   taken over one cosine space, `_cosine_corpus`, which drops
   zero-norm vectors;
 - exact dedup keys on one bag-of-words fingerprint, `_bag_fp`;
+- each sketch has one definition, which its batch lanes, streaming
+  twins and oracles share: count-min `_cms_grid`/`_cms_topk` (l92,
+  s15), HyperLogLog `_hll_ranks`/`_hll_finalize` (l95 and s16 at
+  p = 8, r12 at p = 12) and the Lloyd pass `_lloyd_sums` (l16 and the
+  IVF quantizer of l17, l35, l38 and s13);
 - everything except the explicitly-marked Arrow/Pandas passes (the
   multimodal decoders, the numpy blocks of l12/l14/l16 and the IVF
   index, l94's NFC) is built-in Catalyst expressions (whole-stage
@@ -70,6 +75,80 @@ def _md5_int60(col):
 
 def _duck_md5_int60(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
+
+
+#: The count-min grid (l92, s15): CMS_D hash rows of CMS_W buckets,
+#: queried for the L92_TOP_K heaviest keys.
+CMS_D = 4
+CMS_W = 64
+L92_TOP_K = 20
+
+
+def _cms_buckets(df: DataFrame, key: str, *cols: str) -> DataFrame:
+    """``df``'s ``key`` and ``cols`` once per hash row ``r``, with the
+    key's bucket in that row: ``bkt`` is the md5 hash of "cms", r, "|"
+    and the key, concatenated, mod CMS_W."""
+    r = F.explode(F.sequence(F.lit(0), F.lit(CMS_D - 1))).alias("r")
+    bucket = _md5_int60(
+        F.concat(F.lit("cms"), F.col("r").cast("string"), F.lit("|"), F.col(key))
+    ) % CMS_W
+    return df.select(key, *cols, r).select(key, *cols, "r", bucket.alias("bkt"))
+
+
+def _cms_grid(counts: DataFrame, key: str) -> DataFrame:
+    """The count-min grid (r, bkt, cell) of a (``key``, c) count
+    relation: cell = Σ c over the keys hashing there. Grids merge by
+    summing cells, in any order."""
+    return (
+        _cms_buckets(counts, key, "c")
+        .groupBy("r", "bkt")
+        .agg(F.sum("c").alias("cell"))
+    )
+
+
+def _cms_topk(counts: DataFrame, grid: DataFrame, key: str) -> DataFrame:
+    """The L92_TOP_K heaviest keys of ``counts`` (count desc, then
+    key), each with its true count, its estimate (the minimum of its
+    CMS_D cells, never below the truth) and the overcount."""
+    top = counts.orderBy(F.col("c").desc(), key).limit(L92_TOP_K)
+    return (
+        _cms_buckets(top, key, "c")
+        .join(F.broadcast(grid), ["r", "bkt"])
+        .groupBy(key, "c")
+        .agg(F.min("cell").alias("est"))
+        .select(
+            key,
+            F.col("c").alias("true_count"),
+            F.col("est").alias("est_count"),
+            (F.col("est") - F.col("c")).alias("overcount"),
+        )
+    )
+
+
+def _duck_cms_topk(counts: str, key: str) -> str:
+    """DuckDB twin of `_cms_grid` + `_cms_topk` over the count query
+    ``counts`` (columns ``key``, c)."""
+    rows = f"(VALUES {', '.join(f'({r})' for r in range(CMS_D))}) AS r(r)"
+    bkt = (
+        _duck_md5_int60(f"'cms' || CAST(r AS VARCHAR) || '|' || {key}")
+        + f" % {CMS_W}"
+    )
+    return f"""
+    WITH counts AS ({counts}),
+    sketch AS (
+      SELECT r.r, {bkt} AS bkt, SUM(c) AS cell
+      FROM counts, {rows} GROUP BY 1, 2
+    ),
+    top AS (
+      SELECT {key}, c FROM counts ORDER BY c DESC, {key} LIMIT {L92_TOP_K}
+    ),
+    probes AS (SELECT {key}, c, r.r, {bkt} AS bkt FROM top, {rows})
+    SELECT {key}, c AS true_count,
+           CAST(MIN(cell) AS BIGINT) AS est_count,
+           CAST(MIN(cell) - c AS BIGINT) AS overcount
+    FROM probes JOIN sketch USING (r, bkt)
+    GROUP BY {key}, c
+"""
 
 
 # --------------------------------------------------------------------------
@@ -1028,31 +1107,88 @@ def _sq_dists(x, cent):
     return d
 
 
+def _lloyd_sums(vectors: DataFrame, k: int, n_dim: int, assign):
+    """One Lloyd pass over ``vectors`` (an ``embedding`` column and
+    whatever ``assign`` reads): ``assign(batch, x)`` maps an Arrow
+    batch and its nb×n_dim f64 matrix to each row's centroid index in
+    [0, k). Returns (cnt, isum): the rows per centroid and their
+    FIXED-POINT int64 sums, floor(x·2^20 + 0.5) per element (exact
+    IEEE on f32-origin values, see IVF_FP_SCALE). l16 and the IVF
+    quantizer (_ivf_train) both train with it.
+
+    ONE mapInArrow job assigns every row AND emits per-task partial
+    sums (the map-side combine MLlib's treeAggregate does), reduced ON
+    THE CLUSTER by one (cidx, d) hash aggregate over a long row per
+    partial sum: at any task count the shuffle is ≤ tasks×k×(n_dim+1)
+    longs and the driver receives only the k×(n_dim+1) totals. (An
+    aggregate of n_dim sum columns measured ~0.4 s slower per pass at
+    sf0.1 on 4 cores.) Int sums commute, so any partitioning and
+    reduce order give the same totals, and the mean
+    CAST(isum AS DOUBLE)/(cnt·2^20) is bit-identical to the oracles'."""
+    def partials(batches):
+        import pyarrow as pa
+
+        cnt = np.zeros(k, dtype=np.int64)
+        isum = np.zeros((k, n_dim), dtype=np.int64)
+        for batch in batches:
+            nb = batch.num_rows
+            if nb == 0:
+                continue
+            # flatten() honors list offsets; exact f32→f64 widening
+            x = np.asarray(
+                batch.column("embedding").flatten(), dtype=np.float64
+            ).reshape(nb, n_dim)
+            a = assign(batch, x)
+            cnt += np.bincount(a, minlength=k)
+            xq = np.floor(x * float(IVF_FP_SCALE) + 0.5).astype(np.int64)
+            np.add.at(isum, a, xq)
+        hit = np.flatnonzero(cnt)
+        if len(hit):
+            # one (cidx, d, v) row per partial sum: element d < n_dim,
+            # and the count at d = n_dim
+            v = np.concatenate([isum[hit], cnt[hit, None]], axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(hit, n_dim + 1)),
+                    pa.array(np.tile(np.arange(n_dim + 1), len(hit))),
+                    pa.array(v.ravel()),
+                ],
+                names=["cidx", "d", "v"],
+            )
+
+    reduced = (
+        vectors.mapInArrow(partials, "cidx long, d long, v long")
+        .groupBy("cidx", "d")
+        .agg(F.sum("v").alias("v"))
+        .toPandas()
+    )
+    sums = np.zeros((k, n_dim + 1), dtype=np.int64)
+    sums[reduced["cidx"].to_numpy(), reduced["d"].to_numpy()] = reduced["v"].to_numpy()
+    return sums[:, n_dim], sums[:, :n_dim]
+
+
 def l16_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Lloyd's k-means over the embedding column — the
     iterative-algorithm pattern: per iteration, broadcast the k
-    centroids (driver-side numpy, k×64 floats), then ONE fused
-    mapInPandas pass that assigns each vector to its nearest centroid
-    AND emits per-partition PARTIAL centroid sums (k rows of
-    (count, sum-vector) per partition — the map-side combine MLlib's
-    treeAggregate does). The shuffle that recomputes centroids is then
-    partitions×k rows instead of the N×64 exploded rows the naive
-    posexplode+avg update shuffles: at 100 TB that is the difference
-    between a per-iteration corpus-sized shuffle and a few kilobytes
-    per task. Deterministic init (vectors 0..k-1).
+    centroids (driver-side numpy, k×64 floats), then ONE `_lloyd_sums`
+    pass that assigns each vector to its nearest centroid AND sums
+    each centroid's members per task, reduced on the cluster (the
+    pass the IVF quantizer trains with). The shuffle that recomputes
+    centroids is then tasks×k rows instead of the N×64 exploded rows
+    the naive posexplode+avg update shuffles: at 100 TB that is the
+    difference between a per-iteration corpus-sized shuffle and a few
+    kilobytes per task. Deterministic init (vectors 0..k-1).
 
     Per-iteration cost = one Arrow map pass + one k-row agg; the only
     driver-side data is the k×64 centroid matrix, so the loop scales
-    to any corpus size.
+    to any corpus size and task count.
 
     FULL DuckDB oracle (VERDICT r14 item 1 — promoted from rows-only
     via the `_duck_ivf_iter` pattern): every cross-engine-sensitive
     float op is made order-independent or fold-ordered —
-    (a) partial centroid sums are FIXED-POINT int64
-        (floor(x·2^20 + 0.5), exact IEEE on f32-origin values — see
-        IVF_FP_SCALE), so the per-cluster sum commutes across
-        partitions and the mean CAST(isum AS DOUBLE)/(count·2^20) is
-        bit-identical to the oracle's however Spark partitions;
+    (a) centroid sums are `_lloyd_sums`' fixed-point int64, so the
+        mean CAST(isum AS DOUBLE)/(count·2^20) is bit-identical to
+        the oracle's however Spark partitions;
     (b) squared distances are the ascending-dim sequential fold
         (_sq_dists) matching the oracle's list_sum, with numpy argmin
         = first-min ≡ ORDER BY dist ASC, k ASC (no NaN possible);
@@ -1065,105 +1201,73 @@ def l16_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         ONE double division + ROUND(…, 4) on both engines."""
     from pyspark.sql.functions import pandas_udf
 
-    emb = load_spread(spark, sf_dir, "embeddings")
-
-    centroids = np.stack(
-        [
-            np.array(r["embedding"], dtype=np.float64)
-            for r in emb.where(F.col("vec_id") < KMEANS_K)
-            .orderBy("vec_id")
-            .collect()
-        ]
-    )
-
-    for _ in range(KMEANS_ITERS):
-        c = centroids  # bind current value for the UDF closure
-
-        def partial_sums(batches):
-            cnt = np.zeros(KMEANS_K, dtype=np.int64)
-            isum = np.zeros((KMEANS_K, 64), dtype=np.int64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                x = np.stack(pdf["embedding"].values).astype(np.float64)
-                a = _sq_dists(x, c).argmin(axis=1)
-                cnt += np.bincount(a, minlength=KMEANS_K)
-                xq = np.floor(x * float(IVF_FP_SCALE) + 0.5).astype(np.int64)
-                np.add.at(isum, a, xq)
-            hit = np.flatnonzero(cnt)
-            if len(hit):
-                yield pd.DataFrame(
-                    {
-                        "k": hit.astype("int32"),
-                        "n": cnt[hit],
-                        "s": [isum[j].tolist() for j in hit],
-                    }
-                )
-
-        partial = emb.select("embedding").mapInPandas(
-            partial_sums, "k int, n long, s array<long>"
+    def fit(emb: DataFrame) -> DataFrame:
+        # the k init rows are sorted on the driver: a Spark sort would
+        # cost a range-partition sampling job per build
+        init = emb.where(F.col("vec_id") < KMEANS_K).collect()
+        centroids = np.array(
+            [r["embedding"] for r in sorted(init, key=lambda r: r["vec_id"])],
+            dtype=np.float64,
         )
-        # Driver-side reduce of the ≤ tasks×k partial rows (each k×64
-        # int64 — the shape MLlib's treeAggregate collects). One job
-        # per iteration, no shuffle at all; at extreme task counts
-        # (≥10⁴) insert one k-keyed groupBy level before the collect,
-        # which caps driver traffic at k×64 again (int sums commute,
-        # so any reduce tree yields the same totals bit-for-bit).
-        cnt = np.zeros(KMEANS_K, dtype=np.int64)
-        isum = np.zeros((KMEANS_K, 64), dtype=np.int64)
-        for r in partial.collect():
-            cnt[r["k"]] += r["n"]
-            isum[r["k"]] += np.array(r["s"], dtype=np.int64)
-        centroids = centroids.copy()
-        for j in np.flatnonzero(cnt):
-            # same two IEEE ops as the oracle's
+
+        for _ in range(KMEANS_ITERS):
+            c = centroids  # bind the current value for the closure
+            cnt, isum = _lloyd_sums(
+                emb.select("embedding"),
+                KMEANS_K,
+                c.shape[1],
+                lambda batch, x: _sq_dists(x, c).argmin(axis=1),
+            )
+            # an empty cluster keeps its previous centroid; the others take
+            # the same two IEEE ops as the oracle's
             # CAST(isum AS DOUBLE) / (COUNT(*) * 2^20)
-            centroids[j] = isum[j].astype(np.float64) / (
-                np.float64(cnt[j]) * np.float64(IVF_FP_SCALE)
+            hit = np.flatnonzero(cnt)
+            centroids = centroids.copy()
+            centroids[hit] = isum[hit].astype(np.float64) / (
+                cnt[hit].astype(np.float64)[:, None] * float(IVF_FP_SCALE)
             )
 
-    c_final = centroids
+        c_final = centroids
 
-    @pandas_udf("k int, idist long")
-    def assign_with_dist(e: pd.Series) -> pd.DataFrame:
-        x = np.stack(e.values).astype(np.float64)
-        d = _sq_dists(x, c_final)
-        a = d.argmin(axis=1)
-        dist = d[np.arange(len(a)), a]
-        return pd.DataFrame(
-            {
-                "k": a.astype("int32"),
-                "idist": np.floor(
-                    dist * float(IVF_FP_SCALE) + 0.5
-                ).astype(np.int64),
-            }
+        @pandas_udf("k int, idist long")
+        def assign_with_dist(e: pd.Series) -> pd.DataFrame:
+            x = np.stack(e.values).astype(np.float64)
+            d = _sq_dists(x, c_final)
+            a = d.argmin(axis=1)
+            dist = d[np.arange(len(a)), a]
+            idist = np.floor(dist * float(IVF_FP_SCALE) + 0.5).astype(np.int64)
+            return pd.DataFrame({"k": a.astype("int32"), "idist": idist})
+
+        final = emb.select(assign_with_dist("embedding").alias("a")).select(
+            F.col("a.k").alias("cluster"), F.col("a.idist").alias("idist")
+        )
+        # Inertia sums ~2^28-scale int64 terms; a plain long SUM would wrap
+        # silently under ANSI-off at ~2^35 rows/cluster while the oracle's
+        # DuckDB SUM widens to HUGEINT (the l87 divergence class). Sum in
+        # decimal(38,0) — same exact integers inside the headroom — and
+        # promote an overflow NULL to a loud error so both engines fail the
+        # same way past ~10^29 rows (ADVICE r15).
+        isum = F.sum(F.col("idist").cast("decimal(38,0)"))
+        isum_guarded = F.when(isum.isNotNull(), isum).otherwise(
+            F.raise_error(
+                F.lit("l16 inertia overflowed decimal(38,0); shard the corpus")
+            ).cast("decimal(38,0)")
+        )
+        return (
+            final.groupBy("cluster")
+            .agg(
+                F.count("*").alias("n_members"),
+                F.round(
+                    isum_guarded.cast("double") / F.lit(float(IVF_FP_SCALE)), 4
+                ).alias("inertia"),
+            )
+            .orderBy("cluster")
         )
 
-    final = emb.select(assign_with_dist("embedding").alias("a")).select(
-        F.col("a.k").alias("cluster"), F.col("a.idist").alias("idist")
-    )
-    # Inertia sums ~2^28-scale int64 terms; a plain long SUM would wrap
-    # silently under ANSI-off at ~2^35 rows/cluster while the oracle's
-    # DuckDB SUM widens to HUGEINT (the l87 divergence class). Sum in
-    # decimal(38,0) — same exact integers inside the headroom — and
-    # promote an overflow NULL to a loud error so both engines fail the
-    # same way past ~10^29 rows (ADVICE r15).
-    isum = F.sum(F.col("idist").cast("decimal(38,0)"))
-    isum_guarded = F.when(isum.isNotNull(), isum).otherwise(
-        F.raise_error(
-            F.lit("l16 inertia overflowed decimal(38,0); shard the corpus")
-        ).cast("decimal(38,0)")
-    )
-    return (
-        final.groupBy("cluster")
-        .agg(
-            F.count("*").alias("n_members"),
-            F.round(
-                isum_guarded.cast("double") / F.lit(float(IVF_FP_SCALE)), 4
-            ).alias("inertia"),
-        )
-        .orderBy("cluster")
-    )
+    # pinned: the init rows, every Lloyd pass and the final assignment
+    # read the corpus, so it is scanned and spread once (MLlib's
+    # KMeans caches its input for the same reason)
+    return pinned(load_spread(spark, sf_dir, "embeddings"), fit)
 
 
 #: IVF coarse-quantizer sizing: nlist ≈ √N (seed stride = ⌊√N⌋).
@@ -1284,22 +1388,16 @@ def _ivf_train(emb: DataFrame, n: int) -> DataFrame:
     """Train the coarse quantizer (VERDICT r10 item 1 — the promised
     trained IVF): Lloyd k-means over the corpus, initialized from the
     deterministic √N seed grid, refined for IVF_TRAIN_ITERS passes
-    with l16's fused pattern — per pass ONE mapInArrow job that
-    assigns every vector to its max-cosine centroid AND emits
-    per-partition PARTIAL per-cell sums, then reduced ON THE CLUSTER
-    (VERDICT r11 item 1): groupBy("cidx") over the 64-col unpack is a
-    hash aggregate with map-side partial combine, so however many
-    partitions the corpus has (P = 10^4 at the 100 TB design point),
-    shuffle traffic is ≤ tasks×nlist tiny rows and the driver
-    receives ONLY the final nlist×(1+64) reduced matrix — √N×64 ≈
-    51 MB even at N = 10^10.
+    of `_lloyd_sums` (l16's pass) that assign every vector to its
+    max-cosine centroid (_argmax_cells). However many partitions the
+    corpus has (P = 10^4 at the 100 TB design point), the driver
+    receives ONLY the reduced nlist×(1+64) matrix — √N×64 ≈ 51 MB
+    even at N = 10^10.
 
     Cross-engine bit-exactness (the DuckDB oracle unrolls the same
-    iterations as CTEs): partial sums are FIXED-POINT int64 —
-    floor(x·2^20 + 0.5), exact IEEE on both engines (see
-    IVF_FP_SCALE) — so the per-cell sum is order-independent and the
-    mean CAST(isum AS DOUBLE)/(count·2^20) is bit-identical however
-    Spark partitions the corpus. Cells left empty by a pass are
+    iterations as CTEs): the pass's sums are fixed-point int64, so
+    the mean CAST(isum AS DOUBLE)/(count·2^20) is bit-identical
+    however Spark partitions the corpus. Cells left empty by a pass are
     dropped (FAISS drops/reassigns empty cells); surviving cells keep
     their original seed vec_id as a stable label. Returns the
     nlist-row (pos, seed_id, cent, cnorm) relation. NOTE: training is
@@ -1322,62 +1420,13 @@ def _ivf_train(emb: DataFrame, n: int) -> DataFrame:
         if not len(sid):
             break
         c_cent, c_norm = cent, cnorm  # bind for the closure
-        nlist, n_dim = c_cent.shape
-
-        def partials(batches):
-            import pyarrow as pa
-
-            isum = np.zeros((nlist, n_dim), dtype=np.int64)
-            cnt = np.zeros(nlist, dtype=np.int64)
-            for batch in batches:
-                nb = batch.num_rows
-                if nb == 0:
-                    continue
-                q = np.asarray(
-                    batch.column("embedding").flatten(), dtype=np.float64
-                ).reshape(nb, n_dim)
-                nrm = np.asarray(batch.column("norm"), dtype=np.float64)
-                a = _argmax_cells(q, nrm, c_cent, c_norm)
-                xq = np.floor(q * float(IVF_FP_SCALE) + 0.5).astype(np.int64)
-                cnt += np.bincount(a, minlength=nlist)
-                np.add.at(isum, a, xq)
-            hit = np.flatnonzero(cnt)
-            if len(hit):
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(hit),
-                        pa.array(cnt[hit]),
-                        pa.array(
-                            [isum[j].tolist() for j in hit],
-                            type=pa.list_(pa.int64()),
-                        ),
-                    ],
-                    names=["cidx", "n", "s"],
-                )
-
-        # Cluster-side reduce: int64 sums are commutative/associative,
-        # so the hash aggregate (map-side combine → one tiny shuffle)
-        # yields bit-identical totals to any other reduce order; only
-        # nlist reduced rows ever reach the driver.
-        reduced = (
-            corpus.mapInArrow(partials, "cidx long, n long, s array<long>")
-            .select(
-                "cidx",
-                "n",
-                *[F.col("s").getItem(d).alias(f"s{d}") for d in range(n_dim)],
-            )
-            .groupBy("cidx")
-            .agg(
-                F.sum("n").alias("n"),
-                *[F.sum(f"s{d}").alias(f"s{d}") for d in range(n_dim)],
-            )
-            .collect()
+        agg_n, agg_s = _lloyd_sums(
+            corpus,
+            *c_cent.shape,
+            lambda batch, q: _argmax_cells(
+                q, np.asarray(batch.column("norm"), dtype=np.float64), c_cent, c_norm
+            ),
         )
-        agg_n = np.zeros(nlist, dtype=np.int64)
-        agg_s = np.zeros((nlist, n_dim), dtype=np.int64)
-        for r in reduced:
-            agg_n[r["cidx"]] = r["n"]
-            agg_s[r["cidx"]] = r[2:]  # the n_dim sum cols after cidx, n
         keep = np.flatnonzero(agg_n)
         sid = sid[keep]
         cent = agg_s[keep].astype(np.float64) / (
@@ -9770,11 +9819,6 @@ ORACLE["l91_minhash_calibration"] = f"""
 # l92: count-min sketch heavy-hitter audit
 # --------------------------------------------------------------------------
 
-CMS_D = 4    # hash rows
-CMS_W = 64   # buckets per row
-L92_TOP_K = 20
-
-
 def l92_countmin_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min-sketch heavy-hitter audit (Cormode & Muthukrishnan
     2005): a d×w integer sketch answers frequency queries in O(d)
@@ -9799,76 +9843,17 @@ def l92_countmin_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count("*").alias("c"))
     )
-    rows = F.explode(
-        F.sequence(F.lit(0), F.lit(CMS_D - 1))
-    )
-    bucket = (
-        _md5_int60(
-            F.concat(
-                F.lit("cms"),
-                F.col("r").cast("string"),
-                F.lit("|"),
-                F.col("w"),
-            )
-        )
-        % CMS_W
-    )
-    sketch = (
-        counts.select("w", "c", rows.alias("r"))
-        .select("r", bucket.alias("bkt"), "c")
-        .groupBy("r", "bkt")
-        .agg(F.sum("c").alias("cell"))
-    )
-    top = counts.orderBy(F.col("c").desc(), "w").limit(L92_TOP_K)
-    probes = top.select("w", "c", rows.alias("r")).select(
-        "w", "c", "r", bucket.alias("bkt")
-    )
-    return (
-        probes.join(F.broadcast(sketch), ["r", "bkt"])
-        .groupBy("w", "c")
-        .agg(F.min("cell").alias("est"))
-        .select(
-            "w",
-            F.col("c").alias("true_count"),
-            F.col("est").alias("est_count"),
-            (F.col("est") - F.col("c")).alias("overcount"),
-        )
-    )
+    return _cms_topk(counts, _cms_grid(counts, "w"), "w")
 
 
 QUERIES["l92_countmin_heavyhitters"] = l92_countmin_heavyhitters
 
-_DUCK_CMS_BUCKET = (
-    _duck_md5_int60("'cms' || CAST(r AS VARCHAR) || '|' || w")
-    + f" % {CMS_W}"
+ORACLE["l92_countmin_heavyhitters"] = _duck_cms_topk(
+    """SELECT w, COUNT(*) AS c
+       FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+       GROUP BY 1""",
+    "w",
 )
-
-ORACLE["l92_countmin_heavyhitters"] = f"""
-    WITH counts AS (
-      SELECT w, COUNT(*) AS c
-      FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-      GROUP BY 1
-    ),
-    expanded AS (
-      SELECT w, c, r.r, {_DUCK_CMS_BUCKET} AS bkt
-      FROM counts, (VALUES (0), (1), (2), (3)) AS r(r)
-    ),
-    sketch AS (
-      SELECT r, bkt, SUM(c) AS cell FROM expanded GROUP BY 1, 2
-    ),
-    top AS (
-      SELECT w, c FROM counts ORDER BY c DESC, w LIMIT {L92_TOP_K}
-    ),
-    probes AS (
-      SELECT w, c, r.r, {_DUCK_CMS_BUCKET} AS bkt
-      FROM top, (VALUES (0), (1), (2), (3)) AS r(r)
-    )
-    SELECT w, c AS true_count,
-           CAST(MIN(cell) AS BIGINT) AS est_count,
-           CAST(MIN(cell) - c AS BIGINT) AS overcount
-    FROM probes JOIN sketch USING (r, bkt)
-    GROUP BY w, c
-"""
 
 
 # --------------------------------------------------------------------------
@@ -10334,22 +10319,110 @@ ORACLE["l12_lsh_ann_recall"] = (
 # family: count-min = frequency, Bloom = membership, HLL = cardinality)
 # --------------------------------------------------------------------------
 
-#: 2^HLL_P registers. p=8 → 256 registers, standard error
-#: 1.04/√256 ≈ 6.5% — the classic small-HLL operating point; a 100 TB
-#: run bumps p to 12-14 (still KB-sized state).
+#: l95's register exponent: 2^8 = 256 registers, standard error
+#: 1.04/√256 ≈ 6.5%, the classic small-HLL operating point. r12 runs
+#: the same construction at p = 12 (4096 registers, ≈ 1.6%).
 HLL_P = 8
-HLL_M = 1 << HLL_P
-#: rank operates on the remaining Q = 60 − p hash bits
-HLL_Q = 60 - HLL_P
-#: integer scale for the harmonic sum: Z_int = Σ 2^(S − M_j) is EXACT
-#: int64 (max term 2^(S−1), 256 terms + 2^S per empty register —
-#: bounded by 2^62 at S = 54), so the register merge AND the harmonic
-#: sum are order-independent across engines; the only float ops are
-#: one division and the final rounds, on bit-identical inputs.
-HLL_S = 54
-#: bias correction α_m · m² · 2^S folded into one literal both engines
-#: parse to the same double (correctly-rounded decimal→binary).
-_HLL_CONST = (0.7213 / (1 + 1.079 / HLL_M)) * HLL_M * HLL_M * float(1 << HLL_S)
+
+
+def _hll_ranks(df: DataFrame, key: str, groups: list[str], p: int) -> DataFrame:
+    """(*groups, register j, rank) per row of ``df`` — the map-side
+    HLL expressions (all JVM built-ins), shared by l95's batch pass,
+    s16's per-micro-batch pass and r12, so all three build the SAME
+    sketch: h is the 60-bit md5 hash of 'hll|' || ``key``, j = h mod
+    2^p, and the rank is the leading-zero count of the rank word
+    w = h >> p (Q = 60 − p bits) plus one, from its base-2 length
+    (Spark bin() and DuckDB format('{:b}') agree; w = 0 → Q + 1)."""
+    q = 60 - p
+    h = _md5_int60(F.concat(F.lit("hll|"), F.col(key).cast("string")))
+    base = df.select(*groups, h.alias("hv"))
+    w = F.shiftright(F.col("hv"), p)
+    bitlen = F.length(F.bin(w))
+    rank = F.when(w == 0, F.lit(q + 1)).otherwise(F.lit(q + 1) - bitlen)
+    return base.select(
+        *groups,
+        (F.col("hv") % (1 << p)).alias("j"),
+        rank.alias("rank"),
+    )
+
+
+def _hll_finalize(regs: DataFrame, groups: list[str], p: int, *aggs) -> DataFrame:
+    """Merged registers (*groups, j, m_j) → one row per group with
+    ``registers_hit``, the extra ``aggs`` over the register rows, the
+    estimator arm ``mode`` and the unrounded estimate ``est``. ONE
+    estimator for l95, s16 and r12.
+
+    The harmonic sum Z = Σ_j 2^(S − M_j), plus 2^S per empty
+    register, is an exact int64 at scale S = 62 − p: every term is at
+    most 2^S and there are m = 2^p of them, so Z ≤ 2^62. The register
+    merge and the sum are therefore order-independent across engines,
+    and the only float ops are E = α_m·m²·2^S / Z (one literal both
+    engines parse to the same double, one division) and, when
+    E ≤ 2.5m and registers are empty, linear counting m·ln(m/V)."""
+    m, s = 1 << p, 62 - p
+    alpha = (0.7213 / (1 + 1.079 / m)) * m * m * float(1 << s)
+    agg = regs.groupBy(*groups).agg(
+        F.sum(
+            F.expr(f"shiftleft(CAST(1 AS BIGINT), {s} - m_j)")
+        ).alias("z_present"),
+        F.count("*").alias("registers_hit"),
+        *aggs,
+    )
+    v_empty = F.lit(m).cast("long") - F.col("registers_hit")
+    z = F.col("z_present") + v_empty * F.lit(1 << s)
+    est_raw = F.lit(alpha) / z.cast("double")
+    use_lc = (est_raw <= F.lit(2.5 * m)) & (v_empty > 0)
+    est = F.when(
+        use_lc,
+        F.lit(float(m)) * F.log(F.lit(float(m)) / v_empty.cast("double")),
+    ).otherwise(est_raw)
+    return agg.select(
+        "*",
+        F.when(use_lc, F.lit("linear")).otherwise(F.lit("raw")).alias("mode"),
+        est.alias("est"),
+    )
+
+
+def _duck_hll_agg(table: str, key: str, p: int, *groups: str) -> str:
+    """DuckDB twin of `_hll_ranks`, the register MAX and
+    `_hll_finalize`'s sums over ``table``: CTEs ending in ``agg``
+    (*groups, z_present, registers_hit)."""
+    m, s, q = 1 << p, 62 - p, 60 - p
+    g = "".join(f"{c}, " for c in groups)
+    by = f"GROUP BY {', '.join(groups)}" if groups else ""
+    hv = _duck_md5_int60(f"'hll|' || CAST({key} AS VARCHAR)")
+    return f"""h AS (SELECT {g}{hv} AS hv FROM {table}),
+    r AS (
+      SELECT {g}hv % {m} AS j,
+             CASE WHEN (hv >> {p}) = 0 THEN {q + 1}
+                  ELSE {q + 1} - length(format('{{:b}}', hv >> {p}))
+             END AS rank
+      FROM h
+    ),
+    regs AS (SELECT {g}j, MAX(rank) AS m_j FROM r GROUP BY {g}j),
+    agg AS (
+      SELECT {g}SUM(1::BIGINT << ({s} - m_j)) AS z_present,
+             COUNT(*) AS registers_hit
+      FROM regs {by}
+    )"""
+
+
+def _duck_hll_est(p: int) -> tuple[str, str]:
+    """DuckDB twin of `_hll_finalize`'s (linear-arm test, estimate)
+    over ``agg``'s columns."""
+    m, s = 1 << p, 62 - p
+    alpha = (0.7213 / (1 + 1.079 / m)) * m * m * float(1 << s)
+    raw = (
+        f"{alpha!r} / CAST(z_present + ({m} - registers_hit) "
+        f"* (1::BIGINT << {s}) AS DOUBLE)"
+    )
+    use_lc = f"({raw} <= {2.5 * m!r} AND registers_hit < {m})"
+    est = (
+        f"CASE WHEN {use_lc} THEN {float(m)!r} * "
+        f"ln({float(m)!r} / CAST({m} - registers_hit AS DOUBLE)) "
+        f"ELSE {raw} END"
+    )
+    return use_lc, est
 
 
 def l95_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10364,22 +10437,18 @@ def l95_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
       h   = md5-derived 60-bit key hash (deterministic both engines)
       j   = h mod 2^p  (register), w = h >> p  (rank word)
       rank = Q − bitlength(w) + 1  (leading-zero count + 1; bitlength
-             via the base-2 string — Spark conv() and DuckDB
+             via the base-2 string — Spark bin() and DuckDB
              format('{:b}') agree exactly, w = 0 → Q + 1)
       M_j  = MAX(rank) per register — an integer max, commutes
-      Z    = Σ_j 2^(S − M_j) as int64 (absent registers contribute
-             2^S), exact, order-independent
+      Z    = Σ_j 2^(S − M_j) as int64, S = 62 − p (absent
+             registers contribute 2^S), exact, order-independent
       E    = α_m·m²·2^S / Z — ONE double division on exact ints.
 
-    Relation to r12_approx_distinct (relational.py): SAME portable-HLL
-    construction (md5 hash, bitlength rank, exact-int harmonic sum),
-    deliberately two lanes — r12 is the GLOBAL relational operator
-    (one corpus-wide 4096-register set, estimate-only, accuracy pinned
-    in pytest because the exact twin was its slowest-sf1-lane cost),
-    l95 is the GROUPED calibration form (per-key register sets, the
-    exact COUNT(DISTINCT) carried in-lane as ground truth, both
-    estimator branches exercised across the banked SFs) with s16 as
-    its streaming-maintenance twin.
+    r12_approx_distinct (relational.py) runs the same construction
+    (`_hll_ranks`, `_hll_finalize`) ungrouped at p = 12 and reports
+    the global estimate only; l95 is its grouped calibration form,
+    with the exact COUNT(DISTINCT) per event type carried as ground
+    truth, and s16 maintains l95's registers from a stream.
 
     Small-range correction (Flajolet §4): when E_raw ≤ 2.5m and empty
     registers remain, the raw estimator biases high and the standard
@@ -10401,122 +10470,51 @@ def l95_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the calibration ground truth, same pattern as l91's MinHash
     calibration. At 100 TB you ship only the sketch half."""
     events = load(spark, sf_dir, "events")
-    regs = _hll_ranks(events).groupBy("event_type", "j").agg(
-        F.max("rank").alias("m_j")
-    )
+    regs = _hll_ranks(events, "user_id", ["event_type"], HLL_P).groupBy(
+        "event_type", "j"
+    ).agg(F.max("rank").alias("m_j"))
     exact = events.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_exact")
     )
-    return _hll_finalize(regs, exact)
+    return _hll_report(regs, exact)
 
 
-def _hll_ranks(events: DataFrame) -> DataFrame:
-    """(event_type, register j, rank) per event row — the map-side
-    sketch expressions (all JVM built-ins), shared by l95's batch pass
-    and s16's per-micro-batch pass so the two sketches are the SAME
-    sketch."""
-    h = _md5_int60(
-        F.concat(F.lit("hll|"), F.col("user_id").cast("string"))
-    )
-    base = events.select("event_type", h.alias("hv"))
-    w = F.shiftright(F.col("hv"), HLL_P)
-    bitlen = F.length(F.conv(w.cast("string"), 10, 2))
-    rank = F.when(w == 0, F.lit(HLL_Q + 1)).otherwise(
-        F.lit(HLL_Q + 1) - bitlen
-    )
-    return base.select(
-        "event_type",
-        (F.col("hv") % HLL_M).alias("j"),
-        rank.alias("rank"),
-    )
-
-
-def _hll_finalize(regs: DataFrame, exact: DataFrame) -> DataFrame:
-    """Merged registers (event_type, j, m_j) + exact counts → the
-    calibrated estimate relation. ONE estimator shared by l95 (batch)
-    and s16 (streaming serve), so the lanes cannot drift; both
-    therefore share l95's DuckDB oracle verbatim."""
-    agg = regs.groupBy("event_type").agg(
-        F.sum(
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), {HLL_S} - m_j)")
-        ).alias("z_present"),
-        F.count("*").alias("registers_hit"),
-    )
-    v_empty = F.lit(HLL_M).cast("long") - F.col("registers_hit")
-    z = F.col("z_present") + v_empty * F.lit(1 << HLL_S)
-    est_raw = F.lit(_HLL_CONST) / z.cast("double")
-    use_lc = (est_raw <= F.lit(2.5 * HLL_M)) & (v_empty > 0)
-    est = F.when(
-        use_lc,
-        F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v_empty.cast("double")),
-    ).otherwise(est_raw)
+def _hll_report(regs: DataFrame, exact: DataFrame) -> DataFrame:
+    """Merged registers (event_type, j, m_j) + exact counts → l95's
+    calibrated estimate relation, shared by l95 (batch) and s16
+    (streaming serve), which therefore share l95's DuckDB oracle."""
+    est = F.col("est")
     return (
-        agg.join(F.broadcast(exact), "event_type")
+        _hll_finalize(regs, ["event_type"], HLL_P)
+        .join(F.broadcast(exact), "event_type")
         .select(
             "event_type",
             "n_exact",
             "registers_hit",
-            F.when(use_lc, F.lit("linear")).otherwise(F.lit("raw")).alias(
-                "mode"
-            ),
+            "mode",
             F.round(est, 4).alias("hll_est"),
-            F.round(
-                (est - F.col("n_exact")) / F.col("n_exact"), 4
-            ).alias("rel_err"),
+            F.round((est - F.col("n_exact")) / F.col("n_exact"), 4).alias(
+                "rel_err"
+            ),
         )
     )
 
 
 QUERIES["l95_hll_cardinality"] = l95_hll_cardinality
 
-_DUCK_HLL_Z = (
-    f"CAST(z_present + ({HLL_M} - registers_hit) "
-    f"* (1::BIGINT << {HLL_S}) AS DOUBLE)"
-)
-_DUCK_HLL_RAW = f"{_HLL_CONST!r} / {_DUCK_HLL_Z}"
-_DUCK_HLL_USE_LC = (
-    f"({_DUCK_HLL_RAW} <= {2.5 * HLL_M!r} "
-    f"AND registers_hit < {HLL_M})"
-)
-_DUCK_HLL_EST = (
-    f"CASE WHEN {_DUCK_HLL_USE_LC} THEN {float(HLL_M)!r} * "
-    f"ln({float(HLL_M)!r} / CAST({HLL_M} - registers_hit AS DOUBLE)) "
-    f"ELSE {_DUCK_HLL_RAW} END"
-)
+_L95_LC, _L95_EST = _duck_hll_est(HLL_P)
 
 ORACLE["l95_hll_cardinality"] = f"""
-    WITH h AS (
-      SELECT event_type,
-             {_duck_md5_int60("'hll|' || CAST(user_id AS VARCHAR)")} AS hv
-      FROM events
-    ),
-    r AS (
-      SELECT event_type, hv % {HLL_M} AS j,
-             CASE WHEN (hv >> {HLL_P}) = 0 THEN {HLL_Q + 1}
-                  ELSE {HLL_Q + 1}
-                       - length(format('{{:b}}', hv >> {HLL_P}))
-             END AS rank
-      FROM h
-    ),
-    regs AS (
-      SELECT event_type, j, MAX(rank) AS m_j FROM r GROUP BY 1, 2
-    ),
-    agg AS (
-      SELECT event_type,
-             SUM(1::BIGINT << ({HLL_S} - m_j)) AS z_present,
-             COUNT(*) AS registers_hit
-      FROM regs GROUP BY 1
-    ),
+    WITH {_duck_hll_agg("events", "user_id", HLL_P, "event_type")},
     ex AS (
       SELECT event_type, COUNT(DISTINCT user_id) AS n_exact
       FROM events GROUP BY 1
     )
     SELECT event_type, n_exact,
            CAST(registers_hit AS BIGINT) AS registers_hit,
-           CASE WHEN {_DUCK_HLL_USE_LC} THEN 'linear' ELSE 'raw' END
-             AS mode,
-           ROUND({_DUCK_HLL_EST}, 4) AS hll_est,
-           ROUND(({_DUCK_HLL_EST} - n_exact) / n_exact, 4) AS rel_err
+           CASE WHEN {_L95_LC} THEN 'linear' ELSE 'raw' END AS mode,
+           ROUND({_L95_EST}, 4) AS hll_est,
+           ROUND(({_L95_EST} - n_exact) / n_exact, 4) AS rel_err
     FROM agg JOIN ex USING (event_type)
 """
 

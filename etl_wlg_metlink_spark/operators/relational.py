@@ -19,6 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_wlg_metlink_spark.operators.llm_pipeline import (
+    _duck_hll_agg,
+    _duck_hll_est,
+    _hll_finalize,
+    _hll_ranks,
+)
 from etl_wlg_metlink_spark.tables import load, load_spread
 
 
@@ -258,25 +264,8 @@ def r11_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Portable HyperLogLog geometry (r12): p=12 → m=4096 registers from
-#: the top bits of the 60-bit md5 hash; rho counts leading zeros in
-#: the remaining 48-bit window (+1), so max rho = 49.
-HLL_P = 12
-HLL_M = 1 << HLL_P
-HLL_WBITS = 60 - HLL_P
-#: Fixed-point denominator for the harmonic sum: each register
-#: contributes 2^(40 - rho) as an int64 (terms with rho > 40 truncate
-#: to 0 — statistically negligible and IDENTICAL on both engines), so
-#: the sum is order-independent and exact: max total is
-#: m·2^40 = 2^52 < 2^53, also exact as a double.
-HLL_RHO_CAP = 40
-#: alpha_m · m² · 2^40, computed ONCE in Python IEEE doubles and
-#: embedded as the same literal in the Spark plan and the DuckDB
-#: oracle, so the estimate arithmetic is a single identical division.
-HLL_COEF = (
-    0.7213 / (1.0 + 1.079 / float(HLL_M))
-    * float(HLL_M) * float(HLL_M) * float(1 << HLL_RHO_CAP)
-)
+#: r12's register exponent: 2^12 = 4096 registers (l95 runs p = 8).
+R12_HLL_P = 12
 
 
 def r12_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -286,26 +275,22 @@ def r12_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the repo-wide portability rule) so the ESTIMATE itself is
     bit-identical on both engines and gets a full value oracle —
     unlike approx_count_distinct, whose HLL++ registers are
-    engine-private. (l95_hll_cardinality is the GROUPED calibration
-    form of this same construction — per-key registers with the exact
-    twin carried in-lane — and s16 its streaming maintenance; this
-    lane stays the global estimate-only relational op.) The
+    engine-private. The construction is l95_hll_cardinality's
+    (`_hll_ranks`, `_hll_finalize`), run ungrouped at p = 12 over
+    l_orderkey; this lane reports the global estimate only. The
     5%-of-exact accuracy check lives in pytest
-    (tests/test_relational.py), NOT in the benched lane: the exact
+    (tests/test_queries.py), NOT in the benched lane: the exact
     count_distinct it needs is an expand+shuffle over every row, and
     carrying it made r12 the slowest sf1 lane (24.2 s, VERDICT r10
     item 4) while the sketch path below never shuffles more than
     4096 rows.
 
-    Shape: one narrow map (hash → register id, rho = leading zeros of
-    the 48-bit window via length(bin(w)) — both engines print
-    unpadded binary), ONE 4096-group partial aggregation (map-side
-    combine caps every task's output at m rows), one single-row final
-    agg. Estimate math is order-independent by construction: the
-    harmonic sum is the exact int64 Σ 2^(40-rho) (see HLL_RHO_CAP;
-    empty registers contribute 2^40 each), and the only float ops are
-    HLL_COEF / S and the standard small-range linear-counting branch
-    m·ln(m/V) (taken only when est ≤ 2.5m — sf0.001 territory).
+    Shape: one narrow map (hash → register, rank), ONE 4096-group
+    partial aggregation (map-side combine caps every task's output at
+    m rows), one single-row final agg. The harmonic sum is an exact
+    int64 (see `_hll_finalize`), so the only float ops are one
+    division and the small-range linear-counting branch m·ln(m/V)
+    (taken only when est ≤ 2.5m — sf0.001 territory).
 
     Cross-engine note on the ln (ADVICE r11): ln is not IEEE-mandated
     correctly rounded, so Spark's Math.log and DuckDB's libm log may
@@ -316,49 +301,18 @@ def r12_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a floor(est+0.5) decision boundary; the m· scaling is an
     exact power-of-two multiply, so a sub-1000-ulp ln disagreement
     can never flip the reported estimate. The branch guard
-    est_raw ≤ 2.5m compares HLL_COEF/S, a single correctly-rounded
-    division of exact operands — identical on both engines."""
+    est_raw ≤ 2.5m divides exact operands once, so it is identical
+    on both engines."""
     lineitem = load(spark, sf_dir, "lineitem")
-    h = F.conv(
-        F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    w = F.col("h").bitwiseAND(F.lit((1 << HLL_WBITS) - 1))
-    pb = (
-        lineitem.select(h.alias("h"))
-        .select(
-            F.shiftright(F.col("h"), HLL_WBITS).alias("bucket"),
-            F.when(w == 0, F.lit(HLL_WBITS + 1))
-            .otherwise(F.lit(HLL_WBITS + 1) - F.length(F.bin(w)))
-            .alias("rho"),
-        )
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("mrho"), F.count("*").alias("n"))
+    regs = (
+        _hll_ranks(lineitem, "l_orderkey", [], R12_HLL_P)
+        .groupBy("j")
+        .agg(F.max("rank").alias("m_j"), F.count("*").alias("n"))
     )
-    g = pb.agg(
-        F.sum("n").alias("n_rows"),
-        (F.lit(HLL_M) - F.count("*")).cast("long").alias("n_empty_buckets"),
-        F.sum(
-            F.when(
-                F.col("mrho") <= HLL_RHO_CAP,
-                F.pow(F.lit(2.0), F.lit(HLL_RHO_CAP) - F.col("mrho")).cast(
-                    "long"
-                ),
-            ).otherwise(F.lit(0))
-        ).alias("s_used"),
-    )
-    s_int = F.col("s_used") + F.col("n_empty_buckets") * F.lit(
-        1 << HLL_RHO_CAP
-    )
-    est_raw = F.lit(HLL_COEF) / s_int
-    est = F.when(
-        (est_raw <= F.lit(2.5 * HLL_M)) & (F.col("n_empty_buckets") > 0),
-        F.lit(float(HLL_M))
-        * F.log(F.lit(float(HLL_M)) / F.col("n_empty_buckets")),
-    ).otherwise(est_raw)
-    return g.select(
+    return _hll_finalize(regs, [], R12_HLL_P, F.sum("n").alias("n_rows")).select(
         "n_rows",
-        "n_empty_buckets",
-        F.floor(est + F.lit(0.5)).cast("long").alias("hll_estimate"),
+        (F.lit(1 << R12_HLL_P) - F.col("registers_hit")).alias("n_empty_buckets"),
+        F.floor(F.col("est") + F.lit(0.5)).cast("long").alias("hll_estimate"),
     )
 
 
@@ -1563,45 +1517,13 @@ ORACLE = {
         FROM orders
     """,
     "r12_approx_distinct": f"""
-        WITH hs AS (
-          SELECT CAST('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15)
-                   AS BIGINT) AS h
-          FROM lineitem
-        ),
-        rr AS (
-          SELECT h >> {HLL_WBITS} AS bucket,
-                 CASE WHEN (h & {(1 << HLL_WBITS) - 1}) = 0
-                      THEN {HLL_WBITS + 1}
-                      ELSE {HLL_WBITS + 1}
-                           - length(bin(h & {(1 << HLL_WBITS) - 1}))
-                 END AS rho
-          FROM hs
-        ),
-        pb AS (
-          SELECT bucket, MAX(rho) AS mrho, COUNT(*) AS n
-          FROM rr GROUP BY bucket
-        ),
-        g AS (
-          SELECT CAST(SUM(n) AS BIGINT) AS n_rows,
-                 CAST({HLL_M} - COUNT(*) AS BIGINT) AS n_empty_buckets,
-                 CAST(SUM(CASE WHEN mrho <= {HLL_RHO_CAP}
-                     THEN CAST(pow(2, {HLL_RHO_CAP} - mrho) AS BIGINT)
-                     ELSE 0 END) AS BIGINT) AS s_used
-          FROM pb
-        ),
-        e AS (
-          SELECT n_rows, n_empty_buckets,
-                 {HLL_COEF!r}
-                   / (s_used + n_empty_buckets * {1 << HLL_RHO_CAP}) AS est_raw
-          FROM g
-        )
-        SELECT n_rows, n_empty_buckets,
-               CAST(floor(CASE WHEN est_raw <= {2.5 * HLL_M!r}
-                                AND n_empty_buckets > 0
-                          THEN {float(HLL_M)!r}
-                               * ln({float(HLL_M)!r} / n_empty_buckets)
-                          ELSE est_raw END + 0.5) AS BIGINT) AS hll_estimate
-        FROM e
+        WITH {_duck_hll_agg("lineitem", "l_orderkey", R12_HLL_P)}
+        SELECT (SELECT COUNT(*) FROM lineitem) AS n_rows,
+               CAST({1 << R12_HLL_P} - registers_hit AS BIGINT)
+                 AS n_empty_buckets,
+               CAST(floor({_duck_hll_est(R12_HLL_P)[1]} + 0.5) AS BIGINT)
+                 AS hll_estimate
+        FROM agg
     """,
     "r13_window_rank": """
         SELECT c_custkey, c_nationkey, ROUND(c_acctbal, 4) AS c_acctbal,

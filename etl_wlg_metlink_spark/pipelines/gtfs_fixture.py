@@ -138,11 +138,12 @@ def oracle_features(entities=None, enabled=("Bus", "Train", "Ship")):
             vtype = "Bus"
         if vtype not in enabled:
             continue
-        vid = v["vehicle"]["id"]
-        cot_id = f"WLG-Metlink{vtype}-{vid}"
+        vid = (v.get("vehicle") or {}).get("id")
+        label = "undefined" if vid is None else vid  # JS `${undefined}`
+        cot_id = f"WLG-Metlink{vtype}-{label}"
         remarks = [
             f"Vehicle Type: {vtype}",
-            f"Vehicle ID: {vid}",
+            f"Vehicle ID: {label}",
             f"Route ID: {route_id}",
             f"Trip ID: {trip_id}",
             "Direction: "
@@ -163,7 +164,7 @@ def oracle_features(entities=None, enabled=("Bus", "Train", "Ship")):
         iso = _iso(v["timestamp"])
         props = {
             "type": COTS[vtype],
-            "callsign": f"Route {route_id} - {vtype} {vid}",
+            "callsign": f"Route {route_id} - {vtype} {label}",
             "time": iso,
             "start": iso,
             "speed": (speed if speed else None),  # JS ||: 0 → NaN → null

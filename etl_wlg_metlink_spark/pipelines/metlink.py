@@ -96,14 +96,22 @@ def _drop_reason(e: Column) -> Column:
 def _classify(e: Column) -> tuple[Column, Column, Column]:
     """The entity column ``e``'s route_id (D1, task.ts:213),
     vehicle_type with precedence Ship > Train > Bus (D2,
-    task.ts:225-242) and cot_id key (D3, task.ts:251)."""
+    task.ts:225-242) and cot_id key (D3, task.ts:251). A vehicle
+    without an id is keyed ``WLG-Metlink<Type>-undefined``, as the
+    reference's template literal renders it."""
     trip_id = e["vehicle"]["trip"]["trip_id"]
     route_id = split_head(trip_id, "__")
     is_ship = trip_id.startswith("QDF") | (route_id == "MIF")
     # every train prefix is three characters: startsWith any of them
     is_train = trip_id.substr(1, 3).isin(*TRAIN_PREFIXES)
     vehicle_type = F.when(is_ship, "Ship").when(is_train, "Train").otherwise("Bus")
-    return route_id, vehicle_type, cot_key(vehicle_type, e["vehicle"]["vehicle"]["id"])
+    return route_id, vehicle_type, cot_key(vehicle_type, _vehicle_label(e))
+
+
+def _vehicle_label(e: Column) -> Column:
+    """The vehicle id as the reference's template literals print it:
+    'undefined' when absent (the key, the callsign, the remarks)."""
+    return nullish_default_str(e["vehicle"]["vehicle"]["id"], "undefined")
 
 
 @dataclass(frozen=True)
@@ -147,6 +155,7 @@ def _projection(config: MetlinkConfig, gateway) -> _Projection:
     trip = e["vehicle"]["trip"]
     pos = e["vehicle"]["position"]
     veh_id = e["vehicle"]["vehicle"]["id"]
+    veh_label = _vehicle_label(e)
     occ = e["vehicle"]["occupancy_status"]
     cot_type, marker_color, icon = vehicle_style(vehicle_type)
 
@@ -157,7 +166,7 @@ def _projection(config: MetlinkConfig, gateway) -> _Projection:
     # properties.speed field below.
     remarks = kv_remarks(
         ("Vehicle Type", vehicle_type),
-        ("Vehicle ID", nullish_default_str(veh_id, "undefined")),
+        ("Vehicle ID", veh_label),
         ("Route ID", route_id),
         ("Trip ID", trip["trip_id"]),
         ("Direction", nullish_default_str(trip["direction_id"])),
@@ -181,7 +190,7 @@ def _projection(config: MetlinkConfig, gateway) -> _Projection:
     properties = F.struct(
         cot_type.alias("type"),
         F.format_string(
-            "Route %s - %s %s", route_id, vehicle_type, veh_id
+            "Route %s - %s %s", route_id, vehicle_type, veh_label
         ).alias("callsign"),  # D10 (task.ts:291)
         ts.alias("time"),
         ts.alias("start"),

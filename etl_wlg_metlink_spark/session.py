@@ -20,8 +20,6 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 #: Minimum free /dev/shm for the tmpfs-scratch default to engage (see
 #: scratch_root): shuffle spill exists to relieve MEMORY pressure, so
 #: RAM-backed scratch is only safe with generous headroom. 16 GiB is

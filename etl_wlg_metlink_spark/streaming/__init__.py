@@ -17,28 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_wlg_metlink_spark.streaming import runners
 from etl_wlg_metlink_spark.tables import load
 
 
 def s1_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour event-time windows per event type (streaming:
-    `withWatermark('ts', ...)` + identical window expression — see
-    runners.tumbling_counts_stream; parity-tested)."""
-    events = load(spark, sf_dir, "events")
-    return (
-        events.groupBy(
-            F.window("ts", "1 hour").alias("w"), F.col("event_type")
-        )
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
+    """Tumbling 1-hour event-time windows per event type: the batch
+    run of runners.tumbling_counts_stream, the one definition a stream
+    runs too (parity-tested)."""
+    return runners.tumbling_counts_stream(load(spark, sf_dir, "events"))
 
 
 def s2_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,8 +74,6 @@ def s4_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (runners.user_track_state_stream), take the final emission per
     user. Oracle = the batch aggregate — streaming state must converge
     to exactly the batch answer."""
-    from etl_wlg_metlink_spark.streaming import runners
-
     from pyspark.sql import Window
 
     stream = runners.events_stream(spark, sf_dir)
@@ -120,8 +105,6 @@ def s5_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is exactly the distinct key set — the oracle. Key-only
     projection keeps the streaming answer deterministic (the surviving
     physical row within a batch is partition-order-dependent)."""
-    from etl_wlg_metlink_spark.streaming import runners
-
     stream = runners.events_stream(spark, sf_dir)
     return runners.drain(runners.dedup_within_watermark_stream(stream))
 
@@ -133,8 +116,6 @@ def s6_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (runners.stream_static_enrich_stream, complete mode). The
     availableNow replay is one micro-batch, so the streaming result
     equals the batch join+aggregate — the oracle."""
-    from etl_wlg_metlink_spark.streaming import runners
-
     stream = runners.events_stream(spark, sf_dir)
     customer = load(spark, sf_dir, "customer")
     return runners.drain(
@@ -149,8 +130,6 @@ def s7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (runners.stream_stream_interval_join). The availableNow replay of
     the single-file source is one micro-batch, so the inner interval
     join emits exactly the batch self-join — the oracle."""
-    from etl_wlg_metlink_spark.streaming import runners
-
     stream = runners.events_stream(spark, sf_dir)
     return runners.drain(
         runners.stream_stream_interval_join(stream, "inner", "2 hours")
@@ -168,8 +147,6 @@ def s8_streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the state store). Because the replay ascends in doc_id,
     first-arrival == global min-doc_id per fingerprint, so the final
     survivor set equals l5's batch window rule — the oracle."""
-    from etl_wlg_metlink_spark.streaming import runners
-
     survivors = runners.corpus_ingest_dedup_run(spark, sf_dir)
     return survivors.select("doc_id", "source", "fp")
 
@@ -182,8 +159,6 @@ def s9_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the emission horizon: an unmatched click appears iff
     click_ts + 30min < min(max click ts, max purchase ts) — the
     availableNow-final global watermark at 0s delay."""
-    from etl_wlg_metlink_spark.streaming import runners
-
     stream = runners.events_stream(spark, sf_dir)
     return runners.drain(
         runners.stream_stream_interval_join(stream, "leftOuter", "0 seconds")
@@ -207,8 +182,6 @@ def s10_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     each island — cap splitting is positional, which is what makes
     these custom semantics SQL-checkable at all)."""
     from pyspark.sql import Window
-
-    from etl_wlg_metlink_spark.streaming import runners
 
     stream = runners.events_stream(spark, sf_dir)
     result = runners.drain(
@@ -255,8 +228,6 @@ def s11_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _words,
         l46_rule_bits,
     )
-    from etl_wlg_metlink_spark.streaming import runners
-
     _, stream = runners.staged_replay(spark, sf_dir, "documents", "doc_id", 4)
     base = stream.select("lang", _words(F.col("text")).alias("ws"))
     bits = l46_rule_bits(F.col("ws"))
@@ -477,8 +448,6 @@ def s12_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the equivalent batch rank over the full table — exact
     because the ts-range staging admits zero late drops (see
     runners.staged_replay)."""
-    from etl_wlg_metlink_spark.streaming import runners
-
     return runners.trending_topk_run(spark, sf_dir)
 
 
@@ -508,8 +477,6 @@ def s13_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (runners.ivf_ingest_run — the streaming twin of l17's batch
     build). Cell assignment is per-vector, so the serving table equals
     the batch assignment exactly — the oracle is l17's assign CTE."""
-    from etl_wlg_metlink_spark.streaming import runners
-
     return runners.ivf_ingest_run(spark, sf_dir)
 
 
@@ -543,8 +510,6 @@ def s14_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     alarm a production training-ingest runs in front of admission).
     Oracle = the identical batch math over the full table (the
     availableNow replay admits zero late drops)."""
-    from etl_wlg_metlink_spark.streaming import runners
-
     return runners.drift_monitor_run(spark, sf_dir)
 
 
@@ -593,53 +558,20 @@ def s15_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     because every stage is an associative counter sum, so the oracle
     is l92's batch build keyed by user_id over the full events
     table."""
-    from etl_wlg_metlink_spark.streaming import runners
-
     return runners.countmin_ingest_run(spark, sf_dir)
 
 
 QUERIES["s15_streaming_countmin"] = s15_streaming_countmin
 
 from etl_wlg_metlink_spark.operators.llm_pipeline import (  # noqa: E402
-    CMS_W as _CMS_W,
-    L92_TOP_K as _L92_TOP_K,
+    _duck_cms_topk,
 )
 
-
-def _duck_cms_user_bucket() -> str:
-    from etl_wlg_metlink_spark.operators.llm_pipeline import _duck_md5_int60
-
-    return (
-        _duck_md5_int60("'cms' || CAST(r AS VARCHAR) || '|' || k")
-        + f" % {_CMS_W}"
-    )
-
-
-ORACLE["s15_streaming_countmin"] = f"""
-    WITH counts AS (
-      SELECT CAST(user_id AS VARCHAR) AS k, COUNT(*) AS c
-      FROM events GROUP BY 1
-    ),
-    expanded AS (
-      SELECT k, c, r.r, {_duck_cms_user_bucket()} AS bkt
-      FROM counts, (VALUES (0), (1), (2), (3)) AS r(r)
-    ),
-    sketch AS (
-      SELECT r, bkt, SUM(c) AS cell FROM expanded GROUP BY 1, 2
-    ),
-    top AS (
-      SELECT k, c FROM counts ORDER BY c DESC, k LIMIT {_L92_TOP_K}
-    ),
-    probes AS (
-      SELECT k, c, r.r, {_duck_cms_user_bucket()} AS bkt
-      FROM top, (VALUES (0), (1), (2), (3)) AS r(r)
-    )
-    SELECT k AS user_key, c AS true_count,
-           CAST(MIN(cell) AS BIGINT) AS est_count,
-           CAST(MIN(cell) - c AS BIGINT) AS overcount
-    FROM probes JOIN sketch USING (r, bkt)
-    GROUP BY k, c
-"""
+ORACLE["s15_streaming_countmin"] = _duck_cms_topk(
+    """SELECT CAST(user_id AS VARCHAR) AS user_key, COUNT(*) AS c
+       FROM events GROUP BY 1""",
+    "user_key",
+)
 
 
 def s16_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -650,8 +582,6 @@ def s16_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch-maintenance family. Serving runs l95's shared estimator,
     so the lane reuses l95's DuckDB oracle verbatim: stream equals
     batch because max(max(A), max(B)) = max(A ∪ B)."""
-    from etl_wlg_metlink_spark.streaming import runners
-
     return runners.hll_ingest_run(spark, sf_dir)
 
 
@@ -661,7 +591,7 @@ from etl_wlg_metlink_spark.operators.llm_pipeline import (  # noqa: E402
     ORACLE as _LP_ORACLE,
 )
 
-#: shared verbatim with l95 — one estimator (_hll_finalize), one oracle
+#: shared verbatim with l95 — one report (_hll_report), one oracle
 ORACLE["s16_streaming_hll"] = _LP_ORACLE["l95_hll_cardinality"]
 
 
@@ -674,8 +604,6 @@ def s17_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_kmv_report), so the lane reuses l97's DuckDB oracle verbatim:
     stream equals batch because the k smallest of a union is the k
     smallest of the parts' k-smallests."""
-    from etl_wlg_metlink_spark.streaming import runners
-
     return runners.kmv_ingest_run(spark, sf_dir)
 
 

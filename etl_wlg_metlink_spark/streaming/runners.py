@@ -308,8 +308,10 @@ def staged_replay(
 
 
 def tumbling_counts_stream(events: DataFrame) -> DataFrame:
-    """Identical expression to streaming.s1_tumbling_window, plus the
-    watermark that bounds streaming state to 2 hours of late data."""
+    """Tumbling 1-hour event-time window counts per event type, for a
+    stream and for s1's batch table. The watermark bounds streaming
+    state to 2 hours of late data; Spark's optimizer drops it from a
+    batch plan."""
     return (
         events.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
@@ -908,89 +910,44 @@ def countmin_ingest_run(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
     """Streaming count-min-sketch maintenance — the streaming twin of
-    l92 and the textbook reason CMS is THE distributed heavy-hitter
-    structure: the sketch is a d×w grid of COUNTERS, so per-batch
-    partial grids merge by elementwise sum, associatively, in any
-    order. Each micro-batch computes its own partial grid (and its
-    exact per-key partial counts, the audit's ground truth) inside
-    foreachBatch, one `ledger` sub-ledger each (a replayed batch
-    overwrites its own rows, so the SUM-merge never double-counts);
-    the serving read sums the grids and answers est-vs-true for the
-    top-{L92_TOP_K} keys. Keys are user_ids — enough cardinality at
+    l92, built from the same two functions: the sketch is a d×w grid
+    of COUNTERS, so per-batch partial grids merge by elementwise sum,
+    associatively, in any order. Each micro-batch counts its keys
+    (the audit's ground truth) and builds its partial grid from those
+    counts with `_cms_grid`, inside foreachBatch, one `ledger`
+    sub-ledger each (a replayed batch overwrites its own rows, so the
+    SUM-merge never double-counts); the serving read sums the grids
+    and the key counts and answers est-vs-true for the top-{L92_TOP_K}
+    keys with `_cms_topk`. Keys are user_ids — enough cardinality at
     sf0.1 to make 4×64 collisions real, which is what the overcount
     column exists to show.
 
     Scale shape: per-batch state is the constant d×w grid + the
     batch's key partials (map+combine); the stream is never shuffled
-    whole. The ledgers grow by (d·w + batch keys) rows per batch; the
-    serving merge is a 256-key hash-agg. Stream-equals-batch holds
-    because every stage is an associative sum — the oracle is the
-    identical batch build over the full table."""
-    from etl_wlg_metlink_spark.operators.llm_pipeline import (
-        CMS_D,
-        CMS_W,
-        L92_TOP_K,
-        _md5_int60,
-    )
+    whole, and the d md5 probes run once per distinct key of a batch,
+    not once per event. The ledgers grow by (d·w + batch keys) rows
+    per batch; the serving merge is a 256-key hash-agg. Stream equals
+    batch because every stage is an associative sum — the oracle is
+    l92's batch build over the full table."""
+    from etl_wlg_metlink_spark.operators.llm_pipeline import _cms_grid, _cms_topk
 
     _, stream = staged_replay(spark, sf_dir, "events", "ts", n_batches)
-    rows = F.explode(F.sequence(F.lit(0), F.lit(CMS_D - 1)))
-
-    def bucket():
-        return (
-            _md5_int60(
-                F.concat(
-                    F.lit("cms"),
-                    F.col("r").cast("string"),
-                    F.lit("|"),
-                    F.col("k"),
-                )
-            )
-            % CMS_W
-        )
 
     def partial(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
-        # ONE pass over the batch (the per-key exact counts), then the
-        # partial grid derives FROM those counts: cell(r, bkt) =
-        # Σ_{k hashing there} c(k) — identical values to counting raw
-        # events per bucket, but the d md5 probes run once per
-        # DISTINCT key instead of once per event row (~0.4 s/lane at
-        # sf0.1, and at 100 TB the difference between hashing the
-        # corpus ×d and hashing the key dictionary ×d).
         # localCheckpoint pins the bounded per-batch key partials so
         # both sub-ledger writes reuse the single aggregation.
         kc = (
-            batch_df.select(F.col("user_id").cast("string").alias("k"))
-            .groupBy("k")
+            batch_df.select(F.col("user_id").cast("string").alias("user_key"))
+            .groupBy("user_key")
             .agg(F.count("*").alias("c"))
             .localCheckpoint(eager=True)
         )
-        grid = (
-            kc.select("k", "c", rows.alias("r"))
-            .select("r", bucket().alias("bkt"), "c")
-            .groupBy("r", "bkt")
-            .agg(F.sum("c").alias("cell"))
-        )
-        return grid, kc
+        return _cms_grid(kc, "user_key"), kc
 
     def merge(grids: DataFrame, key_counts: DataFrame) -> DataFrame:
         sketch = grids.groupBy("r", "bkt").agg(F.sum("cell").alias("cell"))
-        counts = key_counts.groupBy("k").agg(F.sum("c").alias("c"))
-        top = counts.orderBy(F.col("c").desc(), "k").limit(L92_TOP_K)
-        probes = top.select("k", "c", rows.alias("r")).select(
-            "k", "c", "r", bucket().alias("bkt")
-        )
-        return (
-            probes.join(F.broadcast(sketch), ["r", "bkt"])
-            .groupBy("k", "c")
-            .agg(F.min("cell").alias("est"))
-            .select(
-                F.col("k").alias("user_key"),
-                F.col("c").alias("true_count"),
-                F.col("est").alias("est_count"),
-                (F.col("est") - F.col("c")).alias("overcount"),
-            )
-        )
+        counts = key_counts.groupBy("user_key").agg(F.sum("c").alias("c"))
+        return _cms_topk(counts, sketch, "user_key")
 
     return ledger(stream, partial, merge)
 
@@ -1004,9 +961,9 @@ def hll_ingest_run(
     Each micro-batch reduces to its own ≤ types×256 partial register
     rows inside foreachBatch (map+combine, the stream itself never
     shuffles whole) and writes them to a `ledger`; the serving read
-    MAX-merges the ledger and runs l95's shared estimator
-    (_hll_finalize — one estimator, so stream and batch cannot drift
-    and s16 shares l95's DuckDB oracle verbatim). Stream equals batch
+    MAX-merges the ledger and runs l95's report (_hll_report over the
+    one estimator, _hll_finalize), so stream and batch cannot drift and
+    s16 shares l95's DuckDB oracle verbatim. Stream equals batch
     because max(max(A), max(B)) = max(A ∪ B).
 
     Scale shape: ledger grows by ≤ types×256 rows per batch; serving
@@ -1015,15 +972,18 @@ def hll_ingest_run(
     the staged table once — at 100 TB you ship only the sketch half
     (that corpus-wide distinct shuffle is what the lane replaces)."""
     from etl_wlg_metlink_spark.operators.llm_pipeline import (
-        _hll_finalize,
+        HLL_P,
         _hll_ranks,
+        _hll_report,
     )
 
     stage, stream = staged_replay(spark, sf_dir, "events", "ts", n_batches)
     regs = ledger(
         stream,
         lambda batch: (
-            _hll_ranks(batch).groupBy("event_type", "j").agg(F.max("rank").alias("m_j"))
+            _hll_ranks(batch, "user_id", ["event_type"], HLL_P)
+            .groupBy("event_type", "j")
+            .agg(F.max("rank").alias("m_j"))
         ),
         lambda partials: partials.groupBy("event_type", "j").agg(
             F.max("m_j").alias("m_j")
@@ -1034,7 +994,7 @@ def hll_ingest_run(
         .groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n_exact"))
     )
-    return _hll_finalize(regs, exact)
+    return _hll_report(regs, exact)
 
 
 def kmv_ingest_run(

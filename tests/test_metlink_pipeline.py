@@ -161,6 +161,25 @@ def test_null_coordinates_are_not_the_island(spark):
     assert c["received"] - dropped == c["submitted"] == 3
 
 
+def test_vehicles_without_an_id_keep_their_class(spark):
+    """A vehicle with no `vehicle.vehicle` id is keyed
+    `WLG-Metlink<Type>-undefined`, as the reference's template literal
+    renders it, so two buses and a train without ids give two
+    Features, one per class, and the counters agree."""
+    ents = [_entity(i, t) for i, t in enumerate(("220__B1", "HVL__T1", "AX__B2"))]
+    for ent in ents:
+        del ent["vehicle"]["vehicle"]
+    entities = gtfs.entities_from_json(spark, json.dumps({"entity": ents}))
+    fc = geojson.submit(metlink.run(entities), lambda _: None)
+    assert [f["id"] for f in fc["features"]] == [
+        "WLG-MetlinkBus-undefined",
+        "WLG-MetlinkTrain-undefined",
+    ]
+    assert fc["features"][1]["properties"]["callsign"] == "Route HVL - Train undefined"
+    assert fc["features"] == oracle_features(ents)
+    assert _counters(entities)["submitted"] == 2
+
+
 @pytest.mark.parametrize("n", [7, 0], ids=["no_drops", "no_entities"])
 def test_counters_with_nothing_dropped_are_zero(spark, n):
     """A counter with nothing to count reads 0, not NULL: the first

@@ -207,11 +207,9 @@ def test_no_pinned_persist_in_package():
     assert offenders == [], f"caching outside tables.pinned: {offenders}"
 
 
-def test_corpus_rules_have_one_definition():
-    """The cosine space (the sequential-fold norm and the zero-norm
-    filter) and the exact-dup bag-of-words md5 fingerprint are each
-    written once in the package, in llm_pipeline, and the streaming
-    runners fold no dot product of their own."""
+def _rule_sites(rules: dict[str, str]) -> dict[str, list[str]]:
+    """Per rule, the package file of every match of its regex in the
+    whitespace-stripped source."""
     import pathlib
     import re
 
@@ -219,22 +217,46 @@ def test_corpus_rules_have_one_definition():
         pathlib.Path(__file__).resolve().parent.parent
         / "etl_wlg_metlink_spark"
     )
+    found = {rule: [] for rule in rules}
+    for p in sorted(pkg.rglob("*.py")):
+        src = re.sub(r"\s+", "", p.read_text(encoding="utf-8"))
+        for rule, pat in rules.items():
+            found[rule] += [p.name] * len(re.findall(pat, src))
+    return found
+
+
+def test_corpus_rules_have_one_definition():
+    """The cosine space (the sequential-fold norm and the zero-norm
+    filter) and the exact-dup bag-of-words md5 fingerprint are each
+    written once in the package, in llm_pipeline, and the streaming
+    runners fold no dot product of their own."""
     rules = {
         "norm": r"F\.sqrt\(_dot\(",
         "zero-norm filter": r'F\.col\("norm"\)>0',
         "bag fingerprint": (
             r'F\.md5\(F\.\w+\((?:"",)?F\.array_sort\(F\.array_distinct\('
         ),
+        "runner dot product": r"F\.zip_with",
     }
-    found = {rule: [] for rule in rules}
-    for p in sorted(pkg.rglob("*.py")):
-        src = re.sub(r"\s+", "", p.read_text(encoding="utf-8"))
-        for rule, pat in rules.items():
-            found[rule] += [p.name] * len(re.findall(pat, src))
-        if p.name == "runners.py":
-            runner_folds = src.count("F.zip_with")
-    assert found == {rule: ["llm_pipeline.py"] for rule in rules}, found
+    found = _rule_sites(rules)
+    runner_folds = found.pop("runner dot product").count("runners.py")
+    assert found == {rule: ["llm_pipeline.py"] for rule in found}, found
     assert runner_folds == 0, "runners.py folds its own dot product"
+
+
+def test_sketches_have_one_definition():
+    """The count-min bucket, the HyperLogLog rank and the Lloyd
+    partial-sum kernel are each written once in the package, in
+    llm_pipeline, for Spark and for the DuckDB oracles: l92 and s15,
+    l95, s16 and r12, and l16 and the IVF quantizer share them."""
+    rules = {
+        "count-min bucket": r'F\.lit\("cms"\)',
+        "count-min bucket (DuckDB)": r"'cms'\|\|",
+        "HLL rank": r"F\.when\(w==0,F\.lit\(",
+        "HLL rank (DuckDB)": r"CASEWHEN\(h\w*(?:>>|&)[^=]*\)=0THEN",
+        "Lloyd partial sums": r"np\.add\.at\(isum",
+    }
+    assert _rule_sites(rules) == {rule: ["llm_pipeline.py"] for rule in rules}
 
 
 def _banked_exponents():

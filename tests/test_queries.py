@@ -45,16 +45,21 @@ def test_oracle_sql_parses_in_duckdb(sf_dir):
             pytest.fail(f"oracle for {name!r} failed in duckdb: {e}")
 
 
-#: Lanes built on the shared corpus and pricing rules (the cosine
-#: space, the bag-of-words fingerprint, the discounted price), checked
-#: against their DuckDB oracles with tools/check_correctness.compare.
+#: Lanes built on the shared corpus, pricing and sketch rules (the
+#: cosine space, the bag-of-words fingerprint, the discounted price,
+#: count-min, HyperLogLog, Lloyd's k-means and the tumbling window),
+#: checked against their DuckDB oracles with
+#: tools/check_correctness.compare.
 RULE_LANES = (
     "l4_fingerprint", "l5_exact_dedup", "l9_cosine_topk",
-    "l11_knn_label_vote", "l14_cosine_near_dup", "l17_ivf_ann",
+    "l11_knn_label_vote", "l14_cosine_near_dup", "l16_kmeans", "l17_ivf_ann",
     "l25_incremental_dedup", "l28_cross_source_overlap",
     "l35_semantic_dedup", "l38_ivf_recall_sweep", "l79_corpus_diversity",
-    "l90_takedown_propagation", "l96_bloom_contamination",
-    "s8_streaming_ingest_dedup", "s13_streaming_ann_ingest",
+    "l90_takedown_propagation", "l92_countmin_heavyhitters",
+    "l95_hll_cardinality", "l96_bloom_contamination",
+    "s1_tumbling_window", "s8_streaming_ingest_dedup",
+    "s13_streaming_ann_ingest", "s15_streaming_countmin",
+    "s16_streaming_hll", "r12_approx_distinct",
     "r25_pricing_summary", "r26_local_supplier_volume",
     "r31_promo_revenue_share", "r33_disjunctive_predicate_revenue",
     "r35_nation_volume_shipping", "r36_market_share",
@@ -1878,7 +1883,9 @@ def test_r12_linear_counting_no_boundary_values():
     the ONLY inexact op in play.)"""
     import math
 
-    from etl_wlg_metlink_spark.operators.relational import HLL_M
+    from etl_wlg_metlink_spark.operators.relational import R12_HLL_P
+
+    HLL_M = 1 << R12_HLL_P
 
     min_ulps = math.inf
     for v in range(1, HLL_M + 1):
